@@ -648,12 +648,8 @@ object Graft {
   final class GroupMaintenance private[api] (
       spark: org.apache.spark.sql.SparkSession, threshold: Double,
       stateRoot: Option[String], epoch: Option[String]) {
-    private val st = {
-      import spark.implicits._
-      graft.streaming.Streams.st13State(spark,
-        Seq.empty[(Long, String)].toDF("doc_id", "text"), stateRoot,
-        epoch = epoch)
-    }
+    private val st = graft.streaming.StateTable.open(spark,
+      graft.streaming.Streams.st13Family, stateRoot, epoch = epoch)
     /** Process one batch of arrivals. */
     def step(df: DataFrame, idCol: String, textCol: String): Unit =
       graft.streaming.Streams.st13MaintainStep(st,
@@ -693,8 +689,8 @@ object Graft {
   final class IndexMaintenance private[api] (
       spark: org.apache.spark.sql.SparkSession,
       stateRoot: Option[String], epoch: Option[String]) {
-    private val st = graft.streaming.Streams.st14State(spark, stateRoot,
-      epoch = epoch)
+    private val st = graft.streaming.StateTable.open(spark,
+      graft.streaming.Streams.st14Family, stateRoot, epoch = epoch)
     /** Ingest one batch of arriving documents into the index. */
     def step(df: DataFrame, idCol: String, textCol: String): Unit =
       graft.streaming.Streams.st14MaintainStep(st,
@@ -774,7 +770,7 @@ object Graft {
       // serving reads silently miss vectors filed under the old
       // model's lists). Fail loudly instead of corrupting.
       stateRoot.foreach { r =>
-        require(!graft.streaming.Streams.st13HasData(s"$r/vectors"),
+        require(!graft.streaming.StateTable.hasData(s"$r/vectors"),
           s"state root $r holds ingested vectors but no codebook.meta; " +
             "refusing to train and persist a new model over state " +
             "partitioned by an unknown codebook — resume with the " +
@@ -786,8 +782,8 @@ object Graft {
         graft.streaming.Streams.saveCodebook(r, trained))
       trained
     }
-    private val st = graft.streaming.Streams.st15State(spark,
-      stateRoot, listCount)
+    private val st = graft.streaming.StateTable.open(spark,
+      graft.streaming.Streams.st15Family, stateRoot)
     /** Ingest one batch of arriving vectors into the index. */
     def step(df: DataFrame): Unit =
       graft.streaming.Streams.st15MaintainStep(st, cb,
@@ -847,8 +843,7 @@ object Graft {
       if (nLists > 0) nLists else graft.operators.Ann.ivfConfigFor(n)
     val cbNew = graft.operators.Ann.trainCodebookSampled(vecs, lists, n,
       dim = dim)
-    graft.streaming.Streams.st20Migrate(spark, parentRoot, toSub,
-      cbNew, lists)
+    graft.streaming.Streams.st20Migrate(spark, parentRoot, toSub, cbNew)
   }
 
   /** REPLAY a quarantine table through a corrected expectation set

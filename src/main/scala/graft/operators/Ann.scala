@@ -172,9 +172,13 @@ object Ann {
     // projection (sample-gate filter, u16→double transform) every
     // round; unpersisted before returning (an in-call intermediate,
     // not a cross-query cache). Bit-identical math — only the input's
-    // physical source changes.
-    val vecs = vecs0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // physical source changes. A frame the CALLER already cached is
+    // the caller's to own: it is read as-is and its cache survives.
+    val owned = vecs0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val vecs =
+      if (owned) vecs0.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else vecs0
     try {
     // seed = the FIRST nLists vectors in id order (TakeOrdered — no
     // assumption that ids start at 0 or are dense; a filter(id <
@@ -200,7 +204,7 @@ object Ann {
       cents = next
     }
     new graft.expressions.PlaneMatrix(cents, dim)
-    } finally vecs.unpersist(false)
+    } finally if (owned) vecs.unpersist(false)
   }
 
   /** s3: IVF-flat ANN (*rows-only oracle*; recall spec'd in tests).

@@ -1849,20 +1849,28 @@ object Pipeline {
     (org.apache.spark.sql.SparkSession, String, Long, Long),
     DataFrame]()
 
-  private def tierFrame(spark: org.apache.spark.sql.SparkSession,
+  /** A tier meta file's (mtime, length), probed through the session's
+    * Hadoop FileSystem (towersGenOf's contract) so hdfs:// and s3a://
+    * roots stamp like local ones; (-1, -1) when it cannot be read.
+    */
+  private[graft] def tierMetaStamp(spark: org.apache.spark.sql.SparkSession,
+      d: String, meta: String): (Long, Long) =
+    try {
+      val p = new org.apache.hadoop.fs.Path(d, meta)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      (st.getModificationTime, st.getLen)
+    } catch { case scala.util.control.NonFatal(_) => (-1L, -1L) }
+
+  private[graft] def tierFrame(spark: org.apache.spark.sql.SparkSession,
       d: String, name: String, meta: String): DataFrame = {
-    val mp = java.nio.file.Paths.get(d, meta)
     // keyed on the session OBJECT (reference equality), not an
     // identity hash — hashes can collide across sessions and would
     // serve one session's plan-bound frame to another; the wholesale
     // size>64 clear already bounds how long a stopped session's
     // entries stay pinned
-    val key =
-      try ((spark, s"$d/$name",
-        java.nio.file.Files.getLastModifiedTime(mp).toMillis,
-        java.nio.file.Files.size(mp)))
-      catch { case scala.util.control.NonFatal(_) =>
-        (spark, s"$d/$name", -1L, -1L) }
+    val (mtime, len) = tierMetaStamp(spark, d, meta)
+    val key = (spark, s"$d/$name", mtime, len)
     if (tierFrames.size > 64) tierFrames.clear()
     tierFrames.computeIfAbsent(key,
       _ => spark.read.parquet(s"$d/$name"))

@@ -884,7 +884,7 @@ object Streams {
     * partition-PRUNED scan — probes touch only the buckets the
     * batch's keys hash into (PartitionFilters, locked by spec), never
     * the whole registry. Per-batch small-file buildup is rewritten
-    * once a file-count budget is crossed ([[st13CompactState]] —
+    * once a file-count budget is crossed ([[StateTable.compact]] —
     * io5's compaction pattern applied to state).
     */
   def st13StreamGroupMaintain(t: Tables,
@@ -893,8 +893,7 @@ object Streams {
     val path = s"${t.dir}/documents.parquet"
     val schema = spark.read.parquet(path).schema
     graft.Caches.fresh()
-    val state = st13State(spark,
-      spark.read.parquet(path).select(col("doc_id"), col("text")).limit(0))
+    val state = StateTable.open(spark, st13Family)
     val docs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stagedDir(t, path, "doc_id"))
@@ -908,52 +907,23 @@ object Streams {
     st13Compact(state)
   }
 
-  /** st13's state handle: four parquet table paths under one root.
-    * bands/sh/labels are PARTITIONED by `pb`, a hash bucket of each
-    * table's probe key (band+sig for the registry, doc_id for
-    * shingles/labels) drawn from the bounded [0, nBuckets) domain —
-    * the layout that lets a micro-batch's probes prune to matching
-    * buckets instead of rescanning corpus-sized parquet. The edge log
-    * is only ever read whole (at compaction), so it stays flat.
-    *
-    * Tables are NOT pre-initialized: reads go through [[st13Read]],
-    * which returns an empty frame with the right schema when a dir
-    * has no data yet. That makes "open over an existing root" the
-    * same code path as "open fresh" — a session pointed at a durable
-    * root RESUMES the state a previous session wrote (spec-covered in
-    * GraftApiSpec).
+  /** st13's state: four tables under one root. bands/sh/labels are
+    * bucketed on each table's probe key (band+sig for the registry,
+    * doc_id for shingles/labels) — the layout that lets a
+    * micro-batch's probes prune to matching buckets instead of
+    * rescanning corpus-sized parquet. The edge log is only ever read
+    * whole (at compaction), so it stays flat.
     */
-  private[graft] case class St13State(spark: org.apache.spark.sql
-      .SparkSession, root: String, defaultBuckets: Int,
-      compactAboveFiles: Int,
-      targetBucketBytes: Long = stateTargetBucketBytes) {
-    /** CURRENT table dirs — the generation the root's rewrite log
-      * serves (plain `root/<table>` before the first rewrite),
-      * resolved at open and flipped by the compactor (single-writer
-      * contract, like [[nBucketsRef]]).
-      */
-    private[streaming] val dirsRef =
-      new java.util.concurrent.atomic.AtomicReference[Map[String, String]](
-        St13State.tables.map(t => t -> s"$root/$t").toMap)
-    def bandsDir: String = dirsRef.get()("bands")
-    def shDir: String = dirsRef.get()("sh")
-    def labelsDir: String = dirsRef.get()("labels")
-    def edgesDir: String = dirsRef.get()("edges")
-    def allDirs: Seq[String] = St13State.tables.map(dirsRef.get())
-    /** CURRENT bucket count — starts at `defaultBuckets` (or the
-      * count the head rewrite commit's tag declares when resuming a
-      * root), re-derived from measured state bytes at compaction
-      * ([[stateBucketsFor]]). Single-writer contract: probes and the
-      * compactor share this handle, so a re-bucketing is visible to
-      * every later read.
-      */
-    private[streaming] val nBucketsRef =
-      new java.util.concurrent.atomic.AtomicInteger(defaultBuckets)
-    def nBuckets: Int = nBucketsRef.get()
-  }
-
-  private[graft] object St13State {
-    val tables: Seq[String] = Seq("bands", "sh", "labels", "edges")
+  private[graft] val st13Family: StateTable.Family = {
+    import StateTable._
+    Family("st13", Seq(
+      Spec("bands", st13BandsSchema,
+        Bucketed(Seq("band", "sig"), Seq("band", "sig")), SortedRewrite),
+      Spec("sh", st13ShSchema,
+        Bucketed(Seq("doc_id"), Seq("doc_id")), SortedRewrite),
+      Spec("labels", st13LabelsSchema,
+        Bucketed(Seq("doc_id"), Seq("doc_id")), SortedRewrite),
+      Spec("edges", st13EdgesSchema, Flat, Coalesce)))
   }
 
   /** Hash bucket of a probe key into the bounded [0, nBuckets)
@@ -963,9 +933,6 @@ object Streams {
     */
   private[graft] def st13Pb(n: Int)(keys: org.apache.spark.sql.Column*)
       : org.apache.spark.sql.Column = pmod(hash(keys: _*), lit(n))
-
-  private[graft] def st13HasData(dir: String): Boolean =
-    graft.sources.Io.parquetFilesRec(dir).nonEmpty
 
   // ----------------------------------------------------------------
   // shared maintained-state LAYOUT machinery (st13 / st14 / st15)
@@ -987,7 +954,7 @@ object Streams {
     *  - past the cap (≳4 TB/table at the 64 MB default) the bucket
     *    count stops growing — partition-listing stays tractable and
     *    the [0, nB) pruning-literal collects stay bounded — and the
-    *    WITHIN-bucket sorted rewrite (see the compaction paths) takes
+    *    WITHIN-bucket sorted rewrite ([[StateTable.compact]]) takes
     *    over: parquet row-group min/max stats on the sort key keep
     *    the actual read row-group-sized even as buckets grow.
     */
@@ -1159,7 +1126,7 @@ object Streams {
     else None
   }
 
-  private def loadStateBuckets(root: String): Option[Int] =
+  private[streaming] def loadStateBuckets(root: String): Option[Int] =
     loadMeta(root, "nbuckets.meta").map(_.toInt)
 
   private[graft] def saveStateBuckets(root: String, n: Int): Unit =
@@ -1271,21 +1238,13 @@ object Streams {
     * markers that merely linger until the next retirement.
     */
   private[graft] def retireMarkers(root: String): Unit = {
-    val d = commitsDir(root)
-    if (!java.nio.file.Files.isDirectory(d)) return
-    val names = {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString).toList
-      } finally s.close()
-    }
+    val names = markerNames(root)
     val bIds = names.collect { case n if n.startsWith("b") => n.drop(1).toLong }
     if (bIds.isEmpty) return
     // retire only the CONTIGUOUS committed prefix: low-water marks
     // every id at-or-below it as committed, so advancing past a GAP
     // (an uncommitted lower id — possible if a caller ever hands
-    // out-of-order bids to st13Step/st14Step) would silently drop
+    // out-of-order bids to StateTable.appendBatch) would silently drop
     // that batch's redelivery as "already committed". The wired
     // streaming paths commit in order, where prefix = max and the
     // collapse is total; an out-of-order history keeps its markers
@@ -1301,7 +1260,20 @@ object Streams {
     names.foreach { n =>
       if ((n.startsWith("b") || n.startsWith("a")) &&
           n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= lw)
-        java.nio.file.Files.deleteIfExists(d.resolve(n))
+        java.nio.file.Files.deleteIfExists(commitsDir(root).resolve(n))
+    }
+  }
+
+  /** File names in the root's marker dir (none when it is absent). */
+  private def markerNames(root: String): Seq[String] = {
+    val d = commitsDir(root)
+    if (!java.nio.file.Files.isDirectory(d)) Nil
+    else {
+      val s = java.nio.file.Files.list(d)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString).toList
+      } finally s.close()
     }
   }
 
@@ -1313,30 +1285,16 @@ object Streams {
   private[graft] def saveEpoch(root: String, e: String): Unit =
     saveMeta(root, "epoch.meta", e)
 
-  private def clearMarkers(root: String): Unit = {
-    val d = commitsDir(root)
-    if (java.nio.file.Files.isDirectory(d)) {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList.foreach(
-          java.nio.file.Files.deleteIfExists(_))
-      } finally s.close()
-    }
-  }
+  private def clearMarkers(root: String): Unit =
+    markerNames(root).foreach(n =>
+      java.nio.file.Files.deleteIfExists(commitsDir(root).resolve(n)))
 
   /** True iff the root carries any committed-batch history under the
     * current marker namespace — a retired low-water mark or any
     * commit marker file.
     */
   private def hasCommitHistory(root: String): Boolean =
-    loadLowWater(root) >= 0L || {
-      val d = commitsDir(root)
-      java.nio.file.Files.isDirectory(d) && {
-        val s = java.nio.file.Files.list(d)
-        try s.findFirst().isPresent finally s.close()
-      }
-    }
+    loadLowWater(root) >= 0L || markerNames(root).nonEmpty
 
   /** The epoch barrier, run at state open when the caller's `epoch`
     * differs from the persisted one (a durable root re-attached to a
@@ -1352,7 +1310,7 @@ object Streams {
     * so a crash anywhere re-runs the (idempotent) barrier at the
     * next open.
     */
-  private def epochBarrier(root: String, epoch: Option[String],
+  private[streaming] def epochBarrier(root: String, epoch: Option[String],
       compact: () => Unit): Unit = epoch.foreach { e =>
     val old = loadEpoch(root)
     if (!old.contains(e)) {
@@ -1372,19 +1330,10 @@ object Streams {
     */
   private[graft] def nextBatchId(root: String): Long = {
     val floor = loadLowWater(root) + 1L
-    val d = commitsDir(root)
-    if (!java.nio.file.Files.isDirectory(d)) floor
-    else {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        val ids = s.iterator().asScala
-          .map(_.getFileName.toString).collect {
-            case n if n.startsWith("b") => n.drop(1).toLong
-          }.toSeq
-        if (ids.isEmpty) floor else math.max(ids.max + 1L, floor)
-      } finally s.close()
+    val ids = markerNames(root).collect {
+      case n if n.startsWith("b") => n.drop(1).toLong
     }
+    if (ids.isEmpty) floor else math.max(ids.max + 1L, floor)
   }
 
   /** Append `df` into the live `pb`-partitioned table under
@@ -1413,6 +1362,24 @@ object Streams {
     graft.Staging.deleteTree(tmpPath)
   }
 
+  /** Run labelled jobs concurrently and let EVERY one settle before
+    * the first failure rethrows (the others attached to it with
+    * `addSuppressed`): a caller's retry or cleanup never races a
+    * sibling job that is still writing.
+    */
+  private[graft] def settleAll(spark: org.apache.spark.sql.SparkSession)(
+      jobs: Seq[(String, () => Unit)]): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    jobs.map { case (label, f) =>
+      Future(scala.util.Try(graft.operators.Pipeline.labeled(spark, label)(f())))
+    }.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+      .collect { case scala.util.Failure(e) => e } match {
+      case Seq()     => ()
+      case e +: rest => rest.foreach(e.addSuppressed); throw e
+    }
+  }
+
   /** Delete every `gb<bid>-` file of a batch from the given table
     * dirs — the remnants of a failed attempt, before its retry.
     */
@@ -1429,7 +1396,7 @@ object Streams {
     * committed, and any orphaned append-staging dir a crashed
     * attempt left beside a table (both from any previous process).
     */
-  private def recoverUncommitted(root: String,
+  private[streaming] def recoverUncommitted(root: String,
       dirs: Seq[String]): Unit = {
     val tag = "^gb(\\d+)-.*".r
     // the low-water mark is loaded ONCE per recovery, not once per
@@ -1462,20 +1429,6 @@ object Streams {
     }
   }
 
-  /** State read with the empty-dir case folded in (no first-batch or
-    * first-session special case at call sites).
-    */
-  private[graft] def st13Read(st: St13State, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (st13HasData(dir))
-      st.spark.read.schema(schema).parquet(dir)
-    else
-      st.spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-
-  private def withPb(s: org.apache.spark.sql.types.StructType) =
-    s.add("pb", org.apache.spark.sql.types.IntegerType)
-
   private[graft] def st13BandsSchema =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
@@ -1504,318 +1457,145 @@ object Streams {
       org.apache.spark.sql.types.StructField("y",
         org.apache.spark.sql.types.LongType)))
 
-  /** Open (or resume) an st13 state. `root = None` → fresh JVM
-    * scratch registered with [[graft.Staging]]'s shutdown cleanup;
-    * `root = Some(path)` → durable state a deployment owns: an
-    * existing root is RESUMED (its tables read as-is), an empty one
-    * initialized lazily by the first appends. `emptyDocs` is kept for
-    * signature compatibility (schemas are fixed by the minhash
-    * pipeline, not the doc source).
-    */
-  private[graft] def st13State(
-      spark: org.apache.spark.sql.SparkSession,
-      emptyDocs: DataFrame,
-      root: Option[String] = None,
-      // every append pays ~one parquet file CREATION per touched
-      // bucket (tens of ms each — measured dominant at small scale),
-      // so the bucket count is a dial between append cost and probe
-      // pruning granularity. This is only the OPENING count: each
-      // compaction re-derives it from measured state bytes
-      // ([[stateBucketsFor]] against targetBucketBytes) and
-      // re-buckets in the rewrite, so the corpus — not the caller —
-      // sizes the layout as it grows
-      nBuckets: Int = 16,
-      // a batch appends ≤ nBuckets files per table, so the budget
-      // must sit WELL above nBuckets or the rewrite fires every
-      // batch and the full-state rewrite stops being amortized
-      // (one rewrite per ~8 batches at one file per bucket per batch)
-      compactAboveFiles: Int = 128,
-      targetBucketBytes: Long = stateTargetBucketBytes,
-      // the batch-id namespace owner (a streaming query's id): a
-      // durable root re-attached under a DIFFERENT epoch runs the
-      // barrier (see the epoch block above [[batchCommitted]]) so
-      // fresh-checkpoint ids restarting at 0 are never mistaken for
-      // committed history. None (the facade/scratch path) keeps the
-      // one shared namespace nextBatchId continues.
-      epoch: Option[String] = None): St13State = {
-    val st = St13State(spark, root.getOrElse(graft.Staging.scratch("st13")),
-      nBuckets, compactAboveFiles, targetBucketBytes)
-    // crash recovery + the bucket count a RESUMED root must compute
-    // the same pb with: resolve the current generations from the
-    // root's rewrite log, sweep torn/superseded ones, and take the
-    // count the head rewrite's tag declared (pre-first-rewrite roots
-    // fall back to the opening meta so a resumed session matches the
-    // writer's pb even before any compaction ran)
-    val dirs = resolveStateDirs(st.root, St13State.tables)
-    st.dirsRef.set(dirs)
-    sweepStateGenerations(st.root, St13State.tables, dirs)
-    recoverUncommitted(st.root, st.allDirs)
-    stateLogBuckets(st.root).orElse(loadStateBuckets(st.root)) match {
-      case Some(n) => st.nBucketsRef.set(n)
-      case None    => saveStateBuckets(st.root, st.nBuckets)
-    }
-    epochBarrier(st.root, epoch, () => st13CompactState(st))
-    st
-  }
-
   /** ONE maintenance step: probe the registry with a batch of
     * arriving (doc_id, text) rows, verify, log compressed edges,
     * adopt roots, append registry rows. Factored out of the stream so
     * specs can drive arbitrary batch sequences (staleness across ≥3
     * waves is unreachable through the 2-file stream staging).
     */
-  private[graft] def st13MaintainStep(st: St13State, batch: DataFrame,
-      threshold: Double, bid: Long = -1L): Unit = {
-    val spark = st.spark
-    val nB = st.nBuckets
-    // batch atomicity (tagged appends + one commit marker — see the
-    // block above [[st13Read]]): the four table appends land as one
-    // unit or are wiped before the retry reprocesses
-    val theBid = if (bid >= 0L) bid else nextBatchId(st.root)
-    if (batchCommitted(st.root, theBid)) return
-    // the wipe's recursive state walk runs only when an attempt
-    // marker proves a prior try of THIS bid may have left remnants —
-    // the clean-batch hot path stays O(1) in state file count
-    if (attemptExists(st.root, theBid))
-      wipeBatch(Seq(st.bandsDir, st.shDir, st.labelsDir, st.edgesDir),
-        theBid)
-    markAttempt(st.root, theBid)
-    // AT-LEAST-ONCE REDELIVERY GUARD (st14's contract): arrivals whose
-    // doc_id is already in the shingle registry are re-deliveries (a
-    // foreachBatch retry, a replayed file) — a blind re-process would
-    // duplicate registry rows and self-pair every shingle. The guard
-    // is an anti-join against the shingle table bucket-pruned to the
-    // arrivals' doc_id buckets: arrivals-sized, never a corpus scan.
-    val arrivals = graft.Caches.materialized(batch)
-    val arrPbs = arrivals.select(st13Pb(nB)(col("doc_id")).as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val seenDocs = st13Read(st, st.shDir, withPb(st13ShSchema))
-      .filter(col("pb").isin(arrPbs: _*))
-      .select("doc_id")
-    val sigs = graft.Caches.materialized(
-      graft.operators.Dedup.minhashDocs(
-        arrivals.join(seenDocs, Seq("doc_id"), "left_anti")))
-    val bands = graft.Caches.materialized(
-      graft.operators.Dedup.bandSigs(sigs)
-        .withColumn("pb", st13Pb(nB)(col("band"), col("sig"))))
-    // The pruning literals are drawn from the BOUNDED [0, nBuckets)
-    // partition domain — each collect is ≤ nBuckets ints off an
-    // already-materialized cache, O(1) in both batch and corpus size
-    // (the same measured-and-bounded contract as graft.Guards), and
-    // the IN list is what turns each state read below into a
-    // partition-PRUNED scan (PartitionFilters in the step plan)
-    // instead of a full-registry scan per micro-batch.
-    val batchPbs = bands.select("pb").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    // candidates: arrivals vs the registry (bucket-pruned to the
-    // batch's band-key buckets), plus arrival-arrival within the
-    // batch — canonical a < b either way
-    val old = st13BandProbe(st, batchPbs)
-    val candOld = bands.as("n").join(old.as("o"),
-        col("n.band") === col("o.band") && col("n.sig") === col("o.sig"))
-      .select(least(col("n.doc_id"), col("o.doc_id")).as("doc_a"),
-        greatest(col("n.doc_id"), col("o.doc_id")).as("doc_b"))
-    val candNew = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val cand = graft.Caches.materialized(candOld.unionByName(candNew)
-      .filter(col("doc_a") =!= col("doc_b")).distinct())
-    // the shingle/label lookups only need rows for the candidate
-    // ENDPOINTS (registry partners included, so the batch's own pb
-    // set is not enough) — again a bounded-domain pb collect
-    val endpointPbs = cand
-      .select(explode(array(st13Pb(nB)(col("doc_a")),
-        st13Pb(nB)(col("doc_b")))).as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    // exact verification — the batch d3/d6 arithmetic verbatim;
-    // counterpart shingles come from the registry's shingle table,
-    // bucket-pruned to the endpoints' buckets
-    val shAll = st13Read(st, st.shDir, withPb(st13ShSchema))
-      .filter(col("pb").isin(endpointPbs: _*))
-      .select("doc_id", "sh")
-      .unionByName(sigs.select("doc_id", "sh"))
-    // NOT separately materialized: `compressed` below is this frame's
-    // only consumer and is itself materialized, so a pairs checkpoint
-    // was one whole extra job per batch for lineage that dies the
-    // moment compressed pins (guide §1.2 — fewer driver round-trips
-    // per batch)
-    val pairs = cand
-      .join(shAll.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
-        "doc_a")
-      .join(shAll.select(col("doc_id").as("doc_b"), col("sh").as("shb")),
-        "doc_b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jaccard", round(col("inter") /
-        (size(col("sha")) + size(col("shb")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b")
-    // root-compress both endpoints through the adoption table —
-    // lookup keys are candidate endpoints, so the same pb pruning
-    // applies (anti-join included: a bucket with no endpoint pb
-    // cannot hold a matching label row)
-    val labels = st13Read(st, st.labelsDir, withPb(st13LabelsSchema))
-      .filter(col("pb").isin(endpointPbs: _*))
-      .select("doc_id", "root")
-    val compressed = graft.Caches.materialized(pairs
-      .join(labels.select(col("doc_id").as("doc_a"),
-        col("root").as("ra")), Seq("doc_a"), "left")
-      .join(labels.select(col("doc_id").as("doc_b"),
-        col("root").as("rb")), Seq("doc_b"), "left")
-      .select(col("doc_a"), col("doc_b"),
-        coalesce(col("ra"), col("doc_a")).as("x"),
-        coalesce(col("rb"), col("doc_b")).as("y")))
-    // arrivals adopt the min root they saw (self included); docs
-    // with no match stay out of the table — lookups coalesce to
-    // self, keeping labels match-count-sized, not corpus-sized
-    val newLabels = graft.Caches.materialized(compressed
-      .select(explode(array(
-        struct(col("doc_a").as("d"), col("y").as("r")),
-        struct(col("doc_b").as("d"), col("x").as("r")))).as("t"))
-      .select(col("t.d").as("doc_id"), col("t.r").as("r"))
-      .join(sigs.select("doc_id"), "doc_id")
-      .join(labels, Seq("doc_id"), "left_anti")
-      .groupBy("doc_id")
-      .agg(least(min(col("r")), min(col("doc_id"))).as("root")))
-    // all reads above are materialized — appends are now safe.
-    // Partitioned appends repartition by pb first so each batch lands
-    // ≤ one file per touched bucket, not one per shuffle task ×
-    // bucket (the batch-side Exchange is arrivals-sized). The four
-    // appends are INDEPENDENT (distinct dirs, all inputs pinned), so
-    // they run as concurrent jobs: per-append cost is dominated by
-    // per-file creation latency, which overlaps across tables.
-    def appendPartitioned(df: DataFrame, dir: String): Unit =
-      appendTagged(df.withColumn("pb", st13Pb(nB)(col("doc_id")))
-        .repartition(col("pb")), dir, theBid, Some("pb"))
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(Seq(
-        // batch-sized and read only whole (at compaction): one file
-        // per batch, not one per shuffle task
-        Future(appendTagged(compressed.select(col("x"), col("y"))
-          .filter(col("x") =!= col("y")).distinct().coalesce(1),
-          st.edgesDir, theBid, None)),
-        Future(appendPartitioned(newLabels, st.labelsDir)),
-        Future(appendTagged(bands.repartition(col("pb")),
-          st.bandsDir, theBid, Some("pb"))),
-        Future(appendPartitioned(sigs.select("doc_id", "sh"), st.shDir)))),
-        scala.concurrent.duration.Duration.Inf)
+  private[graft] def st13MaintainStep(st: StateTable, batch: DataFrame,
+      threshold: Double, bid: Long = -1L): Unit =
+    // batch atomicity ([[StateTable.appendBatch]]): the four table
+    // appends land as one unit or are wiped before the retry
+    // reprocesses
+    st.appendBatch(bid) {
+      val nB = st.nBuckets
+      // AT-LEAST-ONCE REDELIVERY GUARD (st14's contract): arrivals whose
+      // doc_id is already in the shingle registry are re-deliveries (a
+      // foreachBatch retry, a replayed file) — a blind re-process would
+      // duplicate registry rows and self-pair every shingle. The guard
+      // is an anti-join against the shingle table bucket-pruned to the
+      // arrivals' doc_id buckets: arrivals-sized, never a corpus scan.
+      val arrivals = graft.Caches.materialized(batch)
+      val arrPbs = arrivals.select(st13Pb(nB)(col("doc_id")).as("pb"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      val seenDocs = st.read("sh")
+        .filter(col("pb").isin(arrPbs: _*))
+        .select("doc_id")
+      val sigs = graft.Caches.materialized(
+        graft.operators.Dedup.minhashDocs(
+          arrivals.join(seenDocs, Seq("doc_id"), "left_anti")))
+      val bands = graft.Caches.materialized(
+        graft.operators.Dedup.bandSigs(sigs)
+          .withColumn("pb", st13Pb(nB)(col("band"), col("sig"))))
+      // The pruning literals are drawn from the BOUNDED [0, nBuckets)
+      // partition domain — each collect is ≤ nBuckets ints off an
+      // already-materialized cache, O(1) in both batch and corpus size
+      // (the same measured-and-bounded contract as graft.Guards), and
+      // the IN list is what turns each state read below into a
+      // partition-PRUNED scan (PartitionFilters in the step plan)
+      // instead of a full-registry scan per micro-batch.
+      val batchPbs = bands.select("pb").distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      // candidates: arrivals vs the registry (bucket-pruned to the
+      // batch's band-key buckets), plus arrival-arrival within the
+      // batch — canonical a < b either way
+      val old = st13BandProbe(st, batchPbs)
+      val candOld = bands.as("n").join(old.as("o"),
+          col("n.band") === col("o.band") && col("n.sig") === col("o.sig"))
+        .select(least(col("n.doc_id"), col("o.doc_id")).as("doc_a"),
+          greatest(col("n.doc_id"), col("o.doc_id")).as("doc_b"))
+      val candNew = bands.as("x").join(bands.as("y"),
+          col("x.band") === col("y.band") && col("x.sig") === col("y.sig")
+            && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      val cand = graft.Caches.materialized(candOld.unionByName(candNew)
+        .filter(col("doc_a") =!= col("doc_b")).distinct())
+      // the shingle/label lookups only need rows for the candidate
+      // ENDPOINTS (registry partners included, so the batch's own pb
+      // set is not enough) — again a bounded-domain pb collect
+      val endpointPbs = cand
+        .select(explode(array(st13Pb(nB)(col("doc_a")),
+          st13Pb(nB)(col("doc_b")))).as("pb"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      // exact verification — the batch d3/d6 arithmetic verbatim;
+      // counterpart shingles come from the registry's shingle table,
+      // bucket-pruned to the endpoints' buckets
+      val shAll = st.read("sh")
+        .filter(col("pb").isin(endpointPbs: _*))
+        .select("doc_id", "sh")
+        .unionByName(sigs.select("doc_id", "sh"))
+      // NOT separately materialized: `compressed` below is this frame's
+      // only consumer and is itself materialized, so a pairs checkpoint
+      // was one whole extra job per batch for lineage that dies the
+      // moment compressed pins (guide §1.2 — fewer driver round-trips
+      // per batch)
+      val pairs = cand
+        .join(shAll.select(col("doc_id").as("doc_a"), col("sh").as("sha")),
+          "doc_a")
+        .join(shAll.select(col("doc_id").as("doc_b"), col("sh").as("shb")),
+          "doc_b")
+        .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+        .withColumn("jaccard", round(col("inter") /
+          (size(col("sha")) + size(col("shb")) - col("inter")), 4))
+        .filter(col("jaccard") >= threshold)
+        .select("doc_a", "doc_b")
+      // root-compress both endpoints through the adoption table —
+      // lookup keys are candidate endpoints, so the same pb pruning
+      // applies (anti-join included: a bucket with no endpoint pb
+      // cannot hold a matching label row)
+      val labels = st.read("labels")
+        .filter(col("pb").isin(endpointPbs: _*))
+        .select("doc_id", "root")
+      val compressed = graft.Caches.materialized(pairs
+        .join(labels.select(col("doc_id").as("doc_a"),
+          col("root").as("ra")), Seq("doc_a"), "left")
+        .join(labels.select(col("doc_id").as("doc_b"),
+          col("root").as("rb")), Seq("doc_b"), "left")
+        .select(col("doc_a"), col("doc_b"),
+          coalesce(col("ra"), col("doc_a")).as("x"),
+          coalesce(col("rb"), col("doc_b")).as("y")))
+      // arrivals adopt the min root they saw (self included); docs
+      // with no match stay out of the table — lookups coalesce to
+      // self, keeping labels match-count-sized, not corpus-sized
+      val newLabels = graft.Caches.materialized(compressed
+        .select(explode(array(
+          struct(col("doc_a").as("d"), col("y").as("r")),
+          struct(col("doc_b").as("d"), col("x").as("r")))).as("t"))
+        .select(col("t.d").as("doc_id"), col("t.r").as("r"))
+        .join(sigs.select("doc_id"), "doc_id")
+        .join(labels, Seq("doc_id"), "left_anti")
+        .groupBy("doc_id")
+        .agg(least(min(col("r")), min(col("doc_id"))).as("root")))
+      // all reads above are materialized — appends are now safe. The
+      // four appends are INDEPENDENT (distinct dirs, all inputs pinned):
+      // per-append cost is dominated by per-file creation latency,
+      // which overlaps across the concurrent table appends. Storage
+      // stays bounded by ONE batch's working set, not the batch count
+      // (d6's per-iteration drop contract): the caches drop once the
+      // appends land.
+      (Seq(
+        "edges" -> compressed.select(col("x"), col("y"))
+          .filter(col("x") =!= col("y")).distinct(),
+        "labels" -> newLabels,
+        "bands" -> bands,
+        "sh" -> sigs),
+        Seq(compressed, newLabels, cand, bands, sigs, arrivals))
     }
-    commitBatch(st.root, theBid)
-    // storage bounded by ONE batch's working set, not the batch
-    // count (d6's per-iteration drop contract): this batch's
-    // caches are dead once its appends land
-    Seq(compressed, newLabels, cand, bands, sigs, arrivals)
-      .foreach(graft.Caches.drop)
-    // per-batch appends accumulate small files; past the file-count
-    // budget the state is rewritten in place (io5's compaction
-    // pattern applied to state)
-    st13MaybeCompactState(st)
-  }
 
   /** The registry probe frame a maintenance step scans: the bands
     * table bucket-pruned to `pbs`. Factored out so the plan-lock spec
     * can assert the pruning (PartitionFilters on pb, no full-registry
     * scan) on exactly the frame the step uses.
     */
-  private[graft] def st13BandProbe(st: St13State,
+  private[graft] def st13BandProbe(st: StateTable,
       pbs: Seq[Int]): DataFrame =
-    st13Read(st, st.bandsDir, withPb(st13BandsSchema))
-      .filter(col("pb").isin(pbs: _*))
-
-  /** Per-dir parquet file counts — the compaction trigger's input and
-    * the spec's witness that compaction actually shrank the state.
-    */
-  private[graft] def st13StateFileCounts(st: St13State): Map[String, Int] =
-    Seq("bands" -> st.bandsDir, "sh" -> st.shDir,
-      "labels" -> st.labelsDir, "edges" -> st.edgesDir)
-      .map { case (k, d) =>
-        k -> graft.sources.Io.parquetFilesRec(d).length
-      }.toMap
-
-  private def st13MaybeCompactState(st: St13State): Unit =
-    if (st13StateFileCounts(st).values.max > st.compactAboveFiles)
-      st13CompactState(st)
-
-  /** STATE COMPACTION — io5's small-file rewrite applied to the
-    * st13 state tables, with the LAYOUT work that keeps probes cheap
-    * at corpus scale folded into the rewrite it already pays for:
-    *
-    *  - each partitioned dir rewrites to ~one file per bucket, rows
-    *    SORTED by the table's probe key within the bucket (bands by
-    *    (band, sig), shingles/labels by doc_id) — so a pruned probe's
-    *    `isin` data filter skips parquet row groups by min/max stats
-    *    instead of scanning the whole unsorted bucket;
-    *  - the bucket count is RE-DERIVED from measured state bytes
-    *    ([[stateBucketsFor]] — the lshConfigFor pattern): buckets stay
-    *    ~constant-sized as the corpus grows, re-bucketing exactly when
-    *    the rewrite is already touching every row. All tables rewrite
-    *    to staging FIRST, then swap + persist the new count — the
-    *    mixed-bucket window is two renames per table, not a rewrite
-    *    (flat edges: ⌈bytes/target⌉ files via io5's own sizing).
-    *
-    * Results are byte-identical by construction (a pure rewrite); the
-    * spec asserts file counts drop, within-bucket row-group bounds
-    * are sorted, and step/compact outputs stay equal.
-    */
-  private[graft] def st13CompactState(st: St13State,
-      targetBytes: Long = 8L << 20): Unit = {
-    // defense-in-depth: the rewrite below folds EVERY live file into
-    // untagged state, so an uncommitted remnant that somehow survived
-    // to here (unreachable through the step/retry paths, which wipe
-    // first) must be dropped NOW or it would be laundered into
-    // consolidated — unwipeable — state
-    recoverUncommitted(st.root, st.allDirs)
-    val log = stateLog(st.root)
-    val gen = log.latestVersion.getOrElse(-1L) + 1L
-    val nb = stateBucketsFor(
-      Seq(st.bandsDir, st.shDir, st.labelsDir).map(stateDirBytes).max,
-      st.targetBucketBytes, floor = st.defaultBuckets)
-    // every table's rewrite lands in its NEXT-generation dir; nothing
-    // is visible until the one commit below flips all of them with
-    // the new count riding the tag (crash before it: the staged gens
-    // are unreferenced and the open-time sweep reclaims them)
-    val rewrites = Seq(
-      ("bands", st.bandsDir, st13BandsSchema,
-        Seq(col("band"), col("sig")), Seq("band", "sig")),
-      ("sh", st.shDir, st13ShSchema, Seq(col("doc_id")), Seq("doc_id")),
-      ("labels", st.labelsDir, st13LabelsSchema,
-        Seq(col("doc_id")), Seq("doc_id"))
-    ).flatMap { case (table, dir, schema, keyCols, sortCols) =>
-      if (st13HasData(dir)) {
-        val out = s"${st.root}/$table.g$gen"
-        st13Read(st, dir, withPb(schema))
-          .drop("pb").withColumn("pb", st13Pb(nb)(keyCols: _*))
-          .repartition(col("pb"))
-          .sortWithinPartitions(("pb" +: sortCols).map(col): _*)
-          .write.mode("overwrite").partitionBy("pb").parquet(out)
-        Some(table -> out)
-      } else None
-    } ++ (if (st13HasData(st.edgesDir)) {
-      val out = s"${st.root}/edges.g$gen"
-      st13Read(st, st.edgesDir, st13EdgesSchema)
-        .coalesce(graft.sources.Io.compactionFileCount(
-          st.edgesDir, targetBytes))
-        .write.mode("overwrite").parquet(out)
-      Seq("edges" -> out)
-    } else Nil)
-    if (rewrites.nonEmpty) {
-      commitStateRewrite(st.root, St13State.tables,
-        rewrites.map(_._2), tag = s"compact-$gen:nb=$nb")
-      st.dirsRef.set(st.dirsRef.get() ++ rewrites.toMap)
-    }
-    st.nBucketsRef.set(nb)
-    // every committed batch's rows are untagged now — collapse its
-    // marker files into the low-water int (bounds the commits dir)
-    retireMarkers(st.root)
-  }
+    st.read("bands").filter(col("pb").isin(pbs: _*))
 
   /** Compaction: pointer-jump CC over the compressed edge log ONLY. */
-  private[graft] def st13Compact(st: St13State): DataFrame =
+  private[graft] def st13Compact(st: StateTable): DataFrame =
     graft.operators.Dedup.ccGroups(
-      st13Read(st, st.edgesDir, st13EdgesSchema)
-        .select(col("x").as("doc_a"), col("y").as("doc_b")))
+      st.read("edges").select(col("x").as("doc_a"), col("y").as("doc_b")))
 
   // ----------------------------------------------------------------
   // st14: incremental SEARCH-INDEX maintenance
@@ -1849,14 +1629,14 @@ object Streams {
     * the spec asserts bit-equality with the batch operator.
     *
     * Per-batch small files are rewritten past a file-count budget
-    * ([[st14CompactState]] — io5's pattern, st13's trigger).
+    * ([[StateTable.compact]] — io5's pattern).
     */
   def st14StreamIndexMaintain(t: Tables): DataFrame = {
     val spark = t.spark
     val path = s"${t.dir}/documents.parquet"
     val schema = spark.read.parquet(path).schema
     graft.Caches.fresh()
-    val state = st14State(spark)
+    val state = StateTable.open(spark, st14Family)
     val docs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stagedDir(t, path, "doc_id"))
@@ -1870,33 +1650,25 @@ object Streams {
     st14Serve(state, graft.operators.Search.queryTerms, 5)
   }
 
-  /** st14's state handle: three parquet table paths under one root —
-    * same layout contract as [[St13State]] (pb partition buckets on
-    * each table's probe key; stats is only ever summed whole, so it
-    * stays flat).
+  /** st14's state: three tables under one root — st13's layout
+    * contract (buckets on each table's probe key; stats is only ever
+    * summed whole, so it stays flat). Compaction sorts postings by
+    * (term, doc_id) within each bucket, doclen by doc_id — a query
+    * term's `isin` read then skips parquet row groups by min/max
+    * stats, so the serving scan is posting-list-sized, not
+    * bucket-sized (spec-measured: fewer rows read after compaction on
+    * a multi-term corpus) — and COLLAPSES the stats log to its running
+    * total (sums are associative, so the collapsed log serves
+    * identically and cannot grow with batch count).
     */
-  private[graft] case class St14State(spark: org.apache.spark.sql
-      .SparkSession, root: String, defaultBuckets: Int,
-      compactAboveFiles: Int,
-      targetBucketBytes: Long = stateTargetBucketBytes) {
-    private[streaming] val dirsRef =
-      new java.util.concurrent.atomic.AtomicReference[Map[String, String]](
-        St14State.tables.map(t => t -> s"$root/$t").toMap)
-    def postingsDir: String = dirsRef.get()("postings")
-    def doclenDir: String = dirsRef.get()("doclen")
-    def statsDir: String = dirsRef.get()("stats")
-    def allDirs: Seq[String] = St14State.tables.map(dirsRef.get())
-    /** CURRENT bucket count (st13's contract: rides the head rewrite
-      * commit's tag, re-derived from measured bytes at compaction,
-      * resumed from the root's log).
-      */
-    private[streaming] val nBucketsRef =
-      new java.util.concurrent.atomic.AtomicInteger(defaultBuckets)
-    def nBuckets: Int = nBucketsRef.get()
-  }
-
-  private[graft] object St14State {
-    val tables: Seq[String] = Seq("postings", "doclen", "stats")
+  private[graft] val st14Family: StateTable.Family = {
+    import StateTable._
+    Family("st14", Seq(
+      Spec("postings", st14PostingsSchema,
+        Bucketed(Seq("term"), Seq("term", "doc_id")), SortedRewrite),
+      Spec("doclen", st14DoclenSchema,
+        Bucketed(Seq("doc_id"), Seq("doc_id")), SortedRewrite),
+      Spec("stats", st14StatsSchema, Flat, SumCollapse)))
   }
 
   private[graft] def st14PostingsSchema =
@@ -1920,43 +1692,6 @@ object Streams {
       org.apache.spark.sql.types.StructField("len_sum",
         org.apache.spark.sql.types.LongType)))
 
-  /** Open (or resume) an st14 state — the same root/resume contract
-    * as [[st13State]]: `None` → JVM scratch with shutdown cleanup,
-    * `Some(path)` → durable state a deployment owns and a later
-    * session resumes.
-    */
-  private[graft] def st14State(
-      spark: org.apache.spark.sql.SparkSession,
-      root: Option[String] = None,
-      nBuckets: Int = 16,
-      compactAboveFiles: Int = 128,
-      targetBucketBytes: Long = stateTargetBucketBytes,
-      // st13State's epoch contract: the batch-id namespace owner
-      epoch: Option[String] = None): St14State = {
-    val st = St14State(spark, root.getOrElse(graft.Staging.scratch("st14")),
-      nBuckets, compactAboveFiles, targetBucketBytes)
-    val dirs = resolveStateDirs(st.root, St14State.tables)
-    st.dirsRef.set(dirs)
-    sweepStateGenerations(st.root, St14State.tables, dirs)
-    recoverUncommitted(st.root, st.allDirs)
-    stateLogBuckets(st.root).orElse(loadStateBuckets(st.root)) match {
-      case Some(n) => st.nBucketsRef.set(n)
-      case None    => saveStateBuckets(st.root, st.nBuckets)
-    }
-    epochBarrier(st.root, epoch, () => st14CompactState(st))
-    st
-  }
-
-  private def st14Read(spark: org.apache.spark.sql.SparkSession,
-      dir: String, schema: org.apache.spark.sql.types.StructType)
-      : DataFrame =
-    if (st13HasData(dir)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-
-  private def st14WithPb(s: org.apache.spark.sql.types.StructType) =
-    s.add("pb", org.apache.spark.sql.types.IntegerType)
-
   /** ONE maintenance step: tokenize the ARRIVING (doc_id, text) rows
     * (batch r5's tokenize+explode+groupBy verbatim, so maintained
     * postings equal the batch TF table row-for-row), append postings
@@ -1972,60 +1707,40 @@ object Streams {
     * duplicate postings and double-count nd/len_sum, silently
     * corrupting df/avgdl.
     */
-  private[graft] def st14MaintainStep(st: St14State,
-      batch: DataFrame, bid: Long = -1L): Unit = {
-    val spark = st.spark
-    val nB = st.nBuckets
-    // batch atomicity (see the tagged-append block above): a
-    // streaming retry redelivers under its stable id — committed ⇒
-    // the whole step is a no-op; otherwise any half-landed remnants
-    // of a failed attempt are wiped before reprocessing, so the
-    // three table appends commit as one unit
-    val theBid = if (bid >= 0L) bid else nextBatchId(st.root)
-    if (batchCommitted(st.root, theBid)) return
-    // attempt-gated wipe (st13's contract): O(1) unless a retry
-    if (attemptExists(st.root, theBid))
-      wipeBatch(Seq(st.postingsDir, st.doclenDir, st.statsDir), theBid)
-    markAttempt(st.root, theBid)
-    val arrivals = graft.Caches.materialized(batch)
-    val arrPbs = arrivals.select(st13Pb(nB)(col("doc_id")).as("pb"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val seen = st14Read(spark, st.doclenDir, st14WithPb(st14DoclenSchema))
-      .filter(col("pb").isin(arrPbs: _*))
-      .select("doc_id")
-    val tf = graft.Caches.materialized(arrivals
-      .join(seen, Seq("doc_id"), "left_anti")
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        explode(graft.functions.Text.tokenize(col("text"))).as("term"))
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf")))
-    val dl = graft.Caches.materialized(
-      tf.groupBy("doc_id").agg(sum("tf").as("dl")))
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(Seq(
-        Future(appendTagged(tf.select("doc_id", "term", "tf")
-          .withColumn("pb", st13Pb(nB)(col("term")))
-          .repartition(col("pb")), st.postingsDir, theBid, Some("pb"))),
-        Future(appendTagged(dl.select("doc_id", "dl")
-          .withColumn("pb", st13Pb(nB)(col("doc_id")))
-          .repartition(col("pb")), st.doclenDir, theBid, Some("pb"))),
-        Future(appendTagged(
-          dl.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))
-            .coalesce(1), st.statsDir, theBid, None)))),
-        scala.concurrent.duration.Duration.Inf)
+  private[graft] def st14MaintainStep(st: StateTable,
+      batch: DataFrame, bid: Long = -1L): Unit =
+    // batch atomicity ([[StateTable.appendBatch]]): a streaming retry
+    // redelivers under its stable id — committed ⇒ the whole step is
+    // a no-op; otherwise any half-landed remnants of a failed attempt
+    // are wiped before reprocessing, so the three table appends
+    // commit as one unit
+    st.appendBatch(bid) {
+      val arrivals = graft.Caches.materialized(batch)
+      val arrPbs = arrivals.select(st13Pb(st.nBuckets)(col("doc_id")).as("pb"))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+      val seen = st.read("doclen")
+        .filter(col("pb").isin(arrPbs: _*))
+        .select("doc_id")
+      val tf = graft.Caches.materialized(arrivals
+        .join(seen, Seq("doc_id"), "left_anti")
+        .repartition(st.spark.sparkContext.defaultParallelism)
+        .select(col("doc_id"),
+          explode(graft.functions.Text.tokenize(col("text"))).as("term"))
+        .groupBy("doc_id", "term")
+        .agg(count(lit(1)).as("tf")))
+      val dl = graft.Caches.materialized(
+        tf.groupBy("doc_id").agg(sum("tf").as("dl")))
+      (Seq(
+        "postings" -> tf,
+        "doclen" -> dl,
+        "stats" -> dl.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))),
+        Seq(arrivals, tf, dl))
     }
-    commitBatch(st.root, theBid)
-    Seq(arrivals, tf, dl).foreach(graft.Caches.drop)
-    st14MaybeCompactState(st)
-  }
 
   /** The pruned postings frame a query scans — factored out so the
     * plan-lock spec asserts the pruning on exactly the serving frame.
     */
-  private[graft] def st14PostingProbe(st: St14State,
+  private[graft] def st14PostingProbe(st: StateTable,
       terms: Seq[String]): DataFrame = {
     val spark = st.spark
     import spark.implicits._
@@ -2034,7 +1749,7 @@ object Streams {
     val qpbs = terms.toDF("term")
       .select(st13Pb(st.nBuckets)(col("term")).as("pb"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    st14Read(spark, st.postingsDir, st14WithPb(st14PostingsSchema))
+    st.read("postings")
       .filter(col("pb").isin(qpbs: _*))
       .filter(col("term").isin(terms: _*))
       .select("doc_id", "term", "tf")
@@ -2047,7 +1762,7 @@ object Streams {
     * O(batch-count) log). avgdl = len_sum/nd is exact-integer double
     * arithmetic, so it equals batch avg(dl) bit-for-bit.
     */
-  private[graft] def st14Serve(st: St14State, terms: Seq[String],
+  private[graft] def st14Serve(st: StateTable, terms: Seq[String],
       k: Int): DataFrame = {
     val spark = st.spark
     val nB = st.nBuckets
@@ -2064,10 +1779,10 @@ object Streams {
     // candidate endpoints' doclen buckets — bounded-domain (≤ nB)
     val candPbs = posts.select(st13Pb(nB)(col("doc_id")).as("pb"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val dl = st14Read(spark, st.doclenDir, st14WithPb(st14DoclenSchema))
+    val dl = st.read("doclen")
       .filter(col("pb").isin(candPbs: _*))
       .select("doc_id", "dl")
-    val stats = st14Read(spark, st.statsDir, st14StatsSchema)
+    val stats = st.read("stats")
       .agg(sum("nd").as("nd"), sum("len_sum").as("len_sum"))
       .withColumn("avgdl", col("len_sum").cast("double") / col("nd"))
       .select("nd", "avgdl")
@@ -2085,79 +1800,6 @@ object Streams {
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
     out
-  }
-
-  private[graft] def st14StateFileCounts(st: St14State): Map[String, Int] =
-    Seq("postings" -> st.postingsDir, "doclen" -> st.doclenDir,
-      "stats" -> st.statsDir)
-      .map { case (k, d) =>
-        k -> graft.sources.Io.parquetFilesRec(d).length
-      }.toMap
-
-  private def st14MaybeCompactState(st: St14State): Unit =
-    if (st14StateFileCounts(st).values.max > st.compactAboveFiles)
-      st14CompactState(st)
-
-  /** io5's small-file rewrite applied to the st14 state, carrying the
-    * serving-layout work (st13CompactState's contract):
-    *
-    *  - postings rewrite SORTED by (term, doc_id) within each bucket,
-    *    doclen by doc_id — a query term's `isin` read then skips
-    *    parquet row groups by min/max stats, so the serving scan is
-    *    posting-list-sized, not bucket-sized (spec-measured: fewer
-    *    rows read after compaction on a multi-term corpus);
-    *  - the bucket count re-derives from MEASURED postings bytes
-    *    ([[stateBucketsFor]]): buckets hold ~targetBucketBytes each
-    *    as the index grows, re-bucketing inside the rewrite that
-    *    already touches every row, the new count persisted for
-    *    resume;
-    *  - the flat stats log — whose per-batch rows must stay a tiny
-    *    handful of files regardless of batch count — COLLAPSES to its
-    *    running total, one row in one file (sums are associative, so
-    *    the collapsed log serves identically).
-    */
-  private[graft] def st14CompactState(st: St14State): Unit = {
-    val spark = st.spark
-    // st13CompactState's defense-in-depth: never fold an uncommitted
-    // remnant into untagged (unwipeable) consolidated state
-    recoverUncommitted(st.root, st.allDirs)
-    val log = stateLog(st.root)
-    val gen = log.latestVersion.getOrElse(-1L) + 1L
-    val nb = stateBucketsFor(stateDirBytes(st.postingsDir),
-      st.targetBucketBytes, floor = st.defaultBuckets)
-    val rewrites = Seq(
-      ("postings", st.postingsDir, st14PostingsSchema,
-        Seq(col("term")), Seq("term", "doc_id")),
-      ("doclen", st.doclenDir, st14DoclenSchema,
-        Seq(col("doc_id")), Seq("doc_id"))
-    ).flatMap { case (table, dir, schema, keyCols, sortCols) =>
-      if (st13HasData(dir)) {
-        val out = s"${st.root}/$table.g$gen"
-        st14Read(spark, dir, st14WithPb(schema))
-          .drop("pb").withColumn("pb", st13Pb(nb)(keyCols: _*))
-          .repartition(col("pb"))
-          .sortWithinPartitions(("pb" +: sortCols).map(col): _*)
-          .write.mode("overwrite").partitionBy("pb").parquet(out)
-        Some(table -> out)
-      } else None
-    } ++ (if (st13HasData(st.statsDir)) {
-      // the flat stats log COLLAPSES to its running total in the
-      // same atomic flip (previously a separate swap — a crash
-      // between the two left tables and stats from different passes)
-      val out = s"${st.root}/stats.g$gen"
-      st14Read(spark, st.statsDir, st14StatsSchema)
-        .agg(sum("nd").as("nd"), sum("len_sum").as("len_sum"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(out)
-      Seq("stats" -> out)
-    } else Nil)
-    if (rewrites.nonEmpty) {
-      commitStateRewrite(st.root, St14State.tables,
-        rewrites.map(_._2), tag = s"compact-$gen:nb=$nb")
-      st.dirsRef.set(st.dirsRef.get() ++ rewrites.toMap)
-    }
-    st.nBucketsRef.set(nb)
-    retireMarkers(st.root)
   }
 
   // ----------------------------------------------------------------
@@ -2673,8 +2315,13 @@ object Streams {
       spark: org.apache.spark.sql.SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType =
         graft.sources.Io.ordersSchema): DataFrame =
-    st14Read(spark, resolveStateDirs(root, Seq("mirror"))("mirror"),
-      schema)
+    st18MirrorState(spark, root, schema).read("mirror")
+
+  private def st18MirrorState(spark: org.apache.spark.sql.SparkSession,
+      root: String, schema: org.apache.spark.sql.types.StructType) =
+    StateTable.resolve(spark, root, StateTable.Family("st18", Seq(
+      StateTable.Spec("mirror", schema, StateTable.Flat,
+        StateTable.Coalesce))))
 
   /** ONE follow step: diff snapshots v−1 → v from the log, merge the
     * change set into the mirror, advance the cursor. Idempotent under
@@ -2720,18 +2367,14 @@ object Streams {
         .filter(col("o").isNull || col("n").isNull || col("o") =!= col("n")))
     val upserts = changes.filter(col("n").isNotNull).select(col("n.*"))
     val changedKeys = changes.select(col("k").as(keyCol))
-    val mLog = stateLog(root)
     val tag = s"mirror@$v"
     // a crash between a prior try's commit and its cursor persist:
     // the merge is already served — heal the cursor, never re-merge
-    if (!tagCommitted(mLog, tag)) {
-      val gen = mLog.latestVersion.getOrElse(-1L) + 1L
-      val out = s"$root/mirror.g$gen"
-      st18Mirror(spark, root, schema)
+    if (!tagCommitted(stateLog(root), tag)) {
+      val mirror = st18MirrorState(spark, root, schema)
+      mirror.rewrite(_ => tag)(Seq("mirror" -> mirror.read("mirror")
         .join(changedKeys, Seq(keyCol), "left_anti")
-        .unionByName(upserts)
-        .write.mode("overwrite").parquet(out)
-      commitStateRewrite(root, Seq("mirror"), Seq(out), tag)
+        .unionByName(upserts)))
     }
     graft.Caches.drop(changes)
     saveMeta(root, "cursor.meta", v.toString)
@@ -2763,8 +2406,9 @@ object Streams {
     * row-for-row ⇒ s3's full k-means-replay oracle applies VERBATIM;
     * the spec asserts bit-equality with the batch operator.
     *
-    * Small-file buildup compacts past a file budget (st14's trigger);
-    * the state root is a resume-able parameter.
+    * Small-file buildup compacts past a file budget
+    * ([[StateTable.maybeCompact]]); the state root is a resume-able
+    * parameter.
     */
   def st15StreamAnnMaintain(t: Tables, probeId: Long = 0L,
       nLists: Int = 16, nProbe: Int = 2): DataFrame = {
@@ -2773,7 +2417,7 @@ object Streams {
     val schema = spark.read.parquet(path).schema
     graft.Caches.fresh()
     val cb = graft.operators.Ann.assignedVecs(t, nLists)._2
-    val state = st15State(spark, nLists = nLists)
+    val state = StateTable.open(spark, st15Family)
     val vecs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stagedDir(t, path, "vec_id"))
@@ -2794,15 +2438,14 @@ object Streams {
     st15Serve(state, cb, pv, nProbe, k = 10, excludeId = Some(probeId))
   }
 
-  /** st15's state handle: one list-partitioned parquet table. */
-  private[graft] case class St15State(spark: org.apache.spark.sql
-      .SparkSession, root: String, nLists: Int,
-      compactAboveFiles: Int) {
-    private[streaming] val dirsRef =
-      new java.util.concurrent.atomic.AtomicReference[Map[String, String]](
-        Map("vectors" -> s"$root/vectors"))
-    def vectorsDir: String = dirsRef.get()("vectors")
-  }
+  /** st15's state: one list-partitioned table. Compaction is the
+    * rewrite-commit flip alone — a list is already the serving read
+    * unit, so no within-list sort is needed (serving exact-scans whole
+    * lists).
+    */
+  private[graft] val st15Family: StateTable.Family =
+    StateTable.Family("st15", Seq(StateTable.Spec("vectors",
+      st15VecSchema, StateTable.ByList, StateTable.SortedRewrite)))
 
   private[graft] def st15VecSchema =
     org.apache.spark.sql.types.StructType(Seq(
@@ -2811,9 +2454,6 @@ object Streams {
       org.apache.spark.sql.types.StructField("v",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.DoubleType))))
-
-  private def st15WithCid(s: org.apache.spark.sql.types.StructType) =
-    s.add("cid", org.apache.spark.sql.types.IntegerType)
 
   /** The persisted IVF model for a durable st15 root: a RESUMED
     * session must assign and serve under the SAME pinned codebook
@@ -2856,20 +2496,6 @@ object Streams {
     }
   }
 
-  /** Open (or resume) an st15 state — st13/st14's root contract. */
-  private[graft] def st15State(
-      spark: org.apache.spark.sql.SparkSession,
-      root: Option[String] = None,
-      nLists: Int = 16,
-      compactAboveFiles: Int = 128): St15State = {
-    val st = St15State(spark, root.getOrElse(graft.Staging.scratch("st15")),
-      nLists, compactAboveFiles)
-    val dirs = resolveStateDirs(st.root, Seq("vectors"))
-    st.dirsRef.set(dirs)
-    sweepStateGenerations(st.root, Seq("vectors"), dirs)
-    st
-  }
-
   /** ONE maintenance step: assign the ARRIVING (vec_id, v) rows to
     * their nearest coarse list — a compiled projection against the
     * pinned codebook, batch `assignedVecs`'s expression verbatim —
@@ -2881,7 +2507,7 @@ object Streams {
     * pruned to the batch's assigned lists — arrivals-sized, ≤ nLists
     * partitions read — drops duplicates a retry would append.
     */
-  private[graft] def st15MaintainStep(st: St15State,
+  private[graft] def st15MaintainStep(st: StateTable,
       cb: graft.expressions.PlaneMatrix, batch: DataFrame): Unit = {
     val assigned = graft.Caches.materialized(batch
       .select(col("vec_id"), col("v"),
@@ -2893,20 +2519,17 @@ object Streams {
     assigned
       .join(seen, Seq("vec_id"), "left_anti")
       .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(st.vectorsDir)
+      .write.mode("append").partitionBy("cid").parquet(st.dir("vectors"))
     graft.Caches.drop(assigned)
-    if (graft.sources.Io.parquetFilesRec(st.vectorsDir).length >
-        st.compactAboveFiles)
-      st15CompactState(st)
+    st.maybeCompact()
   }
 
   /** The pruned list scan a query reads — factored out for the
     * plan-lock spec (PartitionFilters on cid).
     */
-  private[graft] def st15ListProbe(st: St15State,
+  private[graft] def st15ListProbe(st: StateTable,
       cids: Seq[Int]): DataFrame =
-    st14Read(st.spark, st.vectorsDir, st15WithCid(st15VecSchema))
-      .filter(col("cid").isin(cids: _*))
+    st.read("vectors").filter(col("cid").isin(cids: _*))
 
   /** Exact-cosine top-k over the query's `nProbe` nearest lists —
     * batch s3's serving arithmetic (round(·,4), (cos desc, vec_id)
@@ -2915,7 +2538,7 @@ object Streams {
     * writer used (a one-row driver-bounded job, ≤ nProbe ints), so
     * probe-list choice is bit-identical to batch.
     */
-  private[graft] def st15Serve(st: St15State,
+  private[graft] def st15Serve(st: StateTable,
       cb: graft.expressions.PlaneMatrix, queryVec: Seq[Double],
       nProbe: Int, k: Int, excludeId: Option[Long] = None): DataFrame = {
     val spark = st.spark
@@ -2936,24 +2559,6 @@ object Streams {
         round(graft.functions.Vectors.cosine(col("v"), pvCol), 4).as("cos"))
       .orderBy(col("cos").desc, col("vec_id"))
       .limit(k)
-  }
-
-  /** st14's compaction applied to the one list-partitioned table
-    * (the rewrite-commit flip; a list is already the serving read
-    * unit, so no within-list sort is needed — serving exact-scans
-    * whole lists).
-    */
-  private[graft] def st15CompactState(st: St15State): Unit = {
-    if (st13HasData(st.vectorsDir)) {
-      val gen = stateLog(st.root).latestVersion.getOrElse(-1L) + 1L
-      val out = s"${st.root}/vectors.g$gen"
-      st14Read(st.spark, st.vectorsDir, st15WithCid(st15VecSchema))
-        .repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(out)
-      commitStateRewrite(st.root, Seq("vectors"), Seq(out),
-        tag = s"compact-$gen")
-      st.dirsRef.set(Map("vectors" -> out))
-    }
   }
 
   /** st17: RECALL GATE OVER THE MAINTAINED VECTOR INDEX — s8
@@ -2981,7 +2586,7 @@ object Streams {
     val spark = t.spark
     graft.Caches.fresh()
     val cb = graft.operators.Ann.assignedVecs(t, nLists)._2
-    val state = st15State(spark, nLists = nLists)
+    val state = StateTable.open(spark, st15Family)
     val vecs = t.embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     st15MaintainStep(state, cb, vecs.filter(col("vec_id") % 2 === 0))
@@ -2994,7 +2599,7 @@ object Streams {
     * exact per-probe brute force (s8's arithmetic verbatim) joined
     * against nProbes [[st15Serve]] reads.
     */
-  private[graft] def st17RecallFrom(st: St15State,
+  private[graft] def st17RecallFrom(st: StateTable,
       serveCb: graft.expressions.PlaneMatrix, vecs: DataFrame,
       nProbes: Int, k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3084,16 +2689,16 @@ object Streams {
       val past = vecs.filter(col("vec_id") % 3 =!= 0)
       val cbOld = graft.operators.Ann.trainCodebookSampled(
         past, nLists, past.count())
-      val st1 = st15State(spark, Some(s"$d/v1"), nLists)
+      val st1 = StateTable.open(spark, st15Family, Some(s"$d/v1"))
       saveCodebook(st1.root, cbOld)
       st15MaintainStep(st1, cbOld, vecs.filter(col("vec_id") % 2 === 0))
       st15MaintainStep(st1, cbOld, vecs.filter(col("vec_id") % 2 === 1))
       saveMeta(d, "current.meta", "v1")
       // drift detected (st17's gate) → cut over to the retrained model
       val cbNew = graft.operators.Ann.assignedVecs(t, nLists)._2
-      st20Migrate(spark, d, "v2", cbNew, nLists)
+      st20Migrate(spark, d, "v2", cbNew)
     }
-    val (st, cb) = st20Serving(spark, parent, nLists)
+    val (st, cb) = st20Serving(spark, parent)
     val pv = t.embeddings.filter(col("vec_id") === probeId)
       .select(col("embedding").cast("array<double>").as("v"))
       .collect()(0).getSeq[Double](0)
@@ -3107,8 +2712,7 @@ object Streams {
     */
   private[graft] def st20Migrate(
       spark: org.apache.spark.sql.SparkSession, parent: String,
-      toSub: String, cbNew: graft.expressions.PlaneMatrix,
-      nLists: Int): Unit = {
+      toSub: String, cbNew: graft.expressions.PlaneMatrix): Unit = {
     val fromSub = loadMeta(parent, "current.meta").getOrElse(
       sys.error(s"st20Migrate: no serving index under $parent"))
     if (fromSub == toSub) {
@@ -3119,14 +2723,14 @@ object Streams {
       vacuumRetiredRoots(parent, toSub)
       return
     }
-    val from = st15State(spark, Some(s"$parent/$fromSub"), nLists)
-    val to = st15State(spark, Some(s"$parent/$toSub"), nLists)
-    st14Read(spark, from.vectorsDir, st15WithCid(st15VecSchema))
+    val from = StateTable.open(spark, st15Family, Some(s"$parent/$fromSub"))
+    val to = StateTable.open(spark, st15Family, Some(s"$parent/$toSub"))
+    from.read("vectors")
       .select(col("vec_id"), col("v"),
         graft.functions.Vectors.centroidTop1(col("v"), cbNew)
           .as("cid"))
       .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(to.vectorsDir)
+      .write.mode("overwrite").partitionBy("cid").parquet(to.dir("vectors"))
     saveCodebook(to.root, cbNew)
     // the atomic cutover: readers resolve the pointer at open. NEW
     // opens see v2 from here; a reader that opened v1 BEFORE the
@@ -3151,11 +2755,11 @@ object Streams {
     * (never a retrain — the [[st20AnnMigrate]] contract).
     */
   private[graft] def st20Serving(
-      spark: org.apache.spark.sql.SparkSession, parent: String,
-      nLists: Int): (St15State, graft.expressions.PlaneMatrix) = {
+      spark: org.apache.spark.sql.SparkSession,
+      parent: String): (StateTable, graft.expressions.PlaneMatrix) = {
     val sub = loadMeta(parent, "current.meta").getOrElse(
       sys.error(s"st20Serving: no serving index under $parent"))
-    val st = st15State(spark, Some(s"$parent/$sub"), nLists)
+    val st = StateTable.open(spark, st15Family, Some(s"$parent/$sub"))
     (st, loadCodebook(st.root).getOrElse(
       sys.error(s"st20Serving: serving root ${st.root} has no codebook")))
   }
@@ -3563,20 +3167,7 @@ object Streams {
             .filter(col("key").isNotNull).select("key").distinct()
             .join(seenFp.select(col("fp").as("key")), Seq("key"),
               "left_anti"))))
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val settled = lands.map { case (n, f) =>
-          Future(scala.util.Try(
-            graft.operators.Pipeline.labeled(spark, s"st22: land $n") {
-              f()
-            }))
-        }.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-        settled.collect { case scala.util.Failure(e) => e } match {
-          case Seq() => ()
-          case e +: rest => rest.foreach(e.addSuppressed); throw e
-        }
-      }
+      settleAll(spark)(lands.map { case (n, f) => s"st22: land $n" -> f })
       // st16's checkpoint cadence on all four destinations: every 8
       // batches each log collapses its replay and the txn watermark
       // folds the accumulated b@ tags to one row per log — this sink

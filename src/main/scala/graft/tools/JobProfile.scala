@@ -4,11 +4,14 @@ import org.apache.spark.scheduler._
 
 /** Per-JOB wall-clock profile of one or more named queries (guide
   * §1.1/§1.5): installs a SparkListener that records every job's
-  * (description, duration, task count, task time), runs each query,
-  * and prints the jobs in submission order plus a summary. The gap
-  * between Σ job time and wall time is DRIVER time (planning, file
-  * listing, driver-side collects between jobs) — exactly the split
-  * the optimization guide says to measure before touching anything.
+  * description and wall time — wall time per job ONLY, no task or
+  * stage accounting (perfbench's traced run maps stages to jobs
+  * through `SparkListenerJobStart.stageIds` for that split) — runs
+  * each query, and prints the jobs in submission order plus a
+  * summary. The gap between Σ job time and wall time is DRIVER time
+  * (planning, file listing, driver-side collects between jobs) —
+  * exactly the split the optimization guide says to measure before
+  * touching anything.
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <q1,q2,...>
   */
@@ -17,8 +20,7 @@ object JobProfile {
     val sfDir = args(0)
     val names = args(1)
     val spark = graft.GraftSession.build()
-    case class J(id: Int, desc: String, t0: Long,
-      var t1: Long = 0L, var nTasks: Int = 0, var taskMs: Long = 0L)
+    case class J(id: Int, desc: String, t0: Long, var t1: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
@@ -34,11 +36,6 @@ object JobProfile {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId); if (j != null) j.t1 = e.time
       }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val j = jobs.get(e.stageId); ()
-      }
-      override def onStageCompleted(
-          e: SparkListenerStageCompleted): Unit = ()
     }
     spark.sparkContext.addSparkListener(listener)
     names.split(',').foreach { name =>

@@ -372,7 +372,8 @@ object Probe {
         def runMaint(tag: String,
             docs: org.apache.spark.sql.DataFrame): Long = {
           graft.Caches.fresh()
-          val st = graft.streaming.Streams.st13State(spark, docs.limit(0))
+          val st = graft.streaming.StateTable.open(spark,
+            graft.streaming.Streams.st13Family)
           val mm = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
           val (lo, hi) = (mm.getLong(0), mm.getLong(1))
           val width = (hi - lo) / 4 + 1
@@ -408,7 +409,8 @@ object Probe {
           // 256 KB bucket target: probe-scale stand-in for the 64 MB
           // production default, so the auto-sizing actually re-buckets
           // at this corpus size instead of idling at the floor
-          val st = graft.streaming.Streams.st14State(spark,
+          val st = graft.streaming.StateTable.open(spark,
+            graft.streaming.Streams.st14Family,
             targetBucketBytes = 256L << 10)
           val mm = d.agg(min("doc_id"), max("doc_id")).collect()(0)
           val (lo, hi) = (mm.getLong(0), mm.getLong(1))
@@ -439,12 +441,12 @@ object Probe {
           hc.setInt("parquet.block.size", 32 * 1024)
           hc.setInt("parquet.page.size", 8 * 1024)
           val tC = System.nanoTime
-          graft.streaming.Streams.st14CompactState(st)
+          st.compact()
           val sC = (System.nanoTime - tC) / 1e9
           hc.unset("parquet.block.size")
           hc.unset("parquet.page.size")
           val (h1, r1, b1, s1) = serveM() // sorted auto-bucketed layout
-          val postings = spark.read.parquet(st.postingsDir).count()
+          val postings = spark.read.parquet(st.dir("postings")).count()
           println(f"PROBE st14 [$tag] per-wave s: " +
             waves.map(s => f"$s%.1f").mkString(" ") +
             f"; serve(appended) $s0%.2f s ($h0 hits, $r0 rows, " +
@@ -483,8 +485,8 @@ object Probe {
           val cb = graft.operators.Ann.trainCodebookSampled(
             dd.select(col("vec_id"), col("embedding").as("v")), nLists, nV)
           val sT = (System.nanoTime - t0) / 1e9
-          val st = graft.streaming.Streams.st15State(spark,
-            nLists = nLists)
+          val st = graft.streaming.StateTable.open(spark,
+            graft.streaming.Streams.st15Family)
           val waves = (0 until 4).map { w =>
             val t = System.nanoTime
             graft.streaming.Streams.st15MaintainStep(st, cb,
@@ -500,7 +502,7 @@ object Probe {
               .st15Serve(st, cb, qv, 2, 10).count()
             (h, (System.nanoTime - t) / 1e9)
           }
-          val n = spark.read.parquet(st.vectorsDir).count()
+          val n = spark.read.parquet(st.dir("vectors")).count()
           dd.unpersist()
           println(f"PROBE st15 [$tag] nLists $nLists; train $sT%.1f s; " +
             "per-wave s: " + waves.map(s => f"$s%.1f").mkString(" ") +

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.streaming.StateTable
+import graft.streaming.Streams.{st13Family, st14Family, st15Family}
 
 class AnnStreamSpec extends SparkSpec {
 
@@ -874,12 +876,12 @@ class AnnStreamSpec extends SparkSpec {
     assert(pairs == Set((1L, 2L), (1L, 10L), (2L, 10L), (5L, 6L),
       (5L, 10L), (6L, 10L), (5L, 20L), (6L, 20L)),
       s"corpus lost its designed pair structure: $pairs")
-    val st = graft.streaming.Streams.st13State(spark, all.limit(0))
+    val st = StateTable.open(spark, st13Family)
     graft.streaming.Streams.st13MaintainStep(st, frame(1L, 2L, 5L, 6L), 0.35)
     graft.streaming.Streams.st13MaintainStep(st, frame(10L), 0.35)
     graft.streaming.Streams.st13MaintainStep(st, frame(20L), 0.35)
     // the wave-3 arrival really adopted the SUPERSEDED root
-    val labels = spark.read.parquet(st.labelsDir).collect()
+    val labels = spark.read.parquet(st.dir("labels")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels(20L) == 5L, s"labels=$labels — staleness not exercised")
     assert(labels(10L) == 1L && labels(5L) == 5L)
@@ -1086,8 +1088,8 @@ class AnnStreamSpec extends SparkSpec {
     // compaction off for this test: its pb repartition is the one
     // legitimate raw state shuffle, and it is out-of-band (not the
     // per-batch probe path this lock is about)
-    val st = graft.streaming.Streams.st13State(spark,
-      frame().limit(0), compactAboveFiles = 10000)
+    val st = StateTable.open(spark,
+      st13Family, compactAboveFiles = 10000)
     // capture every query execution the steps run — the lock is on
     // the ACTUAL step plans, not a reconstruction
     val captured =
@@ -1127,15 +1129,15 @@ class AnnStreamSpec extends SparkSpec {
             .exists(_.toString.contains(of)) => f
         }
       }
-      while (stateScans(st.bandsDir).isEmpty &&
+      while (stateScans(st.dir("bands")).isEmpty &&
           System.nanoTime < deadline) Thread.sleep(100)
       // wave 2/3 probes scanned the bands registry (wave 1 sees an
       // empty dir and short-circuits to an empty frame)
-      val bandScans = stateScans(st.bandsDir)
+      val bandScans = stateScans(st.dir("bands"))
       assert(bandScans.nonEmpty, "no bands-registry scan captured")
       // every registry scan is partition-pruned on pb — the scan
       // carries partition filters, never a full-registry read
-      (bandScans ++ stateScans(st.labelsDir) ++ stateScans(st.shDir))
+      (bandScans ++ stateScans(st.dir("labels")) ++ stateScans(st.dir("sh")))
         .foreach { s =>
           assert(s.partitionFilters.nonEmpty,
             s"unpruned state scan: ${s.simpleString(200)}")
@@ -1159,9 +1161,9 @@ class AnnStreamSpec extends SparkSpec {
         }
       def isStateScan(f: FileSourceScanExec) =
         f.relation.location.rootPaths.exists(p =>
-          p.toString.contains(st.bandsDir) ||
-            p.toString.contains(st.labelsDir) ||
-            p.toString.contains(st.shDir))
+          p.toString.contains(st.dir("bands")) ||
+            p.toString.contains(st.dir("labels")) ||
+            p.toString.contains(st.dir("sh")))
       import scala.jdk.CollectionConverters._
       val offending = captured.asScala.toSeq.flatMap(flatten).collect {
         case e: ShuffleExchangeExec
@@ -1220,21 +1222,19 @@ class AnnStreamSpec extends SparkSpec {
     val corpus = st13Corpus
     def frame(ids: Long*) =
       ids.map(i => i -> corpus(i)).toDF("doc_id", "text")
-    def drive(st: graft.streaming.Streams.St13State): Unit =
+    def drive(st: StateTable): Unit =
       corpus.keys.toSeq.sorted.foreach { id =>
         graft.streaming.Streams.st13MaintainStep(st, frame(id), 0.35)
       }
     // control: budget high enough that the trigger never fires —
     // one-doc waves accumulate files per dir
-    val loose = graft.streaming.Streams.st13State(spark, frame().limit(0),
-      compactAboveFiles = 10000)
+    val loose = StateTable.open(spark, st13Family, compactAboveFiles = 10000)
     drive(loose)
-    val looseCounts = graft.streaming.Streams.st13StateFileCounts(loose)
+    val looseCounts = loose.fileCounts
     // trigger path: tiny budget — the step itself compacts
-    val tight = graft.streaming.Streams.st13State(spark, frame().limit(0),
-      compactAboveFiles = 4)
+    val tight = StateTable.open(spark, st13Family, compactAboveFiles = 4)
     drive(tight)
-    val tightCounts = graft.streaming.Streams.st13StateFileCounts(tight)
+    val tightCounts = tight.fileCounts
     assert(looseCounts("bands") > 4, looseCounts.toString)
     assert(tightCounts("bands") < looseCounts("bands"),
       s"loose=$looseCounts tight=$tightCounts")
@@ -1247,8 +1247,8 @@ class AnnStreamSpec extends SparkSpec {
     assert(graft.streaming.Streams.st13Compact(tight)
       .collect().map(_.toSeq).toSeq == want)
     // explicit compaction is idempotent and shrinks-or-holds files
-    graft.streaming.Streams.st13CompactState(tight)
-    val again = graft.streaming.Streams.st13StateFileCounts(tight)
+    tight.compact()
+    val again = tight.fileCounts
     assert(again.values.sum <= tightCounts.values.sum)
     assert(graft.streaming.Streams.st13Compact(tight)
       .collect().map(_.toSeq).toSeq == want)
@@ -1262,10 +1262,10 @@ class AnnStreamSpec extends SparkSpec {
         val ks = spark.read.parquet(f.toString).collect().toSeq.map(key)
         assert(ks == ks.sorted, s"unsorted bucket file $f")
       }
-    assertSorted(tight.bandsDir,
+    assertSorted(tight.dir("bands"),
       r => (r.getAs[Int]("band"), r.getAs[String]("sig")))
-    assertSorted(tight.shDir, _.getAs[Long]("doc_id"))
-    assertSorted(tight.labelsDir, _.getAs[Long]("doc_id"))
+    assertSorted(tight.dir("sh"), _.getAs[Long]("doc_id"))
+    assertSorted(tight.dir("labels"), _.getAs[Long]("doc_id"))
   }
 
   test("st14 maintained index serves batch r8's BM25 result bit-for-bit") {
@@ -1285,7 +1285,7 @@ class AnnStreamSpec extends SparkSpec {
     val docs = (1L to 12L).map(i =>
       (i, s"alpha bravo w$i " + ("alpha " * (i % 3).toInt)))
       .toDF("doc_id", "text")
-    val st = graft.streaming.Streams.st14State(spark,
+    val st = StateTable.open(spark, st14Family,
       compactAboveFiles = 10000)
     // three disjoint arrival waves
     Seq(1L to 4L, 5L to 8L, 9L to 12L).foreach { ids =>
@@ -1293,7 +1293,7 @@ class AnnStreamSpec extends SparkSpec {
         docs.filter(col("doc_id").isin(ids: _*)))
     }
     // maintained postings == batch tokenize over the union corpus
-    val maintained = spark.read.parquet(st.postingsDir)
+    val maintained = spark.read.parquet(st.dir("postings"))
       .select("doc_id", "term", "tf").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted
     val direct = docs
@@ -1353,7 +1353,7 @@ class AnnStreamSpec extends SparkSpec {
     val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val n = vecs.count()
-    def drive(st: graft.streaming.Streams.St15State,
+    def drive(st: StateTable,
         waves: Int): Unit =
       (0 until waves).foreach { w =>
         graft.streaming.Streams.st15MaintainStep(st, cb,
@@ -1361,14 +1361,14 @@ class AnnStreamSpec extends SparkSpec {
       }
     val qv = vecs.filter(col("vec_id") === 7L)
       .collect()(0).getSeq[Double](1)
-    val serve = (st: graft.streaming.Streams.St15State) =>
+    val serve = (st: StateTable) =>
       graft.streaming.Streams.st15Serve(st, cb, qv, 2, 10)
         .collect().map(_.toSeq).toSeq
-    val loose = graft.streaming.Streams.st15State(spark,
+    val loose = StateTable.open(spark, st15Family,
       compactAboveFiles = 10000)
     drive(loose, 8)
     // maintained rows = one per vector, assignments = batch expression
-    assert(spark.read.parquet(loose.vectorsDir).count() == n)
+    assert(spark.read.parquet(loose.dir("vectors")).count() == n)
     // the serving scan carries cid PartitionFilters
     val probe = graft.streaming.Streams.st15ListProbe(loose, Seq(0, 3))
     probe.collect()
@@ -1383,24 +1383,24 @@ class AnnStreamSpec extends SparkSpec {
       s.partitionFilters.mkString(",").contains("cid")),
       ss.map(_.simpleString(200)).mkString("\n"))
     // compaction: tiny budget path ends with fewer files, same result
-    val tight = graft.streaming.Streams.st15State(spark,
+    val tight = StateTable.open(spark, st15Family,
       compactAboveFiles = 4)
     drive(tight, 8)
     val looseFiles =
-      graft.sources.Io.parquetFilesRec(loose.vectorsDir).length
+      graft.sources.Io.parquetFilesRec(loose.dir("vectors")).length
     val tightFiles =
-      graft.sources.Io.parquetFilesRec(tight.vectorsDir).length
+      graft.sources.Io.parquetFilesRec(tight.dir("vectors")).length
     assert(looseFiles > 4 && tightFiles < looseFiles,
       s"loose=$looseFiles tight=$tightFiles")
     assert(serve(loose).nonEmpty && serve(loose) == serve(tight))
     // durable root: waves split across two state opens = continuous
     val root = graft.Staging.scratch("st15_resume_spec")
-    val a = graft.streaming.Streams.st15State(spark, Some(root))
+    val a = StateTable.open(spark, st15Family, Some(root))
     (0 until 4).foreach { w =>
       graft.streaming.Streams.st15MaintainStep(a, cb,
         vecs.filter(col("vec_id") % 8 === w))
     }
-    val b = graft.streaming.Streams.st15State(spark, Some(root))
+    val b = StateTable.open(spark, st15Family, Some(root))
     (4 until 8).foreach { w =>
       graft.streaming.Streams.st15MaintainStep(b, cb,
         vecs.filter(col("vec_id") % 8 === w))
@@ -1419,7 +1419,7 @@ class AnnStreamSpec extends SparkSpec {
       1L -> "alpha beta alpha", 2L -> "alpha gamma", 3L -> "",
       4L -> "!!! ???", 5L -> "beta beta beta delta")
       .toDF("doc_id", "text")
-    val st = graft.streaming.Streams.st14State(spark)
+    val st = StateTable.open(spark, st14Family)
     docs.collect().zipWithIndex.foreach { case (r, _) =>
       graft.streaming.Streams.st14MaintainStep(st,
         Seq((r.getLong(0), r.getString(1))).toDF("doc_id", "text"))
@@ -1446,38 +1446,38 @@ class AnnStreamSpec extends SparkSpec {
     val spark = SparkSpec.spark
     val docs = (1L to 16L).map(i =>
       (i, s"query term$i common words here")).toDF("doc_id", "text")
-    def drive(st: graft.streaming.Streams.St14State): Unit =
+    def drive(st: StateTable): Unit =
       (1L to 16L).foreach { id =>
         graft.streaming.Streams.st14MaintainStep(st,
           docs.filter(col("doc_id") === id))
       }
-    val loose = graft.streaming.Streams.st14State(spark,
+    val loose = StateTable.open(spark, st14Family,
       compactAboveFiles = 10000)
     drive(loose)
-    val looseCounts = graft.streaming.Streams.st14StateFileCounts(loose)
-    val tight = graft.streaming.Streams.st14State(spark,
+    val looseCounts = loose.fileCounts
+    val tight = StateTable.open(spark, st14Family,
       compactAboveFiles = 4)
     drive(tight)
-    val tightCounts = graft.streaming.Streams.st14StateFileCounts(tight)
+    val tightCounts = tight.fileCounts
     assert(looseCounts("postings") > 4, looseCounts.toString)
     assert(tightCounts("postings") < looseCounts("postings"),
       s"loose=$looseCounts tight=$tightCounts")
     // the stats log collapses to its running total, so it cannot grow
     // with batch count past a compaction
     assert(tightCounts("stats") <= 4, tightCounts.toString)
-    val serve = (st: graft.streaming.Streams.St14State) =>
+    val serve = (st: StateTable) =>
       graft.streaming.Streams.st14Serve(st, Seq("query", "common"), 5)
         .collect().map(_.toSeq).toSeq
     assert(serve(loose).nonEmpty && serve(loose) == serve(tight))
     // durable root: stop after half the waves, reopen, continue —
     // equals one continuous session
     val root = graft.Staging.scratch("st14_resume_spec")
-    val s1 = graft.streaming.Streams.st14State(spark, Some(root))
+    val s1 = StateTable.open(spark, st14Family, Some(root))
     (1L to 8L).foreach { id =>
       graft.streaming.Streams.st14MaintainStep(s1,
         docs.filter(col("doc_id") === id))
     }
-    val s2 = graft.streaming.Streams.st14State(spark, Some(root))
+    val s2 = StateTable.open(spark, st14Family, Some(root))
     (9L to 16L).foreach { id =>
       graft.streaming.Streams.st14MaintainStep(s2,
         docs.filter(col("doc_id") === id))
@@ -1504,7 +1504,7 @@ class AnnStreamSpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     val spark = SparkSpec.spark
     val docs = st14WideCorpus(800)
-    val st = graft.streaming.Streams.st14State(spark,
+    val st = StateTable.open(spark, st14Family,
       compactAboveFiles = 100000)
     (0 until 8).foreach { w =>
       graft.streaming.Streams.st14MaintainStep(st,
@@ -1542,7 +1542,7 @@ class AnnStreamSpec extends SparkSpec {
       hc.setInt("parquet.block.size", 4 * 1024)
       hc.setInt("parquet.page.size", 1024)
       hc.setBoolean("parquet.enable.dictionary", false)
-      graft.streaming.Streams.st14CompactState(st)
+      st.compact()
     } finally {
       if (oldBlock == null) hc.unset("parquet.block.size")
       else hc.set("parquet.block.size", oldBlock)
@@ -1563,7 +1563,7 @@ class AnnStreamSpec extends SparkSpec {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val files = graft.sources.Io.parquetFilesRec(st.postingsDir)
+    val files = graft.sources.Io.parquetFilesRec(st.dir("postings"))
     var multiGroup = 0
     files.foreach { f =>
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
@@ -1609,17 +1609,17 @@ class AnnStreamSpec extends SparkSpec {
     // serving stays correct and a reopened root resumes the new count
     val root = graft.Staging.scratch("st14_rebucket_spec")
     val docs = st14WideCorpus(200)
-    val st = graft.streaming.Streams.st14State(spark, Some(root),
+    val st = StateTable.open(spark, st14Family, Some(root),
       compactAboveFiles = 100000, targetBucketBytes = 4096)
     (0 until 4).foreach { w =>
       graft.streaming.Streams.st14MaintainStep(st,
         docs.filter(col("doc_id") % 4 === w))
     }
     assert(st.nBuckets == 16)
-    graft.streaming.Streams.st14CompactState(st)
+    st.compact()
     assert(st.nBuckets > 16, s"tiny target should grow buckets: ${st.nBuckets}")
     // partition dirs beyond the old [0,16) domain actually exist
-    val pbs = graft.sources.Io.parquetFilesRec(st.postingsDir)
+    val pbs = graft.sources.Io.parquetFilesRec(st.dir("postings"))
       .map(_.getParent.getFileName.toString)
       .filter(_.startsWith("pb=")).map(_.stripPrefix("pb=").toInt)
     assert(pbs.exists(_ >= 16), s"no re-bucketed partitions: $pbs")
@@ -1634,7 +1634,7 @@ class AnnStreamSpec extends SparkSpec {
     assert(got.nonEmpty && got == want)
     // resume: the persisted count survives a reopen, and maintenance
     // over the resumed handle writes into the re-bucketed domain
-    val re = graft.streaming.Streams.st14State(spark, Some(root),
+    val re = StateTable.open(spark, st14Family, Some(root),
       targetBucketBytes = 4096)
     assert(re.nBuckets == st.nBuckets)
     assert(graft.streaming.Streams.st14Serve(re, terms, 5)
@@ -1648,14 +1648,14 @@ class AnnStreamSpec extends SparkSpec {
     def frame(ids: Long*) =
       ids.map(i => i -> corpus(i)).toDF("doc_id", "text")
     val root = graft.Staging.scratch("st13_rebucket_spec")
-    val st = graft.streaming.Streams.st13State(spark, frame().limit(0),
-      Some(root), targetBucketBytes = 1024)
+    val st = StateTable.open(spark, st13Family, Some(root),
+      targetBucketBytes = 1024)
     val ids = corpus.keys.toSeq.sorted
     val (w1, w2) = ids.splitAt(ids.length / 2)
     graft.streaming.Streams.st13MaintainStep(st, frame(w1: _*), 0.35)
     graft.streaming.Streams.st13MaintainStep(st, frame(w2: _*), 0.35)
     assert(st.nBuckets == 16)
-    graft.streaming.Streams.st13CompactState(st)
+    st.compact()
     assert(st.nBuckets > 16, s"tiny target should grow buckets: ${st.nBuckets}")
     // post-re-bucket probes still verify and the registry still
     // reproduces batch CC over the same corpus
@@ -1668,8 +1668,8 @@ class AnnStreamSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(got == want)
     // a reopened root resumes the grown count
-    val re = graft.streaming.Streams.st13State(spark, frame().limit(0),
-      Some(root), targetBucketBytes = 1024)
+    val re = StateTable.open(spark, st13Family, Some(root),
+      targetBucketBytes = 1024)
     assert(re.nBuckets == st.nBuckets)
   }
 
@@ -1680,8 +1680,8 @@ class AnnStreamSpec extends SparkSpec {
     val docs = Seq(
       1L -> "alpha beta alpha", 2L -> "alpha gamma",
       3L -> "beta delta", 4L -> "gamma gamma alpha").toDF("doc_id", "text")
-    val clean = graft.streaming.Streams.st14State(spark)
-    val crashed = graft.streaming.Streams.st14State(spark)
+    val clean = StateTable.open(spark, st14Family)
+    val crashed = StateTable.open(spark, st14Family)
     graft.streaming.Streams.st14MaintainStep(clean, docs, bid = 0L)
     // simulate the failure the review flagged: batch 0's POSTINGS
     // landed but its doclen marker and stats never did (the appends
@@ -1696,29 +1696,77 @@ class AnnStreamSpec extends SparkSpec {
     // a real step writes the attempt marker BEFORE its first append
     // (the O(1)-wipe contract: only a marked attempt pays the walk)
     graft.streaming.Streams.markAttempt(crashed.root, 0L)
-    graft.streaming.Streams.appendTagged(partial, crashed.postingsDir,
+    graft.streaming.Streams.appendTagged(partial, crashed.dir("postings"),
       0L, Some("pb"))
-    assert(spark.read.parquet(crashed.postingsDir).count() > 0)
+    assert(spark.read.parquet(crashed.dir("postings")).count() > 0)
     // the retry (same stable streaming bid) wipes the remnants and
     // reprocesses the WHOLE batch — state equals the clean run
     graft.streaming.Streams.st14MaintainStep(crashed, docs, bid = 0L)
-    def served(st: graft.streaming.Streams.St14State) =
+    def served(st: StateTable) =
       graft.streaming.Streams.st14Serve(st, Seq("alpha", "beta"), 5)
         .collect().map(_.toSeq).toSeq
     assert(served(crashed) == served(clean))
-    assert(spark.read.parquet(crashed.postingsDir).count() ==
-      spark.read.parquet(clean.postingsDir).count())
+    assert(spark.read.parquet(crashed.dir("postings")).count() ==
+      spark.read.parquet(clean.dir("postings")).count())
     // a COMMITTED bid redelivered is the fast-path no-op
-    val before = spark.read.parquet(crashed.postingsDir).count()
+    val before = spark.read.parquet(crashed.dir("postings")).count()
     graft.streaming.Streams.st14MaintainStep(crashed, docs, bid = 0L)
-    assert(spark.read.parquet(crashed.postingsDir).count() == before)
+    assert(spark.read.parquet(crashed.dir("postings")).count() == before)
     // open-time recovery: a fresh-bid partial attempt (facade crash)
     // is wiped at the next state open because it never committed
-    graft.streaming.Streams.appendTagged(partial, crashed.postingsDir,
+    graft.streaming.Streams.appendTagged(partial, crashed.dir("postings"),
       77L, Some("pb"))
-    val reopened = graft.streaming.Streams.st14State(spark,
+    val reopened = StateTable.open(spark, st14Family,
       root = Some(crashed.root))
-    assert(spark.read.parquet(reopened.postingsDir).count() == before)
+    assert(spark.read.parquet(reopened.dir("postings")).count() == before)
+  }
+
+  test("batch append: every table append settles before a failure " +
+      "rethrows; a same-bid retry commits exactly one copy") {
+    import SparkSpec.spark.implicits._
+    val spark = SparkSpec.spark
+    val docs = Seq(
+      1L -> "alpha beta alpha", 2L -> "alpha gamma",
+      3L -> "beta delta", 4L -> "gamma gamma alpha").toDF("doc_id", "text")
+    val clean = StateTable.open(spark, st14Family)
+    graft.streaming.Streams.st14MaintainStep(clean, docs, bid = 0L)
+    val st = StateTable.open(spark, st14Family)
+    val tf = docs.select(col("doc_id"),
+        explode(graft.functions.Text.tokenize(col("text"))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    // the postings append is slow; the stats append fails at once
+    val slow = udf { (id: Long) => if (id == 2L) Thread.sleep(1000); id }
+    val boom = udf { (n: Long) =>
+      if (n >= 0L) throw new IllegalStateException("injected append failure")
+      n
+    }
+    val e = intercept[Exception] {
+      st.appendBatch(0L) {
+        (Seq(
+          "postings" -> tf.withColumn("doc_id", slow(col("doc_id"))),
+          "stats" -> Seq((4L, 10L)).toDF("nd", "len_sum")
+            .withColumn("nd", boom(col("nd")))), Nil)
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
+    // the slow sibling had LANDED when the step threw — it did not
+    // outlive the call to race the retry's wipe
+    assert(graft.sources.Io.parquetFilesRec(st.dir("postings"))
+      .exists(_.getFileName.toString.startsWith("gb0-")),
+      "the step rethrew while a sibling append was still running")
+    assert(!graft.streaming.Streams.batchCommitted(st.root, 0L))
+    // the facade's allocator hands the retry the SAME bid
+    assert(graft.streaming.Streams.nextBatchId(st.root) == 0L)
+    graft.streaming.Streams.st14MaintainStep(st, docs, bid = 0L)
+    assert(spark.read.parquet(st.dir("postings")).count() ==
+      spark.read.parquet(clean.dir("postings")).count())
+    assert(spark.read.parquet(st.dir("stats")).agg(sum("nd"))
+      .collect()(0).getLong(0) == 4L)
+    def served(s: StateTable) =
+      graft.streaming.Streams.st14Serve(s, Seq("alpha", "beta"), 5)
+        .collect().map(_.toSeq).toSeq
+    assert(served(st) == served(clean))
   }
 
   test("state rewrites publish through the root's own TableLog: a " +
@@ -1730,7 +1778,7 @@ class AnnStreamSpec extends SparkSpec {
     val docs = Seq(
       1L -> "alpha beta alpha", 2L -> "alpha gamma",
       3L -> "beta delta", 4L -> "gamma gamma alpha").toDF("doc_id", "text")
-    val st = graft.streaming.Streams.st14State(spark)
+    val st = StateTable.open(spark, st14Family)
     graft.streaming.Streams.st14MaintainStep(st, docs, bid = 0L)
     val servedBefore = graft.streaming.Streams
       .st14Serve(st, Seq("alpha", "beta"), 5).collect().map(_.toSeq).toSeq
@@ -1752,10 +1800,10 @@ class AnnStreamSpec extends SparkSpec {
         }
       } finally walk.close()
     }
-    copyTree(st.postingsDir, s"${st.root}/postings.g99")
-    val re = graft.streaming.Streams.st14State(spark,
+    copyTree(st.dir("postings"), s"${st.root}/postings.g99")
+    val re = StateTable.open(spark, st14Family,
       root = Some(st.root))
-    assert(re.postingsDir == s"${st.root}/postings",
+    assert(re.dir("postings") == s"${st.root}/postings",
       "torn generation leaked into resolution")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"${st.root}/postings.g99")),
@@ -1768,9 +1816,9 @@ class AnnStreamSpec extends SparkSpec {
     // its new generation and the re-derived bucket count rides the
     // commit TAG, so (tables, count) change as one atomic unit a
     // fresh open re-derives from the log alone
-    graft.streaming.Streams.st14CompactState(re)
-    assert(re.postingsDir.matches(".*/postings\\.g\\d+"),
-      s"compaction did not flip the generation: ${re.postingsDir}")
+    re.compact()
+    assert(re.dir("postings").matches(".*/postings\\.g\\d+"),
+      s"compaction did not flip the generation: ${re.dir("postings")}")
     val log = graft.streaming.Streams.stateLog(st.root)
     val head = log.latestVersion.get
     assert(log.tagOf(head).contains(s"nb=${re.nBuckets}"),
@@ -1778,9 +1826,9 @@ class AnnStreamSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"${st.root}/postings")),
       "superseded plain table dir survived the flip")
-    val re2 = graft.streaming.Streams.st14State(spark,
+    val re2 = StateTable.open(spark, st14Family,
       root = Some(st.root))
-    assert(re2.postingsDir == re.postingsDir)
+    assert(re2.dir("postings") == re.dir("postings"))
     assert(re2.nBuckets == re.nBuckets)
     assert(graft.streaming.Streams
       .st14Serve(re2, Seq("alpha", "beta"), 5).collect().map(_.toSeq).toSeq
@@ -1821,39 +1869,39 @@ class AnnStreamSpec extends SparkSpec {
     val docs = Seq(
       1L -> "alpha beta alpha", 2L -> "alpha gamma",
       3L -> "beta delta", 4L -> "gamma gamma alpha").toDF("doc_id", "text")
-    val once = graft.streaming.Streams.st14State(spark)
-    val twice = graft.streaming.Streams.st14State(spark)
-    def wave(st: graft.streaming.Streams.St14State, ids: Seq[Long]): Unit =
+    val once = StateTable.open(spark, st14Family)
+    val twice = StateTable.open(spark, st14Family)
+    def wave(st: StateTable, ids: Seq[Long]): Unit =
       graft.streaming.Streams.st14MaintainStep(st,
         docs.filter(col("doc_id").isin(ids: _*)))
     wave(once, Seq(1L, 2L)); wave(once, Seq(3L, 4L))
     wave(twice, Seq(1L, 2L)); wave(twice, Seq(1L, 2L)) // retry
     wave(twice, Seq(3L, 4L)); wave(twice, Seq(3L, 4L)) // retry
     val serveT = Seq("alpha", "beta")
-    def served(st: graft.streaming.Streams.St14State) =
+    def served(st: StateTable) =
       graft.streaming.Streams.st14Serve(st, serveT, 5)
         .collect().map(_.toSeq).toSeq
     assert(served(twice).nonEmpty && served(twice) == served(once))
     // nd must equal the doc count with rows, not the delivery count
-    val nd = spark.read.parquet(twice.statsDir)
+    val nd = spark.read.parquet(twice.dir("stats"))
       .agg(sum("nd")).collect()(0).getLong(0)
     assert(nd == 4L, s"stats double-counted: nd=$nd")
-    assert(spark.read.parquet(twice.postingsDir).count() ==
-      spark.read.parquet(once.postingsDir).count())
+    assert(spark.read.parquet(twice.dir("postings")).count() ==
+      spark.read.parquet(once.dir("postings")).count())
     // st13: a redelivered wave adds no registry rows and no groups
     val corpus = st13Corpus
     def frame(ids: Long*) = ids.map(i => i -> corpus(i)).toDF("doc_id", "text")
     val ids = corpus.keys.toSeq.sorted
     val (w1, w2) = ids.splitAt(ids.length / 2)
-    val st13a = graft.streaming.Streams.st13State(spark, frame().limit(0))
-    val st13b = graft.streaming.Streams.st13State(spark, frame().limit(0))
+    val st13a = StateTable.open(spark, st13Family)
+    val st13b = StateTable.open(spark, st13Family)
     graft.streaming.Streams.st13MaintainStep(st13a, frame(w1: _*), 0.35)
     graft.streaming.Streams.st13MaintainStep(st13a, frame(w2: _*), 0.35)
     graft.streaming.Streams.st13MaintainStep(st13b, frame(w1: _*), 0.35)
     graft.streaming.Streams.st13MaintainStep(st13b, frame(w1: _*), 0.35)
     graft.streaming.Streams.st13MaintainStep(st13b, frame(w2: _*), 0.35)
-    assert(spark.read.parquet(st13b.shDir).count() ==
-      spark.read.parquet(st13a.shDir).count())
+    assert(spark.read.parquet(st13b.dir("sh")).count() ==
+      spark.read.parquet(st13a.dir("sh")).count())
     assert(graft.streaming.Streams.st13Compact(st13b)
       .collect().map(_.toSeq).toSeq ==
       graft.streaming.Streams.st13Compact(st13a)
@@ -1863,11 +1911,11 @@ class AnnStreamSpec extends SparkSpec {
     val cb = graft.operators.Ann.assignedVecs(t, 16)._2
     val vecs = t.embeddings.limit(40)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val st15 = graft.streaming.Streams.st15State(spark)
+    val st15 = StateTable.open(spark, st15Family)
     graft.streaming.Streams.st15MaintainStep(st15, cb, vecs)
-    val n1 = spark.read.parquet(st15.vectorsDir).count()
+    val n1 = spark.read.parquet(st15.dir("vectors")).count()
     graft.streaming.Streams.st15MaintainStep(st15, cb, vecs) // retry
-    assert(spark.read.parquet(st15.vectorsDir).count() == n1)
+    assert(spark.read.parquet(st15.dir("vectors")).count() == n1)
   }
 
   test("s11 exact refinement: rerank recall against in-list exact " +
@@ -2062,7 +2110,7 @@ class AnnStreamSpec extends SparkSpec {
     val t = Tables(spark, sf)
     graft.Caches.fresh()
     val cb = graft.operators.Ann.assignedVecs(t, 16)._2
-    val st = graft.streaming.Streams.st15State(spark, nLists = 16)
+    val st = StateTable.open(spark, st15Family)
     val vecs = t.embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     graft.streaming.Streams.st15MaintainStep(st, cb, vecs)
@@ -2087,6 +2135,24 @@ class AnnStreamSpec extends SparkSpec {
       s"gate blind to drift: pinned $pinned, drifted $driftedHits")
   }
 
+  test("trainCodebook leaves a caller-owned cache in place") {
+    val t = Tables(spark, sf)
+    val vecs = t.embeddings
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    // an UNCACHED input is persisted for the call and released after
+    val want = graft.operators.Ann.trainCodebook(vecs, 16)
+    assert(vecs.storageLevel == none)
+    val cached = graft.Caches.materialized(vecs)
+    try {
+      assert(cached.storageLevel != none)
+      val cb = graft.operators.Ann.trainCodebook(cached, 16)
+      assert(cached.storageLevel != none,
+        "trainCodebook unpersisted the caller's cache")
+      assert(cb.values.sameElements(want.values))
+    } finally graft.Caches.drop(cached)
+  }
+
   test("st20 migration: drift-degraded recall is RESTORED by the v2 " +
       "cutover; serving gated before and after; old root vacuumed") {
     val t = Tables(spark, sf)
@@ -2098,8 +2164,8 @@ class AnnStreamSpec extends SparkSpec {
     // on a past snapshot — the drift drill's shape)
     val cbOld = graft.operators.Ann.trainCodebook(
       vecs.filter(col("vec_id") % 3 =!= 0), 16)
-    val st1 = graft.streaming.Streams.st15State(spark,
-      Some(s"$parent/v1"), nLists = 16)
+    val st1 = StateTable.open(spark, st15Family,
+      Some(s"$parent/v1"))
     graft.streaming.Streams.saveCodebook(st1.root, cbOld)
     graft.streaming.Streams.st15MaintainStep(st1, cbOld, vecs)
     graft.streaming.Streams.saveMeta(parent, "current.meta", "v1")
@@ -2132,7 +2198,7 @@ class AnnStreamSpec extends SparkSpec {
     // the corpus drifted: the retrained (current full-corpus) model
     // degrades the gate against the v1-encoded index — st17's drill
     val cbNew = graft.operators.Ann.assignedVecs(t, 16)._2
-    def hits(st: graft.streaming.Streams.St15State,
+    def hits(st: StateTable,
         cb: graft.expressions.PlaneMatrix): Long =
       graft.streaming.Streams.st17RecallFrom(st, cb, vecs, 8, 10, 2)
         .agg(sum("n_hit")).collect()(0).getLong(0)
@@ -2141,8 +2207,8 @@ class AnnStreamSpec extends SparkSpec {
     assert(drifted < consistent,
       s"gate blind to the drift: $drifted vs consistent $consistent")
     // MIGRATE: v2 root re-encoded under the new model, pointer flip
-    graft.streaming.Streams.st20Migrate(spark, parent, "v2", cbNew, 16)
-    val (st2, cb2) = graft.streaming.Streams.st20Serving(spark, parent, 16)
+    graft.streaming.Streams.st20Migrate(spark, parent, "v2", cbNew)
+    val (st2, cb2) = graft.streaming.Streams.st20Serving(spark, parent)
     assert(st2.root.endsWith("/v2"))
     assert(cb2.values.sameElements(cbNew.values),
       "migrated root serves a different codebook than it persisted")
@@ -2173,11 +2239,11 @@ class AnnStreamSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$parent/v1"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$parent/v1/stale.bin"), Array[Byte](1))
-    graft.streaming.Streams.st20Migrate(spark, parent, "v2", cbNew, 16)
+    graft.streaming.Streams.st20Migrate(spark, parent, "v2", cbNew)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$parent/v1")),
       "re-run did not complete the crashed migration's vacuum")
-    assert(graft.streaming.Streams.st20Serving(spark, parent, 16)
+    assert(graft.streaming.Streams.st20Serving(spark, parent)
       ._1.root.endsWith("/v2"))
   }
 
@@ -2187,7 +2253,7 @@ class AnnStreamSpec extends SparkSpec {
     val t = Tables(spark, sf)
     val root = graft.Staging.scratch("st15_legacy_root")
     val cb = graft.operators.Ann.assignedVecs(t, 16)._2
-    val st = graft.streaming.Streams.st15State(spark, Some(root))
+    val st = StateTable.open(spark, st15Family, Some(root))
     // vectors land under SOME codebook, but codebook.meta is never
     // written (a pre-upgrade root / hand-built layout)
     graft.streaming.Streams.st15MaintainStep(st, cb, t.embeddings.limit(20)
@@ -2208,7 +2274,7 @@ class AnnStreamSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // a tiny file budget forces compaction during the run, so marker
     // retirement actually fires
-    val st = graft.streaming.Streams.st14State(spark,
+    val st = StateTable.open(spark, st14Family,
       compactAboveFiles = 4)
     (0 until 6).foreach { b =>
       graft.streaming.Streams.st14MaintainStep(st,
@@ -2232,10 +2298,10 @@ class AnnStreamSpec extends SparkSpec {
     // retired bids answer committed from the one persisted int…
     assert(graft.streaming.Streams.batchCommitted(st.root, 0L))
     // …so a redelivery of a retired batch is still the fast no-op
-    val before = spark.read.parquet(st.postingsDir).count()
+    val before = spark.read.parquet(st.dir("postings")).count()
     graft.streaming.Streams.st14MaintainStep(st,
       docs.filter(col("doc_id") % 6 === 0), bid = 0L)
-    assert(spark.read.parquet(st.postingsDir).count() == before)
+    assert(spark.read.parquet(st.dir("postings")).count() == before)
     // and the facade's id allocator never re-issues a retired id
     assert(graft.streaming.Streams.nextBatchId(st.root) > lw)
   }
@@ -2271,7 +2337,7 @@ class AnnStreamSpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     val spark = SparkSpec.spark
     val root = graft.Staging.scratch("st14_epoch_spec")
-    val stA = graft.streaming.Streams.st14State(spark, Some(root),
+    val stA = StateTable.open(spark, st14Family, Some(root),
       epoch = Some("query-A"))
     graft.streaming.Streams.st14MaintainStep(stA,
       Seq(1L -> "alpha beta", 2L -> "alpha gamma").toDF("doc_id", "text"),
@@ -2282,7 +2348,7 @@ class AnnStreamSpec extends SparkSpec {
     // a NEW query incarnation attaches (fresh checkpoint, ids restart
     // at 0): the barrier must clear the old namespace — without it,
     // bid 0 below would look committed and the batch would be DROPPED
-    val stB = graft.streaming.Streams.st14State(spark, Some(root),
+    val stB = StateTable.open(spark, st14Family, Some(root),
       epoch = Some("query-B"))
     assert(!graft.streaming.Streams.batchCommitted(root, 0L),
       "old epoch's markers leaked into the new incarnation")
@@ -2296,12 +2362,12 @@ class AnnStreamSpec extends SparkSpec {
     assert(served.contains(1L) && served.contains(2L),
       s"old-epoch state lost by the barrier: $served")
     // redelivery inside the SAME epoch is still the committed no-op
-    val before = spark.read.parquet(stB.postingsDir).count()
+    val before = spark.read.parquet(stB.dir("postings")).count()
     graft.streaming.Streams.st14MaintainStep(stB,
       Seq(9L -> "alpha omega").toDF("doc_id", "text"), bid = 0L)
-    assert(spark.read.parquet(stB.postingsDir).count() == before)
+    assert(spark.read.parquet(stB.dir("postings")).count() == before)
     // same-epoch reopen skips the barrier (history kept)
-    val stB2 = graft.streaming.Streams.st14State(spark, Some(root),
+    val stB2 = StateTable.open(spark, st14Family, Some(root),
       epoch = Some("query-B"))
     assert(graft.streaming.Streams.batchCommitted(stB2.root, 0L))
   }
@@ -2313,13 +2379,13 @@ class AnnStreamSpec extends SparkSpec {
     val root = graft.Staging.scratch("st14_epoch_adopt")
     // history accumulates under the ANONYMOUS namespace (no epoch —
     // the facade path, or a root written before epochs existed)
-    val legacy = graft.streaming.Streams.st14State(spark, Some(root))
+    val legacy = StateTable.open(spark, st14Family, Some(root))
     graft.streaming.Streams.st14MaintainStep(legacy,
       Seq(1L -> "alpha beta").toDF("doc_id", "text"), bid = 0L)
     assert(graft.streaming.Streams.batchCommitted(root, 0L))
     // first epoch-bearing attach: adopting the epoch WITHOUT the
     // barrier would leave the new query's bid 0 looking committed
-    val adopted = graft.streaming.Streams.st14State(spark, Some(root),
+    val adopted = StateTable.open(spark, st14Family, Some(root),
       epoch = Some("q-new"))
     assert(!graft.streaming.Streams.batchCommitted(root, 0L),
       "pre-epoch markers leaked into the adopted namespace")
@@ -2339,11 +2405,11 @@ class AnnStreamSpec extends SparkSpec {
     val root = graft.Staging.scratch("st14_crash_spec")
     val docs = Seq(1L -> "alpha beta", 2L -> "alpha gamma")
       .toDF("doc_id", "text")
-    val st = graft.streaming.Streams.st14State(spark, Some(root))
+    val st = StateTable.open(spark, st14Family, Some(root))
     graft.streaming.Streams.st14MaintainStep(st, docs)
     val want = graft.streaming.Streams.st14Serve(st, Seq("alpha"), 5)
       .collect().map(_.toSeq).toSeq
-    graft.streaming.Streams.st14CompactState(st)
+    st.compact()
     // simulate the crash window: a superseded plain dir REAPPEARS
     // beside the committed generation (as if the post-commit sweep
     // never ran) — it must not shadow the resolved generation, and
@@ -2352,10 +2418,10 @@ class AnnStreamSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(stale)
     java.nio.file.Files.write(stale.resolve("junk.parquet"),
       Array[Byte](1, 2, 3))
-    val re = graft.streaming.Streams.st14State(spark, Some(root))
-    assert(re.postingsDir.matches(".*/postings\\.g\\d+"),
+    val re = StateTable.open(spark, st14Family, Some(root))
+    assert(re.dir("postings").matches(".*/postings\\.g\\d+"),
       s"stale plain dir shadowed the committed generation: " +
-        s"${re.postingsDir}")
+        s"${re.dir("postings")}")
     assert(!java.nio.file.Files.exists(stale), "stale dir not swept")
     assert(graft.streaming.Streams.st14Serve(re, Seq("alpha"), 5)
       .collect().map(_.toSeq).toSeq == want)

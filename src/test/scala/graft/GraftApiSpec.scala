@@ -818,8 +818,8 @@ class GraftApiSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$parent/v2/codebook.meta")))
     val (st2, cb2) = graft.streaming.Streams.st20Serving(session,
-      parent, 16)
-    assert(spark.read.parquet(st2.vectorsDir).count() == vecs.count())
+      parent)
+    assert(spark.read.parquet(st2.dir("vectors")).count() == vecs.count())
     val qv = vecs.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>"))
       .collect()(0).getSeq[Double](0)
@@ -2089,5 +2089,36 @@ class GraftApiSpec extends SparkSpec {
       graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
       graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
     }
+  }
+
+  test("tier frames stamp their meta through the Hadoop FileSystem: a " +
+      "file: URI root keys on the real mtime/length and a re-minted " +
+      "tier is re-read") {
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft_tierstamp_").toString
+    try {
+      val root = s"file:$tmp"
+      val meta = new java.io.File(tmp, "sq.meta")
+      def mint(ids: Seq[Long], stamp: String): Unit = {
+        ids.toDF("vec_id").write.mode("overwrite")
+          .parquet(s"$tmp/enc_ivf_sq8")
+        java.nio.file.Files.write(meta.toPath, stamp.getBytes("UTF-8"))
+        ()
+      }
+      mint(Seq(1L, 2L), "v1")
+      assert(graft.operators.Pipeline.tierMetaStamp(spark, root, "sq.meta")
+        == ((meta.lastModified, meta.length)),
+        "memo key does not carry the meta file's real mtime/length")
+      val first = graft.operators.Pipeline.tierFrame(spark, root,
+        "enc_ivf_sq8", "sq.meta")
+      assert(first.count() == 2L)
+      // re-mint: new layout, then a meta rewrite (ensure*'s order) of a
+      // different length, so the stamp moves even within one mtime tick
+      mint(Seq(1L, 2L, 3L), "v2-reminted")
+      val second = graft.operators.Pipeline.tierFrame(spark, root,
+        "enc_ivf_sq8", "sq.meta")
+      assert(second ne first, "re-minted tier served from a stale memo")
+      assert(second.count() == 3L)
+    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
   }
 }
