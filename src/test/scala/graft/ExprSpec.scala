@@ -67,10 +67,11 @@ class ExprSpec extends SparkSpec {
   }
 
   test("signature expressions run inside WholeStageCodegen (no fallback boundary)") {
+    import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
     // one projection holding all three signature expressions: if any
     // of them were CodegenFallback, CollapseCodegenStages would push
     // the WHOLE project out of codegen (no '*(n)' stage around it)
-    val df = toksDf.select(
+    val sigs = toksDf.select(
       Text.shinglesFast(3)(col("tk")).as("sh"),
       Text.simhashSig(col("tk")).as("sim"),
       graft.functions.Vectors.thresholdBits(
@@ -78,6 +79,17 @@ class ExprSpec extends SparkSpec {
         new graft.expressions.PlaneMatrix(Array(0.0, 0.0), 2))
         .as("tb"))
       .withColumn("mhs", Text.minhashSig(col("sh")))
+    // the vector kernels and the multi-probe explode, over a range so
+    // the inputs are neither foldable nor a LocalRelation (either one
+    // would be evaluated on the driver, outside codegen)
+    val x = col("id").cast("double")
+    val kernels = spark.range(4).select(col("id"),
+      graft.functions.Vectors.cosine(array(x + 1.0, lit(2.0), lit(3.0)),
+        array(lit(1.0), lit(2.0), lit(2.0))).as("cos"),
+      graft.functions.Vectors.hamming(lpad(bin(col("id")), 4, "0"),
+        lit("0111")).as("ham"),
+      explode(column(graft.expressions.BitFlipProbes(
+        expression(col("id") + 5), 4))).as("probe"))
     // fallback=false: a '*(n)' in the plan STRING only proves
     // CollapseCodegenStages accepted the expressions — if the
     // generated Java failed Janino compilation Spark would silently
@@ -85,13 +97,33 @@ class ExprSpec extends SparkSpec {
     // With fallback disabled a codegen compile failure throws here.
     val prevFallback = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try df.collect()
+    val rows = try { sigs.collect(); kernels.collect() }
     finally spark.conf.set("spark.sql.codegen.fallback", prevFallback)
-    val plan = df.queryExecution.executedPlan.toString
-    val projLine = plan.linesIterator
-      .find(_.contains("Project")).getOrElse("")
-    assert(projLine.trim.startsWith("*("),
-      s"project not whole-stage-codegen'd:\n$plan")
+    def assertCodegen(df: org.apache.spark.sql.DataFrame, op: String) = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(_.matches(s"[\\s+:-]*\\*\\(\\d+\\) $op .*")),
+        s"$op not whole-stage-codegen'd:\n$plan")
+    }
+    assertCodegen(sigs, "Project")
+    assertCodegen(kernels, "Project")
+    assertCodegen(kernels, "Generate")
+    // the compiled kernels' answers: cosine in CosineSim's own
+    // accumulation order, Hamming as differing bits, and the probes
+    // as the key followed by its single-bit flips
+    val byId = rows.groupBy(_.getLong(0))
+    assert(byId.keySet == (0L until 4L).toSet)
+    byId.foreach { case (id, rs) =>
+      val a = Array(id + 1.0, 2.0, 3.0); val b = Array(1.0, 2.0, 2.0)
+      val cos = a.zip(b).map { case (p, q) => p * q }.sum /
+        (math.sqrt(a.map(v => v * v).sum) * math.sqrt(b.map(v => v * v).sum))
+      rs.foreach { r =>
+        assert(r.getDouble(1) == cos, s"cosine, id $id")
+        assert(r.getInt(2) == java.lang.Long.bitCount(id ^ 7L), s"hamming, id $id")
+      }
+      val k = id + 5
+      assert(rs.map(_.getLong(3)).toSeq ==
+        (k +: (0 until 4).map(j => k ^ (1L << j))), s"probes, id $id")
+    }
   }
 
   test("KMV sketch: exact below capacity, estimator within 3σ above, merge-stable") {

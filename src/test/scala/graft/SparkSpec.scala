@@ -13,6 +13,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.codegenConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
