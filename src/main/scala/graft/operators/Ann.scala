@@ -1642,20 +1642,13 @@ object Ann {
     * subspace's Lloyd's chain is an independent seed + `iters` rounds
     * over the same frame; sequentially they were m×(iters+1) driver
     * round-trips). Per-subspace training is deterministic, so the
-    * books are identical to the sequential Array.tabulate form. All
-    * futures settle before any failure propagates (no training thread
-    * may outlive the call).
+    * books are identical to the sequential Array.tabulate form.
     */
   private[graft] def trainPqBooks(vecs: DataFrame, m: Int, sub: Int,
-      k: Int, iters: Int): Array[Array[Array[Double]]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ts = (0 until m).map(mi =>
-      Future(scala.util.Try(trainPqSub(vecs, mi * sub, sub, k, iters))))
-    Await.result(Future.sequence(ts.map(_.map(_ => ()))), Duration.Inf)
-    ts.map(t => Await.result(t, Duration.Inf).get).toArray
-  }
+      k: Int, iters: Int): Array[Array[Array[Double]]] =
+    graft.Concurrent.settleAll(vecs.sparkSession)((0 until m).map(mi =>
+      s"pq: train subspace $mi" -> (() =>
+        trainPqSub(vecs, mi * sub, sub, k, iters)))).toArray
 
   /** Per-subspace Lloyd's with L2 assignment (argmin distance, ties
     * to the lower cid — array_position's first-match rule), decimal-

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -58,13 +58,17 @@ object Pipeline {
 
   /** Run `f` under a Spark job description (guide §1.5) — labels are
     * thread-local, so the concurrent build/remove chains each label
-    * their own jobs correctly in profiles and the UI.
+    * their own jobs correctly in profiles and the UI. The enclosing
+    * label comes back afterwards, so jobs a labelled thunk runs after
+    * a nested label still carry the thunk's own.
     */
   private[graft] def labeled[T](
       spark: org.apache.spark.sql.SparkSession, desc: String)(
       f: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try f finally spark.sparkContext.setJobDescription(null)
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(outer)
   }
 
   /** The staged survivor frames, funnel order, each carrying
@@ -428,15 +432,10 @@ object Pipeline {
       // (guide §2.6: submit independent jobs from separate threads so
       // one chain's stage tails back-fill the executors the other
       // frees; the encode+train chain is compute-bound while the tf
-      // chain is shuffle/write-bound, so they overlap well). Both
-      // settle before the torn marker clears — a failure on either
-      // side leaves the marker armed and the other side's writes are
-      // awaited, never abandoned mid-flight (removeFromTowers'
-      // settle-before-rethrow rule).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val denseT = Future(scala.util.Try {
+      // chain is shuffle/write-bound, so they overlap well). A failure
+      // on either side leaves the torn marker armed.
+      graft.Concurrent.settleAll[Unit](spark)(Seq(
+      "build: dense chain" -> (() => {
         // the encoded frame feeds THREE consumers (the enc write, the
         // codebook training set, the enc_ivf assignment) — persist it
         // for the chain instead of writing enc and re-reading the
@@ -496,8 +495,8 @@ object Pipeline {
           .parquet(s"$d/enc_ivf")
         }
         } finally enc.unpersist(false)
-      })
-      val sparseT = scala.util.Try {
+      }),
+      "build: sparse chain" -> (() => {
       // the tokenize+count aggregate feeds the tf write AND (renamed)
       // the two postings-rollup forks below; the doc-length rollup
       // feeds the tf_b join AND the stats aggregate. Persist both for
@@ -527,22 +526,19 @@ object Pipeline {
       }
       // the postings rollups fork once more: stats→idf (idf reads the
       // landed stats) and the tf_b stage are independent given tf
-      val tfbT = Future(scala.util.Try {
+      graft.Concurrent.settleAll[Unit](spark)(Seq(
+      "build: stage tf_b postings" -> (() =>
         // tf_b is TWO-LEVEL partitioned (tb outer for the query-side
         // term-bucket pruning literal, db inner for the delete-side
         // victim-bucket pruning): a query reads its terms' tb dirs, a
         // delete wave swaps only the (victim tb x victim db) cells
-        labeled(spark, "build: stage tf_b postings") {
         tfD.join(dlD, "doc_id")
           .withColumn("tb", Search.termBucket(col("term"), nLex))
           .withColumn("db", docBucketOfChunk(col("doc_id"), nTfbDb))
           .repartition(col("tb"), col("db"))
           .write.mode("overwrite").partitionBy("tb", "db")
-          .parquet(s"$d/tf_b")
-        }
-      })
-      val statsIdfT = scala.util.Try {
-        labeled(spark, "build: stats + idf rollups") {
+          .parquet(s"$d/tf_b")),
+      "build: stats + idf rollups" -> (() => {
         // stats carry the EXACT integer (nd, len_sum) alongside the
         // derived avgdl, so an incremental add updates them with long
         // arithmetic and re-derives avgdl bit-equal to a full rebuild
@@ -559,24 +555,9 @@ object Pipeline {
               (col("nd") - col("df") + 0.5) / (col("df") + 0.5)))
           .select("term", "df", "idf_bm")
           .write.mode("overwrite").parquet(s"$d/idf")
-        }
-      }
-      val tfb = Await.result(tfbT, Duration.Inf)
-      // both forks settled — surface BOTH failures (suppressed, not
-      // discarded) so a double fault keeps its root causes visible
-      (statsIdfT, tfb) match {
-        case (scala.util.Failure(a), scala.util.Failure(b)) =>
-          a.addSuppressed(b); throw a
-        case _ => statsIdfT.get; tfb.get
-      }
+      })))
       } finally { tfAgg.unpersist(false); dlD.unpersist(false); () }
-      }
-      val dense = Await.result(denseT, Duration.Inf)
-      (sparseT, dense) match {
-        case (scala.util.Failure(a), scala.util.Failure(b)) =>
-          a.addSuppressed(b); throw a
-        case _ => sparseT.get; dense.get
-      }
+      })))
       // a completed build IS the cross-table repair — every tower
       // just re-derived from routed, so any healed-torn-mutation
       // marker is discharged (cleared last: a crash anywhere above
@@ -1232,22 +1213,17 @@ object Pipeline {
     // read each cost one driver round-trip — run them as CONCURRENT
     // jobs (guide §2.6, the buildTowers overlap applied to the wave's
     // serial driver actions) instead of four sequential ones.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // ONE aggregate job carries both exact decrements (the old shape
-    // paid a separate job each for len_dec and nd_dec): len_sum drops
-    // by the victims' Σtf; nd counts chunks WITH postings (dl derives
-    // from tf — a token-less chunk never entered stats), so the
-    // decrement counts the victim chunks that appear in tf, not every
-    // victim chunk
-    val decT = Future(scala.util.Try(
-      labeled(spark, "remove: stats decrement aggregate") {
+    val Seq(decA, vCidsA, vCellsA, oldA) = graft.Concurrent.settleAll[Any](spark)(Seq(
+      // ONE aggregate job carries both exact decrements (the old
+      // shape paid a separate job each for len_dec and nd_dec):
+      // len_sum drops by the victims' Σtf; nd counts chunks WITH
+      // postings (dl derives from tf — a token-less chunk never
+      // entered stats), so the decrement counts the victim chunks
+      // that appear in tf, not every victim chunk
+      "remove: stats decrement aggregate" -> (() =>
         vtf.agg(sum("tf").as("len_dec"),
-          countDistinct("chunk_id").as("nd_dec")).collect()(0)
-      }))
-    val vCidsT = Future(scala.util.Try(
-      labeled(spark, "remove: victim coarse lists (vCids)") {
+          countDistinct("chunk_id").as("nd_dec")).collect()(0)),
+      "remove: victim coarse lists (vCids)" -> (() =>
         spark.read.parquet(s"$d/enc")
           .filter(col("db").isin(vDbs: _*))
           .join(vKey, docKeyOf(col("vec_id")) === col("__vdk"),
@@ -1255,42 +1231,31 @@ object Pipeline {
           .select(graft.functions.Vectors.centroidTop1(
             transform(col("u16"), x => x.cast("double")), cb)
             .as("cid"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-      }))
-    // the EXACT victim (tb, db) cells of the postings layout, derived
-    // from the pre-staged victim postings (never a term-bucket x
-    // doc-bucket cross product — a wave whose terms span 20 buckets
-    // and docs span 10 would otherwise rewrite 200 cells where ~30
-    // hold victims, each a staged file + delete + rename of itself)
-    val vCellsT = Future(scala.util.Try(
-      labeled(spark, "remove: victim postings cells (vCells)") {
+          .distinct().collect().map(_.getInt(0)).toSeq),
+      // the EXACT victim (tb, db) cells of the postings layout,
+      // derived from the pre-staged victim postings (never a
+      // term-bucket x doc-bucket cross product — a wave whose terms
+      // span 20 buckets and docs span 10 would otherwise rewrite 200
+      // cells where ~30 hold victims, each a staged file + delete +
+      // rename of itself)
+      "remove: victim postings cells (vCells)" -> (() =>
         vtf.select(
             Search.termBucket(col("term"), nLex).as("tb"),
             docBucketOfChunk(col("chunk_id"), nTfbDb).as("db"))
           .distinct().collect()
           .map(r => Seq(r.getLong(0).toInt: Any, r.getLong(1): Any))
-          .toSeq
-      }))
-    // stats decrement inputs read BEFORE any rewrite (exact-integer:
-    // len_sum/nd stays bit-equal to a rebuild's avg(dl) —
-    // integer-valued doubles below 2^53)
-    val oldT = Future(scala.util.Try(
-      labeled(spark, "remove: read pre-wave stats") {
+          .toSeq),
+      // stats decrement inputs read BEFORE any rewrite (exact-
+      // integer: len_sum/nd stays bit-equal to a rebuild's avg(dl) —
+      // integer-valued doubles below 2^53)
+      "remove: read pre-wave stats" -> (() =>
         spark.read.parquet(s"$d/stats")
-          .select("nd", "len_sum").collect()(0)
-      }))
-    // settle ALL before propagating any failure (the wave's
-    // settle-before-rethrow rule: no concurrent job may still be
-    // running when the caller's repair path takes over) — each
-    // future's body is a Try, so sequence always completes
-    Await.result(Future.sequence(
-      Seq(decT, vCidsT, vCellsT, oldT).map(_.map(_ => ()))),
-      Duration.Inf)
-    val dec = Await.result(decT, Duration.Inf).get
+          .select("nd", "len_sum").collect()(0))))
+    val dec = decA.asInstanceOf[Row]
     val lenDec = if (dec.isNullAt(0)) 0L else dec.getLong(0)
     val ndDec = dec.getLong(1)
-    val vCids = Await.result(vCidsT, Duration.Inf).get
-    val vCells: Seq[Seq[Any]] = Await.result(vCellsT, Duration.Inf).get
+    val vCids = vCidsA.asInstanceOf[Seq[Int]]
+    val vCells = vCellsA.asInstanceOf[Seq[Seq[Any]]]
     // a delete wave must leave a non-empty index: a dir-less
     // partitioned table can't even be read back, and "forget the
     // whole corpus" is an explicit teardown, not an erasure wave.
@@ -1326,7 +1291,7 @@ object Pipeline {
       src.join(vKey, docKeyOf(col(chunkKey)) === col("__vdk"),
           "left_anti")
         .select(src.columns.map(col).toSeq: _*)
-    val old = Await.result(oldT, Duration.Inf).get
+    val old = oldA.asInstanceOf[Row]
     val nd2 = old.getLong(0) - ndDec
     val ls2 = old.getLong(1) - lenDec
     import spark.implicits._
@@ -1349,35 +1314,39 @@ object Pipeline {
     // is the longest single rewrite, not their sum (Spark job
     // submission is thread-safe; each job's stages share the same
     // executor pool). Every flat rewrite is VICTIMS-SIZED.
-    val flatRewrites: Seq[() => Unit] = Seq(
-        () => replacePartitions(spark, d, "chunks", Seq("db"),
+    val rewrites: Seq[(String, () => Unit)] = Seq(
+      "remove: rewrite chunks" -> (() =>
+        replacePartitions(spark, d, "chunks", Seq("db"),
           vDbs.map(Seq(_)),
           antiInOrder(spark.read.parquet(s"$d/chunks")
-            .filter(col("db").isin(vDbs: _*)), "doc_id", victims)),
-        () => replacePartitions(spark, d, "tf", Seq("db"),
+            .filter(col("db").isin(vDbs: _*)), "doc_id", victims))),
+      "remove: rewrite tf" -> (() =>
+        replacePartitions(spark, d, "tf", Seq("db"),
           vDbs.map(Seq(_)),
           antiDocInOrder(spark.read.parquet(s"$d/tf")
-            .filter(col("db").isin(vDbs: _*)), "chunk_id")),
-        () => replacePartitions(spark, d, "enc", Seq("db"),
+            .filter(col("db").isin(vDbs: _*)), "chunk_id"))),
+      "remove: rewrite enc" -> (() =>
+        replacePartitions(spark, d, "enc", Seq("db"),
           vDbs.map(Seq(_)),
           antiDocInOrder(spark.read.parquet(s"$d/enc")
-            .filter(col("db").isin(vDbs: _*)), "vec_id")),
-        // the postings swap EXACTLY the victim (tb, db) cells; the
-        // cell-key filter references only partition columns, so the
-        // survivor scan partition-prunes to those dirs
-        () => replacePartitions(spark, d, "tf_b", Seq("tb", "db"),
+            .filter(col("db").isin(vDbs: _*)), "vec_id"))),
+      // the postings swap EXACTLY the victim (tb, db) cells; the
+      // cell-key filter references only partition columns, so the
+      // survivor scan partition-prunes to those dirs
+      "remove: rewrite tf_b" -> (() =>
+        replacePartitions(spark, d, "tf_b", Seq("tb", "db"),
           vCells,
           antiDocInOrder(spark.read.parquet(s"$d/tf_b")
             .filter(concat_ws("/", col("tb"), col("db")).isin(
               vCells.map(c => s"${c(0)}/${c(1)}"): _*)),
-            "doc_id")))
-    val rewrites: Seq[() => Unit] = flatRewrites ++ Seq(
-      () => replacePartitions(spark, d, "enc_ivf", Seq("cid"),
-        vCids.map(Seq(_)),
-        antiDocInOrder(spark.read.parquet(s"$d/enc_ivf")
-          .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
-          "vec_id")),
-      () => {
+            "doc_id"))),
+      "remove: rewrite enc_ivf" -> (() =>
+        replacePartitions(spark, d, "enc_ivf", Seq("cid"),
+          vCids.map(Seq(_)),
+          antiDocInOrder(spark.read.parquet(s"$d/enc_ivf")
+            .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
+            "vec_id"))),
+      "remove: rewrite stats + idf" -> (() => {
         replaceDir(spark, d, "stats",
           Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
             .toDF("avgdl", "nd", "len_sum").coalesce(1))
@@ -1393,17 +1362,11 @@ object Pipeline {
               log(lit(1.0) +
                 (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
             .select("term", "df", "idf_bm"))
-      })
-    // SETTLE every rewrite before propagating a failure: rethrowing
-    // while sibling futures are mid-swap would let a zombie thread
-    // swap a stale dir back in AFTER the documented repair
-    // (rebuild()) rewrote it. Scratch cleanup and the tier-layout
-    // invalidation run on BOTH paths — a torn remove must not leave
-    // enc_ivf_sq8/enc_ivf_pq serving the forgotten doc.
-    val settled = Await.result(
-      Future.sequence(rewrites.map(f => Future(scala.util.Try(f())))),
-      Duration.Inf)
-    try settled.foreach(_.get)
+      }))
+    // scratch cleanup and the tier-layout invalidation run on BOTH
+    // paths — a torn remove must not leave enc_ivf_sq8/enc_ivf_pq
+    // serving the forgotten doc
+    try graft.Concurrent.settleAll(spark)(rewrites)
     finally {
       graft.Staging.deleteTree(java.nio.file.Paths.get(scratch))
       dropTierLayouts(spark, d)
@@ -1454,24 +1417,17 @@ object Pipeline {
     val conf = spark.sparkContext.hadoopConfiguration
     val srcP = new org.apache.hadoop.fs.Path(d0)
     val fs = srcP.getFileSystem(conf)
-    // per-table copies are independent — run them on a small pool
+    // per-table copies are independent — run them concurrently
     // (guide §2.6 applied to driver-side fs work: the single-threaded
     // walk serialized ~9 table trees behind one thread; gate latency
-    // drops to the largest table's copy). Failures propagate after
-    // ALL copies settle, so no copy thread outlives the call.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val copies = fs.listStatus(srcP).toSeq.map { st =>
-      Future(scala.util.Try {
+    // drops to the largest table's copy)
+    graft.Concurrent.settleAll(spark)(fs.listStatus(srcP).toSeq.map { st =>
+      s"clone: copy ${st.getPath.getName}" -> (() =>
         org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
           new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(dd), st.getPath.getName),
-          false, conf)
-        ()
-      })
-    }
-    Await.result(Future.sequence(copies), Duration.Inf).foreach(_.get)
+          false, conf))
+    })
   }
 
   /** Partition-pruned rewrite of a partitioned staged table: stage
@@ -1795,29 +1751,15 @@ object Pipeline {
         // the mint reads this frame pqM×(1 seed + pqIters rounds) + 1
         // coded-write = 13 sequential actions at the defaults — each
         // was a fresh enc_ivf scan + u16→double transform. Materialize
-        // it ONCE for the mint, and train the pqM sub-codebooks
-        // CONCURRENTLY (guide §2.6 — each subspace's Lloyd's chain is
-        // independent given vecs; results are per-subspace
-        // deterministic, so concurrency cannot reorder anything).
+        // it ONCE for the mint (trainPqBooks trains the pqM
+        // sub-codebooks concurrently).
         val vecs = spark.read.parquet(s"$d/enc_ivf")
           .select(col("vec_id"), col("cid"),
             transform(col("u16"), x => x.cast("double")).as("v"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val bookTs = (0 until pqM).map(mi => Future(scala.util.Try(
-            labeled(spark, s"pq tier: train subspace $mi") {
-              Ann.trainPqSub(vecs.select("vec_id", "v"), mi * sub, sub,
-                pqK, pqIters)
-            })))
-          // settle all before surfacing any failure (no training
-          // thread may outlive the mint)
-          Await.result(
-            Future.sequence(bookTs.map(_.map(_ => ()))), Duration.Inf)
-          val books = bookTs.map(t =>
-            Await.result(t, Duration.Inf).get).toArray
+          val books = Ann.trainPqBooks(vecs.select("vec_id", "v"), pqM,
+            sub, pqK, pqIters)
           Ann.pqCoded(vecs, books, sub)
             .select((col("vec_id") +:
               (0 until pqM).map(mi => col(s"code$mi"))) :+ col("cid"): _*)

@@ -478,35 +478,22 @@ object TextAnalysis {
     // stream materializes (guide §2.6) instead of serializing the two
     // corpus scans, and fold the one resulting number in as a literal
     // (same value, one broadcast-join job fewer in the scoring plan).
-    // If the bigram materialization throws, the vocabulary job still
-    // settles before the failure propagates (its own failure attached
-    // as suppressed), so no job outlives the call.
-    val spark = docsIn.sparkSession
-    val vocabT = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(scala.util.Try(Pipeline.labeled(spark, "t13: vocabulary") {
+    val Seq(vocabA, docsBgA) = graft.Concurrent.settleAll[Any](docsIn.sparkSession)(Seq(
+      "t13: vocabulary" -> (() =>
         docsIn
           .select(explode(Text.tokenize(col(textCol))).as("term"))
           .agg(countDistinct("term").as("v"))
-          .collect()(0).getLong(0)
-      }))
-    }
-    def settledVocab() = scala.concurrent.Await.result(vocabT,
-      scala.concurrent.duration.Duration.Inf)
-    val docsBg =
-      try graft.Caches.materialized(
-        docsIn
-          .select(col(idCol).as("doc_id"), Text.tokenize(col(textCol)).as("tk"))
-          .filter(size(col("tk")) >= 2)
-          .select(col("doc_id"),
-            explode(transform(sequence(lit(0), size(col("tk")) - 2),
-              i => concat_ws(" ", slice(col("tk"), i + 1, lit(2))))).as("bg"))
-          .repartition(col("bg")))
-      catch { case scala.util.control.NonFatal(e) =>
-        settledVocab().failed.foreach(e.addSuppressed)
-        throw e
-      }
+          .collect()(0).getLong(0)),
+      "t13: bigram stream" -> (() =>
+        graft.Caches.materialized(
+          docsIn
+            .select(col(idCol).as("doc_id"), Text.tokenize(col(textCol)).as("tk"))
+            .filter(size(col("tk")) >= 2)
+            .select(col("doc_id"),
+              explode(transform(sequence(lit(0), size(col("tk")) - 2),
+                i => concat_ws(" ", slice(col("tk"), i + 1, lit(2))))).as("bg"))
+            .repartition(col("bg"))))))
+    val docsBg = docsBgA.asInstanceOf[DataFrame]
     val stats = docsBg.groupBy("bg").agg(count(lit(1)).as("c_bi"))
       .withColumn("w1", element_at(split(col("bg"), " "), 1))
     val ctx = stats.groupBy("w1").agg(sum("c_bi").as("c_w1"))
@@ -519,7 +506,7 @@ object TextAnalysis {
     // broadcast-hash at runtime whenever the built side is actually
     // small, and falls back to a shuffle join when it is not
     val lm = kept.join(ctx, "w1").select("bg", "c_bi", "c_w1")
-    val vocabN = settledVocab().get
+    val vocabN = vocabA.asInstanceOf[Long]
     // doc-scale (one row per doc) but the product of the pipeline's
     // expensive join — materialized so the p75 cut and the final
     // select don't each re-run the token-scale join+rollup

@@ -514,8 +514,14 @@ final class TableLog(val root: String) {
       case Add(f) => localPath(f.path)
     }.toSet
 
+  /** An entry's local path: `file:` URIs decoded, and a relative
+    * entry (the state roots' relocatable form) resolved under the
+    * log's root.
+    */
   private def localPath(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath else p
+    if (p.startsWith("file:")) new java.net.URI(p).getPath
+    else if (p.startsWith("/")) p
+    else java.nio.file.Paths.get(root, p).toString
 
   def vacuum(retain: Int = 1): Seq[String] = {
     require(retain >= 1, s"retain=$retain must keep at least one version")
@@ -529,10 +535,8 @@ final class TableLog(val root: String) {
     val doomed = everAdded.filterNot(referenced)
     // report only what THIS run removed (deleteIfExists is the
     // idempotence: a re-run after a crash finds nothing left)
-    doomed.filter { p =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-        if (p.startsWith("file:")) new java.net.URI(p).getPath else p))
-    }
+    doomed.filter(p =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(localPath(p))))
   }
 
   /** The pruned scan: only stats-admitted files are opened. */

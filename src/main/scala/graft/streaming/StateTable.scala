@@ -166,13 +166,13 @@ private[graft] final class StateTable private (
     * fast path, `body` never runs); a bid whose attempt marker exists
     * first wipes that attempt's `gb<bid>-` remnants. `body` computes
     * the batch and returns its `(table, rows)` appends plus the caches
-    * they read. The appends run as concurrent labelled jobs (each
-    * lands its rows in the table's layout — pb-bucketed, list-
-    * partitioned, or one flat file) and ALL settle before the first
-    * failure rethrows (the rest suppressed onto it), so a retry's wipe
-    * never races a sibling still landing files; the caches drop once
-    * the appends settle; the commit marker lands only after every
-    * append; then the file-count trigger runs.
+    * they read. The appends run as concurrent labelled jobs through
+    * [[graft.Concurrent.settleAll]] (each lands its rows in the
+    * table's layout — pb-bucketed, list-partitioned, or one flat
+    * file), so a retry's wipe never races a sibling still landing
+    * files; the caches drop once the appends settle; the commit
+    * marker lands only after every append; then the file-count
+    * trigger runs.
     */
   def appendBatch(bid: Long)(
       body: => (Seq[(String, DataFrame)], Seq[DataFrame])): Unit = {
@@ -184,7 +184,7 @@ private[graft] final class StateTable private (
     if (attemptExists(root, b)) wipeBatch(allDirs, b)
     markAttempt(root, b)
     val (appends, caches) = body
-    try settleAll(spark)(appends.map { case (t, rows) =>
+    try graft.Concurrent.settleAll(spark)(appends.map { case (t, rows) =>
       s"${family.name}: append $t" -> (() => land(t, rows, b)) })
     finally caches.foreach(graft.Caches.drop)
     commitBatch(root, b)

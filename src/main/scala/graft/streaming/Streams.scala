@@ -997,42 +997,47 @@ object Streams {
   private[graft] def stateLog(root: String): graft.sources.TableLog =
     graft.sources.TableLog.open(root)
 
-  /** FileEntry list for a landed generation dir — stats come from
-    * the PATH (the `pb=X` / `cid=X` partition value; 0 for an
-    * unpartitioned table): a metadata-only build, no Spark job, no
-    * parquet footer opened.
+  /** FileEntry list for a landed generation dir under `root` — stats
+    * come from the PATH (the `pb=X` / `cid=X` partition value; 0 for
+    * an unpartitioned table): a metadata-only build, no Spark job, no
+    * parquet footer opened. Paths are recorded RELATIVE to the state
+    * root, so a copied or moved root resolves, sweeps and vacuums its
+    * own files, never the original's.
     */
-  private def genEntries(dir: String): Seq[graft.sources.TableLog.FileEntry] =
+  private def genEntries(root: String,
+      dir: String): Seq[graft.sources.TableLog.FileEntry] =
     graft.sources.Io.parquetFilesRec(dir).map { f =>
       val k = Option(f.getParent).map(_.getFileName.toString)
         .filter(_.contains("="))
         .flatMap(_.split("=", 2).lift(1))
         .flatMap(v => scala.util.Try(v.toLong).toOption)
         .getOrElse(0L)
-      graft.sources.TableLog.FileEntry(f.toString, k, k, 0L)
+      graft.sources.TableLog.FileEntry(
+        java.nio.file.Paths.get(root).relativize(f).toString, k, k, 0L)
     }
 
   /** Resolve the CURRENT dir of each state table under `root`: the
     * generation the log's head snapshot serves, or the plain
     * `root/<table>` dir for a root that predates any rewrite commit
-    * (initial appends land there). The generation marker is ANCHORED
-    * to the known root — `<root>/<table>.g<digits>` matched from the
-    * path's start — so a root whose own path happens to contain a
-    * `.g<digits>` segment (e.g. `/data/labels.g1/state`) can never
-    * mis-resolve a table dir to a prefix of the root.
+    * (initial appends land there). Entries are root-relative; an
+    * absolute entry (written before they were) counts only under this
+    * same root. The generation marker is ANCHORED — `<table>.g<digits>`
+    * matched from the relative path's start — so a root whose own path
+    * happens to contain a `.g<digits>` segment (e.g.
+    * `/data/labels.g1/state`) can never mis-resolve a table dir to a
+    * prefix of the root.
     */
   private[graft] def resolveStateDirs(root: String,
       tables: Seq[String]): Map[String, String] = {
     val log = stateLog(root)
-    val snap = log.latestVersion.map(log.snapshot).getOrElse(Nil)
-      .map(_.path)
     val rootNorm = root.stripSuffix("/")
+    val snap = log.latestVersion.map(log.snapshot).getOrElse(Nil)
+      .map(_.path.stripPrefix(s"$rootNorm/"))
     tables.map { t =>
-      val prefix = s"$rootNorm/$t.g"
-      val hit = snap.find(_.startsWith(prefix)).map { p =>
-        prefix + p.substring(prefix.length).takeWhile(_.isDigit)
+      val hit = snap.find(_.startsWith(s"$t.g")).map { p =>
+        s"$t.g" + p.substring(t.length + 2).takeWhile(_.isDigit)
       }
-      t -> hit.getOrElse(s"$rootNorm/$t")
+      t -> s"$rootNorm/${hit.getOrElse(t)}"
     }.toMap
   }
 
@@ -1061,7 +1066,7 @@ object Streams {
     val prev = log.latestVersion.map(log.snapshot).getOrElse(Nil)
     val v = log.commit(
       prev.map(f => graft.sources.TableLog.Remove(f.path)) ++
-        newDirs.flatMap(genEntries).map(graft.sources.TableLog.Add),
+        newDirs.flatMap(genEntries(root, _)).map(graft.sources.TableLog.Add),
       tag)
     // checkpoint EVERY rewrite commit: each one supersedes the whole
     // prior snapshot (Remove-all + Add-all), so an uncheckpointed log
@@ -1360,24 +1365,6 @@ object Streams {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     graft.Staging.deleteTree(tmpPath)
-  }
-
-  /** Run labelled jobs concurrently and let EVERY one settle before
-    * the first failure rethrows (the others attached to it with
-    * `addSuppressed`): a caller's retry or cleanup never races a
-    * sibling job that is still writing.
-    */
-  private[graft] def settleAll(spark: org.apache.spark.sql.SparkSession)(
-      jobs: Seq[(String, () => Unit)]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    jobs.map { case (label, f) =>
-      Future(scala.util.Try(graft.operators.Pipeline.labeled(spark, label)(f())))
-    }.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-      .collect { case scala.util.Failure(e) => e } match {
-      case Seq()     => ()
-      case e +: rest => rest.foreach(e.addSuppressed); throw e
-    }
   }
 
   /** Delete every `gb<bid>-` file of a batch from the given table
@@ -3129,7 +3116,7 @@ object Streams {
       // untouched: it was always subset-tolerant (each log skips only
       // its own committed tag on redelivery), so an arbitrary commit
       // interleaving at crash time heals exactly like the old fixed
-      // order. All four settle before any failure propagates.
+      // order.
       val lands: Seq[(String, () => Unit)] = Seq(
         "main" -> (() => if (!tagCommitted(mainLog, tag)) {
           val dir = s"${roots.main}/$tag"
@@ -3167,7 +3154,7 @@ object Streams {
             .filter(col("key").isNotNull).select("key").distinct()
             .join(seenFp.select(col("fp").as("key")), Seq("key"),
               "left_anti"))))
-      settleAll(spark)(lands.map { case (n, f) => s"st22: land $n" -> f })
+      graft.Concurrent.settleAll(spark)(lands.map { case (n, f) => s"st22: land $n" -> f })
       // st16's checkpoint cadence on all four destinations: every 8
       // batches each log collapses its replay and the txn watermark
       // folds the accumulated b@ tags to one row per log — this sink

@@ -1835,6 +1835,60 @@ class AnnStreamSpec extends SparkSpec {
       == servedBefore)
   }
 
+  test("a copied state root keeps its committed generations, and " +
+      "stepping + compacting the copy never touches the original") {
+    import SparkSpec.spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val spark = SparkSpec.spark
+    val docs = Seq(
+      1L -> "alpha beta alpha", 2L -> "alpha gamma",
+      3L -> "beta delta", 4L -> "gamma gamma alpha").toDF("doc_id", "text")
+    val st = StateTable.open(spark, st14Family)
+    graft.streaming.Streams.st14MaintainStep(st, docs, bid = 0L)
+    st.compact()
+    assert(st.dir("postings").matches(".*/postings\\.g\\d+"))
+    def served(s: StateTable) = graft.streaming.Streams
+      .st14Serve(s, Seq("alpha", "beta"), 5).collect().map(_.toSeq).toSeq
+    val servedBefore = served(st)
+    /** Every file under `root`: relative path -> (size, mtime). */
+    def listing(root: String): Map[String, (Long, Long)] = {
+      val r = java.nio.file.Paths.get(root)
+      val walk = java.nio.file.Files.walk(r)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => r.relativize(f).toString ->
+          (java.nio.file.Files.size(f),
+            java.nio.file.Files.getLastModifiedTime(f).toMillis))
+        .toMap
+      finally walk.close()
+    }
+    val original = listing(st.root)
+    val copyRoot = graft.Staging.scratch("st14_relocated")
+    val src = java.nio.file.Paths.get(st.root)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
+      val t = java.nio.file.Paths.get(copyRoot).resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+      ()
+    } finally walk.close()
+    val cp = StateTable.open(spark, st14Family, root = Some(copyRoot))
+    assert(cp.dir("postings") ==
+      st.dir("postings").replace(st.root, copyRoot.stripSuffix("/")),
+      s"the copy resolved ${cp.dir("postings")}")
+    assert(listing(copyRoot).keySet == original.keySet,
+      "opening the copy swept committed files")
+    assert(served(cp) == servedBefore)
+    graft.streaming.Streams.st14MaintainStep(cp,
+      Seq(5L -> "alpha delta").toDF("doc_id", "text"), bid = 1L)
+    cp.compact()
+    assert(cp.dir("postings").startsWith(copyRoot.stripSuffix("/") + "/"))
+    assert(served(cp) != servedBefore, "the copy's step did not land")
+    assert(listing(st.root) == original,
+      "stepping and compacting the copy changed the original root")
+    assert(served(StateTable.open(spark, st14Family, root = Some(st.root))) ==
+      servedBefore)
+  }
+
   test("annIndexMaintenance resume serves under the PERSISTED codebook " +
       "even when the training frame drifted") {
     val spark = SparkSpec.spark
