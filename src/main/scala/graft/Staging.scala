@@ -81,6 +81,20 @@ object Staging {
     d
   }
 
+  /** Release a [[scratch]] dir its caller is done with: delete its
+    * tree now, and forget it, instead of at JVM exit.
+    */
+  def release(d: String): Unit =
+    try deleteTree(java.nio.file.Paths.get(d))
+    finally { staged.remove(s"scratch:$d"); () }
+
+  /** Count of [[scratch]] dirs not yet released — spec access. */
+  private[graft] def scratchKeys: Int = {
+    var n = 0
+    staged.keySet.forEach(k => if (k.startsWith("scratch:")) n += 1)
+    n
+  }
+
   /** The staged path for `key`, if this JVM landed it — spec access. */
   def lookup(key: String): Option[String] = Option(staged.get(key))
 

@@ -1208,6 +1208,12 @@ object Graft {
       * string itself (e1's query-side encode). Returns (chunk_id,
       * rrf, r_lex, r_vec); chunk_id / 10⁶ is the source doc id.
       *
+      * The search RUNS when called: it serves from the index
+      * generation's driver snapshot (codebook, idf, avgdl — loaded
+      * once per generation), collects both towers' candidates in one
+      * Spark action, fuses them on the driver, and returns the hits
+      * as a local frame, so collecting it runs no further job.
+      *
       * `tier` picks the dense tower's quantization: `int16` (the
       * stored codes, 2 B/dim), `sq8` (1 B/dim), `pq` (1 B/subspace),
       * `sq8_rerank` (sq8 shortlist at `overFetch`·kList + exact

@@ -884,118 +884,119 @@ object Pipeline {
     // be invalidated BY that append (CacheManager recache-by-path)
     // and re-evaluate empty against its own output
     val scratch = graft.Staging.scratch("rag_add")
-    routedNew
-      .select(col("doc_id").cast("long").as("doc_id"), col("body"))
-      // in-batch duplicates dedup too (deterministic min-body pick):
-      // the registry anti-join only guards against ALREADY-indexed
-      // docs, and a doubled arrival row would land twice in every
-      // tower — doubled tf, duplicate vec_ids, drifted nd/len_sum —
-      // with rebuild() reproducing the corruption from routed
-      .groupBy("doc_id").agg(min(col("body")).as("body"))
-      .join(spark.read.parquet(s"$d/routed").select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$scratch/arr")
-    val arr = spark.read.parquet(s"$scratch/arr")
-    val nNew = arr.count()
-    if (nNew == 0L) return 0L
-    // INTENT: a crash between any two appends below leaves routed
-    // holding docs the derived towers never indexed (a silently
-    // incomplete index — the redelivered add no-ops on the registry
-    // anti-join); the armed marker makes the next entry rebuild
-    armTornMarker(spark, d, "add")
-    appendFlat("routed", arr, col("doc_id"))
-    val chNew = graft.Caches.materialized(
-      graft.api.Graft.chunk(arr, "doc_id", "body", size, step)
-        .select(mintChunkId(col("doc_id"), col("start")).as("chunk_id"),
-          col("doc_id"), col("start"), col("chunk")))
-    appendFlat("chunks", chNew, col("doc_id"))
-    val tfNew = graft.Caches.materialized(chNew
-      .select(col("chunk_id"),
-        explode(Text.tokenize(col("chunk"))).as("term"))
-      .groupBy("chunk_id", "term").agg(count(lit(1)).as("tf")))
-    appendFlatChunkKeyed("tf", tfNew, col("chunk_id"))
-    val tfD = tfNew.withColumnRenamed("chunk_id", "doc_id")
-    val dlNew = graft.Caches.materialized(
-      tfD.groupBy("doc_id").agg(sum("tf").as("dl")))
-    tfD.join(dlNew, "doc_id")
-      .withColumn("tb", Search.termBucket(col("term"), nLex))
-      .withColumn("db", docBucketOfChunk(col("doc_id"), nTfbDb))
-      .repartition(col("tb"), col("db"))
-      .write.mode("append").partitionBy("tb", "db")
-      .parquet(s"$d/tf_b")
-    // stats: exact-integer rollup — one stored row + one arrival row
-    val old = spark.read.parquet(s"$d/stats")
-      .select("nd", "len_sum").collect()(0)
-    val inc = dlNew.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))
-      .collect()(0)
-    val nd2 = old.getLong(0) + inc.getLong(0)
-    val ls2 = old.getLong(1) + inc.getLong(1)
-    import spark.implicits._
-    replaceDir(spark, d, "stats",
-      Seq((ls2.toDouble / nd2, nd2, ls2))
-        .toDF("avgdl", "nd", "len_sum").coalesce(1))
-    // idf: vocab-sized df merge, idf_bm re-derived under the new nd
-    // with the build's own expression
-    val dfNew = tfD.groupBy("term").agg(count(lit(1)).as("df_new"))
-    replaceDir(spark, d, "idf",
-      spark.read.parquet(s"$d/idf").select("term", "df")
-        .join(dfNew, Seq("term"), "full")
-        .select(col("term"),
-          (coalesce(col("df"), lit(0L)) +
-            coalesce(col("df_new"), lit(0L))).as("df"))
-        .withColumn("idf_bm",
-          log(lit(1.0) + (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
-        .select("term", "df", "idf_bm"))
-    // dense tower: encode arrivals, assign under the PINNED codebook,
-    // append cid-partitioned (st15MaintainStep's shape)
-    val encNew = graft.Caches.materialized(
-      Embed.encodeFrame(chNew, "chunk_id", "chunk", d = dim))
-    appendFlatChunkKeyed("enc", encNew, col("vec_id"))
-    encNew
-      .withColumn("cid",
-        graft.functions.Vectors.centroidTop1(
-          transform(col("u16"), x => x.cast("double")), cb))
-      .select("vec_id", "u16", "cid")
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(s"$d/enc_ivf")
-    // the partitions THIS wave appended to — arrivals-sized distinct
-    // collects over the still-cached arrival frames, handed to the
-    // compaction pass so its fragmentation check stats only these
-    // dirs (an unscoped pass would list every partition dir of six
-    // tables per wave — corpus-dir-coupled at lake scale)
-    val dbsNew: Seq[Any] = arr
-      .select(docBucket(col("doc_id"), nDb).as("db"))
-      .distinct().collect().map(_.getLong(0): Any).toSeq
-    val cellsNew: Seq[Seq[Any]] = tfD.select(
-        Search.termBucket(col("term"), nLex).as("tb"),
-        docBucketOfChunk(col("doc_id"), nTfbDb).as("db"))
-      .distinct().collect()
-      .map(r => Seq(r.getLong(0): Any, r.getLong(1): Any)).toSeq
-    val cidsNew: Seq[Any] = encNew
-      .select(graft.functions.Vectors.centroidTop1(
-        transform(col("u16"), x => x.cast("double")), cb).as("cid"))
-      .distinct().collect().map(_.getInt(0): Any).toSeq
-    Seq(chNew, tfNew, dlNew, encNew).foreach(graft.Caches.drop)
-    graft.Staging.deleteTree(java.nio.file.Paths.get(scratch))
-    // quantization-tier layouts are DERIVED caches of enc_ivf — a
-    // grown index invalidates them (next tier serve re-mints from
-    // the current corpus; their models are corpus statistics)
-    dropTierLayouts(spark, d)
-    // a long add cadence fragments every touched partition dir (one
-    // appended file per dir per wave): Probe addwave measured 20
-    // waves growing a 10× root to ~18k files with the serve wall
-    // +70% — fold back only the dirs the cadence overgrew
-    compactTowers(spark, d, scope = Some(Map(
-      "routed" -> dbsNew.map(Seq(_)),
-      "chunks" -> dbsNew.map(Seq(_)),
-      "tf" -> dbsNew.map(Seq(_)),
-      "enc" -> dbsNew.map(Seq(_)),
-      "tf_b" -> cellsNew,
-      "enc_ivf" -> cidsNew.map(Seq(_)))))
-    // every append, rollup swap, tier invalidation, and compaction
-    // fold landed — the add wave's intent is discharged
-    clearTornMarker(spark, d)
-    nNew
+    try {
+      routedNew
+        .select(col("doc_id").cast("long").as("doc_id"), col("body"))
+        // in-batch duplicates dedup too (deterministic min-body pick):
+        // the registry anti-join only guards against ALREADY-indexed
+        // docs, and a doubled arrival row would land twice in every
+        // tower — doubled tf, duplicate vec_ids, drifted nd/len_sum —
+        // with rebuild() reproducing the corruption from routed
+        .groupBy("doc_id").agg(min(col("body")).as("body"))
+        .join(spark.read.parquet(s"$d/routed").select("doc_id"),
+          Seq("doc_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$scratch/arr")
+      val arr = spark.read.parquet(s"$scratch/arr")
+      val nNew = arr.count()
+      if (nNew == 0L) return 0L
+      // INTENT: a crash between any two appends below leaves routed
+      // holding docs the derived towers never indexed (a silently
+      // incomplete index — the redelivered add no-ops on the registry
+      // anti-join); the armed marker makes the next entry rebuild
+      armTornMarker(spark, d, "add")
+      appendFlat("routed", arr, col("doc_id"))
+      val chNew = graft.Caches.materialized(
+        graft.api.Graft.chunk(arr, "doc_id", "body", size, step)
+          .select(mintChunkId(col("doc_id"), col("start")).as("chunk_id"),
+            col("doc_id"), col("start"), col("chunk")))
+      appendFlat("chunks", chNew, col("doc_id"))
+      val tfNew = graft.Caches.materialized(chNew
+        .select(col("chunk_id"),
+          explode(Text.tokenize(col("chunk"))).as("term"))
+        .groupBy("chunk_id", "term").agg(count(lit(1)).as("tf")))
+      appendFlatChunkKeyed("tf", tfNew, col("chunk_id"))
+      val tfD = tfNew.withColumnRenamed("chunk_id", "doc_id")
+      val dlNew = graft.Caches.materialized(
+        tfD.groupBy("doc_id").agg(sum("tf").as("dl")))
+      tfD.join(dlNew, "doc_id")
+        .withColumn("tb", Search.termBucket(col("term"), nLex))
+        .withColumn("db", docBucketOfChunk(col("doc_id"), nTfbDb))
+        .repartition(col("tb"), col("db"))
+        .write.mode("append").partitionBy("tb", "db")
+        .parquet(s"$d/tf_b")
+      // stats: exact-integer rollup — one stored row + one arrival row
+      val old = spark.read.parquet(s"$d/stats")
+        .select("nd", "len_sum").collect()(0)
+      val inc = dlNew.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))
+        .collect()(0)
+      val nd2 = old.getLong(0) + inc.getLong(0)
+      val ls2 = old.getLong(1) + inc.getLong(1)
+      import spark.implicits._
+      replaceDir(spark, d, "stats",
+        Seq((ls2.toDouble / nd2, nd2, ls2))
+          .toDF("avgdl", "nd", "len_sum").coalesce(1))
+      // idf: vocab-sized df merge, idf_bm re-derived under the new nd
+      // with the build's own expression
+      val dfNew = tfD.groupBy("term").agg(count(lit(1)).as("df_new"))
+      replaceDir(spark, d, "idf",
+        spark.read.parquet(s"$d/idf").select("term", "df")
+          .join(dfNew, Seq("term"), "full")
+          .select(col("term"),
+            (coalesce(col("df"), lit(0L)) +
+              coalesce(col("df_new"), lit(0L))).as("df"))
+          .withColumn("idf_bm",
+            log(lit(1.0) + (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
+          .select("term", "df", "idf_bm"))
+      // dense tower: encode arrivals, assign under the PINNED codebook,
+      // append cid-partitioned (st15MaintainStep's shape)
+      val encNew = graft.Caches.materialized(
+        Embed.encodeFrame(chNew, "chunk_id", "chunk", d = dim))
+      appendFlatChunkKeyed("enc", encNew, col("vec_id"))
+      encNew
+        .withColumn("cid",
+          graft.functions.Vectors.centroidTop1(
+            transform(col("u16"), x => x.cast("double")), cb))
+        .select("vec_id", "u16", "cid")
+        .repartition(col("cid"))
+        .write.mode("append").partitionBy("cid").parquet(s"$d/enc_ivf")
+      // the partitions THIS wave appended to — arrivals-sized distinct
+      // collects over the still-cached arrival frames, handed to the
+      // compaction pass so its fragmentation check stats only these
+      // dirs (an unscoped pass would list every partition dir of six
+      // tables per wave — corpus-dir-coupled at lake scale)
+      val dbsNew: Seq[Any] = arr
+        .select(docBucket(col("doc_id"), nDb).as("db"))
+        .distinct().collect().map(_.getLong(0): Any).toSeq
+      val cellsNew: Seq[Seq[Any]] = tfD.select(
+          Search.termBucket(col("term"), nLex).as("tb"),
+          docBucketOfChunk(col("doc_id"), nTfbDb).as("db"))
+        .distinct().collect()
+        .map(r => Seq(r.getLong(0): Any, r.getLong(1): Any)).toSeq
+      val cidsNew: Seq[Any] = encNew
+        .select(graft.functions.Vectors.centroidTop1(
+          transform(col("u16"), x => x.cast("double")), cb).as("cid"))
+        .distinct().collect().map(_.getInt(0): Any).toSeq
+      Seq(chNew, tfNew, dlNew, encNew).foreach(graft.Caches.drop)
+      // quantization-tier layouts are DERIVED caches of enc_ivf — a
+      // grown index invalidates them (next tier serve re-mints from
+      // the current corpus; their models are corpus statistics)
+      dropTierLayouts(spark, d)
+      // a long add cadence fragments every touched partition dir (one
+      // appended file per dir per wave): Probe addwave measured 20
+      // waves growing a 10× root to ~18k files with the serve wall
+      // +70% — fold back only the dirs the cadence overgrew
+      compactTowers(spark, d, scope = Some(Map(
+        "routed" -> dbsNew.map(Seq(_)),
+        "chunks" -> dbsNew.map(Seq(_)),
+        "tf" -> dbsNew.map(Seq(_)),
+        "enc" -> dbsNew.map(Seq(_)),
+        "tf_b" -> cellsNew,
+        "enc_ivf" -> cidsNew.map(Seq(_)))))
+      // every append, rollup swap, tier invalidation, and compaction
+      // fold landed — the add wave's intent is discharged
+      clearTornMarker(spark, d)
+      nNew
+    } finally graft.Staging.release(scratch)
   }
 
   /** Fold multi-file partition dirs of the staged towers back to
@@ -1134,248 +1135,243 @@ object Pipeline {
     val (nDb, nLex, nTfbDb) = (meta.nDb, meta.nLex, meta.nTfbDb)
     // victims DECOUPLE through scratch parquet before any rewrite
     // (the addToTowers lineage lesson: a frame derived from a dir we
-    // are about to replace would re-evaluate against its own output)
+    // are about to replace would re-evaluate against its own output).
+    // It holds the requested ids — erasure-request data on the forget
+    // stream — so every exit, a failed wave's too, releases it
     val scratch = graft.Staging.scratch("rag_remove")
-    idsDf.select(col(idsDf.columns.head).cast("long").as("doc_id"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$scratch/ids")
-    val ids = spark.read.parquet(s"$scratch/ids")
-    // doc buckets derive by PURE HASH from the ids (docBucket), no
-    // table read — so even the membership check (is each id actually
-    // indexed?) reads only the requested ids' routed buckets, and
-    // every victim-DERIVATION scan below carries a db partition
-    // filter: the wave's READ side is victims-coupled like its
-    // rewrite side (round-16 pruned the rewrites but still paid
-    // corpus-wide derivation scans — chunks, tf, and every enc_ivf
-    // list — per wave; at 100 TB a 3-victim GDPR wave would have
-    // scanned the chunk, posting, and code tables end-to-end before
-    // rewriting 1.2%)
-    val rawDbs: Seq[Any] = ids
-      .select(docBucket(col("doc_id"), nDb).as("db"))
-      .distinct().collect().map(_.getLong(0): Any).toSeq
-    ids.join(spark.read.parquet(s"$d/routed")
-        .filter(col("db").isin(rawDbs: _*)).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .write.mode("overwrite").parquet(s"$scratch/victims")
-    val victims = spark.read.parquet(s"$scratch/victims")
-    val nVict = victims.count()
-    if (nVict == 0L) {
-      // the no-op path (unknown ids, st25's redelivered waves) must
-      // not leak its scratch — it holds the requested ids, which on
-      // the forget stream is erasure-request data
-      graft.Staging.deleteTree(java.nio.file.Paths.get(scratch))
-      return 0L
-    }
-    // re-derived from the CONFIRMED victims (⊆ rawDbs — unknown ids'
-    // buckets drop out, tightening every downstream prune)
-    val vDbs: Seq[Any] = victims
-      .select(docBucket(col("doc_id"), nDb).as("db"))
-      .distinct().collect().map(_.getLong(0): Any).toSeq
-    // chunk-keyed rows resolve their doc by PURE ARITHMETIC
-    // (chunk_id = doc_id·10⁶ + start ⇒ doc key = chunk_id −
-    // (chunk_id mod 10⁶), exact long math — the [[docBucketOfChunk]]
-    // identity), so the victim-CHUNK set never materializes: every
-    // chunk-keyed table (tf, enc, tf_b, enc_ivf) semi/anti-joins the
-    // victims frame directly on the derived key. That removes one
-    // scratch write + read (the old vchunks pass over the chunks
-    // table) per wave AND shrinks each join's broadcast side from
-    // victim-chunks to victims (guide §2.3: shuffle/broadcast keys,
-    // not payloads; §1.2: fewer passes).
-    val vKey = victims.select((col("doc_id") * 1000000L).as("__vdk"))
-    def docKeyOf(c: Column): Column = {
-      val l = c.cast("long"); l - pmod(l, lit(1000000L))
-    }
-    // tf's victim slice lands in scratch ONCE (db-pruned — tf is
-    // bucketed by the chunk's doc hash, the same modulus); the
-    // per-term df decrement, the (nd, len_sum) decrement, and the
-    // affected-cell set all derive from it without re-scanning tf
-    labeled(spark, "remove: stage victim postings (vtf)") {
-      spark.read.parquet(s"$d/tf")
-        .filter(col("db").isin(vDbs: _*))
-        .join(vKey, docKeyOf(col("chunk_id")) === col("__vdk"),
-          "left_semi")
-        .drop("db")
-        .write.mode("overwrite").parquet(s"$scratch/vtf")
-    }
-    val vtf = spark.read.parquet(s"$scratch/vtf")
-    val vdf = vtf.groupBy("term").agg(count(lit(1)).as("df_dec"))
-    // the victims' coarse lists re-derive from the db-PRUNED enc and
-    // the pinned codebook — the st15 assignment contract: enc_ivf's
-    // cid was minted as exactly this centroidRanks projection at
-    // build/add time, so the projection over the victim codes IS the
-    // victim list set, and the corpus-wide enc_ivf semi-join (a full
-    // scan of every list per wave) never runs
-    val cb = graft.streaming.Streams.loadCodebook(d).getOrElse(
-      sys.error(s"no codebook.meta at $d — not a built index root"))
-    // The four pre-rewrite derivations are INDEPENDENT given the
-    // staged vtf: the merged stats decrement, the victim coarse-list
-    // collect, the victim (tb, db) cell collect, and the old-stats
-    // read each cost one driver round-trip — run them as CONCURRENT
-    // jobs (guide §2.6, the buildTowers overlap applied to the wave's
-    // serial driver actions) instead of four sequential ones.
-    val Seq(decA, vCidsA, vCellsA, oldA) = graft.Concurrent.settleAll[Any](spark)(Seq(
-      // ONE aggregate job carries both exact decrements (the old
-      // shape paid a separate job each for len_dec and nd_dec):
-      // len_sum drops by the victims' Σtf; nd counts chunks WITH
-      // postings (dl derives from tf — a token-less chunk never
-      // entered stats), so the decrement counts the victim chunks
-      // that appear in tf, not every victim chunk
-      "remove: stats decrement aggregate" -> (() =>
-        vtf.agg(sum("tf").as("len_dec"),
-          countDistinct("chunk_id").as("nd_dec")).collect()(0)),
-      "remove: victim coarse lists (vCids)" -> (() =>
-        spark.read.parquet(s"$d/enc")
+    try {
+      idsDf.select(col(idsDf.columns.head).cast("long").as("doc_id"))
+        .distinct()
+        .write.mode("overwrite").parquet(s"$scratch/ids")
+      val ids = spark.read.parquet(s"$scratch/ids")
+      // doc buckets derive by PURE HASH from the ids (docBucket), no
+      // table read — so even the membership check (is each id actually
+      // indexed?) reads only the requested ids' routed buckets, and
+      // every victim-DERIVATION scan below carries a db partition
+      // filter: the wave's READ side is victims-coupled like its
+      // rewrite side (round-16 pruned the rewrites but still paid
+      // corpus-wide derivation scans — chunks, tf, and every enc_ivf
+      // list — per wave; at 100 TB a 3-victim GDPR wave would have
+      // scanned the chunk, posting, and code tables end-to-end before
+      // rewriting 1.2%)
+      val rawDbs: Seq[Any] = ids
+        .select(docBucket(col("doc_id"), nDb).as("db"))
+        .distinct().collect().map(_.getLong(0): Any).toSeq
+      ids.join(spark.read.parquet(s"$d/routed")
+          .filter(col("db").isin(rawDbs: _*)).select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$scratch/victims")
+      val victims = spark.read.parquet(s"$scratch/victims")
+      val nVict = victims.count()
+      if (nVict == 0L) return 0L
+      // re-derived from the CONFIRMED victims (⊆ rawDbs — unknown ids'
+      // buckets drop out, tightening every downstream prune)
+      val vDbs: Seq[Any] = victims
+        .select(docBucket(col("doc_id"), nDb).as("db"))
+        .distinct().collect().map(_.getLong(0): Any).toSeq
+      // chunk-keyed rows resolve their doc by PURE ARITHMETIC
+      // (chunk_id = doc_id·10⁶ + start ⇒ doc key = chunk_id −
+      // (chunk_id mod 10⁶), exact long math — the [[docBucketOfChunk]]
+      // identity), so the victim-CHUNK set never materializes: every
+      // chunk-keyed table (tf, enc, tf_b, enc_ivf) semi/anti-joins the
+      // victims frame directly on the derived key. That removes one
+      // scratch write + read (the old vchunks pass over the chunks
+      // table) per wave AND shrinks each join's broadcast side from
+      // victim-chunks to victims (guide §2.3: shuffle/broadcast keys,
+      // not payloads; §1.2: fewer passes).
+      val vKey = victims.select((col("doc_id") * 1000000L).as("__vdk"))
+      def docKeyOf(c: Column): Column = {
+        val l = c.cast("long"); l - pmod(l, lit(1000000L))
+      }
+      // tf's victim slice lands in scratch ONCE (db-pruned — tf is
+      // bucketed by the chunk's doc hash, the same modulus); the
+      // per-term df decrement, the (nd, len_sum) decrement, and the
+      // affected-cell set all derive from it without re-scanning tf
+      labeled(spark, "remove: stage victim postings (vtf)") {
+        spark.read.parquet(s"$d/tf")
           .filter(col("db").isin(vDbs: _*))
-          .join(vKey, docKeyOf(col("vec_id")) === col("__vdk"),
+          .join(vKey, docKeyOf(col("chunk_id")) === col("__vdk"),
             "left_semi")
-          .select(graft.functions.Vectors.centroidTop1(
-            transform(col("u16"), x => x.cast("double")), cb)
-            .as("cid"))
-          .distinct().collect().map(_.getInt(0)).toSeq),
-      // the EXACT victim (tb, db) cells of the postings layout,
-      // derived from the pre-staged victim postings (never a
-      // term-bucket x doc-bucket cross product — a wave whose terms
-      // span 20 buckets and docs span 10 would otherwise rewrite 200
-      // cells where ~30 hold victims, each a staged file + delete +
-      // rename of itself)
-      "remove: victim postings cells (vCells)" -> (() =>
-        vtf.select(
-            Search.termBucket(col("term"), nLex).as("tb"),
-            docBucketOfChunk(col("chunk_id"), nTfbDb).as("db"))
-          .distinct().collect()
-          .map(r => Seq(r.getLong(0).toInt: Any, r.getLong(1): Any))
-          .toSeq),
-      // stats decrement inputs read BEFORE any rewrite (exact-
-      // integer: len_sum/nd stays bit-equal to a rebuild's avg(dl) —
-      // integer-valued doubles below 2^53)
-      "remove: read pre-wave stats" -> (() =>
-        spark.read.parquet(s"$d/stats")
-          .select("nd", "len_sum").collect()(0))))
-    val dec = decA.asInstanceOf[Row]
-    val lenDec = if (dec.isNullAt(0)) 0L else dec.getLong(0)
-    val ndDec = dec.getLong(1)
-    val vCids = vCidsA.asInstanceOf[Seq[Int]]
-    val vCells = vCellsA.asInstanceOf[Seq[Seq[Any]]]
-    // a delete wave must leave a non-empty index: a dir-less
-    // partitioned table can't even be read back, and "forget the
-    // whole corpus" is an explicit teardown, not an erasure wave.
-    // The survivor check arms when the victims' buckets cover every
-    // OCCUPIED db dir of routed (a driver-side listing — comparing
-    // against nDb would let a small corpus occupying fewer than nDb
-    // buckets be fully erased without ever covering all of them),
-    // and counts only rows the wave is about to rewrite anyway.
-    val occupied = {
-      val fs = new org.apache.hadoop.fs.Path(d)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(d, "routed"))
-        .map(_.getPath.getName).filter(_.startsWith("db="))
-        .map(_.stripPrefix("db=").toLong).toSet
-    }
-    if (occupied.subsetOf(vDbs.map(_.asInstanceOf[Long]).toSet))
-      require(nVict < spark.read.parquet(s"$d/routed")
-          .filter(col("db").isin(vDbs: _*)).count(),
-        "removeFromTowers would delete every routed doc — tear the " +
-          "root down (or rebuild empty) instead of erasing in place")
-    // a left_anti join hoists its key to the front — re-select the
-    // source's own column order so the rewritten table is bit-equal
-    // to a rebuild's, schema included
-    def antiInOrder(src: DataFrame, key: String,
-        victimsOf: DataFrame): DataFrame =
-      src.join(victimsOf, Seq(key), "left_anti")
-        .select(src.columns.map(col).toSeq: _*)
-    // chunk-keyed survivors: anti-join on the ARITHMETIC doc key
-    // (same rows as the old victim-chunk anti-join — tf/enc/tf_b/
-    // enc_ivf rows all derive from chunks — with the victims frame,
-    // not the larger chunk set, as the broadcast side)
-    def antiDocInOrder(src: DataFrame, chunkKey: String): DataFrame =
-      src.join(vKey, docKeyOf(col(chunkKey)) === col("__vdk"),
-          "left_anti")
-        .select(src.columns.map(col).toSeq: _*)
-    val old = oldA.asInstanceOf[Row]
-    val nd2 = old.getLong(0) - ndDec
-    val ls2 = old.getLong(1) - lenDec
-    import spark.implicits._
-    // INTENT: the wave is about to mutate its first table — from
-    // here to the clear below, a crash at ANY point (not just the
-    // millisecond rename windows .prev evidence covers) leaves the
-    // marker armed and the next mutation entry rebuilds from routed
-    armTornMarker(spark, d, "remove")
-    // routed shrinks FIRST and ALONE (the torn-remove repair anchor:
-    // if anything after this dies, rebuild() re-derives every tower
-    // from the already-shrunk routed). Only the victim doc buckets
-    // swap; untouched buckets keep their files.
-    replacePartitions(spark, d, "routed", Seq("db"),
-      vDbs.map(Seq(_)),
-      antiInOrder(spark.read.parquet(s"$d/routed")
-        .filter(col("db").isin(vDbs: _*)), "doc_id", victims))
-    // the remaining six rewrites touch DISJOINT tables whose inputs
-    // are all pre-staged (scratch victims/vtf + their own dirs), so
-    // they submit as CONCURRENT Spark jobs — a delete wave's latency
-    // is the longest single rewrite, not their sum (Spark job
-    // submission is thread-safe; each job's stages share the same
-    // executor pool). Every flat rewrite is VICTIMS-SIZED.
-    val rewrites: Seq[(String, () => Unit)] = Seq(
-      "remove: rewrite chunks" -> (() =>
-        replacePartitions(spark, d, "chunks", Seq("db"),
-          vDbs.map(Seq(_)),
-          antiInOrder(spark.read.parquet(s"$d/chunks")
-            .filter(col("db").isin(vDbs: _*)), "doc_id", victims))),
-      "remove: rewrite tf" -> (() =>
-        replacePartitions(spark, d, "tf", Seq("db"),
-          vDbs.map(Seq(_)),
-          antiDocInOrder(spark.read.parquet(s"$d/tf")
-            .filter(col("db").isin(vDbs: _*)), "chunk_id"))),
-      "remove: rewrite enc" -> (() =>
-        replacePartitions(spark, d, "enc", Seq("db"),
-          vDbs.map(Seq(_)),
-          antiDocInOrder(spark.read.parquet(s"$d/enc")
-            .filter(col("db").isin(vDbs: _*)), "vec_id"))),
-      // the postings swap EXACTLY the victim (tb, db) cells; the
-      // cell-key filter references only partition columns, so the
-      // survivor scan partition-prunes to those dirs
-      "remove: rewrite tf_b" -> (() =>
-        replacePartitions(spark, d, "tf_b", Seq("tb", "db"),
-          vCells,
-          antiDocInOrder(spark.read.parquet(s"$d/tf_b")
-            .filter(concat_ws("/", col("tb"), col("db")).isin(
-              vCells.map(c => s"${c(0)}/${c(1)}"): _*)),
-            "doc_id"))),
-      "remove: rewrite enc_ivf" -> (() =>
-        replacePartitions(spark, d, "enc_ivf", Seq("cid"),
-          vCids.map(Seq(_)),
-          antiDocInOrder(spark.read.parquet(s"$d/enc_ivf")
-            .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
-            "vec_id"))),
-      "remove: rewrite stats + idf" -> (() => {
-        replaceDir(spark, d, "stats",
-          Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
-            .toDF("avgdl", "nd", "len_sum").coalesce(1))
-        // idf: vocab-sized df merge-down under the new nd; a term
-        // whose last posting left leaves the vocabulary
-        replaceDir(spark, d, "idf",
-          spark.read.parquet(s"$d/idf").select("term", "df")
-            .join(vdf.select("term", "df_dec"), Seq("term"), "left")
-            .select(col("term"),
-              (col("df") - coalesce(col("df_dec"), lit(0L))).as("df"))
-            .filter(col("df") > 0L)
-            .withColumn("idf_bm",
-              log(lit(1.0) +
-                (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
-            .select("term", "df", "idf_bm"))
-      }))
-    // scratch cleanup and the tier-layout invalidation run on BOTH
-    // paths — a torn remove must not leave enc_ivf_sq8/enc_ivf_pq
-    // serving the forgotten doc
-    try graft.Concurrent.settleAll(spark)(rewrites)
-    finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(scratch))
-      dropTierLayouts(spark, d)
-    }
-    // every rewrite settled cleanly AND the tier caches dropped —
-    // only now is the wave's intent discharged (a throw above leaves
-    // the marker armed for the next entry's rebuild)
-    clearTornMarker(spark, d)
-    nVict
+          .drop("db")
+          .write.mode("overwrite").parquet(s"$scratch/vtf")
+      }
+      val vtf = spark.read.parquet(s"$scratch/vtf")
+      val vdf = vtf.groupBy("term").agg(count(lit(1)).as("df_dec"))
+      // the victims' coarse lists re-derive from the db-PRUNED enc and
+      // the pinned codebook — the st15 assignment contract: enc_ivf's
+      // cid was minted as exactly this centroidRanks projection at
+      // build/add time, so the projection over the victim codes IS the
+      // victim list set, and the corpus-wide enc_ivf semi-join (a full
+      // scan of every list per wave) never runs
+      val cb = graft.streaming.Streams.loadCodebook(d).getOrElse(
+        sys.error(s"no codebook.meta at $d — not a built index root"))
+      // The four pre-rewrite derivations are INDEPENDENT given the
+      // staged vtf: the merged stats decrement, the victim coarse-list
+      // collect, the victim (tb, db) cell collect, and the old-stats
+      // read each cost one driver round-trip — run them as CONCURRENT
+      // jobs (guide §2.6, the buildTowers overlap applied to the wave's
+      // serial driver actions) instead of four sequential ones.
+      val Seq(decA, vCidsA, vCellsA, oldA) = graft.Concurrent.settleAll[Any](spark)(Seq(
+        // ONE aggregate job carries both exact decrements (the old
+        // shape paid a separate job each for len_dec and nd_dec):
+        // len_sum drops by the victims' Σtf; nd counts chunks WITH
+        // postings (dl derives from tf — a token-less chunk never
+        // entered stats), so the decrement counts the victim chunks
+        // that appear in tf, not every victim chunk
+        "remove: stats decrement aggregate" -> (() =>
+          vtf.agg(sum("tf").as("len_dec"),
+            countDistinct("chunk_id").as("nd_dec")).collect()(0)),
+        "remove: victim coarse lists (vCids)" -> (() =>
+          spark.read.parquet(s"$d/enc")
+            .filter(col("db").isin(vDbs: _*))
+            .join(vKey, docKeyOf(col("vec_id")) === col("__vdk"),
+              "left_semi")
+            .select(graft.functions.Vectors.centroidTop1(
+              transform(col("u16"), x => x.cast("double")), cb)
+              .as("cid"))
+            .distinct().collect().map(_.getInt(0)).toSeq),
+        // the EXACT victim (tb, db) cells of the postings layout,
+        // derived from the pre-staged victim postings (never a
+        // term-bucket x doc-bucket cross product — a wave whose terms
+        // span 20 buckets and docs span 10 would otherwise rewrite 200
+        // cells where ~30 hold victims, each a staged file + delete +
+        // rename of itself)
+        "remove: victim postings cells (vCells)" -> (() =>
+          vtf.select(
+              Search.termBucket(col("term"), nLex).as("tb"),
+              docBucketOfChunk(col("chunk_id"), nTfbDb).as("db"))
+            .distinct().collect()
+            .map(r => Seq(r.getLong(0).toInt: Any, r.getLong(1): Any))
+            .toSeq),
+        // stats decrement inputs read BEFORE any rewrite (exact-
+        // integer: len_sum/nd stays bit-equal to a rebuild's avg(dl) —
+        // integer-valued doubles below 2^53)
+        "remove: read pre-wave stats" -> (() =>
+          spark.read.parquet(s"$d/stats")
+            .select("nd", "len_sum").collect()(0))))
+      val dec = decA.asInstanceOf[Row]
+      val lenDec = if (dec.isNullAt(0)) 0L else dec.getLong(0)
+      val ndDec = dec.getLong(1)
+      val vCids = vCidsA.asInstanceOf[Seq[Int]]
+      val vCells = vCellsA.asInstanceOf[Seq[Seq[Any]]]
+      // a delete wave must leave a non-empty index: a dir-less
+      // partitioned table can't even be read back, and "forget the
+      // whole corpus" is an explicit teardown, not an erasure wave.
+      // The survivor check arms when the victims' buckets cover every
+      // OCCUPIED db dir of routed (a driver-side listing — comparing
+      // against nDb would let a small corpus occupying fewer than nDb
+      // buckets be fully erased without ever covering all of them),
+      // and counts only rows the wave is about to rewrite anyway.
+      val occupied = {
+        val fs = new org.apache.hadoop.fs.Path(d)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(new org.apache.hadoop.fs.Path(d, "routed"))
+          .map(_.getPath.getName).filter(_.startsWith("db="))
+          .map(_.stripPrefix("db=").toLong).toSet
+      }
+      if (occupied.subsetOf(vDbs.map(_.asInstanceOf[Long]).toSet))
+        require(nVict < spark.read.parquet(s"$d/routed")
+            .filter(col("db").isin(vDbs: _*)).count(),
+          "removeFromTowers would delete every routed doc — tear the " +
+            "root down (or rebuild empty) instead of erasing in place")
+      // a left_anti join hoists its key to the front — re-select the
+      // source's own column order so the rewritten table is bit-equal
+      // to a rebuild's, schema included
+      def antiInOrder(src: DataFrame, key: String,
+          victimsOf: DataFrame): DataFrame =
+        src.join(victimsOf, Seq(key), "left_anti")
+          .select(src.columns.map(col).toSeq: _*)
+      // chunk-keyed survivors: anti-join on the ARITHMETIC doc key
+      // (same rows as the old victim-chunk anti-join — tf/enc/tf_b/
+      // enc_ivf rows all derive from chunks — with the victims frame,
+      // not the larger chunk set, as the broadcast side)
+      def antiDocInOrder(src: DataFrame, chunkKey: String): DataFrame =
+        src.join(vKey, docKeyOf(col(chunkKey)) === col("__vdk"),
+            "left_anti")
+          .select(src.columns.map(col).toSeq: _*)
+      val old = oldA.asInstanceOf[Row]
+      val nd2 = old.getLong(0) - ndDec
+      val ls2 = old.getLong(1) - lenDec
+      import spark.implicits._
+      // INTENT: the wave is about to mutate its first table — from
+      // here to the clear below, a crash at ANY point (not just the
+      // millisecond rename windows .prev evidence covers) leaves the
+      // marker armed and the next mutation entry rebuilds from routed
+      armTornMarker(spark, d, "remove")
+      // routed shrinks FIRST and ALONE (the torn-remove repair anchor:
+      // if anything after this dies, rebuild() re-derives every tower
+      // from the already-shrunk routed). Only the victim doc buckets
+      // swap; untouched buckets keep their files.
+      replacePartitions(spark, d, "routed", Seq("db"),
+        vDbs.map(Seq(_)),
+        antiInOrder(spark.read.parquet(s"$d/routed")
+          .filter(col("db").isin(vDbs: _*)), "doc_id", victims))
+      // the remaining six rewrites touch DISJOINT tables whose inputs
+      // are all pre-staged (scratch victims/vtf + their own dirs), so
+      // they submit as CONCURRENT Spark jobs — a delete wave's latency
+      // is the longest single rewrite, not their sum (Spark job
+      // submission is thread-safe; each job's stages share the same
+      // executor pool). Every flat rewrite is VICTIMS-SIZED.
+      val rewrites: Seq[(String, () => Unit)] = Seq(
+        "remove: rewrite chunks" -> (() =>
+          replacePartitions(spark, d, "chunks", Seq("db"),
+            vDbs.map(Seq(_)),
+            antiInOrder(spark.read.parquet(s"$d/chunks")
+              .filter(col("db").isin(vDbs: _*)), "doc_id", victims))),
+        "remove: rewrite tf" -> (() =>
+          replacePartitions(spark, d, "tf", Seq("db"),
+            vDbs.map(Seq(_)),
+            antiDocInOrder(spark.read.parquet(s"$d/tf")
+              .filter(col("db").isin(vDbs: _*)), "chunk_id"))),
+        "remove: rewrite enc" -> (() =>
+          replacePartitions(spark, d, "enc", Seq("db"),
+            vDbs.map(Seq(_)),
+            antiDocInOrder(spark.read.parquet(s"$d/enc")
+              .filter(col("db").isin(vDbs: _*)), "vec_id"))),
+        // the postings swap EXACTLY the victim (tb, db) cells; the
+        // cell-key filter references only partition columns, so the
+        // survivor scan partition-prunes to those dirs
+        "remove: rewrite tf_b" -> (() =>
+          replacePartitions(spark, d, "tf_b", Seq("tb", "db"),
+            vCells,
+            antiDocInOrder(spark.read.parquet(s"$d/tf_b")
+              .filter(concat_ws("/", col("tb"), col("db")).isin(
+                vCells.map(c => s"${c(0)}/${c(1)}"): _*)),
+              "doc_id"))),
+        "remove: rewrite enc_ivf" -> (() =>
+          replacePartitions(spark, d, "enc_ivf", Seq("cid"),
+            vCids.map(Seq(_)),
+            antiDocInOrder(spark.read.parquet(s"$d/enc_ivf")
+              .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
+              "vec_id"))),
+        "remove: rewrite stats + idf" -> (() => {
+          replaceDir(spark, d, "stats",
+            Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
+              .toDF("avgdl", "nd", "len_sum").coalesce(1))
+          // idf: vocab-sized df merge-down under the new nd; a term
+          // whose last posting left leaves the vocabulary
+          replaceDir(spark, d, "idf",
+            spark.read.parquet(s"$d/idf").select("term", "df")
+              .join(vdf.select("term", "df_dec"), Seq("term"), "left")
+              .select(col("term"),
+                (col("df") - coalesce(col("df_dec"), lit(0L))).as("df"))
+              .filter(col("df") > 0L)
+              .withColumn("idf_bm",
+                log(lit(1.0) +
+                  (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
+              .select("term", "df", "idf_bm"))
+        }))
+      // the tier-layout invalidation runs on BOTH paths — a torn
+      // remove must not leave enc_ivf_sq8/enc_ivf_pq serving the
+      // forgotten doc
+      try graft.Concurrent.settleAll(spark)(rewrites)
+      finally dropTierLayouts(spark, d)
+      // every rewrite settled cleanly AND the tier caches dropped —
+      // only now is the wave's intent discharged (a throw above leaves
+      // the marker armed for the next entry's rebuild)
+      clearTornMarker(spark, d)
+      nVict
+    } finally graft.Staging.release(scratch)
   }
 
   /** The encode width of a built root: towers.meta when present,
@@ -1827,12 +1823,12 @@ object Pipeline {
     * ONLY in the query's probed lists from the staged `enc_ivf_sq8`
     * layout. (ip_est, vec_id) top-`k` descending.
     */
-  private[graft] def denseTopSq8(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      qU16: Seq[Long], k: Int, nProbe: Int,
+  private[graft] def denseTopSq8(snap: ServedTowers, qU16: Seq[Long],
+      k: Int, nProbe: Int,
       probeCids: Option[Seq[Int]] = None): DataFrame = {
+    val (spark, d) = (snap.spark, snap.root)
     val (mins, scales) = ensureSqTier(spark, d)
-    val cids = probeCids.getOrElse(probeCidsOf(spark, d, qU16, nProbe))
+    val cids = probeCids.getOrElse(probeCidsOf(snap, qU16, nProbe))
     tierFrame(spark, d, "enc_ivf_sq8", "sq.meta")
       .filter(col("cid").isin(cids.map(c => c: Any): _*))
       .select(col("vec_id").as("doc_id"),
@@ -1852,14 +1848,14 @@ object Pipeline {
     * staged `enc_ivf_pq` layout (s9's composition under
     * METRIC_INNER_PRODUCT). (ip_est, vec_id) top-`k` descending.
     */
-  private[graft] def denseTopPq(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      qU16: Seq[Long], k: Int, nProbe: Int,
+  private[graft] def denseTopPq(snap: ServedTowers, qU16: Seq[Long],
+      k: Int, nProbe: Int,
       probeCids: Option[Seq[Int]] = None): DataFrame = {
+    val (spark, d) = (snap.spark, snap.root)
     val books = ensurePqTier(spark, d)
     val dim = towersDim(d)
     val sub = dim / pqM
-    val cids = probeCids.getOrElse(probeCidsOf(spark, d, qU16, nProbe))
+    val cids = probeCids.getOrElse(probeCidsOf(snap, qU16, nProbe))
     val q = qU16.map(_.toDouble).toArray
     // dt(mi)(j) = q_sv · codeword_j — ascending-index fold, the same
     // sequential sum DuckDB's list_dot_product computes
@@ -1887,25 +1883,24 @@ object Pipeline {
     * Buys the int16 tower's ranking back at sq8 scan bytes (the
     * recall contract is spec-pinned).
     */
-  private[graft] def denseTopRerank(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      qU16: Seq[Long], k: Int, nProbe: Int,
+  private[graft] def denseTopRerank(snap: ServedTowers, qU16: Seq[Long],
+      k: Int, nProbe: Int,
       overFetch: Int = 4, shortTier: String = "sq8"): DataFrame = {
-    // ONE centroid-ranking job serves both stages — the shortlist's
-    // pruned compressed scan and the exact refetch probe the same
-    // lists. `shortTier` picks the shortlist's code layout: sq8
-    // (~exact dots on this corpus) or pq (FAISS's IVFPQ+refine
-    // posture — the refine stage makes the PQ tier's ordering exact
-    // over whatever its ADC shortlist surfaced)
-    val cids = probeCidsOf(spark, d, qU16, nProbe)
+    // ONE list choice serves both stages — the shortlist's pruned
+    // compressed scan and the exact refetch probe the same lists.
+    // `shortTier` picks the shortlist's code layout: sq8 (~exact
+    // dots on this corpus) or pq (FAISS's IVFPQ+refine posture — the
+    // refine stage makes the PQ tier's ordering exact over whatever
+    // its ADC shortlist surfaced)
+    val cids = probeCidsOf(snap, qU16, nProbe)
     val short = (shortTier match {
-      case "sq8" => denseTopSq8(spark, d, qU16, k * overFetch, nProbe,
+      case "sq8" => denseTopSq8(snap, qU16, k * overFetch, nProbe,
         Some(cids))
-      case "pq" => denseTopPq(spark, d, qU16, k * overFetch, nProbe,
+      case "pq" => denseTopPq(snap, qU16, k * overFetch, nProbe,
         Some(cids))
       case other => sys.error(s"unknown rerank shortlist tier '$other'")
     }).select("doc_id")
-    spark.read.parquet(s"$d/enc_ivf")
+    snap.tables("enc_ivf")
       .filter(col("cid").isin(cids.map(c => c: Any): _*))
       .join(broadcast(short), col("vec_id") === col("doc_id"))
       .select(col("doc_id"),
@@ -1923,7 +1918,7 @@ object Pipeline {
     * asymmetric inner-product scoring from the same exact integers.
     */
   def p3DenseSq8(t: Tables, k: Int = 10, nProbe: Int = 8): DataFrame =
-    denseTopSq8(t.spark, ragRoot(t),
+    denseTopSq8(servedAt(t.spark, ragRoot(t)),
       Embed.u16Of(Search.queryTerms.mkString(" ")), k, nProbe)
       .withColumnRenamed("doc_id", "chunk_id")
 
@@ -1932,7 +1927,7 @@ object Pipeline {
     * the dot ADC tables, and the pruned lookup-sum ranking.
     */
   def p3DensePq(t: Tables, k: Int = 10, nProbe: Int = 8): DataFrame =
-    denseTopPq(t.spark, ragRoot(t),
+    denseTopPq(servedAt(t.spark, ragRoot(t)),
       Embed.u16Of(Search.queryTerms.mkString(" ")), k, nProbe)
       .withColumnRenamed("doc_id", "chunk_id")
 
@@ -1942,7 +1937,7 @@ object Pipeline {
     */
   def p3DenseRerank(t: Tables, k: Int = 10, nProbe: Int = 8,
       overFetch: Int = 4): DataFrame =
-    denseTopRerank(t.spark, ragRoot(t),
+    denseTopRerank(servedAt(t.spark, ragRoot(t)),
       Embed.u16Of(Search.queryTerms.mkString(" ")), k, nProbe,
       overFetch)
       .withColumnRenamed("doc_id", "chunk_id")
@@ -1957,7 +1952,7 @@ object Pipeline {
     */
   def p3DensePqRerank(t: Tables, k: Int = 10, nProbe: Int = 8,
       overFetch: Int = 4): DataFrame =
-    denseTopRerank(t.spark, ragRoot(t),
+    denseTopRerank(servedAt(t.spark, ragRoot(t)),
       Embed.u16Of(Search.queryTerms.mkString(" ")), k, nProbe,
       overFetch, "pq")
       .withColumnRenamed("doc_id", "chunk_id")
@@ -2001,8 +1996,9 @@ object Pipeline {
         s"p5 gate expects victims at $mod/$res — got none")
       ()
     }
-    val tbl = ragTablesAt(spark, d)
-    val serve = bm25Staged(tbl, Search.queryTerms, k, layoutOf(d)._2)
+    val snap = servedAt(spark, d)
+    val tbl = snap.tables
+    val serve = bm25Staged(snap, Search.queryTerms, k)
     val rows = Seq(
       tbl("routed").agg(count(lit(1)).as("n_rows"),
         sum(length(col("body"))).cast("long").as("aux"))
@@ -2058,13 +2054,36 @@ object Pipeline {
     * [[tierFrames]]: wholesale eviction past 64 entries.
     */
   private val towerTables = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    Map[String, DataFrame]]()
+    (org.apache.spark.sql.SparkSession, String, String), ServedTowers]()
 
-  private[graft] def ragTablesAt(
-      spark: org.apache.spark.sql.SparkSession,
-      d: String): Map[String, DataFrame] = {
-    def fresh(): Map[String, DataFrame] = {
+  /** One towers generation as the driver serves it: the resolved
+    * tables, the pinned coarse codebook, the postings' term-bucket
+    * count, and the BM25 corpus weights (`avgdl` and every term's
+    * `idf_bm`). Query-side list choice and BM25 weights become plan
+    * LITERALS from here, so a search plans no job for them. The
+    * weights are vocabulary-sized and load by two collects on first
+    * use (lazily, so a caller that only reads tables never pays
+    * them, and outside the memo's bin lock, because they run jobs).
+    */
+  private[graft] final class ServedTowers(
+      val spark: org.apache.spark.sql.SparkSession, val root: String,
+      val tables: Map[String, DataFrame]) {
+    val nLex: Int = layoutOf(root)._2
+    lazy val codebook: graft.expressions.PlaneMatrix =
+      graft.streaming.Streams.loadCodebook(root).getOrElse(
+        sys.error(s"staged RAG index at $root has no codebook.meta"))
+    lazy val avgdl: Double = labeled(spark, "serve: load avgdl") {
+      tables("stats").select("avgdl").collect()(0).getDouble(0)
+    }
+    lazy val idf: Map[String, Double] = labeled(spark, "serve: load idf") {
+      tables("idf").select("term", "idf_bm").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
+  }
+
+  private[graft] def servedAt(spark: org.apache.spark.sql.SparkSession,
+      d: String): ServedTowers = {
+    def fresh(): ServedTowers = {
       // resolve each table ONCE (parquet partition discovery is the
       // very cost this memo exists to bound — `dense` projects the
       // already-resolved enc_ivf instead of re-discovering the
@@ -2072,12 +2091,12 @@ object Pipeline {
       val raw = Seq("routed", "chunks", "tf", "tf_b", "idf", "stats",
           "enc", "enc_ivf")
         .map(n => n -> spark.read.parquet(s"$d/$n")).toMap
-      raw.map { case (n, df) =>
+      new ServedTowers(spark, d, raw.map { case (n, df) =>
         // the doc-bucket layout column is partitioning, not data —
         // readers (and the oracle/equality dumps) see the logical
         // schema on bucketed and legacy roots alike
         n -> (if (df.columns.contains("db")) df.drop("db") else df)
-      } + ("dense" -> raw("enc_ivf").select("vec_id", "cid"))
+      } + ("dense" -> raw("enc_ivf").select("vec_id", "cid")))
     }
     towersGenOf(spark, d) match {
       case Some(gen) =>
@@ -2090,19 +2109,24 @@ object Pipeline {
     }
   }
 
+  private[graft] def ragTablesAt(
+      spark: org.apache.spark.sql.SparkSession,
+      d: String): Map[String, DataFrame] = servedAt(spark, d).tables
+
   /** BM25 top-`k` from the STAGED serving towers: the query's term
     * buckets become a literal partition filter on the postings scan
-    * (PlanSpec-locked), idf/stats enter broadcast, the corpus side
-    * is join-free (dl rides the posting). Identical ranking to
-    * [[Search.searchBm25From]] over the raw tf — PipelineSpec drills
-    * the equality.
+    * (PlanSpec-locked), the generation's idf/avgdl enter as
+    * literals, and the corpus side is join-free (dl rides the
+    * posting). Identical ranking to [[Search.searchBm25From]] over
+    * the raw tf — PipelineSpec drills the equality.
     */
-  private[graft] def bm25Staged(tbl: Map[String, DataFrame],
-      terms: Seq[String], k: Int, nLex: Int): DataFrame = {
-    val buckets = terms.map(Search.termBucketOf(_, nLex)).distinct
+  private[graft] def bm25Staged(snap: ServedTowers, terms: Seq[String],
+      k: Int): DataFrame = {
+    val buckets = terms.map(Search.termBucketOf(_, snap.nLex)).distinct
     Search.bm25ScoresStaged(
-      tbl("tf_b").filter(col("tb").isin(buckets.map(b => b: Any): _*)),
-      tbl("idf"), tbl("stats"), terms)
+      snap.tables("tf_b")
+        .filter(col("tb").isin(buckets.map(b => b: Any): _*)),
+      snap.idf, snap.avgdl, terms)
       .orderBy(col("score").desc, col("doc_id")).limit(k)
   }
 
@@ -2113,8 +2137,7 @@ object Pipeline {
   private[graft] def serveStandard(
       spark: org.apache.spark.sql.SparkSession, d: String,
       k: Int): DataFrame =
-    bm25Staged(ragTablesAt(spark, d), Search.queryTerms, k,
-        layoutOf(d)._2)
+    bm25Staged(servedAt(spark, d), Search.queryTerms, k)
       .withColumnRenamed("doc_id", "chunk_id")
 
   /** p2: THE REFERENCE'S RAG INGEST PIPELINE END-TO-END — prepare
@@ -2149,13 +2172,14 @@ object Pipeline {
     */
   def p2RagIngest(t: Tables, k: Int = 5): DataFrame = {
     val d = ragRoot(t)
-    val tbl = ragTablesAt(t.spark, d)
+    val snap = servedAt(t.spark, d)
+    val tbl = snap.tables
     val docs = t.documents
     val cls = docs.select(col("doc_id"), col("source"))
       .withColumn("filepath", Ingest.synthFilepath)
       .withColumn("kept",
         Ingest.actionOf(col("filepath")).isin("doc", "code").cast("long"))
-    val serve = bm25Staged(tbl, Search.queryTerms, k, layoutOf(d)._2)
+    val serve = bm25Staged(snap, Search.queryTerms, k)
     val rows = Seq(
       docs.agg(count(lit(1)).as("n_rows"),
         sum(length(col("text"))).cast("long").as("aux"))
@@ -2194,7 +2218,7 @@ object Pipeline {
     * towers: the query string encodes through e1's own stub client
     * (the query-side encode every dense retriever pays), the sparse
     * tower answers r8's BM25 top-`kList` from the STAGED serving
-    * index (term-bucket-pruned postings scan, broadcast idf/stats,
+    * index (term-bucket-pruned postings scan, literal idf/avgdl,
     * dl riding the posting — nothing corpus-wide recomputes per
     * query), the dense tower answers an
     * INT16-QUANTIZED dot-product top-`kList` — each stored dim's top
@@ -2218,8 +2242,8 @@ object Pipeline {
     * re-encode); the dense side reads ~nProbe/nLists of the index
     * (√n lists — at 100 TB a probe touches nProbe directories of
     * the lake-partitioned index, the s3/s19 serving shape), with the
-    * quantized dot as the in-list scorer + TakeOrdered; the fusion's
-    * rank windows run on ≤ kList rows each.
+    * quantized dot as the in-list scorer + TakeOrdered; both towers'
+    * ≤ kList rows come back in one action and fuse on the driver.
     */
   def p3RagServe(t: Tables, kList: Int = 20, kOut: Int = 10,
       rrfK: Int = 60, nProbe: Int = 8): DataFrame =
@@ -2235,7 +2259,7 @@ object Pipeline {
     * first chunk of each of the first `nQueries` routed docs (its
     * own top-`topT` terms — deterministic, so the whole measurement
     * replays in SQL), and the scoring pass runs through the STAGED
-    * serving tower — precomputed idf/stats enter broadcast, dl rides
+    * serving tower — precomputed idf/avgdl enter as literals, dl rides
     * the posting, and the postings scan is pruned to the UNION of
     * the eval set's term buckets in ONE plan over the whole query
     * set (PlanSpec-locked: tb IN (...) in PartitionFilters — never a
@@ -2281,27 +2305,24 @@ object Pipeline {
   /** Per-(query, chunk) staged-BM25 scores of the query set in ONE
     * bucket-pruned plan (`tb IN (union of the set's term buckets)` —
     * PlanSpec-locked via its callers), with the candidate chunk's
-    * token count (dl, riding the posting) carried when `withDl`.
+    * token count (dl, riding the posting) carried when `withDl`. The
+    * BM25 weights are the generation's literals, as in [[bm25Staged]].
     */
-  private[graft] def selfQueryScores(tbl: Map[String, DataFrame],
-      qrows: Seq[(Long, String)], withDl: Boolean,
-      nLex: Int): DataFrame = {
-    val spark = tbl("tf").sparkSession
+  private[graft] def selfQueryScores(snap: ServedTowers,
+      qrows: Seq[(Long, String)], withDl: Boolean): DataFrame = {
+    val spark = snap.spark
     import spark.implicits._
     val terms = qrows.map(_._2).distinct
-    val buckets = terms.map(Search.termBucketOf(_, nLex)).distinct
+    val buckets = terms.map(Search.termBucketOf(_, snap.nLex)).distinct
     val aggs =
       if (withDl) Seq(round(sum("contrib"), 4).as("score"),
         max("dl").as("n_tokens"))
       else Seq(round(sum("contrib"), 4).as("score"))
-    tbl("tf_b")
-      .filter(col("tb").isin(buckets.map(b => b: Any): _*))
-      .filter(col("term").isin(terms: _*))
+    Search.withBm25Contrib(
+        snap.tables("tf_b")
+          .filter(col("tb").isin(buckets.map(b => b: Any): _*)),
+        snap.idf, snap.avgdl, terms)
       .join(broadcast(qrows.toDF("qid", "term")), "term")
-      .join(broadcast(tbl("idf").filter(col("term").isin(terms: _*))
-        .select("term", "idf_bm")), "term")
-      .crossJoin(broadcast(tbl("stats").select("avgdl")))
-      .withColumn("contrib", Search.bm25ContribCol)
       .groupBy("qid", "doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
@@ -2309,10 +2330,9 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, d: String,
       nQueries: Int, topT: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tbl = ragTablesAt(spark, d)
-    val qrows = selfQuerySet(tbl, nQueries, topT)
-    val scores = selfQueryScores(tbl, qrows, withDl = false,
-      nLex = layoutOf(d)._2)
+    val snap = servedAt(spark, d)
+    val scores = selfQueryScores(snap,
+      selfQuerySet(snap.tables, nQueries, topT), withDl = false)
     val wr = Window.partitionBy("qid")
       .orderBy(col("score").desc, col("doc_id"))
     scores
@@ -2363,10 +2383,10 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, d: String,
       nQueries: Int, topT: Int, kCand: Int, maxPerDoc: Int,
       budget: Int): DataFrame = {
-    val tbl = ragTablesAt(spark, d)
+    val snap = servedAt(spark, d)
     packFromScores(
-      selfQueryScores(tbl, selfQuerySet(tbl, nQueries, topT),
-        withDl = true, nLex = layoutOf(d)._2),
+      selfQueryScores(snap, selfQuerySet(snap.tables, nQueries, topT),
+        withDl = true),
       kCand, maxPerDoc, budget)
   }
 
@@ -2379,7 +2399,6 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, d: String,
       queries: Seq[String], kCand: Int, maxPerDoc: Int,
       budget: Int): DataFrame = {
-    val tbl = ragTablesAt(spark, d)
     // ONE query-tokenization rule engine-wide (Graft.tokenizeQuery,
     // Locale.ROOT): a default-locale toLowerCase would tokenize 'I'
     // differently on a tr-locale JVM and silently miss the postings
@@ -2389,8 +2408,7 @@ object Pipeline {
         .map(term => (i.toLong, term))
     }
     packFromScores(
-      selfQueryScores(tbl, qrows, withDl = true,
-        nLex = layoutOf(d)._2),
+      selfQueryScores(servedAt(spark, d), qrows, withDl = true),
       kCand, maxPerDoc, budget)
   }
 
@@ -2421,35 +2439,28 @@ object Pipeline {
       .orderBy("qid", "rank")
   }
 
-  /** The PRUNED dense top-`kList` of any built index root: the
-    * query's code vector ranks the persisted coarse codebook through
-    * the SAME compiled expression the build assigned with (a one-row
-    * job returning nProbe ints — a probe constant, the s3
-    * bounded-collect exception), then the integer dot scores ONLY
-    * the probed lists of the cid-partitioned layout.
+  /** The query's `nProbe` coarse-list choice under the generation's
+    * pinned codebook, shared by every dense tier's pruned scan: the
+    * compiled ranking expression the build assigned with, evaluated
+    * on the driver (a one-row job constant-folded the same call), so
+    * list choice runs no job.
     */
-  /** The query's `nProbe` coarse-list choice under the root's pinned
-    * codebook — a one-row job returning nProbe ints (a probe
-    * constant, the s3 bounded-collect exception), shared by every
-    * dense tier's pruned scan.
-    */
-  private[graft] def probeCidsOf(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      qU16: Seq[Long], nProbe: Int): Seq[Int] = {
-    val cb = graft.streaming.Streams.loadCodebook(d).getOrElse(
-      sys.error(s"staged RAG index at $d has no codebook.meta"))
-    spark.range(1)
-      .select(slice(graft.functions.Vectors.centroidRanks(
-        typedlit(qU16.map(_.toDouble)), cb), 1, nProbe).as("pls"))
-      .collect()(0).getSeq[Int](0)
-  }
+  private[graft] def probeCidsOf(snap: ServedTowers, qU16: Seq[Long],
+      nProbe: Int): Seq[Int] =
+    graft.expressions.CentroidRanks(
+        org.apache.spark.sql.catalyst.expressions.Literal(
+          qU16.map(_.toDouble).toArray), snap.codebook)
+      .eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toIntArray().toSeq.take(nProbe)
 
-  private[graft] def denseTop(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      tbl: Map[String, DataFrame], qU16: Seq[Long], kList: Int,
-      nProbe: Int): DataFrame = {
-    val probeCids = probeCidsOf(spark, d, qU16, nProbe)
-    tbl("enc_ivf")
+  /** The PRUNED dense top-`kList` of any built index root: the
+    * integer dot scores ONLY the probed lists of the cid-partitioned
+    * layout.
+    */
+  private[graft] def denseTop(snap: ServedTowers, qU16: Seq[Long],
+      kList: Int, nProbe: Int): DataFrame = {
+    val probeCids = probeCidsOf(snap, qU16, nProbe)
+    snap.tables("enc_ivf")
       .filter(col("cid").isin(probeCids.map(c => c: Any): _*))
       .select(col("vec_id").as("doc_id"),
         aggregate(
@@ -2460,39 +2471,80 @@ object Pipeline {
       .select(col("doc_id"), col("iscore").cast("double").as("score"))
   }
 
+  /** The schema of a hybrid search's hits. */
+  private[graft] val searchSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("chunk_id", LongType),
+      StructField("rrf", DoubleType), StructField("r_lex", IntegerType),
+      StructField("r_vec", IntegerType)))
+  }
+
   /** Hybrid serving over any built index root — p3's exact chain
     * (staged-BM25 tower + pruned quantized-dot tower, RRF-fused),
-    * shared by the gated p3 and the `Graft.ragIndex` facade.
+    * shared by the gated p3 and the `Graft.ragIndex` facade. Both
+    * towers' top-`kList` come back in ONE action, tagged by tower,
+    * and [[rrfFuseRows]] fuses those ≤ 2·kList rows on the driver;
+    * the hits return as a local frame (its collect runs no job).
     */
   private[graft] def serveHybrid(
       spark: org.apache.spark.sql.SparkSession, d: String,
       terms: Seq[String], qU16: Seq[Long], kList: Int, kOut: Int,
       rrfK: Int, nProbe: Int, tier: String = "int16",
       overFetch: Int = 4): DataFrame = {
-    val tbl = ragTablesAt(spark, d)
-    val lex = bm25Staged(tbl, terms, kList, layoutOf(d)._2)
+    val snap = servedAt(spark, d)
+    val lex = bm25Staged(snap, terms, kList)
     // the dense tower's quantization tier: every tier emits a
     // (doc_id, score)-ranked frame under the tower's inner-product
     // metric (rank order is all RRF consumes)
     val dense = tier match {
-      case "int16" => denseTop(spark, d, tbl, qU16, kList, nProbe)
-      case "sq8" => denseTopSq8(spark, d, qU16, kList, nProbe)
+      case "int16" => denseTop(snap, qU16, kList, nProbe)
+      case "sq8" => denseTopSq8(snap, qU16, kList, nProbe)
         .withColumnRenamed("ip_est", "score")
-      case "pq" => denseTopPq(spark, d, qU16, kList, nProbe)
+      case "pq" => denseTopPq(snap, qU16, kList, nProbe)
         .withColumnRenamed("ip_est", "score")
       case "sq8_rerank" =>
-        denseTopRerank(spark, d, qU16, kList, nProbe, overFetch)
+        denseTopRerank(snap, qU16, kList, nProbe, overFetch)
       case "pq_rerank" =>
-        denseTopRerank(spark, d, qU16, kList, nProbe, overFetch, "pq")
+        denseTopRerank(snap, qU16, kList, nProbe, overFetch, "pq")
       case other => sys.error(s"unknown dense tier '$other' " +
         "(int16 | sq8 | pq | sq8_rerank | pq_rerank)")
     }
-    graft.api.Graft.rrfFuse(Seq(lex, dense), "doc_id", "score",
-        kOut, rrfK)
-      .withColumnRenamed("r_0", "r_lex")
-      .withColumnRenamed("r_1", "r_vec")
-      .select(col("doc_id").as("chunk_id"), col("rrf"),
-        col("r_lex"), col("r_vec"))
+    val rows = lex.select(lit(0).as("tower"), col("doc_id"), col("score"))
+      .union(dense.select(lit(1).as("tower"), col("doc_id"), col("score")))
+      .collect()
+    val lists = Seq(0, 1).map(t => rows.toSeq.filter(_.getInt(0) == t)
+      .map(r => (r.getLong(1), r.getDouble(2))))
+    spark.createDataFrame(
+      java.util.Arrays.asList(rrfFuseRows(lists, kOut, rrfK): _*),
+      searchSchema)
+  }
+
+  /** [[graft.api.Graft.rrfFuse]] over driver-side ranked lists of
+    * (id, score): each list ranks by (score desc, id), an id scores
+    * Σ 1/(rrfK + rank) over the lists that hold it, rounded by
+    * Spark's own `Round` to 6 places, and the top `k` by (rrf desc,
+    * id) return as (id, rrf, rank in list 0, rank in list 1, …),
+    * a rank null where the list lacks the id.
+    */
+  private[graft] def rrfFuseRows(lists: Seq[Seq[(Long, Double)]], k: Int,
+      rrfK: Int): Seq[Row] = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    // Spark's descending double order (NaN first, -0.0 == 0.0), ids up
+    def before(a: (Long, Double), b: (Long, Double)): Boolean = {
+      val c = compareDoubles(b._2, a._2)
+      c < 0 || (c == 0 && a._1 < b._1)
+    }
+    val ranks = lists.map(_.sortWith(before).map(_._1).zipWithIndex
+      .map { case (id, i) => id -> (i + 1) }.toMap)
+    lists.flatMap(_.map(_._1)).distinct.map { id =>
+      val rs = ranks.map(_.get(id))
+      val raw = rs.map(_.fold(0.0)(r => 1.0 / (rrfK + r))).reduce(_ + _)
+      (id, Round(Literal(raw), Literal(6)).eval().asInstanceOf[Double], rs)
+    }.sortWith((a, b) => before((a._1, a._2), (b._1, b._2))).take(k)
+      .map { case (id, rrf, rs) =>
+        Row.fromSeq(Seq[Any](id, rrf) ++ rs.map(_.map(Int.box).orNull))
+      }
   }
 
   /** p3's replay: the shared build CTEs, the BM25 tower at kList=20,

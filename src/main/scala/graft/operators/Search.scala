@@ -554,21 +554,32 @@ object Search {
     * lexical side and p2's serving row): `postings` carries (doc_id,
     * term, tf, dl) with the doc length DENORMALIZED into the posting
     * at build (the classic inverted-index shape: the corpus side of
-    * serving is join-free); `idf` carries the per-term precomputed
-    * (term, idf_bm); `stats` the one-row (avgdl, nd). The contrib
-    * expression is [[bm25Scores]]' own tree over the same values, so
-    * staged and inline scoring agree (scores round to 4 decimals
-    * before the cut, as everywhere in the family).
+    * serving is join-free); the index's precomputed per-term `idf`
+    * (term → idf_bm) and `avgdl` enter the plan as literals (only the
+    * query's terms' entries). The contrib expression is
+    * [[bm25Scores]]' own tree over the same values, so staged and
+    * inline scoring agree (scores round to 4 decimals before the cut,
+    * as everywhere in the family).
     */
   private[graft] def bm25ScoresStaged(postings: DataFrame,
-      idf: DataFrame, stats: DataFrame,
-      terms: Seq[String]): DataFrame = {
-    postings.filter(col("term").isin(terms: _*))
-      .join(broadcast(idf.filter(col("term").isin(terms: _*))
-        .select("term", "idf_bm")), "term")
-      .crossJoin(broadcast(stats.select("avgdl")))
-      .withColumn("contrib", bm25ContribCol)
+      idf: Map[String, Double], avgdl: Double,
+      terms: Seq[String]): DataFrame =
+    withBm25Contrib(postings, idf, avgdl, terms)
       .groupBy("doc_id").agg(round(sum("contrib"), 4).as("score"))
+
+  /** `postings` cut to the query terms the vocabulary holds (the
+    * rows an inner join with the idf table keeps), with each
+    * posting's BM25 `contrib` under literal weights.
+    */
+  private[graft] def withBm25Contrib(postings: DataFrame,
+      idf: Map[String, Double], avgdl: Double,
+      terms: Seq[String]): DataFrame = {
+    val known = terms.distinct.filter(idf.contains)
+    postings.filter(col("term").isin(known: _*))
+      .withColumn("idf_bm",
+        element_at(typedLit(known.map(t => t -> idf(t)).toMap), col("term")))
+      .withColumn("avgdl", lit(avgdl))
+      .withColumn("contrib", bm25ContribCol)
   }
 
   /** r20: RM3 PSEUDO-RELEVANCE FEEDBACK — the classic two-pass query

@@ -552,14 +552,15 @@ object Probe {
         // sweep separates the two losses: nProbe (coarse-list recall,
         // shared by every tier) and the tier's in-list code fidelity
         for (nP <- Seq(8, 32, 96)) {
+          val snap = graft.operators.Pipeline.servedAt(spark, d)
           tierRow("int16 ", nP, graft.operators.Pipeline
-            .denseTop(spark, d, tbl, qU16, 10, nP))
+            .denseTop(snap, qU16, 10, nP))
           tierRow("sq8   ", nP, graft.operators.Pipeline
-            .denseTopSq8(spark, d, qU16, 10, nP))
+            .denseTopSq8(snap, qU16, 10, nP))
           tierRow("pq    ", nP, graft.operators.Pipeline
-            .denseTopPq(spark, d, qU16, 10, nP))
+            .denseTopPq(snap, qU16, 10, nP))
           tierRow("rerank", nP, graft.operators.Pipeline
-            .denseTopRerank(spark, d, qU16, 10, nP, 4))
+            .denseTopRerank(snap, qU16, 10, nP, 4))
         }
         println(f"PROBE p3tiers mint: sq8 $sMintSq%.1f s, " +
           f"pq $sMintPq%.1f s")
@@ -611,12 +612,13 @@ object Probe {
               f"${bytes / 1024}%d KiB read, recall@10 $rec%.2f")
           }
           for (nP <- Seq(2, 8, 16)) {
+            val snap = graft.operators.Pipeline.servedAt(spark, root)
             row("int16 ", nP, graft.operators.Pipeline
-              .denseTop(spark, root, tbl, qU16, 10, nP))
+              .denseTop(snap, qU16, 10, nP))
             row("sq8   ", nP, graft.operators.Pipeline
-              .denseTopSq8(spark, root, qU16, 10, nP))
+              .denseTopSq8(snap, qU16, 10, nP))
             row("pq    ", nP, graft.operators.Pipeline
-              .denseTopPq(spark, root, qU16, 10, nP))
+              .denseTopPq(snap, qU16, 10, nP))
           }
         }
         runNp("base", docs)
@@ -1304,8 +1306,9 @@ object Probe {
             val t0 = System.nanoTime
             val (rows, recs, bytes) = measured {
               graft.operators.Pipeline.packFromScores(
-                graft.operators.Pipeline.selfQueryScores(tbl, qrows,
-                  withDl = true, nLex), 8, 2, 120).count()
+                graft.operators.Pipeline.selfQueryScores(
+                  graft.operators.Pipeline.servedAt(spark, root), qrows,
+                  withDl = true), 8, 2, 120).count()
             }
             val sec = (System.nanoTime - t0) / 1e9
             // the eval twin reuses the same one-plan scoring pass;

@@ -1473,6 +1473,44 @@ class GraftApiSpec extends SparkSpec {
     } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
   }
 
+  test("add/remove release their scratch dir and its Staging key on " +
+      "every exit: success, no-op, and a remove that fails") {
+    val spark = this.spark
+    import spark.implicits._
+    val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratchDirs(): Int = {
+      val s = java.nio.file.Files.list(tmpDir)
+      try s.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("graft_rag_add_") || n.startsWith("graft_rag_remove_")
+      }.count().toInt finally s.close()
+    }
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_scratch_rel_").toString
+    try {
+      val idx = Graft.ragIndex(ragDrillDocs(1L to 4L), "doc_id", "filepath",
+        "lang", "text", stateRoot = Some(root))
+      val (keys0, dirs0) = (Staging.scratchKeys, scratchDirs())
+      def add(ids: Seq[Long]): Long = idx.add(ragDrillDocs(ids), "doc_id",
+        "filepath", "lang", "text")
+      for (round <- 0 until 2) {
+        val lo = 10L + 10 * round
+        assert(add(lo to lo + 2) == 3L)
+        assert(add(lo to lo + 2) == 0L) // already indexed: the no-op exit
+        assert(idx.remove(Seq(lo)) == 1L)
+        assert(idx.remove(Seq(999L)) == 0L) // unknown id: the no-op exit
+        assert(Staging.scratchKeys == keys0 && scratchDirs() == dirs0,
+          s"round $round: ${Staging.scratchKeys - keys0} keys and " +
+            s"${scratchDirs() - dirs0} dirs outlived their call")
+      }
+      // removing every doc fails after its scratch is staged
+      val all = idx.tables("routed").select("doc_id").as[Long].collect().toSeq
+      intercept[IllegalArgumentException](idx.remove(all))
+      assert(Staging.scratchKeys == keys0 && scratchDirs() == dirs0,
+        "a failed remove kept its scratch")
+    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+  }
+
   test("RagIndex lifecycle: grow then shrink converges to a pinned-" +
       "codebook build on the net corpus; packContextFor serves " +
       "caller queries through the same pack discipline") {

@@ -396,7 +396,8 @@ class PipelineSpec extends SparkSpec {
       "flat exact tower is measured, rerank never below sq8") {
     val t = Tables(spark, sf)
     val d = graft.operators.Pipeline.ragRoot(t)
-    val tbl = graft.operators.Pipeline.ragTablesAt(spark, d)
+    val snap = graft.operators.Pipeline.servedAt(spark, d)
+    val tbl = snap.tables
     val qU16 = graft.operators.Embed.u16Of(
       graft.operators.Search.queryTerms.mkString(" "))
     def ids(df: org.apache.spark.sql.DataFrame) =
@@ -408,11 +409,11 @@ class PipelineSpec extends SparkSpec {
           .as("iscore"))
       .orderBy(col("iscore").desc, col("vec_id")).limit(10))
     val pruned = ids(graft.operators.Pipeline
-      .denseTop(spark, d, tbl, qU16, 10, 8))
+      .denseTop(snap, qU16, 10, 8))
     val sq8 = ids(graft.operators.Pipeline
-      .denseTopSq8(spark, d, qU16, 10, 8))
+      .denseTopSq8(snap, qU16, 10, 8))
     val rerank = ids(graft.operators.Pipeline
-      .denseTopRerank(spark, d, qU16, 10, 8, 4))
+      .denseTopRerank(snap, qU16, 10, 8, 4))
     // s11's promise, pinned: the exact rerank of the 4x compressed
     // shortlist IS the int16 pruned ranking, element for element
     assert(rerank == pruned,
@@ -426,11 +427,11 @@ class PipelineSpec extends SparkSpec {
     // re-scoring of the PQ tier's own 40-candidate ADC shortlist —
     // and never ranks below the raw pq tier (refine only reorders)
     val pq = ids(graft.operators.Pipeline
-      .denseTopPq(spark, d, qU16, 10, 8))
+      .denseTopPq(snap, qU16, 10, 8))
     val pqRerank = ids(graft.operators.Pipeline
-      .denseTopRerank(spark, d, qU16, 10, 8, 4, "pq"))
+      .denseTopRerank(snap, qU16, 10, 8, 4, "pq"))
     val pqShort = ids(graft.operators.Pipeline
-      .denseTopPq(spark, d, qU16, 40, 8))
+      .denseTopPq(snap, qU16, 40, 8))
     val exactOfShort = ids(tbl("enc_ivf")
       .filter(col("vec_id").isin(pqShort.map(v => v: Any): _*))
       .select(col("vec_id"),

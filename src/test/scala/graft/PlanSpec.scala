@@ -531,20 +531,19 @@ class PlanSpec extends SparkSpec {
 
   test("p3 lexical tower: the staged BM25 serve is a term-bucket-" +
       "PRUNED postings scan (tb IN (...) in PartitionFilters) with " +
-      "broadcast idf/stats — no corpus-side shuffle join, no " +
+      "idf/avgdl as plan literals — no join of any kind, no " +
       "corpus-wide stats recompute") {
     val t = Tables(spark, sf)
     val d = graft.operators.Pipeline.ragRoot(t)
-    val tbl = graft.operators.Pipeline.ragTablesAt(spark, d)
     val lex = graft.operators.Pipeline.bm25Staged(
-      tbl, graft.operators.Search.queryTerms, 20,
-      graft.operators.Pipeline.layoutOf(d)._2)
+      graft.operators.Pipeline.servedAt(spark, d),
+      graft.operators.Search.queryTerms, 20)
     lex.collect()
     val p = lex.queryExecution.executedPlan.toString
     val pf = p.linesIterator.find(_.contains("PartitionFilters:"))
       .getOrElse(fail(s"no PartitionFilters line in:\n${p.take(1200)}"))
     assert(pf.contains("tb") && pf.contains(" IN ("), pf)
-    assert(p.contains("BroadcastHashJoin"), p.take(800))
     assert(!p.contains("SortMergeJoin"), p.take(800))
+    assert(!p.contains("Join"), p.take(800))
   }
 }

@@ -1,0 +1,239 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+
+import graft.api.Graft
+import graft.operators.{Embed, Pipeline, Search}
+
+/** A hybrid search served from the generation's driver snapshot: it
+  * answers exactly what the broadcast-idf chain with a list-choice
+  * job and Spark-side RRF answered, across add and remove waves, in
+  * at most two Spark jobs per int16 search.
+  */
+class ServeSnapshotSpec extends SparkSpec {
+
+  private val tiers = Seq("int16", "sq8", "pq", "sq8_rerank", "pq_rerank")
+  private val (kList, kOut, rrfK, nProbe, overFetch) = (20, 10, 60, 8, 4)
+
+  private val vocab = (0 until 240).map(i => s"w$i")
+
+  /** `n` md docs from `seed`: Zipf-ish words plus one unique token. */
+  private def docs(ids: Seq[Long], seed: Long): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(seed)
+    def word(): String =
+      vocab((vocab.size * math.pow(rnd.nextDouble(), 2.5)).toInt)
+    ids.map { i =>
+      (i, s"repo/docs/d$i.md", "en",
+        (Seq.fill(30 + rnd.nextInt(60))(word()) :+ s"uniq$i")
+          .mkString(" "))
+    }.toDF("doc_id", "filepath", "lang", "text")
+  }
+
+  /** `n` seeded queries of 1–4 terms; some name a doc's unique token
+    * or a word no doc holds.
+    */
+  private def queries(n: Int, seed: Long, ids: Seq[Long]): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until n).map { i =>
+      val ws = Seq.fill(1 + i % 4)(vocab(rnd.nextInt(vocab.size)))
+      val extra = i % 5 match {
+        case 0 => Seq(s"uniq${ids(rnd.nextInt(ids.size))}")
+        case 1 => Seq("absentword")
+        case _ => Nil
+      }
+      (ws ++ extra).mkString(" ")
+    }
+  }
+
+  /** The chain the snapshot serve replaced, per tier: the query's
+    * lists chosen by a one-row job, BM25 with broadcast idf/stats
+    * joins, the dense tier at those lists, and Spark-side RRF. The
+    * tier-independent parts (list choice, BM25 list) run once per
+    * query; the BM25 list enters each tier's fuse as its collected
+    * rows, under its own schema.
+    */
+  private def oldSearches(root: String, query: String,
+      tiers: Seq[String]): Map[String, DataFrame] = {
+    val snap = Pipeline.servedAt(spark, root)
+    val tbl = Pipeline.ragTablesAt(spark, root)
+    val terms = Graft.tokenizeQuery(query)
+    val qU16 = Embed.u16Of(query, Embed.dim)
+    val cb = streaming.Streams.loadCodebook(root).get
+    val cids = spark.range(1)
+      .select(slice(functions.Vectors.centroidRanks(
+        typedlit(qU16.map(_.toDouble)), cb), 1, nProbe).as("pls"))
+      .collect()(0).getSeq[Int](0)
+    val buckets = terms.map(Search.termBucketOf(_, Pipeline.layoutOf(root)._2))
+      .distinct
+    val lexPlan = tbl("tf_b")
+      .filter(col("tb").isin(buckets.map(b => b: Any): _*))
+      .filter(col("term").isin(terms: _*))
+      .join(broadcast(tbl("idf").filter(col("term").isin(terms: _*))
+        .select("term", "idf_bm")), "term")
+      .crossJoin(broadcast(tbl("stats").select("avgdl")))
+      .withColumn("contrib", Search.bm25ContribCol)
+      .groupBy("doc_id").agg(round(sum("contrib"), 4).as("score"))
+      .orderBy(col("score").desc, col("doc_id")).limit(kList)
+    val lex = spark.createDataFrame(
+      java.util.Arrays.asList(lexPlan.collect(): _*), lexPlan.schema)
+    def exact(short: DataFrame, k: Int): DataFrame = {
+      val scan = tbl("enc_ivf").filter(col("cid").isin(cids.map(c => c: Any): _*))
+      val in = if (short == null) scan
+        else scan.join(broadcast(short.select("doc_id")),
+          col("vec_id") === col("doc_id"))
+      in.select(col("vec_id").as("doc_id"),
+          aggregate(zip_with(col("u16"), typedlit(qU16),
+            (a, b) => a.cast("long") * b), lit(0L), (acc, x) => acc + x)
+            .as("iscore"))
+        .orderBy(col("iscore").desc, col("doc_id")).limit(k)
+        .select(col("doc_id"), col("iscore").cast("double").as("score"))
+    }
+    tiers.map { tier =>
+      val dense = tier match {
+        case "int16" => exact(null, kList)
+        case "sq8" => Pipeline.denseTopSq8(snap, qU16, kList, nProbe, Some(cids))
+          .withColumnRenamed("ip_est", "score")
+        case "pq" => Pipeline.denseTopPq(snap, qU16, kList, nProbe, Some(cids))
+          .withColumnRenamed("ip_est", "score")
+        case "sq8_rerank" => exact(Pipeline.denseTopSq8(snap, qU16,
+          kList * overFetch, nProbe, Some(cids)), kList)
+        case "pq_rerank" => exact(Pipeline.denseTopPq(snap, qU16,
+          kList * overFetch, nProbe, Some(cids)), kList)
+      }
+      tier -> Graft.rrfFuse(Seq(lex, dense), "doc_id", "score", kOut, rrfK)
+        .withColumnRenamed("r_0", "r_lex")
+        .withColumnRenamed("r_1", "r_vec")
+        .select(col("doc_id").as("chunk_id"), col("rrf"),
+          col("r_lex"), col("r_vec"))
+    }.toMap
+  }
+
+  private def newSearch(idx: Graft.RagIndex, q: String, tier: String) =
+    idx.search(q, kOut, kList, nProbe, rrfK, tier, overFetch)
+
+  /** Every query answers as the old chain did on the int16 tier and
+    * on one quantized tier, in turn, so each tier sees every fourth
+    * query (every query on all five tiers ran ~10 minutes for the
+    * three phases on a 4-core machine).
+    */
+  private def assertServesAsOld(idx: Graft.RagIndex, qs: Seq[String],
+      phase: String): Seq[Row] =
+    qs.zipWithIndex.flatMap { case (q, i) =>
+      val qTiers = Seq("int16", tiers(1 + i % 4))
+      val old = oldSearches(idx.root, q, qTiers)
+      qTiers.flatMap { tier =>
+        val got = newSearch(idx, q, tier).collect().toSeq
+        assert(got == old(tier).collect().toSeq,
+          s"$phase, tier $tier, query '$q'")
+        got
+      }
+    }
+
+  test("the snapshot serve equals the old chain on every tier, across " +
+      "an add wave and a remove wave; an add moves the served weights " +
+      "and no removed id is ever returned") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_").toString
+    try {
+      val base = 1L to 60L
+      val idx = Graft.ragIndex(docs(base, 7L), "doc_id", "filepath", "lang",
+        "text", stateRoot = Some(root))
+      val qs = queries(50, 11L, base)
+      val hits0 = assertServesAsOld(idx, qs, "built")
+      assert(hits0.nonEmpty)
+
+      val gen0 = Pipeline.towersGenOf(spark, root)
+      val snap0 = Pipeline.servedAt(spark, root)
+      val (avgdl0, idf0) = (snap0.avgdl, snap0.idf)
+      val added = 61L to 75L
+      assert(idx.add(docs(added, 8L), "doc_id", "filepath", "lang",
+        "text") == added.size)
+      assert(Pipeline.towersGenOf(spark, root) != gen0)
+      val snap1 = Pipeline.servedAt(spark, root)
+      assert(!(snap1 eq snap0))
+      assert(snap1.idf.contains("uniq61") && !idf0.contains("uniq61"))
+      assert(snap1.avgdl != avgdl0 || snap1.idf("w0") != idf0("w0"))
+      // the same queries after each wave, plus queries naming the
+      // wave's docs: fresh queries per phase compiled enough one-off
+      // classes into the JVM-wide codegen cache to disturb a later
+      // suite's repeat-call count (CodegenCacheSpec)
+      assertServesAsOld(idx, qs ++ added.take(5).map(i => s"uniq$i w1"),
+        "after add")
+
+      val removed = Seq(3L, 17L, 42L, 64L, 70L)
+      assert(idx.remove(removed) == removed.size)
+      val hits2 = assertServesAsOld(idx,
+        qs ++ removed.map(i => s"uniq$i w1"),
+        "after remove")
+      val leaked = hits2.map(_.getLong(0) / 1000000L).filter(removed.contains)
+      assert(leaked.isEmpty, s"removed docs served: $leaked")
+    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  test("an int16 search runs at most two Spark jobs, and collecting " +
+      "its hits runs none") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_jobs_").toString
+    try {
+      val base = 1L to 40L
+      val idx = Graft.ragIndex(docs(base, 21L), "doc_id", "filepath", "lang",
+        "text", stateRoot = Some(root))
+      val qs = queries(8, 22L, base)
+      // the generation's first search loads its weights
+      idx.search(qs.head).collect()
+      val jobs = new AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try qs.foreach { q =>
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        jobs.set(0)
+        val hits = idx.search(q)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        val searchJobs = jobs.getAndSet(0)
+        hits.collect()
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        assert(searchJobs <= 2, s"'$q' ran $searchJobs jobs")
+        assert(jobs.get == 0, s"collecting '$q''s hits ran ${jobs.get} jobs")
+      } finally spark.sparkContext.removeSparkListener(listener)
+    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+  }
+
+  test("the driver-side fuse equals Graft.rrfFuse: tied scores, ids " +
+      "found by one tower only, an empty lexical list") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(5L)
+    def list(n: Int): Seq[(Long, Double)] =
+      rnd.shuffle((1L to 30L).toList).take(n)
+        .map(id => (id, Seq(0.5, 1.0, 1.25, 2.0)(rnd.nextInt(4))))
+    val cases = Seq.fill(12)((list(1 + rnd.nextInt(20)), list(1 + rnd.nextInt(20)))) ++
+      Seq((Nil, list(15)), (list(15), Nil),
+        (Seq((1L, 1.0), (2L, 1.0)), Seq((2L, 1.0), (1L, 1.0))))
+    for (((lex, vec), i) <- cases.zipWithIndex; k <- Seq(5, 40)) {
+      val want = Graft.rrfFuse(Seq(lex.toDF("doc_id", "score"),
+          vec.toDF("doc_id", "score")), "doc_id", "score", k, 60)
+        .select("doc_id", "rrf", "r_0", "r_1").collect().toSeq
+      // the rendering tells a Long id from a Double one; == does not
+      assert(Pipeline.rrfFuseRows(Seq(lex, vec), k, 60).map(_.toString) ==
+        want.map(_.toString), s"case $i, k $k: lex $lex, vec $vec")
+    }
+  }
+
+  test("the search schema is the old chain's: names, types, nullability") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_schema_").toString
+    try {
+      val idx = Graft.ragIndex(docs(1L to 12L, 31L), "doc_id", "filepath",
+        "lang", "text", stateRoot = Some(root))
+      for (q <- Seq("w1 w2", "absentword"))
+        assert(newSearch(idx, q, "int16").schema ==
+          oldSearches(root, q, Seq("int16"))("int16").schema)
+    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+  }
+}
