@@ -1695,15 +1695,24 @@ object Pipeline {
     }
   }
 
+  /** A quantization tier as one towers generation serves it: the
+    * model and the staged code layout's frame ([[ServedTowers.sq8]],
+    * [[ServedTowers.pq]]).
+    */
+  private[graft] final case class Sq8Tier(mins: Array[Double],
+      scales: Array[Double], frame: DataFrame)
+  private[graft] final case class PqTier(books: Array[Array[Array[Double]]],
+      sub: Int, frame: DataFrame)
+
   /** Mint-once SQ8 tier of a built root: per-dim (min, scale) over
     * the STORED u16 code space (one 1-row aggregate), codes staged
     * cid-partitioned as `enc_ivf_sq8` (1 B/dim — half the int16
-    * tower's bytes). Returns the persisted (mins, scales) model.
+    * tower's bytes). Reads the persisted model when a mint already
+    * landed.
     */
-  private[graft] def ensureSqTier(
-      spark: org.apache.spark.sql.SparkSession,
-      d: String): (Array[Double], Array[Double]) =
-    loadDoublesMeta(d, "sq.meta") match {
+  private def sq8TierOf(spark: org.apache.spark.sql.SparkSession,
+      d: String): Sq8Tier = {
+    val (mins, scales) = loadDoublesMeta(d, "sq.meta") match {
       case Some((Seq(dim), v)) => (v.take(dim), v.drop(dim))
       case _ =>
         graft.Registries.bump() // mint-once tier work (bench-visible)
@@ -1727,18 +1736,20 @@ object Pipeline {
           (mins, scales)
         } finally vecs.unpersist(false)
     }
+    Sq8Tier(mins, scales, spark.read.parquet(s"$d/enc_ivf_sq8"))
+  }
 
   /** Mint-once PQ tier of a built root: [[pqM]] sub-codebooks
     * trained on the stored-code space (s5's deterministic seed +
     * Lloyd's), codes staged cid-partitioned as `enc_ivf_pq`
     * (1 B/subspace — 16× under the int16 tower at dim 64/m 4).
+    * Reads the persisted model when a mint already landed.
     */
-  private[graft] def ensurePqTier(
-      spark: org.apache.spark.sql.SparkSession,
-      d: String): Array[Array[Array[Double]]] = {
+  private def pqTierOf(spark: org.apache.spark.sql.SparkSession,
+      d: String): PqTier = {
     val dim = towersDim(d)
     val sub = dim / pqM
-    loadDoublesMeta(d, "pq.meta") match {
+    val books = loadDoublesMeta(d, "pq.meta") match {
       case Some((Seq(m, k, s), v)) =>
         Array.tabulate(m)(mi => Array.tabulate(k)(ki =>
           v.slice((mi * k + ki) * s, (mi * k + ki) * s + s)))
@@ -1767,51 +1778,7 @@ object Pipeline {
           books
         } finally vecs.unpersist(false)
     }
-  }
-
-  /** Memoized tier-layout frame: a tier serve must not pay parquet
-    * partition DISCOVERY per query — the fresh `spark.read.parquet`
-    * lists every cid dir, and at 10x (424 lists) that driver-side
-    * walk was ~0.9 s of a ~1.0 s serve wall, constant in nProbe and
-    * growing with nLists (p3nprobe, round 18; the int16 tower's
-    * 0.12 s control reuses its caller's FileIndex). Keyed by the
-    * tier's META file (mtime, size) + session: every re-mint
-    * (dropTierLayouts → ensure*) rewrites the meta AFTER the layout
-    * lands, so a stale FileIndex can never serve a re-minted tier —
-    * which is exactly why the MUTABLE towers (enc_ivf and friends,
-    * swapped in place by add/remove waves with no meta rewrite) are
-    * NOT memoized here. Bounded: evicted wholesale past 64 entries
-    * (scratch roots in specs would otherwise accumulate).
-    */
-  private val tierFrames = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Long, Long),
-    DataFrame]()
-
-  /** A tier meta file's (mtime, length), probed through the session's
-    * Hadoop FileSystem (towersGenOf's contract) so hdfs:// and s3a://
-    * roots stamp like local ones; (-1, -1) when it cannot be read.
-    */
-  private[graft] def tierMetaStamp(spark: org.apache.spark.sql.SparkSession,
-      d: String, meta: String): (Long, Long) =
-    try {
-      val p = new org.apache.hadoop.fs.Path(d, meta)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p)
-      (st.getModificationTime, st.getLen)
-    } catch { case scala.util.control.NonFatal(_) => (-1L, -1L) }
-
-  private[graft] def tierFrame(spark: org.apache.spark.sql.SparkSession,
-      d: String, name: String, meta: String): DataFrame = {
-    // keyed on the session OBJECT (reference equality), not an
-    // identity hash — hashes can collide across sessions and would
-    // serve one session's plan-bound frame to another; the wholesale
-    // size>64 clear already bounds how long a stopped session's
-    // entries stay pinned
-    val (mtime, len) = tierMetaStamp(spark, d, meta)
-    val key = (spark, s"$d/$name", mtime, len)
-    if (tierFrames.size > 64) tierFrames.clear()
-    tierFrames.computeIfAbsent(key,
-      _ => spark.read.parquet(s"$d/$name"))
+    PqTier(books, sub, spark.read.parquet(s"$d/enc_ivf_pq"))
   }
 
   /** SQ8 dense serving: ASYMMETRIC INNER PRODUCT — the query's exact
@@ -1826,15 +1793,14 @@ object Pipeline {
   private[graft] def denseTopSq8(snap: ServedTowers, qU16: Seq[Long],
       k: Int, nProbe: Int,
       probeCids: Option[Seq[Int]] = None): DataFrame = {
-    val (spark, d) = (snap.spark, snap.root)
-    val (mins, scales) = ensureSqTier(spark, d)
+    val tier = snap.sq8
     val cids = probeCids.getOrElse(probeCidsOf(snap, qU16, nProbe))
-    tierFrame(spark, d, "enc_ivf_sq8", "sq.meta")
+    tier.frame
       .filter(col("cid").isin(cids.map(c => c: Any): _*))
       .select(col("vec_id").as("doc_id"),
         (floor(aggregate(
           zip_with(typedlit(qU16.map(_.toDouble)),
-            Ann.sqReconstruct(col("codes"), mins, scales),
+            Ann.sqReconstruct(col("codes"), tier.mins, tier.scales),
             (a, b) => a * b),
           lit(0.0), (acc, e) => acc + e) * 10000 + 0.5) / 10000.0)
           .as("ip_est"))
@@ -1851,22 +1817,20 @@ object Pipeline {
   private[graft] def denseTopPq(snap: ServedTowers, qU16: Seq[Long],
       k: Int, nProbe: Int,
       probeCids: Option[Seq[Int]] = None): DataFrame = {
-    val (spark, d) = (snap.spark, snap.root)
-    val books = ensurePqTier(spark, d)
-    val dim = towersDim(d)
-    val sub = dim / pqM
+    val tier = snap.pq
+    val sub = tier.sub
     val cids = probeCids.getOrElse(probeCidsOf(snap, qU16, nProbe))
     val q = qU16.map(_.toDouble).toArray
     // dt(mi)(j) = q_sv · codeword_j — ascending-index fold, the same
     // sequential sum DuckDB's list_dot_product computes
     val dt = Array.tabulate(pqM) { mi =>
       val qsv = q.slice(mi * sub, mi * sub + sub)
-      books(mi).map { cw =>
+      tier.books(mi).map { cw =>
         var s = 0.0; var i = 0
         while (i < qsv.length) { s += qsv(i) * cw(i); i += 1 }; s
       }
     }
-    tierFrame(spark, d, "enc_ivf_pq", "pq.meta")
+    tier.frame
       .filter(col("cid").isin(cids.map(c => c: Any): _*))
       .select(col("vec_id").as("doc_id"),
         (floor((0 until pqM).map(mi =>
@@ -2050,8 +2014,9 @@ object Pipeline {
     * per-query scan-independent cost a lake-scale layout must not
     * re-pay). Every mutation path bumps the stamp (see
     * [[bumpTowersGen]]), so a memoized FileIndex can never serve a
-    * mutated root; a root with no stamp never memoizes. Bounded like
-    * [[tierFrames]]: wholesale eviction past 64 entries.
+    * mutated root; a root with no stamp never memoizes. Bounded:
+    * wholesale eviction past 64 entries (scratch roots in specs would
+    * otherwise accumulate).
     */
   private val towerTables = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String, String), ServedTowers]()
@@ -2078,6 +2043,16 @@ object Pipeline {
     lazy val idf: Map[String, Double] = labeled(spark, "serve: load idf") {
       tables("idf").select("term", "idf_bm").collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
+    // The quantization tiers, read or minted on first use like the
+    // weights. Every mutation drops the tier layouts and bumps the
+    // generation, so a snapshot's tier is never stale; a lazy val
+    // initializes once, so concurrent first searches mint once.
+    lazy val sq8: Sq8Tier = labeled(spark, "serve: load sq8 tier") {
+      sq8TierOf(spark, root)
+    }
+    lazy val pq: PqTier = labeled(spark, "serve: load pq tier") {
+      pqTierOf(spark, root)
     }
   }
 

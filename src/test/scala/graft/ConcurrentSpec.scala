@@ -105,15 +105,8 @@ class ConcurrentSpec extends SparkSpec {
           sc.setLocalProperty("concurrent.spec.thunk", null)
         })
       })
-      // the listener bus is asynchronous but ordered: once a sentinel
-      // job submitted after the call is seen, so is every thunk's job
-      spark.sparkContext.setLocalProperty("concurrent.spec.thunk", "end")
-      try spark.range(1).count()
-      finally spark.sparkContext.setLocalProperty("concurrent.spec.thunk", null)
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
-      while (!seen.asScala.exists(_._1 == "end") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val jobs = seen.asScala.toSeq.filter(_._1 != "end")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val jobs = seen.asScala.toSeq
       assert(jobs.map(_._1).toSet ==
         (0 until 3).flatMap(i => Seq(s"$i", s"$i/inner")).toSet, jobs)
       jobs.foreach { case (thunk, desc) =>

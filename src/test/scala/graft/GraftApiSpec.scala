@@ -2129,34 +2129,51 @@ class GraftApiSpec extends SparkSpec {
     }
   }
 
-  test("tier frames stamp their meta through the Hadoop FileSystem: a " +
-      "file: URI root keys on the real mtime/length and a re-minted " +
-      "tier is re-read") {
+  test("a tier re-minted after a remove wave is what the next snapshot " +
+      "serves: a new frame, and no removed id is returned on sq8 or pq") {
+    import graft.operators.Pipeline
+    val docs = (1L to 8L).map(i => (i, s"repo/docs/d$i.md", "en",
+        s"uniq$i spark windows joins filter pushdown scans tuning guide"))
+      .toDF("doc_id", "filepath", "lang", "text")
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_tierstamp_").toString
+      .createTempDirectory("graft_tierwave_").toString
     try {
-      val root = s"file:$tmp"
-      val meta = new java.io.File(tmp, "sq.meta")
-      def mint(ids: Seq[Long], stamp: String): Unit = {
-        ids.toDF("vec_id").write.mode("overwrite")
-          .parquet(s"$tmp/enc_ivf_sq8")
-        java.nio.file.Files.write(meta.toPath, stamp.getBytes("UTF-8"))
-        ()
+      val idx = Graft.ragIndex(docs, "doc_id", "filepath", "lang", "text",
+        stateRoot = Some(tmp))
+      val vic = 3L
+      val tiers = Seq("sq8", "pq", "sq8_rerank", "pq_rerank")
+      def served(tier: String): Set[Long] =
+        idx.search(s"uniq$vic spark windows", k = 8, tier = tier).collect()
+          .map(_.getAs[Long]("chunk_id") / 1000000L).toSet
+      for (t <- tiers) assert(served(t).contains(vic), s"$t misses doc $vic")
+      val snap0 = Pipeline.servedAt(spark, tmp)
+      val (sq0, pq0) = (snap0.sq8, snap0.pq)
+      val warm = Pipeline.servedAt(spark, tmp)
+      assert((warm.sq8 eq sq0) && (warm.pq eq pq0),
+        "one generation served two tier instances")
+      assert(idx.remove(Seq(vic)) == 1L)
+      for (n <- Seq("sq.meta", "pq.meta"))
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, n)),
+          s"$n survived remove()")
+      val snap1 = Pipeline.servedAt(spark, tmp)
+      assert(!(snap1 eq snap0))
+      val mints0 = graft.Registries.gen
+      // two concurrent first searches of the new generation mint each
+      // tier once and share it
+      val first = graft.Concurrent.settleAll[(Pipeline.Sq8Tier, Pipeline.PqTier)](spark)(Seq.fill(2)(
+        "tier-spec: first search" -> (() => (snap1.sq8, snap1.pq))))
+      assert((first(0)._1 eq first(1)._1) && (first(0)._2 eq first(1)._2))
+      assert(graft.Registries.gen == mints0 + 2, "a tier minted more than once")
+      val (sq1, pq1) = first.head
+      assert(!(sq1.frame eq sq0.frame) && !(pq1.frame eq pq0.frame),
+        "the new generation serves the pre-remove tier frame")
+      val survivors = snap1.tables("enc_ivf").count()
+      for ((t, f) <- Seq("sq8" -> sq1.frame, "pq" -> pq1.frame)) {
+        val ids = f.select("vec_id").as[Long].collect().map(_ / 1000000L)
+        assert(ids.length == survivors, s"$t tier does not cover the survivors")
+        assert(!ids.contains(vic), s"$t tier still holds doc $vic")
       }
-      mint(Seq(1L, 2L), "v1")
-      assert(graft.operators.Pipeline.tierMetaStamp(spark, root, "sq.meta")
-        == ((meta.lastModified, meta.length)),
-        "memo key does not carry the meta file's real mtime/length")
-      val first = graft.operators.Pipeline.tierFrame(spark, root,
-        "enc_ivf_sq8", "sq.meta")
-      assert(first.count() == 2L)
-      // re-mint: new layout, then a meta rewrite (ensure*'s order) of a
-      // different length, so the stamp moves even within one mtime tick
-      mint(Seq(1L, 2L, 3L), "v2-reminted")
-      val second = graft.operators.Pipeline.tierFrame(spark, root,
-        "enc_ivf_sq8", "sq.meta")
-      assert(second ne first, "re-minted tier served from a stale memo")
-      assert(second.count() == 3L)
+      for (t <- tiers) assert(!served(t).contains(vic), s"$t served removed doc $vic")
     } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
   }
 }
