@@ -30,7 +30,7 @@ object Staging {
   // first, so the hook always exists before a tree does
   private val cleanup: Thread = {
     val th = new Thread(() => staged.values.forEach { d =>
-      try deleteTree(java.nio.file.Paths.get(d)) catch { case _: Exception => }
+      try Fs.deleteTree(d) catch { case _: Exception => }
     }, "graft-staging-cleanup")
     Runtime.getRuntime.addShutdownHook(th)
     th
@@ -50,20 +50,17 @@ object Staging {
   def dir(key: String, tag: String)(write: String => Unit): String = {
     val existing = staged.get(key)
     if (existing != null) return existing
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_${tag}_").toString
+    val d = Fs.tempDir(tag)
     try write(d)
     catch {
       case e: Throwable =>
-        try deleteTree(java.nio.file.Paths.get(d))
-        catch { case _: Exception => }
+        try Fs.deleteTree(d) catch { case _: Exception => }
         throw e
     }
     val prior = staged.putIfAbsent(key, d)
     if (prior == null) { landed.incrementAndGet(); d }
     else {
-      try deleteTree(java.nio.file.Paths.get(d))
-      catch { case _: Exception => }
+      try Fs.deleteTree(d) catch { case _: Exception => }
       prior
     }
   }
@@ -75,8 +72,7 @@ object Staging {
     * at durable storage.
     */
   def scratch(tag: String): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory(s"graft_${tag}_").toString
+    val d = Fs.tempDir(tag)
     staged.put(s"scratch:$d", d)
     d
   }
@@ -85,7 +81,7 @@ object Staging {
     * tree now, and forget it, instead of at JVM exit.
     */
   def release(d: String): Unit =
-    try deleteTree(java.nio.file.Paths.get(d))
+    try Fs.deleteTree(d)
     finally { staged.remove(s"scratch:$d"); () }
 
   /** Count of [[scratch]] dirs not yet released — spec access. */
@@ -97,13 +93,4 @@ object Staging {
 
   /** The staged path for `key`, if this JVM landed it — spec access. */
   def lookup(key: String): Option[String] = Option(staged.get(key))
-
-  private[graft] def deleteTree(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try s.forEach(deleteTree) finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
-    ()
-  }
 }

@@ -12,14 +12,8 @@ private[graft] object Warehouse {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     for (tbl <- tables) {
       spark.sql(s"DROP TABLE IF EXISTS $db.$tbl")
-      val loc = new java.net.URI(
-        spark.conf.get("spark.sql.warehouse.dir")).getPath
-      val dir = java.nio.file.Paths.get(loc, s"$db.db", tbl)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
+      Fs.deleteTree(
+        s"${spark.conf.get("spark.sql.warehouse.dir")}/$db.db/$tbl")
     }
   }
 }

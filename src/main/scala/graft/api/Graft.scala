@@ -819,7 +819,7 @@ object Graft {
     * the pointer on every cutover thereafter.
     */
   def annIndexPublish(parentRoot: String, sub: String): Unit =
-    graft.streaming.Streams.saveMeta(parentRoot, "current.meta", sub)
+    graft.Fs.writeAtomic(s"$parentRoot/current.meta", sub)
 
   /** MIGRATE a maintained vector index to a retrained model (st20's
     * cutover, the remediation the recall gate's drift detection calls
@@ -1494,7 +1494,7 @@ object Graft {
         removes ++ adds
       }
     catch { case e: Throwable =>
-      graft.Staging.deleteTree(java.nio.file.Paths.get(dir))
+      graft.Fs.deleteTree(dir)
       throw e
     }
   }

@@ -90,7 +90,8 @@ object Dedup {
     // signature table a cluster pipeline would persist, and eager
     // materialization keeps concurrent consumers from racing to
     // recompute it
-    val docs = graft.Caches.materialized(minhashDocs(docsIn))
+    val docs = Pipeline.labeled(docsIn.sparkSession, "minhash: signatures")(
+      graft.Caches.materialized(minhashDocs(docsIn)))
     val bands = bandSigs(docs)
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
@@ -414,8 +415,10 @@ object Dedup {
   private[graft] def ccLabelsStaged(t: Tables,
       threshold: Double): DataFrame = {
     val dir = graft.Staging.dir(s"${t.dir}:cc:$threshold", "cc") { d =>
-      dedupGroupsFrom(t.documents.select("doc_id", "text"), threshold)
-        .write.mode("overwrite").parquet(d)
+      val groups = dedupGroupsFrom(t.documents.select("doc_id", "text"),
+        threshold)
+      Pipeline.labeled(t.spark, "cc: land labels")(
+        groups.write.mode("overwrite").parquet(d))
     }
     t.spark.read.parquet(dir).orderBy("doc_id")
   }
@@ -439,8 +442,9 @@ object Dedup {
     * itself is a pure hash projection.
     */
   def d10GroupSplit(t: Tables, threshold: Double = 0.5): DataFrame =
-    groupSplitFrom(t.documents.select("doc_id", "text"), threshold,
-      Some(ccLabelsStaged(t, threshold)))
+    Pipeline.labeled(t.spark, "d10: group split")(
+      groupSplitFrom(t.documents.select("doc_id", "text"), threshold,
+        Some(ccLabelsStaged(t, threshold))))
 
   /** DataFrame form of d10 for the graft.api facade and specs;
     * `groupsIn` lets Tables-path callers supply the registry's
@@ -549,9 +553,10 @@ object Dedup {
   private[graft] def ccGroups(pairs: DataFrame,
       sorted: Boolean = true): DataFrame = {
     lastCcRounds.set(0)
-    val edges = graft.Caches.materialized(
+    val spark = pairs.sparkSession
+    val edges = Pipeline.labeled(spark, "cc: edges")(graft.Caches.materialized(
       pairs.union(pairs.select(col("doc_b").as("doc_a"),
-        col("doc_a").as("doc_b"))))
+        col("doc_a").as("doc_b")))))
     // each round LOCAL-CHECKPOINTS its labels: an iterative frame's
     // lineage otherwise nests one whole plan per round, and on a
     // deep-chain graph (log₂(diameter) rounds) the accumulated tree
@@ -561,13 +566,14 @@ object Dedup {
     // standard posture for distributed iterative algorithms
     // (GraphX/GraphFrames checkpoint their iteration for the same
     // reason). Blocks of superseded rounds are freed eagerly.
-    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint()
+    var labels = Pipeline.labeled(spark, "cc: edges")(
+      edges.select(col("doc_a").as("doc_id")).distinct()
+        .withColumn("label", col("doc_id"))
+        .localCheckpoint())
     // coalesce: a dup-free corpus has no edges, and sum over an empty
     // frame is null
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).collect()(0).getLong(0)
+    def labelSum(df: DataFrame): Long = Pipeline.labeled(spark, "cc: label sum")(
+      df.agg(coalesce(sum(col("label")), lit(0L))).collect()(0).getLong(0))
     var prevSum = labelSum(labels)
     var converged = false
     while (!converged) {
@@ -585,13 +591,13 @@ object Dedup {
       // the remaining distance to the component root — convergence in
       // O(log diameter) joins instead of O(diameter), the difference
       // between 4 and 40 shuffle rounds on a long dup chain
-      val next = hop.join(
+      val next = Pipeline.labeled(spark, "cc: round")(hop.join(
           labels.select(col("doc_id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("ll"), col("label")))
             .as("label"))
-        .localCheckpoint() // eager: materializes the round, cuts lineage
+        .localCheckpoint()) // eager: materializes the round, cuts lineage
       // labels are monotonically non-increasing, so an unchanged sum
       // IS the fixpoint
       val s = labelSum(next)
@@ -612,9 +618,11 @@ object Dedup {
     // in scratch parquet and the result re-plans from THAT scan,
     // fully decoupled from every checkpoint
     val settledDir = graft.Staging.scratch("cc_labels")
-    labels.write.mode("overwrite").parquet(settledDir)
-    releaseCheckpoint(labels)
-    val settled = pairs.sparkSession.read.parquet(settledDir)
+    val settled = Pipeline.labeled(spark, "cc: land labels") {
+      labels.write.mode("overwrite").parquet(settledDir)
+      releaseCheckpoint(labels)
+      spark.read.parquet(settledDir)
+    }
     val w = org.apache.spark.sql.expressions.Window.partitionBy("keep_doc")
     val out = settled
       .select(col("doc_id"), col("label").as("keep_doc"))
@@ -665,24 +673,28 @@ object Dedup {
       benchMod: Long, sorted: Boolean)(
       prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     graft.Caches.fresh()
+    val spark = docsIn.sparkSession
     // one tokenize+shingle pass serves both sides (locally the bench
     // slice comes from the same table; in production it is a separate
     // tiny input and the corpus side is a single uncached scan)
-    val sh = graft.Caches.materialized(
-      spread(docsIn)
-        .withColumn("tk", Text.tokenize(col("text")))
-        .select(col("doc_id"),
-          explode(Text.shinglesFast(k)(col("tk"))).as("sh")))
+    val sh = Pipeline.labeled(spark, "decontaminate: shingles")(
+      graft.Caches.materialized(
+        spread(docsIn)
+          .withColumn("tk", Text.tokenize(col("text")))
+          .select(col("doc_id"),
+            explode(Text.shinglesFast(k)(col("tk"))).as("sh"))))
     // size-guarded hint: the bench side is tiny by the eval-suite
     // contract, but the hint is applied only under a MEASURED count
     // (the frame is a filter on the materialized cache, so the count
     // is a cache read) — past the budget the join shuffles and AQE
     // owns the strategy
-    val bench = graft.Caches.materialized(
-      sh.filter(col("doc_id") % benchMod === 0)
-        .select(col("doc_id").as("bench_id"), col("sh")))
+    val bench = Pipeline.labeled(spark, "decontaminate: shingles")(
+      graft.Caches.materialized(
+        sh.filter(col("doc_id") % benchMod === 0)
+          .select(col("doc_id").as("bench_id"), col("sh"))))
     val out = prefilter(sh.filter(col("doc_id") % benchMod =!= 0), bench)
-      .join(graft.Guards.sizedBroadcast(bench), "sh")
+      .join(Pipeline.labeled(spark, "decontaminate: confirm join")(
+        graft.Guards.sizedBroadcast(bench)), "sh")
       .groupBy(col("doc_id").as("train_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
     if (sorted) out.orderBy("train_id", "bench_id") else out
@@ -710,7 +722,8 @@ object Dedup {
     * MEASURED item count rather than estimated at runtime.
     */
   def d12BloomDecontaminate(t: Tables, k: Int = 5): DataFrame =
-    bloomDecontaminateFrom(t.documents.select("doc_id", "text"), k)
+    Pipeline.labeled(t.spark, "d12: bloom decontaminate")(
+      bloomDecontaminateFrom(t.documents.select("doc_id", "text"), k))
 
   /** DataFrame form of d12 (facade + specs). `fpp` trades filter bits
     * against confirm-join input: 3% keeps the bloom ~7 bits/shingle
@@ -723,8 +736,8 @@ object Dedup {
       // build the filter with a MEASURED count (a cache read — bench
       // is materialized by the core); expectedNumItems is the
       // distinct bound, so the realized fpp is ≤ the requested one
-      val nBench = math.max(bench.count(), 1L)
-      val bf = bench.stat.bloomFilter("sh", nBench, fpp)
+      val bf = Pipeline.labeled(bench.sparkSession, "bloom: build")(
+        bench.stat.bloomFilter("sh", math.max(bench.count(), 1L), fpp))
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       val might = org.apache.spark.sql.GraftExpressionBridge.column(

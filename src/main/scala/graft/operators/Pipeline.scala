@@ -353,11 +353,11 @@ object Pipeline {
       // documented repair for a torn mutation, and re-deriving every
       // tower from a routed missing a bucket of survivors (stranded
       // in routed.prev by a crash mid-swap) would drop committed docs
-      healTowers(spark, d)
+      healTowers(d)
       // INTENT: a crash anywhere in the rebuild leaves half-derived
       // towers next to a complete routed; the armed marker makes the
       // next mutation entry re-run this rebuild (cleared at the end)
-      armTornMarker(spark, d, "rebuild")
+      armTornMarker(d, "rebuild")
       // LAYOUT KNOBS from MEASURED bytes (the st13 stateBucketsFor
       // law, the round-15 verdict's ask): doc-hash buckets for the
       // flat artifacts so a delete wave rewrites victim buckets, not
@@ -392,13 +392,17 @@ object Pipeline {
         graft.streaming.Streams.stateBucketsFor(
           routedBytes / math.max(1, nLex),
           targetBucketBytes = 256L << 10, floor = 1))
-      saveTowersMeta(d, size, step, dim, nDb, nLex, nTfbDb)
+      // persisted build knobs: a grow/reopen on a durable root must
+      // chunk (`size`/`step`) and encode (`dim`) with the BUILD's
+      // parameters, never the caller's defaults
+      graft.Fs.writeAtomic(s"$d/towers.meta",
+        s"$size\n$step\n$dim\n$nDb\n$nLex\n$nTfbDb\n")
       // derived tier layouts invalidate on ANY rebuild, not only on
       // add/remove — rebuild() is the documented repair for a TORN
       // mutation, and a torn remove's whole rewrite window precedes
       // its own tier-delete step: without this, a repaired root would
       // keep serving the forgotten doc from enc_ivf_sq8/enc_ivf_pq
-      dropTierLayouts(spark, d)
+      dropTierLayouts(d)
       // routed re-stages doc-bucketed unless it already landed that
       // way (build-once cost; a rebuild over an already-bucketed
       // routed re-derives db after the drop — layout-count migration
@@ -407,7 +411,7 @@ object Pipeline {
       if (!preOk) {
         val routed0 = spark.read.parquet(s"$d/routed")
         labeled(spark, "build: re-stage routed db-bucketed") {
-          replaceDir(spark, d, "routed",
+          replaceDir(d, "routed",
             (if (routed0.columns.contains("db")) routed0.drop("db")
              else routed0)
               .withColumn("db", docBucket(col("doc_id"), nDb)), Seq("db"))
@@ -562,7 +566,7 @@ object Pipeline {
       // just re-derived from routed, so any healed-torn-mutation
       // marker is discharged (cleared last: a crash anywhere above
       // leaves the marker armed and the next entry rebuilds again)
-      clearTornMarker(spark, d)
+      clearTornMarker(d)
   }
 
   /** Term-bucket FLOOR for the partitioned postings layout (and the
@@ -655,26 +659,21 @@ object Pipeline {
     * is a corrupt root and fails loudly — a hand-edited or truncated
     * meta must never silently serve as a different layout.
     */
-  private[graft] def towersMetaOf(d: String): Option[TowersMeta] = {
-    val p = java.nio.file.Paths.get(d, "towers.meta")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val l = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+  private[graft] def towersMetaOf(d: String): Option[TowersMeta] =
+    graft.Fs.read(s"$d/towers.meta").map { body =>
+      val l = body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
       l.length match {
-        case 3 => Some(TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
-          0, lexBuckets, 0))
-        case 5 => Some(TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
-          l(3).toInt, l(4).toInt, tfbDocBuckets(l(3).toInt)))
-        case 6 => Some(TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
-          l(3).toInt, l(4).toInt, l(5).toInt))
+        case 3 => TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
+          0, lexBuckets, 0)
+        case 5 => TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
+          l(3).toInt, l(4).toInt, tfbDocBuckets(l(3).toInt))
+        case 6 => TowersMeta(l(0).toInt, l(1).toInt, l(2).toInt,
+          l(3).toInt, l(4).toInt, l(5).toInt)
         case n => sys.error(s"malformed towers.meta at $d: $n " +
           "non-empty lines (expected 3, 5, or 6) — refusing to " +
           "guess a layout; restore the meta or rebuild the root")
       }
     }
-  }
 
   /** The layout knobs (docBuckets, lexBuckets) of a built root; no
     * meta reads as (0, [[lexBuckets]]) — flat artifacts, 32 term
@@ -682,26 +681,6 @@ object Pipeline {
     */
   private[graft] def layoutOf(d: String): (Int, Int) =
     towersMetaOf(d).map(m => (m.nDb, m.nLex)).getOrElse((0, lexBuckets))
-
-  /** Persisted build knobs — a grow/reopen on a durable root must
-    * chunk (`size`/`step`) and encode (`dim`) with the BUILD's
-    * parameters, never the caller's defaults (the codebook-dim
-    * lesson applied to the whole knob set). Same tmp + atomic-move
-    * write as the codebook's.
-    */
-  private[graft] def saveTowersMeta(d: String, size: Int, step: Int,
-      dim: Int, nDb: Int, nLex: Int, nTfbDb: Int): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    val tmp = java.nio.file.Paths.get(d, "towers.meta.tmp")
-    java.nio.file.Files.write(tmp,
-      s"$size\n$step\n$dim\n$nDb\n$nLex\n$nTfbDb\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(d, "towers.meta"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
 
   private[graft] def loadTowersMeta(d: String): Option[(Int, Int, Int)] =
     towersMetaOf(d).map(m => (m.size, m.step, m.dim))
@@ -726,64 +705,15 @@ object Pipeline {
     */
   private val genCounter = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private[graft] def bumpTowersGen(
-      fs: org.apache.hadoop.fs.FileSystem, d: String): Unit = {
-    // through the caller's Hadoop FileSystem, like every mutation
-    // primitive it stamps for (writeTornMarker's pattern): on an
-    // hdfs://s3a:// root the stamp must live WITH the root — a
-    // java.nio write would land in a junk local shadow dir, cloneRoot
-    // would not carry it, and another process's mutation could never
-    // bump the stamp this process reads.
-    fs.mkdirs(new org.apache.hadoop.fs.Path(d))
-    // per-call tmp name: a wave's CONCURRENT rewrites all bump at
-    // settle time (removeFromTowers' six parallel swaps) — a shared
-    // tmp would race its own atomic move
-    val tmp = new org.apache.hadoop.fs.Path(d,
-      s"towers.gen.tmp.${genCounter.incrementAndGet()}" +
-        s".${Thread.currentThread().getId}")
-    val out = fs.create(tmp, true)
-    try out.write(
-      (s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}:" +
+  private[graft] def bumpTowersGen(d: String): Unit =
+    // every bump lands whole (a dropped bump could strand a memo keyed
+    // on a sibling bump's gen while this bump's mutation is the one it
+    // misses): a wave's concurrent rewrites all bump at settle time
+    // (removeFromTowers' six parallel swaps), and each replace is one
+    // atomic write, so the stamp is never absent
+    graft.Fs.writeAtomic(s"$d/towers.gen",
+      s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}:" +
         s"${System.nanoTime()}:${genCounter.incrementAndGet()}\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(d, "towers.gen")
-    // EVERY bump must land (a dropped bump could strand a memo keyed
-    // on a sibling bump's gen while this bump's mutation is the one
-    // it misses): Hadoop rename does not replace an existing dst, so
-    // delete+rename, retrying the handful of times concurrent
-    // settle-time bumps can collide. Between the delete and the
-    // rename a reader sees NO stamp — the never-memoize path, safe.
-    var renamed = false
-    var attempts = 0
-    while (!renamed && attempts < 64) {
-      fs.delete(dst, false)
-      renamed = fs.rename(tmp, dst)
-      attempts += 1
-    }
-    if (!renamed) {
-      fs.delete(tmp, false)
-      sys.error(s"bumpTowersGen: rename $tmp -> $dst failed " +
-        s"after $attempts attempts")
-    }
-  }
-
-  private[graft] def towersGenOf(
-      spark: org.apache.spark.sql.SparkSession,
-      d: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(d, "towers.gen")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        Some(new String(bytes.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
-  }
 
   /** Swap a staged table for its recomputed next version: stage into
     * `<name>.next`, then delete + rename through the session's
@@ -791,23 +721,19 @@ object Pipeline {
     * the index from). The swap window is the single-writer facade's
     * to own — concurrent adds are out of contract ([[addToTowers]]).
     */
-  private def replaceDir(spark: org.apache.spark.sql.SparkSession,
-      d: String, name: String, next: DataFrame,
+  private def replaceDir(d: String, name: String, next: DataFrame,
       partCols: Seq[String] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(d, s"$name.next")
-    val dst = new org.apache.hadoop.fs.Path(d, name)
-    if (fs.exists(tmp)) fs.delete(tmp, true)
+    val (tmp, dst) = (s"$d/$name.next", s"$d/$name")
+    graft.Fs.deleteTree(tmp)
     if (partCols.isEmpty)
-      next.write.mode("overwrite").parquet(tmp.toString)
+      next.write.mode("overwrite").parquet(tmp)
     else
       next.repartition(partCols.map(col): _*)
         .write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(tmp.toString)
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst)) sys.error(s"rename $tmp -> $dst failed")
-    bumpTowersGen(fs, d)
+        .parquet(tmp)
+    graft.Fs.deleteTree(dst)
+    graft.Fs.move(tmp, dst)
+    bumpTowersGen(d)
   }
 
   /** GROW a built index in place (the build → serve → GROW loop):
@@ -848,7 +774,7 @@ object Pipeline {
         "with Graft.ragIndex to mint it)"))
     // heal any torn swap before the registry anti-join reads routed
     // (a routed missing a bucket would re-admit its docs as "new")
-    healTowers(spark, d)
+    healTowers(d)
     // a legacy flat root mints the bucketed layout once (the same
     // one-time rebuild the delete path pays — a mixed-layout append
     // would break partition discovery, and keeping a flat append arm
@@ -860,7 +786,7 @@ object Pipeline {
     // tower from the healed routed is the mechanical repair, and
     // appending on top of the inconsistency would bake it in.
     val meta =
-      if (meta0.nDb > 0 && !tornMarked(spark, d)) meta0
+      if (meta0.nDb > 0 && !tornMarked(d)) meta0
       else {
         buildTowers(spark, d, meta0.size, meta0.step, meta0.dim,
           graft.streaming.Streams.loadCodebook(d))
@@ -903,7 +829,7 @@ object Pipeline {
       // holding docs the derived towers never indexed (a silently
       // incomplete index — the redelivered add no-ops on the registry
       // anti-join); the armed marker makes the next entry rebuild
-      armTornMarker(spark, d, "add")
+      armTornMarker(d, "add")
       appendFlat("routed", arr, col("doc_id"))
       val chNew = graft.Caches.materialized(
         graft.api.Graft.chunk(arr, "doc_id", "body", size, step)
@@ -932,13 +858,13 @@ object Pipeline {
       val nd2 = old.getLong(0) + inc.getLong(0)
       val ls2 = old.getLong(1) + inc.getLong(1)
       import spark.implicits._
-      replaceDir(spark, d, "stats",
+      replaceDir(d, "stats",
         Seq((ls2.toDouble / nd2, nd2, ls2))
           .toDF("avgdl", "nd", "len_sum").coalesce(1))
       // idf: vocab-sized df merge, idf_bm re-derived under the new nd
       // with the build's own expression
       val dfNew = tfD.groupBy("term").agg(count(lit(1)).as("df_new"))
-      replaceDir(spark, d, "idf",
+      replaceDir(d, "idf",
         spark.read.parquet(s"$d/idf").select("term", "df")
           .join(dfNew, Seq("term"), "full")
           .select(col("term"),
@@ -980,7 +906,7 @@ object Pipeline {
       // quantization-tier layouts are DERIVED caches of enc_ivf — a
       // grown index invalidates them (next tier serve re-mints from
       // the current corpus; their models are corpus statistics)
-      dropTierLayouts(spark, d)
+      dropTierLayouts(d)
       // a long add cadence fragments every touched partition dir (one
       // appended file per dir per wave): Probe addwave measured 20
       // waves growing a 10× root to ~18k files with the serve wall
@@ -994,7 +920,7 @@ object Pipeline {
         "enc_ivf" -> cidsNew.map(Seq(_)))))
       // every append, rollup swap, tier invalidation, and compaction
       // fold landed — the add wave's intent is discharged
-      clearTornMarker(spark, d)
+      clearTornMarker(d)
       nNew
     } finally graft.Staging.release(scratch)
   }
@@ -1018,39 +944,34 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, d: String,
       maxFilesPerDir: Int = 8,
       scope: Option[Map[String, Seq[Seq[Any]]]] = None): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val tables = Seq(
       "routed" -> Seq("db"), "chunks" -> Seq("db"),
       "tf" -> Seq("db"), "enc" -> Seq("db"),
       "tf_b" -> Seq("tb", "db"), "enc_ivf" -> Seq("cid"))
     for ((name, cols) <- tables) {
-      val root = new org.apache.hadoop.fs.Path(d, name)
-      val fs = root.getFileSystem(conf)
-      if (fs.exists(root)) {
+      val root = s"$d/$name"
+      if (graft.Fs.stat(root).isDefined) {
         // candidate dirs: the scoped tuples, else a walk of the
         // partition levels carrying each dir's value (the k=v name
         // IS the value — no path re-parsing; non-partition residue
         // like _temporary is skipped)
-        def walk(p: org.apache.hadoop.fs.Path, depth: Int,
-            vals: Seq[Any])
-            : Seq[(org.apache.hadoop.fs.Path, Seq[Any])] =
+        def walk(p: String, depth: Int, vals: Seq[Any]): Seq[(String, Seq[Any])] =
           if (depth == 0) Seq((p, vals))
-          else fs.listStatus(p).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-            .flatMap(s => walk(s.getPath, depth - 1,
-              vals :+ (s.getPath.getName.split("=", 2)(1): Any)))
-        val cand: Seq[(org.apache.hadoop.fs.Path, Seq[Any])] =
+          else graft.Fs.list(p)
+            .filter(e => e.isDir && e.name.contains("="))
+            .flatMap(e => walk(e.path, depth - 1,
+              vals :+ (e.name.split("=", 2)(1): Any)))
+        val cand: Seq[(String, Seq[Any])] =
           scope match {
             case Some(m) => m.getOrElse(name, Nil).map { vs =>
               val rel = cols.zip(vs)
                 .map { case (c, v) => s"$c=$v" }.mkString("/")
-              (new org.apache.hadoop.fs.Path(root, rel), vs)
-            }.filter { case (p, _) => fs.exists(p) }
+              (s"$root/$rel", vs)
+            }.filter { case (p, _) => graft.Fs.stat(p).isDefined }
             case None => walk(root, cols.size, Nil)
           }
         val over = cand.filter { case (p, _) =>
-          fs.listStatus(p)
-            .count(_.getPath.getName.endsWith(".parquet")) >
+          graft.Fs.list(p).count(_.name.endsWith(".parquet")) >
             maxFilesPerDir
         }
         if (over.nonEmpty) {
@@ -1118,7 +1039,7 @@ object Pipeline {
       s"no towers.meta at $d — not a buildTowers root (rebuild once " +
         "with Graft.ragIndex to mint it)"))
     // heal any torn swap before deriving victims from the tables
-    healTowers(spark, d)
+    healTowers(d)
     // legacy layout mint AND the torn-mutation repair share the one
     // rebuild arm (see addToTowers): a healed root's OTHER tables
     // may hold rows a torn wave already removed from routed — a
@@ -1126,7 +1047,7 @@ object Pipeline {
     // routed's shrunk membership while chunks still serve the doc)
     // is exactly the right-to-be-forgotten hole the marker closes.
     val meta =
-      if (meta0.nDb > 0 && !tornMarked(spark, d)) meta0
+      if (meta0.nDb > 0 && !tornMarked(d)) meta0
       else {
         buildTowers(spark, d, meta0.size, meta0.step, meta0.dim,
           graft.streaming.Streams.loadCodebook(d))
@@ -1262,13 +1183,9 @@ object Pipeline {
       // against nDb would let a small corpus occupying fewer than nDb
       // buckets be fully erased without ever covering all of them),
       // and counts only rows the wave is about to rewrite anyway.
-      val occupied = {
-        val fs = new org.apache.hadoop.fs.Path(d)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(new org.apache.hadoop.fs.Path(d, "routed"))
-          .map(_.getPath.getName).filter(_.startsWith("db="))
-          .map(_.stripPrefix("db=").toLong).toSet
-      }
+      val occupied = graft.Fs.list(s"$d/routed")
+        .map(_.name).filter(_.startsWith("db="))
+        .map(_.stripPrefix("db=").toLong).toSet
       if (occupied.subsetOf(vDbs.map(_.asInstanceOf[Long]).toSet))
         require(nVict < spark.read.parquet(s"$d/routed")
             .filter(col("db").isin(vDbs: _*)).count(),
@@ -1297,7 +1214,7 @@ object Pipeline {
       // here to the clear below, a crash at ANY point (not just the
       // millisecond rename windows .prev evidence covers) leaves the
       // marker armed and the next mutation entry rebuilds from routed
-      armTornMarker(spark, d, "remove")
+      armTornMarker(d, "remove")
       // routed shrinks FIRST and ALONE (the torn-remove repair anchor:
       // if anything after this dies, rebuild() re-derives every tower
       // from the already-shrunk routed). Only the victim doc buckets
@@ -1345,12 +1262,12 @@ object Pipeline {
               .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
               "vec_id"))),
         "remove: rewrite stats + idf" -> (() => {
-          replaceDir(spark, d, "stats",
+          replaceDir(d, "stats",
             Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
               .toDF("avgdl", "nd", "len_sum").coalesce(1))
           // idf: vocab-sized df merge-down under the new nd; a term
           // whose last posting left leaves the vocabulary
-          replaceDir(spark, d, "idf",
+          replaceDir(d, "idf",
             spark.read.parquet(s"$d/idf").select("term", "df")
               .join(vdf.select("term", "df_dec"), Seq("term"), "left")
               .select(col("term"),
@@ -1365,11 +1282,11 @@ object Pipeline {
       // remove must not leave enc_ivf_sq8/enc_ivf_pq serving the
       // forgotten doc
       try graft.Concurrent.settleAll(spark)(rewrites)
-      finally dropTierLayouts(spark, d)
+      finally dropTierLayouts(d)
       // every rewrite settled cleanly AND the tier caches dropped —
       // only now is the wave's intent discharged (a throw above leaves
       // the marker armed for the next entry's rebuild)
-      clearTornMarker(spark, d)
+      clearTornMarker(d)
       nVict
     } finally graft.Staging.release(scratch)
   }
@@ -1393,12 +1310,9 @@ object Pipeline {
     * call this, because the tiers are corpus-statistics caches of
     * `enc_ivf` and would otherwise serve the pre-mutation corpus.
     */
-  private[graft] def dropTierLayouts(
-      spark: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[graft] def dropTierLayouts(d: String): Unit = {
     for (n <- Seq("enc_ivf_sq8", "enc_ivf_pq", "sq.meta", "pq.meta"))
-      fs.delete(new org.apache.hadoop.fs.Path(d, n), true)
+      graft.Fs.deleteTree(s"$d/$n")
   }
 
   /** Physical copy of a built index root into `dd` (gate plumbing
@@ -1410,20 +1324,14 @@ object Pipeline {
   private[graft] def cloneRoot(
       spark: org.apache.spark.sql.SparkSession, d0: String,
       dd: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcP = new org.apache.hadoop.fs.Path(d0)
-    val fs = srcP.getFileSystem(conf)
     // per-table copies are independent — run them concurrently
     // (guide §2.6 applied to driver-side fs work: the single-threaded
     // walk serialized ~9 table trees behind one thread; gate latency
     // drops to the largest table's copy)
-    graft.Concurrent.settleAll(spark)(fs.listStatus(srcP).toSeq.map { st =>
-      s"clone: copy ${st.getPath.getName}" -> (() =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-          new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(dd), st.getPath.getName),
-          false, conf))
+    graft.Concurrent.settleAll(spark)(graft.Fs.list(d0).map { e =>
+      s"clone: copy ${e.name}" -> (() => graft.Fs.copy(e.path, s"$dd/${e.name}"))
     })
+    ()
   }
 
   /** Partition-pruned rewrite of a partitioned staged table: stage
@@ -1448,40 +1356,27 @@ object Pipeline {
       spark: org.apache.spark.sql.SparkSession, d: String,
       name: String, partCols: Seq[String], parts: Seq[Seq[Any]],
       survivors: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(d, s"$name.next")
-    val aside = new org.apache.hadoop.fs.Path(d, s"$name.prev")
+    val (stage, aside) = (s"$d/$name.next", s"$d/$name.prev")
     // a leftover .prev is torn-swap evidence — HEAL before touching
     // anything (deleting it here would destroy the only copy of a
     // partition the crash removed from the live table)
-    healTornSwap(fs, d, name)
-    if (fs.exists(stage)) fs.delete(stage, true)
-    if (fs.exists(aside)) fs.delete(aside, true)
+    healTornSwap(d, name)
+    graft.Fs.deleteTree(stage)
+    graft.Fs.deleteTree(aside)
     survivors.repartition(partCols.map(col): _*)
       .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage.toString)
+      .parquet(stage)
     parts.foreach { vs =>
       val rel = partCols.zip(vs).map { case (c, v) => s"$c=$v" }
         .mkString("/")
-      val dst = new org.apache.hadoop.fs.Path(d, s"$name/$rel")
-      if (fs.exists(dst)) {
-        val old = new org.apache.hadoop.fs.Path(aside, rel)
-        fs.mkdirs(old.getParent)
-        if (!fs.rename(dst, old))
-          sys.error(s"rename $dst -> $old failed")
-      }
-      val src = new org.apache.hadoop.fs.Path(stage, rel)
-      if (fs.exists(src)) {
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          sys.error(s"rename $src -> $dst failed")
-      }
+      val dst = s"$d/$name/$rel"
+      if (graft.Fs.stat(dst).isDefined) graft.Fs.move(dst, s"$aside/$rel")
+      val src = s"$stage/$rel"
+      if (graft.Fs.stat(src).isDefined) graft.Fs.move(src, dst)
     }
-    fs.delete(stage, true)
-    fs.delete(aside, true)
-    bumpTowersGen(fs, d)
-    ()
+    graft.Fs.deleteTree(stage)
+    graft.Fs.deleteTree(aside)
+    bumpTowersGen(d)
   }
 
   /** MECHANICAL repair of a torn [[replacePartitions]] swap: for
@@ -1496,10 +1391,9 @@ object Pipeline {
     * entry ([[healTowers]]) and before each new swap; a no-op
     * (one exists-check) when the previous swap finished.
     */
-  private def healTornSwap(fs: org.apache.hadoop.fs.FileSystem,
-      d: String, name: String): Unit = {
-    val aside = new org.apache.hadoop.fs.Path(d, s"$name.prev")
-    if (!fs.exists(aside)) return
+  private def healTornSwap(d: String, name: String): Unit = {
+    val aside = s"$d/$name.prev"
+    if (graft.Fs.stat(aside).isEmpty) return
     // a leftover .prev means the WAVE that staged it died before its
     // deletes — even when every partition of THIS table landed, the
     // wave's other tables may hold the pre-mutation rows (a torn
@@ -1511,31 +1405,26 @@ object Pipeline {
     // CROSS-TABLE consistency — the next mutation entry performs it
     // automatically ([[addToTowers]]/[[removeFromTowers]]), and
     // [[buildTowers]] clears the marker when it completes.
-    markTorn(fs, d, name)
-    val stage = new org.apache.hadoop.fs.Path(d, s"$name.next")
+    markTorn(d, name)
+    val stage = s"$d/$name.next"
     // leaf partition dirs under .prev (a dir with no k=v child dirs)
-    def leafRels(p: org.apache.hadoop.fs.Path,
-        rel: String): Seq[String] = {
-      val kids = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+    def leafRels(p: String, rel: String): Seq[String] = {
+      val kids = graft.Fs.list(p).filter(e => e.isDir && e.name.contains("="))
       if (kids.isEmpty) Seq(rel)
-      else kids.flatMap(s => leafRels(s.getPath,
-        if (rel.isEmpty) s.getPath.getName
-        else s"$rel/${s.getPath.getName}"))
+      else kids.flatMap(e =>
+        leafRels(e.path, if (rel.isEmpty) e.name else s"$rel/${e.name}"))
     }
     for (rel <- leafRels(aside, "")) {
-      val dst = new org.apache.hadoop.fs.Path(d, s"$name/$rel")
-      if (!fs.exists(dst)) {
-        val src = new org.apache.hadoop.fs.Path(stage, rel)
-        val old = new org.apache.hadoop.fs.Path(aside, rel)
-        fs.mkdirs(dst.getParent)
-        val take = if (fs.exists(src)) src else old
-        if (!fs.rename(take, dst))
-          sys.error(s"heal rename $take -> $dst failed")
+      val dst = s"$d/$name/$rel"
+      if (graft.Fs.stat(dst).isEmpty) {
+        val src = s"$stage/$rel"
+        graft.Fs.move(
+          if (graft.Fs.stat(src).isDefined) src else s"$aside/$rel", dst)
       }
     }
-    fs.delete(aside, true)
-    if (fs.exists(stage)) fs.delete(stage, true)
+    graft.Fs.deleteTree(aside)
+    graft.Fs.deleteTree(stage)
+    ()
   }
 
   /** [[healTornSwap]] over every staged tower — runs at each
@@ -1544,12 +1433,9 @@ object Pipeline {
     * before the next operation reads or rewrites the tables. Six
     * exists-checks when the root is clean.
     */
-  private[graft] def healTowers(
-      spark: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[graft] def healTowers(d: String): Unit = {
     for (n <- Seq("routed", "chunks", "tf", "enc", "tf_b", "enc_ivf"))
-      healTornSwap(fs, d, n)
+      healTornSwap(d, n)
   }
 
   /** The torn-mutation marker — ONE file, two writers:
@@ -1581,34 +1467,24 @@ object Pipeline {
     */
   private[graft] val tornMarkerName = "_torn_mutation"
 
-  private def writeTornMarker(fs: org.apache.hadoop.fs.FileSystem,
-      d: String, note: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(d, tornMarkerName)
-    val out = fs.create(p, true)
-    try out.write((note + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    bumpTowersGen(fs, d)
+  private def writeTornMarker(d: String, note: String): Unit = {
+    graft.Fs.writeAtomic(s"$d/$tornMarkerName", note + "\n")
+    bumpTowersGen(d)
   }
 
   /** Arm the marker as WAVE INTENT — call before a mutation wave's
     * first write; [[clearTornMarker]] only after its last.
     */
-  private def armTornMarker(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      wave: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(d)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeTornMarker(fs, d,
+  private def armTornMarker(d: String, wave: String): Unit = {
+    writeTornMarker(d,
       s"$wave wave in flight — if this file survives the process, " +
         "the wave died mid-mutation and cross-table consistency " +
         "requires a rebuild from routed (the next add/remove/rebuild " +
         "performs it automatically)")
   }
 
-  private def markTorn(fs: org.apache.hadoop.fs.FileSystem, d: String,
-      name: String): Unit = {
-    writeTornMarker(fs, d,
+  private def markTorn(d: String, name: String): Unit = {
+    writeTornMarker(d,
       s"torn partition swap healed on '$name' — the mutation wave " +
         "that staged it died before completing, so OTHER tables may " +
         "hold pre-mutation rows; cross-table consistency requires a " +
@@ -1619,22 +1495,15 @@ object Pipeline {
       "next mutation entry to restore cross-table consistency")
   }
 
-  private[graft] def tornMarked(
-      spark: org.apache.spark.sql.SparkSession, d: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(d, tornMarkerName)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private[graft] def tornMarked(d: String): Boolean =
+    graft.Fs.stat(s"$d/$tornMarkerName").isDefined
 
-  private def clearTornMarker(
-      spark: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(d, tornMarkerName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, false)
+  private def clearTornMarker(d: String): Unit = {
+    graft.Fs.deleteTree(s"$d/$tornMarkerName")
     // the wave that just settled may have APPENDED files the swap
     // primitives never saw (addToTowers' append-mode writes) — the
     // settle itself is a file-set change
-    bumpTowersGen(fs, d)
-    ()
+    bumpTowersGen(d)
   }
 
   // ------------------------------------------------------------------
@@ -1666,35 +1535,6 @@ object Pipeline {
   private[graft] val pqK = 4
   private[graft] val pqIters = 2
 
-  private def saveDoublesMeta(d: String, name: String,
-      header: Seq[Int], values: Array[Double]): Unit = {
-    val sb = new StringBuilder
-    sb.append(header.mkString(" ")).append('\n')
-    values.foreach(v =>
-      sb.append(java.lang.Double.doubleToLongBits(v)).append('\n'))
-    val tmp = java.nio.file.Paths.get(d, s"$name.tmp")
-    java.nio.file.Files.write(tmp,
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(d, name),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  private def loadDoublesMeta(d: String,
-      name: String): Option[(Seq[Int], Array[Double])] = {
-    val p = java.nio.file.Paths.get(d, name)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-      Some((lines.head.split(" ").toSeq.map(_.toInt),
-        lines.tail.map(l =>
-          java.lang.Double.longBitsToDouble(l.toLong)).toArray))
-    }
-  }
-
   /** A quantization tier as one towers generation serves it: the
     * model and the staged code layout's frame ([[ServedTowers.sq8]],
     * [[ServedTowers.pq]]).
@@ -1712,7 +1552,7 @@ object Pipeline {
     */
   private def sq8TierOf(spark: org.apache.spark.sql.SparkSession,
       d: String): Sq8Tier = {
-    val (mins, scales) = loadDoublesMeta(d, "sq.meta") match {
+    val (mins, scales) = graft.streaming.Streams.loadModel(s"$d/sq.meta") match {
       case Some((Seq(dim), v)) => (v.take(dim), v.drop(dim))
       case _ =>
         graft.Registries.bump() // mint-once tier work (bench-visible)
@@ -1732,7 +1572,8 @@ object Pipeline {
             .repartition(col("cid"))
             .write.mode("overwrite").partitionBy("cid")
             .parquet(s"$d/enc_ivf_sq8")
-          saveDoublesMeta(d, "sq.meta", Seq(dim), mins ++ scales)
+          graft.streaming.Streams.saveModel(s"$d/sq.meta", Seq(dim),
+            mins ++ scales)
           (mins, scales)
         } finally vecs.unpersist(false)
     }
@@ -1749,7 +1590,7 @@ object Pipeline {
       d: String): PqTier = {
     val dim = towersDim(d)
     val sub = dim / pqM
-    val books = loadDoublesMeta(d, "pq.meta") match {
+    val books = graft.streaming.Streams.loadModel(s"$d/pq.meta") match {
       case Some((Seq(m, k, s), v)) =>
         Array.tabulate(m)(mi => Array.tabulate(k)(ki =>
           v.slice((mi * k + ki) * s, (mi * k + ki) * s + s)))
@@ -1773,7 +1614,7 @@ object Pipeline {
             .repartition(col("cid"))
             .write.mode("overwrite").partitionBy("cid")
             .parquet(s"$d/enc_ivf_pq")
-          saveDoublesMeta(d, "pq.meta", Seq(pqM, pqK, sub),
+          graft.streaming.Streams.saveModel(s"$d/pq.meta", Seq(pqM, pqK, sub),
             books.flatten.flatten)
           books
         } finally vecs.unpersist(false)
@@ -2005,7 +1846,7 @@ object Pipeline {
     * layout) — p2's gated fixture and the facade's user-built
     * indexes read through the same map.
     *
-    * MEMOIZED per (session, root, [[towersGenOf]] mutation stamp):
+    * MEMOIZED per (session, root, `towers.gen` mutation stamp):
     * a fresh `spark.read.parquet` per table per call pays parquet
     * partition discovery (a driver-side dir walk + footer read) for
     * all 9 tables on EVERY serve — the p3nprobe measurement put that
@@ -2073,7 +1914,7 @@ object Pipeline {
         n -> (if (df.columns.contains("db")) df.drop("db") else df)
       } + ("dense" -> raw("enc_ivf").select("vec_id", "cid")))
     }
-    towersGenOf(spark, d) match {
+    graft.Fs.read(s"$d/towers.gen").map(_.trim) match {
       case Some(gen) =>
         if (towerTables.size > 64) towerTables.clear()
         // keyed on the session OBJECT (reference equality) — an

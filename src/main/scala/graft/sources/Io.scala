@@ -393,35 +393,13 @@ object Io {
   private[graft] def stagedDir(t: Tables, tag: String): Option[String] =
     graft.Staging.lookup(s"${t.dir}:$tag")
 
-  /** Data files in a staged dir (skips _SUCCESS/CRC side files). */
-  private[graft] def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-    } finally s.close()
-  }
-
-  /** Recursive variant for PARTITIONED dirs (data files live under
-    * key=value subdirs); a missing dir is an empty table, not an
-    * error — st13's lazily-initialized state depends on that.
-    */
-  private[graft] def parquetFilesRec(dir: String): Seq[java.nio.file.Path] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return Nil
-    val s = java.nio.file.Files.walk(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-    } finally s.close()
-  }
-
   /** Driver-side metadata sizing for the compaction target — a
     * planner stats read (file listing), not a data collect.
     */
   private[graft] def compactionFileCount(dir: String,
       targetBytes: Long): Int = {
-    val total = parquetFiles(dir).map(java.nio.file.Files.size(_)).sum
+    val total = graft.Fs.list(dir).filter(_.name.endsWith(".parquet"))
+      .map(_.len).sum
     math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
   }
 
@@ -983,7 +961,7 @@ object Io {
         .map(f => TableLog.Remove(f.path))
       val remDir = s"$outDir/dest=quarantine"
       val adds =
-        if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(remDir)))
+        if (graft.Fs.stat(remDir).exists(_.isDir))
           TableLog.statsFor(spark, remDir, keyCol, schema)
             .map(TableLog.Add)
         else Nil
@@ -1095,10 +1073,7 @@ object Io {
     // it would mint a head that throws on every read. Check the
     // RE-ADDED paths (current-snapshot files are live by invariant)
     // and refuse the whole restore rather than corrupt the head.
-    val missing = adds.map(_.f.path).filterNot { p =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(
-        if (p.startsWith("file:")) new java.net.URI(p).getPath else p))
-    }
+    val missing = adds.map(_.f.path).filter(graft.Fs.stat(_).isEmpty)
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"restore to v$toV impossible: ${missing.size} of its files " +
@@ -1156,8 +1131,8 @@ object Io {
       targetBytes: Long, tag: String = "optimize"): Unit = {
     if (log.committed(tag)) return
     val snap = log.snapshot(log.latestVersion.get)
-    def bytes(p: String) = java.nio.file.Files.size(java.nio.file.Paths
-      .get(if (p.startsWith("file:")) new java.net.URI(p).getPath else p))
+    def bytes(p: String) = graft.Fs.stat(p)
+      .getOrElse(throw new java.io.FileNotFoundException(p)).len
     val offenders = snap.filter(f => bytes(f.path) < targetBytes / 2)
     if (offenders.isEmpty) return
     val total = offenders.map(f => bytes(f.path)).sum

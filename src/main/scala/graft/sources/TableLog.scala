@@ -19,13 +19,16 @@ import org.apache.spark.sql.types.StructType
   * table's clustering key.
   *
   * COMMIT ATOMICITY (the st13-style pointer flip, applied to tables):
-  * a commit is staged to a `.tmp` and MOVED to its final name in one
-  * atomic rename that FAILS if the version already exists — readers
-  * see a version entirely or not at all (no torn commits), and two
-  * racing writers cannot both claim a version (the loser retries on
-  * a fresh one: optimistic concurrency, Delta's protocol). On object
-  * storage the rename becomes the store's if-absent PUT — same
-  * contract, different primitive.
+  * a commit is claimed with [[graft.Fs.putIfAbsent]], which publishes
+  * a fully staged file and FAILS if the version already exists —
+  * readers see a version entirely or not at all (no torn commits),
+  * and two racing writers cannot both claim a version (the loser
+  * retries on a fresh one: optimistic concurrency, Delta's protocol).
+  *
+  * RELOCATABLE: an entry under `root` is recorded relative to it, so a
+  * copied or moved root reads, time-travels and vacuums its own files,
+  * never the original's. Absolute entries (logs written before this,
+  * or files outside the root) resolve as recorded.
   *
   * SCALE SHAPE: the log is metadata — O(files touched per commit),
   * millions of times smaller than the data. A reader's planning cost
@@ -56,7 +59,8 @@ object TableLog {
     * `dir` — the write-side half of a commit. One metadata-shaped
     * aggregate over `_metadata.file_path` (io10's pattern); the
     * collect is bounded by the FILE count, a planner's working set
-    * by definition.
+    * by definition. Paths are spelled under `dir` as the caller spelled
+    * it (Spark reports each file as a URI).
     */
   def statsFor(spark: SparkSession, dir: String, keyCol: String,
       schema: StructType): Seq[FileEntry] =
@@ -65,8 +69,11 @@ object TableLog {
       .agg(min(keyCol).as("mn"), max(keyCol).as("mx"),
         count(lit(1)).as("n"))
       .collect()
-      .map(r => FileEntry(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3)))
+      .map { r =>
+        val p = r.getString(0)
+        FileEntry(below(dir, p).fold(p)(rel => s"${dir.stripSuffix("/")}/$rel"),
+          r.getLong(1), r.getLong(2), r.getLong(3))
+      }
       .toSeq.sortBy(_.path)
 
   /** Commit every parquet file under `dir` to `log` as one tagged
@@ -79,38 +86,65 @@ object TableLog {
   def commitDir(spark: SparkSession, log: TableLog, dir: String,
       keyCol: String, schema: StructType, tag: String): Long = {
     val adds =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
+      if (graft.Fs.stat(dir).exists(_.isDir))
         statsFor(spark, dir, keyCol, schema).map(Add)
       else Nil
     log.commit(adds, tag)
+  }
+
+  private val Scheme = "^[A-Za-z][A-Za-z0-9+.-]*:.*".r
+
+  /** The path component of an absolute entry (a URI's decoded path, or
+    * a plain absolute path); None for a relative entry.
+    */
+  private def absPath(p: String): Option[String] = p match {
+    case Scheme() => Some(new java.net.URI(p).getPath)
+    case _ if p.startsWith("/") => Some(p)
+    case _ => None
+  }
+
+  /** `p` relative to `dir` when it lies below it, comparing path
+    * components, so a URI and a plain path of one file agree.
+    */
+  private def below(dir: String, p: String): Option[String] = {
+    val d = dir.stripSuffix("/")
+    val dp = absPath(d).getOrElse(d)
+    absPath(p).filter(_.startsWith(s"$dp/")).map(_.substring(dp.length + 1))
   }
 }
 
 final class TableLog(val root: String) {
   import TableLog._
 
-  private def logDir: java.nio.file.Path =
-    java.nio.file.Paths.get(root, "_log")
+  private val base = root.stripSuffix("/")
 
-  private def commitPath(v: Long): java.nio.file.Path =
-    logDir.resolve(f"v$v%012d.commit")
+  /** An entry as recorded: relative to the root when under it. */
+  private def recorded(p: String): String =
+    if (absPath(p).isEmpty) p else below(base, p).getOrElse(p)
+
+  /** An entry as served: relative entries resolved under the root. One
+    * file has one served spelling whether it was recorded relative or
+    * (by an older writer) absolute, so replays match them.
+    */
+  private def served(p: String): String = recorded(p) match {
+    case r if absPath(r).isEmpty => s"$base/$r"
+    case a => a
+  }
+
+  private val logDir = s"$base/_log"
+
+  private def commitPath(v: Long): String = f"$logDir/v$v%012d.commit"
 
   /** Version numbers of the `v<NNN>.<suffix>` files in the log dir,
     * ascending — the one listing both [[versions]] and the
     * checkpoint index share. Only complete files count — a crashed
     * writer's `.tmp` is invisible.
     */
-  private def numberedFiles(suffix: String): Seq[Long] = {
-    if (!java.nio.file.Files.isDirectory(logDir)) return Nil
-    val s = java.nio.file.Files.list(logDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).collect {
-        case n if n.startsWith("v") && n.endsWith(suffix) =>
-          n.stripPrefix("v").stripSuffix(suffix).toLong
-      }.toSeq.sorted
-    } finally s.close()
-  }
+  private def numberedFiles(suffix: String): Seq[Long] =
+    graft.Fs.list(logDir).map(_.name).collect {
+      case n if n.startsWith("v") && n.endsWith(suffix) =>
+        n.stripPrefix("v").stripSuffix(suffix).toLong
+    }.sorted
 
   /** The txn-shaped tag class ([[tagVersion]]'s watermark): a
     * writer/app name and its monotone batch number — Delta's
@@ -126,7 +160,7 @@ final class TableLog(val root: String) {
   /** Append one commit (the next version, or `atVersion` when the
     * writer computed its target up front — the optimistic-concurrency
     * shape: read latest, prepare, claim; a LOSING claim throws
-    * `FileAlreadyExistsException` and the writer re-reads and
+    * Hadoop's `FileAlreadyExistsException` and the writer re-reads and
     * retries, exactly Delta's protocol). `tag` is the writer's
     * idempotence key — a streaming sink tags its batch id and checks
     * [[tagVersion]] before re-landing a redelivered batch. Returns
@@ -135,7 +169,6 @@ final class TableLog(val root: String) {
   def commit(actions: Seq[Action], tag: String = "",
       atVersion: Option[Long] = None,
       schema: Option[StructType] = None): Long = {
-    java.nio.file.Files.createDirectories(logDir)
     val v = atVersion.getOrElse(latestVersion.fold(0L)(_ + 1L))
     // the table SCHEMA rides the commit metadata (Delta's metaData
     // action): a schema-carrying commit DECLARES the table's logical
@@ -145,26 +178,19 @@ final class TableLog(val root: String) {
     // columns they predate. Compact JSON: single line, no tabs.
     val body = (Seq(s"tag:$tag") ++
       schema.map(s => s"schema:${s.json}") ++ actions.map {
-      case Add(f) => s"add\t${f.path}\t${f.minKey}\t${f.maxKey}\t${f.nRows}"
-      case Remove(p) => s"remove\t$p"
+      case Add(f) => addLine(f)
+      case Remove(p) => s"remove\t${recorded(p)}"
     }).mkString("\n")
-    // stage under a WRITER-UNIQUE name: two racing writers preparing
-    // the same version must never share a staging file, or the loser
-    // could truncate the winner's body mid-write and the "atomic
-    // claim" would publish torn/foreign bytes (Delta stages unique
-    // temp files for the same reason)
-    val tmp = logDir.resolve(
-      f"v$v%012d.commit.${java.util.UUID.randomUUID}%s.tmp")
-    java.nio.file.Files.write(tmp,
-      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // atomic claim: move WITHOUT replace — if the target exists a
-    // concurrent writer won this version; never overwrite history
-    try java.nio.file.Files.move(tmp, commitPath(v))
-    catch { case e: java.nio.file.FileAlreadyExistsException =>
-      java.nio.file.Files.deleteIfExists(tmp); throw e
-    }
+    // exclusive claim: if the target exists a concurrent writer won
+    // this version; never overwrite history
+    if (!graft.Fs.putIfAbsent(commitPath(v), body))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+        commitPath(v))
     v
   }
+
+  private def addLine(f: FileEntry): String =
+    s"add\t${recorded(f.path)}\t${f.minKey}\t${f.maxKey}\t${f.nRows}"
 
   /** The full optimistic-concurrency protocol on top of [[commit]]
     * (Delta's commit loop): `prepare` computes this writer's actions
@@ -190,9 +216,9 @@ final class TableLog(val root: String) {
       val base = latestVersion.getOrElse(-1L)
       val actions = prepare(base)
       try return commit(actions, tag, atVersion = Some(base + 1L))
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
         attempt += 1
-        val mineRemoved = actions.collect { case Remove(p) => p }.toSet
+        val mineRemoved = actions.collect { case Remove(p) => served(p) }.toSet
         val theirsRemoved = versions.filter(_ > base)
           .flatMap(v => parse(v)._2).collect { case Remove(p) => p }.toSet
         if (mineRemoved.exists(theirsRemoved))
@@ -206,8 +232,8 @@ final class TableLog(val root: String) {
     -1L // unreachable
   }
 
-  private def checkpointPath(v: Long): java.nio.file.Path =
-    logDir.resolve(f"v$v%012d.checkpoint")
+  private def checkpointPath(v: Long): String =
+    f"$logDir/v$v%012d.checkpoint"
 
   /** Collapse the replay: persist the CURRENT snapshot's full file
     * list beside its commit — plus the TAG INDEX of every commit at
@@ -217,12 +243,11 @@ final class TableLog(val root: String) {
     * st14's stats-log collapse applied to the log itself). Commits
     * stay in place: time travel BELOW the checkpoint still replays
     * from v0. Idempotent — an existing checkpoint for the version is
-    * kept; staging is WRITER-UNIQUE and the claim is move-without-
-    * replace (commit()'s contract — a shared fixed tmp would let two
-    * racing checkpointers publish a truncated file).
+    * kept; the claim is [[graft.Fs.putIfAbsent]] (commit()'s
+    * contract).
     */
   def checkpoint(): Unit = latestVersion.foreach { v =>
-    if (!java.nio.file.Files.exists(checkpointPath(v))) {
+    if (graft.Fs.stat(checkpointPath(v)).isEmpty) {
       // the tag index carries FORWARD from the previous checkpoint —
       // only the commits since it are parsed, so a checkpoint stays
       // O(delta) like the snapshot replay it collapses (re-parsing
@@ -268,34 +293,28 @@ final class TableLog(val root: String) {
       // a collapsed schema-carrying commit must not make the table's
       // schema unreadable
       val schemaLine = schemaAt(v).map(s => s"schema:${s.json}").toSeq
-      val body = (schemaLine ++ tagLines ++ snapshot(v).map(f =>
-        s"add\t${f.path}\t${f.minKey}\t${f.maxKey}\t${f.nRows}"))
+      val body = (schemaLine ++ tagLines ++ snapshot(v).map(addLine))
         .mkString("\n")
-      val tmp = logDir.resolve(
-        f"v$v%012d.checkpoint.${java.util.UUID.randomUUID}%s.tmp")
-      java.nio.file.Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       // a losing claim means a concurrent checkpointer published the
       // (identical-content) file for this version — drop ours
-      try java.nio.file.Files.move(tmp, checkpointPath(v))
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp); ()
-      }
+      graft.Fs.putIfAbsent(checkpointPath(v), body)
       ()
     }
   }
+
+  private def readLines(path: String): Array[String] =
+    graft.Fs.read(path).getOrElse(
+      throw new java.io.FileNotFoundException(path)).split("\n")
 
   /** Checkpointed versions, ascending. */
   private def checkpoints: Seq[Long] = numberedFiles(".checkpoint")
 
   private def readCheckpoint(v: Long): Seq[FileEntry] =
-    new String(java.nio.file.Files.readAllBytes(checkpointPath(v)),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toSeq
+    readLines(checkpointPath(v)).toSeq
       .filter(l => l.nonEmpty && !l.startsWith("schema:")).flatMap { l =>
         l.split("\t") match {
           case Array("add", p, mn, mx, n) =>
-            Some(FileEntry(p, mn.toLong, mx.toLong, n.toLong))
+            Some(FileEntry(served(p), mn.toLong, mx.toLong, n.toLong))
           case Array("tag", _, _) => None // the tag index, not a file
           case Array("txn", _, _, _) => None // the txn watermark
           case other =>
@@ -312,9 +331,7 @@ final class TableLog(val root: String) {
       v: Long): (Map[String, Long], Map[String, (Long, Long)]) = {
     val tags = Map.newBuilder[String, Long]
     val txns = Map.newBuilder[String, (Long, Long)]
-    new String(java.nio.file.Files.readAllBytes(checkpointPath(v)),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").foreach { l =>
+    readLines(checkpointPath(v)).foreach { l =>
         l.split("\t") match {
           case Array("tag", cv, t) => tags += (t -> cv.toLong)
           case Array("txn", cv, app, n) =>
@@ -332,15 +349,14 @@ final class TableLog(val root: String) {
     checkpointIndexes(v)._2
 
   private def parse(v: Long): (String, Seq[Action]) = {
-    val lines = new String(java.nio.file.Files.readAllBytes(commitPath(v)),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq
+    val lines = readLines(commitPath(v)).toSeq
     val tag = lines.head.stripPrefix("tag:")
     val actions = lines.tail
       .filter(l => l.nonEmpty && !l.startsWith("schema:")).map { l =>
       l.split("\t") match {
         case Array("add", p, mn, mx, n) =>
-          Add(FileEntry(p, mn.toLong, mx.toLong, n.toLong))
-        case Array("remove", p) => Remove(p)
+          Add(FileEntry(served(p), mn.toLong, mx.toLong, n.toLong))
+        case Array("remove", p) => Remove(served(p))
         case other => sys.error(s"corrupt commit v$v line: ${other.toSeq}")
       }
     }
@@ -348,11 +364,8 @@ final class TableLog(val root: String) {
   }
 
   /** The schema line of a commit/checkpoint file, if any. */
-  private def schemaLineOf(
-      p: java.nio.file.Path): Option[StructType] =
-    new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").find(_.startsWith("schema:"))
+  private def schemaLineOf(p: String): Option[StructType] =
+    readLines(p).find(_.startsWith("schema:"))
       .map(l => org.apache.spark.sql.types.DataType
         .fromJson(l.stripPrefix("schema:")).asInstanceOf[StructType])
 
@@ -489,6 +502,16 @@ final class TableLog(val root: String) {
   def prunedFiles(v: Long, lo: Long, hi: Long): Seq[FileEntry] =
     snapshot(v).filter(f => f.maxKey >= lo && f.minKey <= hi)
 
+  /** Every path any commit ever Add'd, as served — the reference
+    * universe vacuum deletes within. A data file on disk that is NOT
+    * in this set belongs to no version (a torn writer's leftover) and
+    * is the caller's to reclaim (sinkMaintain's stale-dir sweep).
+    */
+  private[graft] def addedPaths: Set[String] =
+    versions.flatMap(v => parse(v)._2).collect {
+      case Add(f) => f.path
+    }.toSet
+
   /** VACUUM: physically delete data files no RETAINED snapshot
     * references (Delta's VACUUM): the last `retain` versions keep
     * serving; older versions' exclusive files are removed from disk,
@@ -503,26 +526,6 @@ final class TableLog(val root: String) {
     * + one pass over all Add actions) followed by O(deleted) deletes —
     * never a data scan.
     */
-  /** Every path any commit ever Add'd, as LOCAL filesystem paths —
-    * the reference universe vacuum deletes within. A data file on
-    * disk that is NOT in this set belongs to no version (a torn
-    * writer's leftover) and is the caller's to reclaim
-    * (sinkMaintain's stale-dir sweep).
-    */
-  private[graft] def addedPathsLocal: Set[String] =
-    versions.flatMap(v => parse(v)._2).collect {
-      case Add(f) => localPath(f.path)
-    }.toSet
-
-  /** An entry's local path: `file:` URIs decoded, and a relative
-    * entry (the state roots' relocatable form) resolved under the
-    * log's root.
-    */
-  private def localPath(p: String): String =
-    if (p.startsWith("file:")) new java.net.URI(p).getPath
-    else if (p.startsWith("/")) p
-    else java.nio.file.Paths.get(root, p).toString
-
   def vacuum(retain: Int = 1): Seq[String] = {
     require(retain >= 1, s"retain=$retain must keep at least one version")
     val vs = versions
@@ -533,10 +536,9 @@ final class TableLog(val root: String) {
       case Add(f) => f.path
     }.distinct
     val doomed = everAdded.filterNot(referenced)
-    // report only what THIS run removed (deleteIfExists is the
-    // idempotence: a re-run after a crash finds nothing left)
-    doomed.filter(p =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(localPath(p))))
+    // report only what THIS run removed (deleting an absent file is
+    // the idempotence: a re-run after a crash finds nothing left)
+    doomed.filter(graft.Fs.deleteTree)
   }
 
   /** The pruned scan: only stats-admitted files are opened. */
@@ -551,8 +553,7 @@ final class TableLog(val root: String) {
 
   // ---- CHECK constraint (Delta `ALTER TABLE ADD CONSTRAINT` shape) ----
 
-  private def constraintPath: java.nio.file.Path =
-    java.nio.file.Paths.get(root, "_log", "constraint.meta")
+  private def constraintPath: String = s"$logDir/constraint.meta"
 
   /** Declare the table's CHECK constraint — a SQL boolean expression
     * every committed batch must satisfy ROW-WISE (evaluating to TRUE;
@@ -561,25 +562,11 @@ final class TableLog(val root: String) {
     * table (compose with AND); persisted in the log dir as catalog
     * metadata, atomic like a commit.
     */
-  def setConstraint(exprSql: String): Unit = {
-    java.nio.file.Files.createDirectories(constraintPath.getParent)
-    val tmp = constraintPath.resolveSibling(
-      s"constraint.meta.${java.util.UUID.randomUUID}.tmp")
-    java.nio.file.Files.write(tmp,
-      exprSql.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, constraintPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+  def setConstraint(exprSql: String): Unit =
+    graft.Fs.writeAtomic(constraintPath, exprSql)
 
   /** The declared CHECK constraint, if any. */
-  def constraint: Option[String] = {
-    if (!java.nio.file.Files.exists(constraintPath)) None
-    else Some(new String(
-      java.nio.file.Files.readAllBytes(constraintPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim)
-  }
+  def constraint: Option[String] = graft.Fs.read(constraintPath).map(_.trim)
 
   /** Enforce the table's constraint against a batch about to commit:
     * returns the VIOLATION count (0 = admissible). One scan of the

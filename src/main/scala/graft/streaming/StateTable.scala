@@ -71,7 +71,7 @@ private[graft] final class StateTable private (
     * and the specs' witness that compaction shrank the state.
     */
   def fileCounts: Map[String, Int] =
-    tables.map(t => t -> graft.sources.Io.parquetFilesRec(dir(t)).length)
+    tables.map(t => t -> graft.Fs.listRec(dir(t), ".parquet").length)
       .toMap
 
   /** Per-batch appends accumulate small files; past the file-count
@@ -244,7 +244,7 @@ private[graft] object StateTable {
   }
 
   private[graft] def hasData(dir: String): Boolean =
-    graft.sources.Io.parquetFilesRec(dir).nonEmpty
+    graft.Fs.listRec(dir, ".parquet").nonEmpty
 
   /** Open (or resume) a family's state. `root = None` → fresh JVM
     * scratch registered with [[graft.Staging]]'s shutdown cleanup;

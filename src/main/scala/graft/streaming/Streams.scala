@@ -84,7 +84,7 @@ object Streams {
       graft.Registries.bump()
       val f = file
       val spark = t.spark
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_")
+      val dir = graft.Fs.tempDir("stream")
       val all = spark.read.parquet(f)
       // approxQuantile only takes numeric columns; split timestamps
       // on their epoch-µs image (order-isomorphic, so the halves are
@@ -104,24 +104,25 @@ object Streams {
         // write outside the stream dir (subdirs there would be taken
         // for partition columns), move the data file in, and pin
         // modification times so the source replays batch 0 first
-        val out = java.nio.file.Files.createTempDirectory("graft_stage_out_")
+        val out = graft.Fs.tempDir("stage_out")
         keyed.filter(cond).drop("__graft_split").coalesce(1)
-          .write.mode("overwrite").parquet(out.toString)
-        val part = java.nio.file.Files.list(out).iterator()
-        var moved = false
-        while (part.hasNext) {
-          val p = part.next()
-          if (p.toString.endsWith(".parquet") && !moved) {
-            val dest = java.nio.file.Paths.get(s"$dir/${i}_events.parquet")
-            java.nio.file.Files.move(p, dest)
-            dest.toFile.setLastModified(System.currentTimeMillis() - 60000L * (2 - i))
-            moved = true
-          }
-        }
+          .write.mode("overwrite").parquet(out)
+        landPart(out, s"$dir/${i}_events.parquet", 2 - i)
       }
-      dir.toFile.deleteOnExit()
-      dir.toString
+      dir
     })
+
+  /** Move the data file a `coalesce(1)` write left in `out` to `dest`,
+    * its mtime `ageMin` minutes before now: a file source replays the
+    * oldest file first, so the landing order is the replay order.
+    */
+  private def landPart(out: String, dest: String, ageMin: Int): Unit =
+    graft.Fs.list(out).find(_.name.endsWith(".parquet")).foreach { part =>
+      graft.Fs.move(part.path, dest)
+      new java.io.File(dest)
+        .setLastModified(System.currentTimeMillis() - 60000L * ageMin)
+      ()
+    }
 
   /** st1: tumbling 1-hour window aggregate (count + decimal-exact
     * value sum) per event_type, complete mode — the streaming twin of
@@ -395,7 +396,8 @@ object Streams {
   private[graft] def compactFileSink(
       spark: org.apache.spark.sql.SparkSession, outDir: String,
       targetBytes: Long = 8L << 20, aboveFiles: Int = 16): Unit = {
-    if (graft.sources.Io.parquetFiles(outDir).length <= aboveFiles) return
+    if (graft.Fs.list(outDir).count(_.name.endsWith(".parquet")) <=
+        aboveFiles) return
     val schema = spark.read.parquet(outDir).schema
     val tmp = s"$outDir.compacting"
     spark.read.parquet(outDir)
@@ -405,10 +407,8 @@ object Streams {
     // lost columns (paranoia against a silent empty-dir read)
     require(spark.read.parquet(tmp).schema.fieldNames.sameElements(
       schema.fieldNames), s"compaction changed schema at $outDir")
-    graft.Staging.deleteTree(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(outDir))
-    ()
+    graft.Fs.deleteTree(outDir)
+    graft.Fs.move(tmp, outDir)
   }
 
   /** Library core of st4: attach to ANY streaming (id, text) frame;
@@ -835,18 +835,16 @@ object Streams {
       .withColumn("tk", graft.functions.Text.tokenize(col("text")))
       .filter(size(col("tk")) > 0)
       .select("doc_id", "tk")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("graft_st12_out_")
-    outDir.toFile.deleteOnExit()
+    val outDir = graft.Fs.tempDir("st12_out")
     val q = trainToks.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.operators.Dedup.scrubTokens(batch.toDF(), bench, k)
-          .write.mode("append").parquet(outDir.toString)
+          .write.mode("append").parquet(outDir)
         ()
       }
       .start()
     q.processAllAvailable(); q.stop()
-    spark.read.parquet(outDir.toString).orderBy("doc_id")
+    spark.read.parquet(outDir).orderBy("doc_id")
   }
 
   /** st13: INCREMENTAL GROUP MAINTENANCE — the continuous-dedup
@@ -972,8 +970,7 @@ object Streams {
     * listing (planner-stats read), never a data scan.
     */
   private[graft] def stateDirBytes(dir: String): Long =
-    graft.sources.Io.parquetFilesRec(dir)
-      .map(java.nio.file.Files.size(_)).sum
+    graft.Fs.listRec(dir, ".parquet").map(_.len).sum
 
   // ---- maintained-state REWRITE COMMITS (the ONE recovery story) --
   //
@@ -1006,14 +1003,14 @@ object Streams {
     */
   private def genEntries(root: String,
       dir: String): Seq[graft.sources.TableLog.FileEntry] =
-    graft.sources.Io.parquetFilesRec(dir).map { f =>
-      val k = Option(f.getParent).map(_.getFileName.toString)
+    graft.Fs.listRec(dir, ".parquet").map { f =>
+      val k = f.path.split('/').dropRight(1).lastOption
         .filter(_.contains("="))
         .flatMap(_.split("=", 2).lift(1))
         .flatMap(v => scala.util.Try(v.toLong).toOption)
         .getOrElse(0L)
       graft.sources.TableLog.FileEntry(
-        java.nio.file.Paths.get(root).relativize(f).toString, k, k, 0L)
+        f.path.stripPrefix(s"${root.stripSuffix("/")}/"), k, k, 0L)
     }
 
   /** Resolve the CURRENT dir of each state table under `root`: the
@@ -1089,53 +1086,29 @@ object Streams {
   private[graft] def sweepStateGenerations(root: String,
       tables: Seq[String], current: Map[String, String]): Unit =
     tables.foreach { t =>
-      childDirs(root)
+      graft.Fs.list(root)
         .filter { d =>
-          val n = d.getFileName.toString
-          (n == t || n.matches(
+          d.isDir && (d.name == t || d.name.matches(
             java.util.regex.Pattern.quote(t) + "\\.g\\d+")) &&
-            d.toString != current(t)
+            d.path != current(t)
         }
-        .foreach(graft.Staging.deleteTree)
+        .foreach(d => graft.Fs.deleteTree(d.path))
     }
 
   /** The persisted bucket count for a state root — what makes a
     * RESUMED session compute the same `pb` the writer did after an
     * auto-resizing compaction changed it. One int in a flat file
     * beside the tables (the deployment analogue is a catalog entry).
+    * Every persisted state scalar (bucket count, low-water mark,
+    * epoch) is one [[graft.Fs.writeAtomic]] file: a crash mid-write
+    * never leaves a truncated file a resumed session would fail to
+    * parse.
     */
-  private def bucketsMetaPath(root: String): java.nio.file.Path =
-    java.nio.file.Paths.get(root, "nbuckets.meta")
-
-  /** The ONE atomic small-meta-file pair every persisted state
-    * scalar uses (bucket count, low-water mark, epoch): write a tmp,
-    * ATOMIC_MOVE into place — a crash mid-write can never leave a
-    * truncated file a resumed session would fail to parse.
-    */
-  private[graft] def saveMeta(root: String, name: String, value: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val tmp = java.nio.file.Paths.get(root, s"$name.tmp")
-    java.nio.file.Files.write(tmp,
-      value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(root, name),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
-  private def loadMeta(root: String, name: String): Option[String] = {
-    val p = java.nio.file.Paths.get(root, name)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-    else None
-  }
-
   private[streaming] def loadStateBuckets(root: String): Option[Int] =
-    loadMeta(root, "nbuckets.meta").map(_.toInt)
+    graft.Fs.read(s"$root/nbuckets.meta").map(_.trim.toInt)
 
   private[graft] def saveStateBuckets(root: String, n: Int): Unit =
-    saveMeta(root, "nbuckets.meta", n.toString)
+    graft.Fs.writeAtomic(s"$root/nbuckets.meta", n.toString)
 
   // (The compaction intent journal that used to live here is gone:
   // the rewrite COMMIT above carries the bucket count in its tag, so
@@ -1197,43 +1170,34 @@ object Streams {
   // the facade's nextBatchId path, which continues the one shared
   // namespace) skip the barrier.
 
-  private def commitsDir(root: String): java.nio.file.Path =
-    java.nio.file.Paths.get(root, "commits")
+  private def commitsDir(root: String): String = s"$root/commits"
 
   /** Highest RETIRED batch id (−1 = none): ids at-or-below it are
     * committed by definition, their marker files long deleted.
     */
   private[graft] def loadLowWater(root: String): Long =
-    loadMeta(root, "lowwater.meta").map(_.toLong).getOrElse(-1L)
+    graft.Fs.read(s"$root/lowwater.meta").map(_.trim.toLong).getOrElse(-1L)
 
   private[graft] def saveLowWater(root: String, v: Long): Unit =
-    saveMeta(root, "lowwater.meta", v.toString)
+    graft.Fs.writeAtomic(s"$root/lowwater.meta", v.toString)
 
   private[graft] def batchCommitted(root: String, bid: Long): Boolean =
     bid <= loadLowWater(root) ||
-      java.nio.file.Files.exists(commitsDir(root).resolve(s"b$bid"))
+      graft.Fs.stat(s"${commitsDir(root)}/b$bid").isDefined
 
-  private[graft] def commitBatch(root: String, bid: Long): Unit = {
-    java.nio.file.Files.createDirectories(commitsDir(root))
-    java.nio.file.Files.write(commitsDir(root).resolve(s"b$bid"),
-      Array.emptyByteArray)
-    ()
-  }
+  private[graft] def commitBatch(root: String, bid: Long): Unit =
+    graft.Fs.writeAtomic(s"${commitsDir(root)}/b$bid", "")
 
   /** Attempt marker: written BEFORE a batch's first append, so a
     * retry can tell "this bid was tried and may have left tagged
     * remnants" (→ pay the wipe walk) from the clean first attempt
     * (→ skip it). One empty file, retired with the commit markers.
     */
-  private[graft] def markAttempt(root: String, bid: Long): Unit = {
-    java.nio.file.Files.createDirectories(commitsDir(root))
-    java.nio.file.Files.write(commitsDir(root).resolve(s"a$bid"),
-      Array.emptyByteArray)
-    ()
-  }
+  private[graft] def markAttempt(root: String, bid: Long): Unit =
+    graft.Fs.writeAtomic(s"${commitsDir(root)}/a$bid", "")
 
   private[graft] def attemptExists(root: String, bid: Long): Boolean =
-    java.nio.file.Files.exists(commitsDir(root).resolve(s"a$bid"))
+    graft.Fs.stat(s"${commitsDir(root)}/a$bid").isDefined
 
   /** Retire marker files at compaction: every committed batch's rows
     * now live in untagged files, so individual markers up to the max
@@ -1243,7 +1207,7 @@ object Streams {
     * markers that merely linger until the next retirement.
     */
   private[graft] def retireMarkers(root: String): Unit = {
-    val names = markerNames(root)
+    val names = graft.Fs.list(commitsDir(root)).map(_.name)
     val bIds = names.collect { case n if n.startsWith("b") => n.drop(1).toLong }
     if (bIds.isEmpty) return
     // retire only the CONTIGUOUS committed prefix: low-water marks
@@ -1265,41 +1229,29 @@ object Streams {
     names.foreach { n =>
       if ((n.startsWith("b") || n.startsWith("a")) &&
           n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= lw)
-        java.nio.file.Files.deleteIfExists(commitsDir(root).resolve(n))
-    }
-  }
-
-  /** File names in the root's marker dir (none when it is absent). */
-  private def markerNames(root: String): Seq[String] = {
-    val d = commitsDir(root)
-    if (!java.nio.file.Files.isDirectory(d)) Nil
-    else {
-      val s = java.nio.file.Files.list(d)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString).toList
-      } finally s.close()
+        graft.Fs.deleteTree(s"${commitsDir(root)}/$n")
     }
   }
 
   // ---- batch-id epoch (durable roots vs fresh checkpoints) --------
 
   private[graft] def loadEpoch(root: String): Option[String] =
-    loadMeta(root, "epoch.meta")
+    graft.Fs.read(s"$root/epoch.meta").map(_.trim)
 
   private[graft] def saveEpoch(root: String, e: String): Unit =
-    saveMeta(root, "epoch.meta", e)
+    graft.Fs.writeAtomic(s"$root/epoch.meta", e)
 
   private def clearMarkers(root: String): Unit =
-    markerNames(root).foreach(n =>
-      java.nio.file.Files.deleteIfExists(commitsDir(root).resolve(n)))
+    graft.Fs.deleteTree(commitsDir(root))
 
   /** True iff the root carries any committed-batch history under the
     * current marker namespace — a retired low-water mark or any
-    * commit marker file.
+    * commit marker file (a crashed write's hidden staging file is
+    * not one).
     */
   private def hasCommitHistory(root: String): Boolean =
-    loadLowWater(root) >= 0L || markerNames(root).nonEmpty
+    loadLowWater(root) >= 0L ||
+      graft.Fs.list(commitsDir(root)).exists(!_.name.startsWith("."))
 
   /** The epoch barrier, run at state open when the caller's `epoch`
     * differs from the persisted one (a durable root re-attached to a
@@ -1335,7 +1287,7 @@ object Streams {
     */
   private[graft] def nextBatchId(root: String): Long = {
     val floor = loadLowWater(root) + 1L
-    val ids = markerNames(root).collect {
+    val ids = graft.Fs.list(commitsDir(root)).map(_.name).collect {
       case n if n.startsWith("b") => n.drop(1).toLong
     }
     if (ids.isEmpty) floor else math.max(ids.max + 1L, floor)
@@ -1352,19 +1304,13 @@ object Streams {
     val tmp = s"$dir.append-b$bid"
     val w = df.write.mode("overwrite")
     partCol.fold(w)(c => w.partitionBy(c)).parquet(tmp)
-    val tmpPath = java.nio.file.Paths.get(tmp)
-    val files = graft.sources.Io.parquetFilesRec(tmp)
-    files.foreach { f =>
-      val rel = tmpPath.relativize(f)
-      val target = java.nio.file.Paths.get(dir).resolve(
-        Option(rel.getParent).fold(
-          java.nio.file.Paths.get(s"gb$bid-${rel.getFileName}"))(p =>
-          p.resolve(s"gb$bid-${rel.getFileName}")))
-      java.nio.file.Files.createDirectories(target.getParent)
-      java.nio.file.Files.move(f, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    graft.Fs.listRec(tmp, ".parquet").foreach { f =>
+      val rel = f.path.stripPrefix(s"$tmp/")
+      val cut = rel.lastIndexOf('/') + 1
+      graft.Fs.move(f.path, s"$dir/${rel.take(cut)}gb$bid-${rel.drop(cut)}")
     }
-    graft.Staging.deleteTree(tmpPath)
+    graft.Fs.deleteTree(tmp)
+    ()
   }
 
   /** Delete every `gb<bid>-` file of a batch from the given table
@@ -1373,9 +1319,8 @@ object Streams {
   private[graft] def wipeBatch(dirs: Seq[String], bid: Long): Unit = {
     val prefix = s"gb$bid-"
     dirs.foreach { dir =>
-      graft.sources.Io.parquetFilesRec(dir)
-        .filter(_.getFileName.toString.startsWith(prefix))
-        .foreach(java.nio.file.Files.delete)
+      graft.Fs.listRec(dir, ".parquet").filter(_.name.startsWith(prefix))
+        .foreach(f => graft.Fs.deleteTree(f.path))
     }
   }
 
@@ -1387,32 +1332,24 @@ object Streams {
       dirs: Seq[String]): Unit = {
     val tag = "^gb(\\d+)-.*".r
     // the low-water mark is loaded ONCE per recovery, not once per
-    // tagged file (each loadMeta is a metadata round-trip — on an
+    // tagged file (each read is a metadata round-trip — on an
     // object store, F leftover files must not cost F reads)
     val lowWater = loadLowWater(root)
     def committed(bid: Long): Boolean =
-      bid <= lowWater ||
-        java.nio.file.Files.exists(commitsDir(root).resolve(s"b$bid"))
+      bid <= lowWater || graft.Fs.stat(s"${commitsDir(root)}/b$bid").isDefined
     dirs.foreach { dir =>
-      graft.sources.Io.parquetFilesRec(dir).foreach { f =>
-        f.getFileName.toString match {
-          case tag(bid) if !committed(bid.toLong) =>
-            java.nio.file.Files.delete(f)
+      graft.Fs.listRec(dir, ".parquet").foreach { f =>
+        f.name match {
+          case tag(bid) if !committed(bid.toLong) => graft.Fs.deleteTree(f.path)
           case _ => ()
         }
       }
-      val d = java.nio.file.Paths.get(dir)
-      val parent = d.getParent
-      val prefix = s"${d.getFileName}.append-b"
-      if (parent != null && java.nio.file.Files.isDirectory(parent)) {
-        val ls = java.nio.file.Files.list(parent)
-        try {
-          import scala.jdk.CollectionConverters._
-          ls.iterator().asScala
-            .filter(_.getFileName.toString.startsWith(prefix))
-            .foreach(graft.Staging.deleteTree)
-        } finally ls.close()
-      }
+      val d = dir.stripSuffix("/")
+      val cut = d.lastIndexOf('/')
+      if (cut > 0)
+        graft.Fs.list(d.take(cut))
+          .filter(_.name.startsWith(s"${d.drop(cut + 1)}.append-b"))
+          .foreach(e => graft.Fs.deleteTree(e.path))
     }
   }
 
@@ -1946,8 +1883,8 @@ object Streams {
     val head = log.latestVersion.getOrElse(-1L)
     if (head < 0L || log.snapshot(head).length <= maxFiles) return
     if (!tagCommitted(log, tag)) {
-      def bytes(p: String) = java.nio.file.Files.size(java.nio.file.Paths
-        .get(if (p.startsWith("file:")) new java.net.URI(p).getPath else p))
+      def bytes(p: String) = graft.Fs.stat(p)
+        .getOrElse(throw new java.io.FileNotFoundException(p)).len
       val n = math.max(nMin.toLong,
         (log.snapshot(head).map(f => bytes(f.path)).sum +
           targetBytes - 1) / targetBytes).toInt
@@ -1956,7 +1893,10 @@ object Streams {
     }
     log.vacuum(retain)
     sweepDeadBatchDirs(sweepRoot)
-    val outParent = java.nio.file.Paths.get(outDir).getParent.toString
+    val (outParent, outName) = {
+      val d = outDir.stripSuffix("/")
+      (d.take(d.lastIndexOf('/')), d.drop(d.lastIndexOf('/') + 1))
+    }
     if (outParent != sweepRoot) sweepDeadBatchDirs(outParent)
     // TORN-ATTEMPT RECLAIM: a crash between a previous maintenance
     // pass's rewrite write and its tagged commit leaves an m<bid> dir
@@ -1968,31 +1908,16 @@ object Streams {
     // unreferenced by the log is exactly that leftover — delete it.
     // Cost: one addedPaths set build, already O(history) like the
     // vacuum beside it, paid only at maintenance cadence.
-    val added = log.addedPathsLocal
-    val outName = java.nio.file.Paths.get(outDir).getFileName.toString
-    childDirs(outParent)
+    def pathOf(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    val added = log.addedPaths.map(pathOf)
+    graft.Fs.list(outParent)
       .filter { d =>
-        d.getFileName.toString.matches("m\\d+") &&
-          d.getFileName.toString != outName && {
-            val fs = graft.sources.Io.parquetFilesRec(d.toString)
-            fs.nonEmpty && fs.forall(f => !added.contains(f.toString))
-          }
+        d.isDir && d.name.matches("m\\d+") && d.name != outName && {
+          val fs = graft.Fs.listRec(d.path, ".parquet")
+          fs.nonEmpty && fs.forall(f => !added.contains(pathOf(f.path)))
+        }
       }
-      .foreach(graft.Staging.deleteTree)
-  }
-
-  /** Immediate child directories of `dir` (empty if absent) — the
-    * one listing every maintenance sweep shares.
-    */
-  private def childDirs(dir: String): Seq[java.nio.file.Path] = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return Nil
-    val s = java.nio.file.Files.list(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(java.nio.file.Files.isDirectory(_)).toList
-    } finally s.close()
+      .foreach(d => graft.Fs.deleteTree(d.path))
   }
 
   /** Remove per-batch landing/maintenance dirs (`b<id>` / `m<id>`)
@@ -2002,10 +1927,10 @@ object Streams {
     * two-destination batch) is left alone.
     */
   private def sweepDeadBatchDirs(root: String): Unit =
-    childDirs(root)
-      .filter(d => d.getFileName.toString.matches("[bm]\\d+") &&
-        graft.sources.Io.parquetFilesRec(d.toString).isEmpty)
-      .foreach(graft.Staging.deleteTree)
+    graft.Fs.list(root)
+      .filter(d => d.isDir && d.name.matches("[bm]\\d+") &&
+        graft.Fs.listRec(d.path, ".parquet").isEmpty)
+      .foreach(d => graft.Fs.deleteTree(d.path))
 
   /** io10's serving plan over the MAINTAINED table log: snapshot →
     * stats-admitted file list (bounded by the log's entry count) →
@@ -2288,7 +2213,8 @@ object Streams {
       schema: org.apache.spark.sql.types.StructType =
         graft.sources.Io.ordersSchema,
       keyCol: String = "o_orderkey"): Unit = {
-    val cursor = loadMeta(root, "cursor.meta").map(_.toLong).getOrElse(-1L)
+    val cursor = graft.Fs.read(s"$root/cursor.meta").map(_.trim.toLong)
+      .getOrElse(-1L)
     ((cursor + 1L) to v).foreach(u =>
       st18FollowStep(spark, root, log, u, schema, keyCol))
   }
@@ -2322,7 +2248,8 @@ object Streams {
       schema: org.apache.spark.sql.types.StructType =
         graft.sources.Io.ordersSchema,
       keyCol: String = "o_orderkey"): Unit = {
-    val cursor = loadMeta(root, "cursor.meta").map(_.toLong).getOrElse(-1L)
+    val cursor = graft.Fs.read(s"$root/cursor.meta").map(_.trim.toLong)
+      .getOrElse(-1L)
     if (v <= cursor) return
     val cols = schema.fieldNames.toSeq
     def sided(df: DataFrame, side: String) =
@@ -2364,7 +2291,7 @@ object Streams {
         .unionByName(upserts)))
     }
     graft.Caches.drop(changes)
-    saveMeta(root, "cursor.meta", v.toString)
+    graft.Fs.writeAtomic(s"$root/cursor.meta", v.toString)
   }
 
   // ----------------------------------------------------------------
@@ -2452,36 +2379,35 @@ object Streams {
     * tmp + atomic-move (the nbuckets.meta contract).
     */
   private[graft] def saveCodebook(root: String,
-      cb: graft.expressions.PlaneMatrix): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-    val sb = new StringBuilder
-    sb.append(cb.dim).append('\n')
-    cb.values.foreach(v =>
-      sb.append(java.lang.Double.doubleToLongBits(v)).append('\n'))
-    val tmp = java.nio.file.Paths.get(root, "codebook.meta.tmp")
-    java.nio.file.Files.write(tmp,
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(root, "codebook.meta"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
+      cb: graft.expressions.PlaneMatrix): Unit =
+    saveModel(s"$root/codebook.meta", Seq(cb.dim), cb.values)
 
   private[graft] def loadCodebook(
-      root: String): Option[graft.expressions.PlaneMatrix] = {
-    val p = java.nio.file.Paths.get(root, "codebook.meta")
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val lines = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-      val dim = lines.head.toInt
-      val vals = lines.tail
-        .map(l => java.lang.Double.longBitsToDouble(l.toLong)).toArray
-      Some(new graft.expressions.PlaneMatrix(vals, dim))
+      root: String): Option[graft.expressions.PlaneMatrix] =
+    loadModel(s"$root/codebook.meta").map { case (h, v) =>
+      new graft.expressions.PlaneMatrix(v, h.head)
     }
+
+  /** The one codec of graft's persisted float models (the codebook
+    * above, the sq8/pq tier models): a line of space-separated int
+    * header fields, then each Double's raw long bits, one per line.
+    */
+  private[graft] def saveModel(path: String, header: Seq[Int],
+      values: Array[Double]): Unit = {
+    val sb = new StringBuilder
+    sb.append(header.mkString(" ")).append('\n')
+    values.foreach(v =>
+      sb.append(java.lang.Double.doubleToLongBits(v)).append('\n'))
+    graft.Fs.writeAtomic(path, sb.toString)
   }
+
+  private[graft] def loadModel(
+      path: String): Option[(Seq[Int], Array[Double])] =
+    graft.Fs.read(path).map { s =>
+      val lines = s.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+      (lines.head.split(" ").toSeq.map(_.toInt),
+        lines.tail.map(l => java.lang.Double.longBitsToDouble(l.toLong)).toArray)
+    }
 
   /** ONE maintenance step: assign the ARRIVING (vec_id, v) rows to
     * their nearest coarse list — a compiled projection against the
@@ -2680,7 +2606,7 @@ object Streams {
       saveCodebook(st1.root, cbOld)
       st15MaintainStep(st1, cbOld, vecs.filter(col("vec_id") % 2 === 0))
       st15MaintainStep(st1, cbOld, vecs.filter(col("vec_id") % 2 === 1))
-      saveMeta(d, "current.meta", "v1")
+      graft.Fs.writeAtomic(s"$d/current.meta", "v1")
       // drift detected (st17's gate) → cut over to the retrained model
       val cbNew = graft.operators.Ann.assignedVecs(t, nLists)._2
       st20Migrate(spark, d, "v2", cbNew)
@@ -2700,8 +2626,8 @@ object Streams {
   private[graft] def st20Migrate(
       spark: org.apache.spark.sql.SparkSession, parent: String,
       toSub: String, cbNew: graft.expressions.PlaneMatrix): Unit = {
-    val fromSub = loadMeta(parent, "current.meta").getOrElse(
-      sys.error(s"st20Migrate: no serving index under $parent"))
+    val fromSub = graft.Fs.read(s"$parent/current.meta").map(_.trim)
+      .getOrElse(sys.error(s"st20Migrate: no serving index under $parent"))
     if (fromSub == toSub) {
       // RE-RUN AFTER A CRASH between the pointer flip and the old
       // root's vacuum: the cutover already happened (the pointer IS
@@ -2725,7 +2651,7 @@ object Streams {
     // production scale the delete is deferred by a retention window
     // (TableLog.vacuum's posture); in this single-writer harness the
     // serving reads are synchronous, so immediate vacuum is safe
-    saveMeta(parent, "current.meta", toSub)
+    graft.Fs.writeAtomic(s"$parent/current.meta", toSub)
     vacuumRetiredRoots(parent, toSub)
   }
 
@@ -2734,8 +2660,8 @@ object Streams {
     * finds nothing left).
     */
   private def vacuumRetiredRoots(parent: String, serving: String): Unit =
-    childDirs(parent).filter(_.getFileName.toString != serving)
-      .foreach(graft.Staging.deleteTree)
+    graft.Fs.list(parent).filter(d => d.isDir && d.name != serving)
+      .foreach(d => graft.Fs.deleteTree(d.path))
 
   /** Resolve the serving index under a migration parent: the pointer
     * names the active subroot, whose persisted codebook is THE model
@@ -2744,8 +2670,8 @@ object Streams {
   private[graft] def st20Serving(
       spark: org.apache.spark.sql.SparkSession,
       parent: String): (StateTable, graft.expressions.PlaneMatrix) = {
-    val sub = loadMeta(parent, "current.meta").getOrElse(
-      sys.error(s"st20Serving: no serving index under $parent"))
+    val sub = graft.Fs.read(s"$parent/current.meta").map(_.trim)
+      .getOrElse(sys.error(s"st20Serving: no serving index under $parent"))
     val st = StateTable.open(spark, st15Family, Some(s"$parent/$sub"))
     (st, loadCodebook(st.root).getOrElse(
       sys.error(s"st20Serving: serving root ${st.root} has no codebook")))
@@ -2897,37 +2823,20 @@ object Streams {
       // random delete affects all partitions; pruning pays off when
       // deletes are few), so wave count is the gate's cost knob
       val width = (hi - lo) / 2 + 1
-      val reqDir = java.nio.file.Paths.get(s"$d/requests")
-      java.nio.file.Files.createDirectories(reqDir)
+      val reqDir = s"$d/requests"
       (0 until 2).foreach { w =>
         // Staging.scratch registers the wave dir with the shutdown
-        // cleanup hook (leftover part files reclaimed); the listing
-        // stream closes deterministically
-        val out = java.nio.file.Paths
-          .get(graft.Staging.scratch(s"st25_wave$w"))
+        // cleanup hook (leftover part files reclaimed)
+        val out = graft.Staging.scratch(s"st25_wave$w")
         victims.filter(col("doc_id") >= lo + w * width &&
             col("doc_id") < lo + (w + 1) * width)
-          .coalesce(1).write.mode("overwrite").parquet(out.toString)
-        val listing = java.nio.file.Files.list(out)
-        try {
-          val part = listing.iterator()
-          var moved = false
-          while (part.hasNext) {
-            val p = part.next()
-            if (p.toString.endsWith(".parquet") && !moved) {
-              val dest = reqDir.resolve(s"${w}_forget.parquet")
-              java.nio.file.Files.move(p, dest)
-              dest.toFile.setLastModified(
-                System.currentTimeMillis() - 60000L * (2 - w))
-              moved = true
-            }
-          }
-        } finally listing.close()
+          .coalesce(1).write.mode("overwrite").parquet(out)
+        landPart(out, s"$reqDir/${w}_forget.parquet", 2 - w)
       }
       val q = spark.readStream
         .schema("doc_id BIGINT")
         .option("maxFilesPerTrigger", "1")
-        .parquet(reqDir.toString)
+        .parquet(reqDir)
         .writeStream
         .foreachBatch { (batch: Dataset[Row], _: Long) =>
           graft.operators.Pipeline
@@ -3054,9 +2963,9 @@ object Streams {
         .agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
       if (!bounds.isNullAt(0)) {
         val (mn, mx) = (bounds.getLong(0), bounds.getLong(1))
-        val (hwTag, hwBefore, hwAfter) = loadMeta(roots.root, "hw.meta")
-          .map { s =>
-            val Array(t, b, a) = s.split(":", 3)
+        val (hwTag, hwBefore, hwAfter) =
+          graft.Fs.read(s"${roots.root}/hw.meta").map { s =>
+            val Array(t, b, a) = s.trim.split(":", 3)
             (t, b.toLong, a.toLong)
           }.getOrElse(("", Long.MinValue, Long.MinValue))
         val floor = if (hwTag == tag) hwBefore else hwAfter
@@ -3065,7 +2974,7 @@ object Streams {
             s"registered high-water $floor) violates the keep-min-id " +
             "registry contract — deliver batches in ascending doc_id " +
             "order (re-stage the source ordered)")
-        saveMeta(roots.root, "hw.meta",
+        graft.Fs.writeAtomic(s"${roots.root}/hw.meta",
           s"$tag:$floor:${math.max(floor, mx)}")
       }
       val s1 = scored.filter(

@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +24,8 @@ import org.apache.spark.sql.functions._
   *  - `phases`: seconds per label, the union of the intervals of the
   *    jobs whose `spark.job.description` is that label
   *    (`Pipeline.labeled` and every `Concurrent.settleAll` thunk set
-  *    it); jobs without one go under `unlabelled`;
+  *    it; the terminal collect runs under `<query>: collect`); jobs
+  *    without one go under `unlabelled`;
   *  - `jobs`: id, label and interval of each job;
   *  - `stages`: per stage that ran, its name (the call site), its job
   *    (the first job that listed it), label, tasks, summed task run time, shuffle bytes
@@ -90,7 +90,8 @@ object Profile {
       try {
         val w0 = System.currentTimeMillis()
         val df = query(spark, dir)
-        val rows = df.collect().length
+        val rows = graft.operators.Pipeline.labeled(spark, s"$name: collect")(
+          df.collect().length)
         val w1 = System.currentTimeMillis()
         org.apache.spark.ListenerBusDrain(sc)
         (df, rows, w0, w1)
@@ -161,20 +162,14 @@ object Profile {
   def replicate(spark: SparkSession, sfDir: String, n: Int): String = {
     val out = graft.Staging.scratch(s"profile_x$n")
     try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val src = new Path(sfDir)
-      val fs = src.getFileSystem(conf)
-      val dst = new Path(out)
-      val dstFs = dst.getFileSystem(conf)
-      fs.listStatus(src).foreach { st =>
-        val name = st.getPath.getName
+      graft.Fs.list(sfDir).foreach { e =>
         def write(f: (DataFrame, Int) => DataFrame, id: String): Unit =
-          copies(spark.read.parquet(st.getPath.toString), id, n)(f)
-            .write.parquet(new Path(dst, name).toString)
-        name match {
+          copies(spark.read.parquet(e.path), id, n)(f)
+            .write.parquet(s"$out/${e.name}")
+        e.name match {
           case "documents.parquet" => write(disjointVocabulary, "doc_id")
           case "embeddings.parquet" => write(signFlipped, "vec_id")
-          case _ => FileUtil.copy(fs, st.getPath, dstFs, new Path(dst, name), false, conf)
+          case _ => graft.Fs.copy(e.path, s"$out/${e.name}")
         }
       }
       out

@@ -582,7 +582,7 @@ class AnnStreamSpec extends SparkSpec {
       assert(once.nonEmpty && twice == once)
       assert(graft.sources.TableLog.open(tmp).latestVersion == vOnce,
         "redelivered batch minted a new log version")
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("st21 backfill-then-tail: bootstrapped table holds every " +
@@ -656,7 +656,7 @@ class AnnStreamSpec extends SparkSpec {
         .committed("b@0"))
       assert(graft.streaming.Streams.st19Serve(spark, tmp)
         .collect().map(_.toSeq).toSeq == once)
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("sink file growth is BOUNDED: ~20 micro-batches under a file " +
@@ -720,8 +720,7 @@ class AnnStreamSpec extends SparkSpec {
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$root16/m999")),
         "torn maintenance dir survived the next trigger")
-    } finally graft.Staging.deleteTree(
-      java.nio.file.Paths.get(root16))
+    } finally graft.Fs.deleteTree(root16)
     // ---- st19 (two destinations) ----
     val root19 = java.nio.file.Files
       .createTempDirectory("graft_st19_budget_").toString
@@ -752,8 +751,7 @@ class AnnStreamSpec extends SparkSpec {
       val n = graft.streaming.Streams.st19Serve(spark, root19)
         .agg(sum("n")).collect()(0).getLong(0)
       assert(n == ev.count(), s"st19 served $n rows after maintenance")
-    } finally graft.Staging.deleteTree(
-      java.nio.file.Paths.get(root19))
+    } finally graft.Fs.deleteTree(root19)
   }
 
   test("st18 CDC follow: mirror equals the live snapshot row-for-row; " +
@@ -1200,13 +1198,13 @@ class AnnStreamSpec extends SparkSpec {
       .option("checkpointLocation", s"$root/ckpt")
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
-    val before = graft.sources.Io.parquetFiles(s"$root/out").length
+    val before = graft.Fs.list(s"$root/out").count(_.name.endsWith(".parquet"))
     val rowsBefore = spark.read.parquet(s"$root/out").distinct()
       .orderBy("doc_a", "doc_b").collect().map(_.toSeq).toSeq
     assert(rowsBefore.nonEmpty)
     assert(before > 16, s"expected ~one sink file per batch, got $before")
     graft.streaming.Streams.compactFileSink(spark, s"$root/out")
-    val after = graft.sources.Io.parquetFiles(s"$root/out").length
+    val after = graft.Fs.list(s"$root/out").count(_.name.endsWith(".parquet"))
     assert(after < before, s"before=$before after=$after")
     // compaction moved every committed row faithfully
     val rowsAfter = spark.read.parquet(s"$root/out").distinct()
@@ -1214,7 +1212,7 @@ class AnnStreamSpec extends SparkSpec {
     assert(rowsAfter == rowsBefore)
     // under the budget the trigger is a no-op
     graft.streaming.Streams.compactFileSink(spark, s"$root/out")
-    assert(graft.sources.Io.parquetFiles(s"$root/out").length == after)
+    assert(graft.Fs.list(s"$root/out").count(_.name.endsWith(".parquet")) == after)
   }
 
   test("st13 state compaction: file counts drop past the budget, groups unchanged") {
@@ -1258,8 +1256,8 @@ class AnnStreamSpec extends SparkSpec {
     // monotone and a pruned probe's isin filter skips inside buckets
     def assertSorted[K: Ordering](dir: String,
         key: org.apache.spark.sql.Row => K): Unit =
-      graft.sources.Io.parquetFilesRec(dir).foreach { f =>
-        val ks = spark.read.parquet(f.toString).collect().toSeq.map(key)
+      graft.Fs.listRec(dir, ".parquet").foreach { f =>
+        val ks = spark.read.parquet(f.path).collect().toSeq.map(key)
         assert(ks == ks.sorted, s"unsorted bucket file $f")
       }
     assertSorted(tight.dir("bands"),
@@ -1387,9 +1385,9 @@ class AnnStreamSpec extends SparkSpec {
       compactAboveFiles = 4)
     drive(tight, 8)
     val looseFiles =
-      graft.sources.Io.parquetFilesRec(loose.dir("vectors")).length
+      graft.Fs.listRec(loose.dir("vectors"), ".parquet").length
     val tightFiles =
-      graft.sources.Io.parquetFilesRec(tight.dir("vectors")).length
+      graft.Fs.listRec(tight.dir("vectors"), ".parquet").length
     assert(looseFiles > 4 && tightFiles < looseFiles,
       s"loose=$looseFiles tight=$tightFiles")
     assert(serve(loose).nonEmpty && serve(loose) == serve(tight))
@@ -1563,11 +1561,11 @@ class AnnStreamSpec extends SparkSpec {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val files = graft.sources.Io.parquetFilesRec(st.dir("postings"))
+    val files = graft.Fs.listRec(st.dir("postings"), ".parquet")
     var multiGroup = 0
     files.foreach { f =>
       val rd = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toString), hc))
+        new org.apache.hadoop.fs.Path(f.path), hc))
       try {
         val bounds = rd.getFooter.getBlocks.asScala.toSeq.map { b =>
           val cc = b.getColumns.asScala
@@ -1619,8 +1617,8 @@ class AnnStreamSpec extends SparkSpec {
     st.compact()
     assert(st.nBuckets > 16, s"tiny target should grow buckets: ${st.nBuckets}")
     // partition dirs beyond the old [0,16) domain actually exist
-    val pbs = graft.sources.Io.parquetFilesRec(st.dir("postings"))
-      .map(_.getParent.getFileName.toString)
+    val pbs = graft.Fs.listRec(st.dir("postings"), ".parquet")
+      .map(_.path.split('/').init.last)
       .filter(_.startsWith("pb=")).map(_.stripPrefix("pb=").toInt)
     assert(pbs.exists(_ >= 16), s"no re-bucketed partitions: $pbs")
     val terms = Seq("t0040", "t0060")
@@ -1752,8 +1750,8 @@ class AnnStreamSpec extends SparkSpec {
       .exists(t => String.valueOf(t.getMessage).contains("injected")), e)
     // the slow sibling had LANDED when the step threw — it did not
     // outlive the call to race the retry's wipe
-    assert(graft.sources.Io.parquetFilesRec(st.dir("postings"))
-      .exists(_.getFileName.toString.startsWith("gb0-")),
+    assert(graft.Fs.listRec(st.dir("postings"), ".parquet")
+      .exists(_.name.startsWith("gb0-")),
       "the step rethrew while a sibling append was still running")
     assert(!graft.streaming.Streams.batchCommitted(st.root, 0L))
     // the facade's allocator hands the retry the SAME bid
@@ -2222,7 +2220,7 @@ class AnnStreamSpec extends SparkSpec {
       Some(s"$parent/v1"))
     graft.streaming.Streams.saveCodebook(st1.root, cbOld)
     graft.streaming.Streams.st15MaintainStep(st1, cbOld, vecs)
-    graft.streaming.Streams.saveMeta(parent, "current.meta", "v1")
+    graft.Fs.writeAtomic(s"$parent/current.meta", "v1")
     // BEFORE: consistent serving under the old model equals an
     // independently-computed batch twin bit-for-bit
     val pv = vecs.filter(col("vec_id") === 0L)

@@ -1078,9 +1078,8 @@ class GraftApiSpec extends SparkSpec {
         // dense tower really participated through the reopen: at
         // least one hit carries a non-null vector rank
         assert(re16.exists(r => Option(r.getAs[Any]("r_vec")).nonEmpty))
-      } finally graft.Staging.deleteTree(
-        java.nio.file.Paths.get(tmp16))
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+      } finally graft.Fs.deleteTree(tmp16)
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("RagIndex tiers: sq8/pq/sq8_rerank serve from minted tier " +
@@ -1126,7 +1125,7 @@ class GraftApiSpec extends SparkSpec {
       // exists only in the added doc)
       val zx = idx.search("xylophone", k = 3, tier = "sq8").collect()
       assert(zx.exists(_.getAs[Long]("chunk_id") / 1000000L == 3L))
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("RagIndex.add grows every tower bit-equal to a pinned-codebook " +
@@ -1192,8 +1191,8 @@ class GraftApiSpec extends SparkSpec {
       val rebuilt = idx.search("quokka windows", k = 5).collect()
       assert(rebuilt.map(_.toSeq).toSeq == grown.map(_.toSeq).toSeq)
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -1329,8 +1328,8 @@ class GraftApiSpec extends SparkSpec {
       val rebuilt = idx.search("quokka windows", k = 5).collect()
       assert(rebuilt.map(_.toSeq).toSeq == afterRm.map(_.toSeq).toSeq)
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -1421,11 +1420,11 @@ class GraftApiSpec extends SparkSpec {
           assert(dump(work, tbl, keys: _*) == dump(ref, tbl, keys: _*),
             s"trial $trial victims=$victims: $tbl drifted")
       } finally {
-        graft.Staging.deleteTree(java.nio.file.Paths.get(work))
-        graft.Staging.deleteTree(java.nio.file.Paths.get(ref))
+        graft.Fs.deleteTree(work)
+        graft.Fs.deleteTree(ref)
       }
     }
-    graft.Staging.deleteTree(java.nio.file.Paths.get(tmp0))
+    graft.Fs.deleteTree(tmp0)
   }
 
   test("ragTablesAt memoizes per mutation generation: an unchanged " +
@@ -1442,8 +1441,8 @@ class GraftApiSpec extends SparkSpec {
       Graft.ragIndex(docs, "doc_id", "filepath", "lang", "text",
         stateRoot = Some(tmp))
       // a completed build minted the stamp
-      assert(Pipeline.towersGenOf(spark, tmp).isDefined)
-      val g0 = Pipeline.towersGenOf(spark, tmp).get
+      assert(graft.Fs.read(s"$tmp/towers.gen").isDefined)
+      val g0 = graft.Fs.read(s"$tmp/towers.gen").get
       val t1 = Pipeline.ragTablesAt(spark, tmp)
       val t2 = Pipeline.ragTablesAt(spark, tmp)
       // same generation -> the SAME resolved map (reference equality:
@@ -1454,7 +1453,7 @@ class GraftApiSpec extends SparkSpec {
         Seq(1L).toDF("doc_id")) == 1L)
       // the wave bumped the stamp, so the memo re-resolves and the
       // fresh tables see the shrunk corpus
-      assert(Pipeline.towersGenOf(spark, tmp).get != g0)
+      assert(graft.Fs.read(s"$tmp/towers.gen").get != g0)
       val t3 = Pipeline.ragTablesAt(spark, tmp)
       assert(!(t3 eq t1))
       assert(t3("routed").count() == before - 1)
@@ -1469,8 +1468,8 @@ class GraftApiSpec extends SparkSpec {
         val f2 = Pipeline.ragTablesAt(spark, flat)
         assert(!(f1 eq f2))
         assert(f1("routed").count() == before - 1)
-      } finally graft.Staging.deleteTree(java.nio.file.Paths.get(flat))
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+      } finally graft.Fs.deleteTree(flat)
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("add/remove release their scratch dir and its Staging key on " +
@@ -1508,7 +1507,7 @@ class GraftApiSpec extends SparkSpec {
       intercept[IllegalArgumentException](idx.remove(all))
       assert(Staging.scratchKeys == keys0 && scratchDirs() == dirs0,
         "a failed remove kept its scratch")
-    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+    } finally graft.Fs.deleteTree(root)
   }
 
   test("RagIndex lifecycle: grow then shrink converges to a pinned-" +
@@ -1614,8 +1613,8 @@ class GraftApiSpec extends SparkSpec {
       // the removed doc's chunks never enter any packed context
       assert(!rows.exists(_.getAs[Long]("src_doc") == 1L))
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -1650,7 +1649,7 @@ class GraftApiSpec extends SparkSpec {
         if (partCols.isEmpty) df.write.mode("overwrite").parquet(t)
         else df.repartition(partCols.map(col): _*)
           .write.mode("overwrite").partitionBy(partCols: _*).parquet(t)
-        graft.Staging.deleteTree(java.nio.file.Paths.get(tmp, n))
+        graft.Fs.deleteTree(s"$tmp/$n")
         java.nio.file.Files.move(java.nio.file.Paths.get(t),
           java.nio.file.Paths.get(tmp, n))
       }
@@ -1703,8 +1702,8 @@ class GraftApiSpec extends SparkSpec {
         assert(dump(tmp, tbl, keys: _*) == dump(tmp2, tbl, keys: _*),
           s"$tbl drifted from the pinned survivors rebuild")
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -1765,7 +1764,7 @@ class GraftApiSpec extends SparkSpec {
       val dropped = listFiles(prevRel)
         .find(_.endsWith(".parquet")).get
       java.nio.file.Files.delete(prevRel.resolve(dropped))
-      Pipeline.healTowers(spark, tmp)
+      Pipeline.healTowers(tmp)
       assert(listFiles(dbDir) == origFiles,
         "heal must complete the swap from .next (full file set)")
       assert(!java.nio.file.Files.exists(
@@ -1776,7 +1775,7 @@ class GraftApiSpec extends SparkSpec {
       // ROLLBACK: no staged replacement — the old dir must come back
       java.nio.file.Files.createDirectories(prevRel.getParent)
       java.nio.file.Files.move(dbDir, prevRel)
-      Pipeline.healTowers(spark, tmp)
+      Pipeline.healTowers(tmp)
       assert(listFiles(dbDir) == origFiles,
         "heal must roll the old dir back when no replacement exists")
       // content unharmed end to end — and a mutation entry heals too
@@ -1784,10 +1783,10 @@ class GraftApiSpec extends SparkSpec {
       // remove exercises that path). The manual heals above armed
       // the torn-mutation marker, so this entry ALSO pays the
       // automatic consistency rebuild and must clear the marker.
-      assert(graft.operators.Pipeline.tornMarked(spark, tmp),
+      assert(graft.operators.Pipeline.tornMarked(tmp),
         "heal must arm the torn-mutation marker")
       assert(idx.remove(Seq(999L)) == 0L)
-      assert(!graft.operators.Pipeline.tornMarked(spark, tmp),
+      assert(!graft.operators.Pipeline.tornMarked(tmp),
         "the mutation entry's rebuild must discharge the marker")
       assert(idx.search("spark windows", k = 5).collect()
         .map(_.toSeq).toSeq == before, "serving drifted after heals")
@@ -1810,7 +1809,7 @@ class GraftApiSpec extends SparkSpec {
         s"add-cadence fragmentation unbounded: $maxFiles files in a dir")
       assert(spark.read.parquet(s"$tmp/routed").count() == 15L)
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+      graft.Fs.deleteTree(tmp)
     }
   }
 
@@ -2003,15 +2002,15 @@ class GraftApiSpec extends SparkSpec {
       // HEAL: no staged replacement ⇒ rollback — the victims
       // RESURRECT (correct: the wave never completed and remove()
       // threw), and the marker arms
-      Pipeline.healTowers(spark, tmp)
+      Pipeline.healTowers(tmp)
       assert(spark.read.parquet(s"$tmp/routed").count() == nBefore,
         "rollback must resurrect the victim bucket")
-      assert(Pipeline.tornMarked(spark, tmp), "heal must arm the marker")
+      assert(Pipeline.tornMarked(tmp), "heal must arm the marker")
       // RETRY: the entry sees the marker, rebuilds from the healed
       // routed (cross-table consistency), then the wave removes the
       // victims for real
       assert(idx.remove(Seq(victim)) == 1L)
-      assert(!Pipeline.tornMarked(spark, tmp), "marker must discharge")
+      assert(!Pipeline.tornMarked(tmp), "marker must discharge")
       assert(!java.nio.file.Files.exists(liveDir),
         "a fully-emptied victim bucket's dir must stay gone")
       val got = dumpTables(tmp)
@@ -2021,8 +2020,8 @@ class GraftApiSpec extends SparkSpec {
           s"$tbl drifted from the pinned survivors rebuild after " +
             "the heal-retry chain")
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -2105,13 +2104,13 @@ class GraftApiSpec extends SparkSpec {
         java.nio.file.Paths.get(tmp, Pipeline.tornMarkerName),
         "remove wave in flight (drill)\n".getBytes(
           java.nio.charset.StandardCharsets.UTF_8))
-      assert(Pipeline.tornMarked(spark, tmp))
+      assert(Pipeline.tornMarked(tmp))
       // the REDELIVERED wave: membership (routed) says the victim is
       // gone, so the wave itself returns 0 — but the entry saw the
       // armed intent and the automatic rebuild scrubbed the victim
       // from every tower first
       assert(idx.remove(Seq(vic)) == 0L)
-      assert(!Pipeline.tornMarked(spark, tmp), "marker must discharge")
+      assert(!Pipeline.tornMarked(tmp), "marker must discharge")
       assert(!idx.search("zanzibar", k = 3).collect()
         .exists(_.getAs[Long]("chunk_id") / 1000000L == vic),
         "the forgotten doc stayed servable after the healed no-op " +
@@ -2122,10 +2121,10 @@ class GraftApiSpec extends SparkSpec {
         assert(got(tbl) == ref(tbl),
           s"$tbl drifted from the pinned survivors rebuild after " +
             "the torn-shrunk heal")
-      graft.Staging.deleteTree(scratch)
+      graft.Fs.deleteTree(scratch.toString)
     } finally {
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
-      graft.Staging.deleteTree(java.nio.file.Paths.get(tmp2))
+      graft.Fs.deleteTree(tmp)
+      graft.Fs.deleteTree(tmp2)
     }
   }
 
@@ -2174,6 +2173,6 @@ class GraftApiSpec extends SparkSpec {
         assert(!ids.contains(vic), s"$t tier still holds doc $vic")
       }
       for (t <- tiers) assert(!served(t).contains(vic), s"$t served removed doc $vic")
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 }

@@ -189,12 +189,13 @@ class IoSpec extends SparkSpec {
     assert(run("io5_compaction").count() == 500)
     val small = graft.sources.Io.stagedDir(t, "small_files").get
     val compacted = graft.sources.Io.stagedDir(t, "compacted").get
-    val nSmall = graft.sources.Io.parquetFiles(small).size
-    val nCompact = graft.sources.Io.parquetFiles(compacted).size
+    def parquetFiles(dir: String) =
+      graft.Fs.list(dir).filter(_.name.endsWith(".parquet"))
+    val nSmall = parquetFiles(small).size
+    val nCompact = parquetFiles(compacted).size
     assert(nSmall == 64, s"staged $nSmall shards")
     assert(nCompact < nSmall)
-    val bytes = graft.sources.Io.parquetFiles(small)
-      .map(java.nio.file.Files.size(_)).sum
+    val bytes = parquetFiles(small).map(_.len).sum
     assert(nCompact ==
       graft.sources.Io.compactionFileCount(small, 8L << 20))
     assert(bytes > 0)

@@ -274,7 +274,7 @@ class PipelineSpec extends SparkSpec {
         .map(r => (r.getAs[Int]("ord").toLong, r.getAs[String]("stage"),
           r.getAs[Long]("n_out"))).toSeq
       assert(rep == p1)
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("st22 refuses a non-ascending arrival: a batch whose min " +
@@ -303,7 +303,7 @@ class PipelineSpec extends SparkSpec {
       assert(e.getMessage.contains("non-ascending"))
       // ascending continuation is clean
       graft.streaming.Streams.st22Step(spark, roots, bench, hi, 1L)
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("p3 serves from the BUILT towers: r_lex = the sparse tower's " +

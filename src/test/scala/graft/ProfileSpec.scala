@@ -31,6 +31,9 @@ class ProfileSpec extends SparkSpec {
   private lazy val p5 = parsed(Profile.profile(spark, sf, "p5_index_remove"))
   private lazy val q1 = parsed(Profile.profile(spark, sf, "q1_pricing_summary",
     plan = true))
+  // the d-family's CC loop and bloom/confirm staging label every job
+  private lazy val dFamily = Seq("d10_group_split", "d12_bloom_decontaminate")
+    .map(q => parsed(Profile.profile(spark, sf, q)))
 
   test("a profile line parses as JSON and carries every layer's keys") {
     for (m <- Seq(p5, q1)) {
@@ -52,7 +55,10 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("every job is in exactly one phase, every stage in its job") {
-    for (m <- Seq(p5, q1)) {
+    for (m <- dFamily)
+      assert(!m("phases").asInstanceOf[Map[String, Any]].contains("unlabelled"),
+        s"${m("query")} runs unlabelled jobs: ${m("jobs")}")
+    for (m <- Seq(p5, q1) ++ dFamily) {
       val jobs = rows(m, "jobs")
       val ids = jobs.map(j => num(j("job")))
       assert(ids.distinct.size == ids.size)

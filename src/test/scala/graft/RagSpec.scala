@@ -441,6 +441,6 @@ class RagSpec extends SparkSpec {
       (0 until 9).foreach(b =>
         assert(log.committed(s"b@$b"), s"batch $b lost"))
       assert(!log.committed("b@9"))
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 }

@@ -147,13 +147,13 @@ class ServeSnapshotSpec extends SparkSpec {
       val hits0 = assertServesAsOld(idx, qs, "built")
       assert(hits0.nonEmpty)
 
-      val gen0 = Pipeline.towersGenOf(spark, root)
+      val gen0 = Fs.read(s"$root/towers.gen")
       val snap0 = Pipeline.servedAt(spark, root)
       val (avgdl0, idf0) = (snap0.avgdl, snap0.idf)
       val added = 61L to 75L
       assert(idx.add(docs(added, 8L), "doc_id", "filepath", "lang",
         "text") == added.size)
-      assert(Pipeline.towersGenOf(spark, root) != gen0)
+      assert(Fs.read(s"$root/towers.gen") != gen0)
       val snap1 = Pipeline.servedAt(spark, root)
       assert(!(snap1 eq snap0))
       assert(snap1.idf.contains("uniq61") && !idf0.contains("uniq61"))
@@ -172,7 +172,7 @@ class ServeSnapshotSpec extends SparkSpec {
         "after remove")
       val leaked = hits2.map(_.getLong(0) / 1000000L).filter(removed.contains)
       assert(leaked.isEmpty, s"removed docs served: $leaked")
-    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+    } finally graft.Fs.deleteTree(root)
   }
 
   test("an int16 search runs at most two Spark jobs, and collecting " +
@@ -202,7 +202,7 @@ class ServeSnapshotSpec extends SparkSpec {
         assert(searchJobs <= 2, s"'$q' ran $searchJobs jobs")
         assert(jobs.get == 0, s"collecting '$q''s hits ran ${jobs.get} jobs")
       } finally spark.sparkContext.removeSparkListener(listener)
-    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+    } finally graft.Fs.deleteTree(root)
   }
 
   test("the driver-side fuse equals Graft.rrfFuse: tied scores, ids " +
@@ -234,6 +234,6 @@ class ServeSnapshotSpec extends SparkSpec {
       for (q <- Seq("w1 w2", "absentword"))
         assert(newSearch(idx, q, "int16").schema ==
           oldSearches(root, q, Seq("int16"))("int16").schema)
-    } finally Staging.deleteTree(java.nio.file.Paths.get(root))
+    } finally graft.Fs.deleteTree(root)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.sources.TableLog
 
@@ -58,7 +60,7 @@ class TableLogSpec extends SparkSpec {
     // zero copy: the clone's v0 file list IS the source's live list —
     // and no parquet data landed under the clone root
     assert(clone.snapshot(0L).map(_.path).toSet == srcLive)
-    assert(graft.sources.Io.parquetFilesRec(clone.root).isEmpty,
+    assert(graft.Fs.listRec(clone.root, ".parquet").isEmpty,
       "clone root holds data files — the clone copied bytes")
     // independence: an append to the CLONE diverges it while the
     // source's head and file list stay frozen
@@ -106,38 +108,43 @@ class TableLogSpec extends SparkSpec {
     // must keep v2 readable for the operator's diff): land, rewrite,
     // restore, vacuum — the mis-write's exclusive bytes die, the
     // restored head keeps serving because its files are referenced
-    // again by the head snapshot
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_restore_drill_").toString
-    val d1 = spark.range(0, 100)
-      .select(col("id").as("k"), lit("a").as("s"))
-    val d2 = spark.range(0, 40)
-      .select(col("id").as("k"), lit("b").as("s"))
-    graft.api.Graft.tableCommit(d1, root, "k")
-    graft.api.Graft.tableCommit(d2, root, "k", replace = true)
-    val drill = TableLog.open(root)
-    val v1Files = drill.snapshot(1L).map(_.path)
-    assert(graft.api.Graft.tableRestore(root, 0L).contains(2L))
-    // restoring to a version whose list the head already serves no-ops
-    assert(graft.api.Graft.tableRestore(root, 0L).isEmpty)
-    drill.vacuum(retain = 1)
-    // the mis-write's exclusive files are reclaimed...
-    assert(v1Files.forall(p => !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(new java.net.URI(p).getPath))))
-    // ...and the restored head still serves the original rows
-    assert(drill.read(spark, d1.schema, 2L).count() == 100L)
-    // restoring PAST the vacuum horizon refuses instead of minting a
-    // head that references reclaimed bytes (Delta RESTORE's refusal):
-    // v1's exclusive files are gone, so restore-to-v1 must throw and
-    // leave the log untouched
-    val nvAfter = drill.versions.size
-    val ex = intercept[IllegalStateException] {
-      graft.api.Graft.tableRestore(root, 1L)
+    // again by the head snapshot. Run twice: on the log as written,
+    // whose entries are root-relative, and on the same log with the
+    // absolute `file:` entries older writers recorded, which must
+    // still resolve (and mix with the relative ones restore adds).
+    for (absolute <- Seq(false, true)) {
+      val root = graft.Staging.scratch("restore_drill")
+      val d1 = spark.range(0, 100)
+        .select(col("id").as("k"), lit("a").as("s"))
+      val d2 = spark.range(0, 40)
+        .select(col("id").as("k"), lit("b").as("s"))
+      graft.api.Graft.tableCommit(d1, root, "k")
+      graft.api.Graft.tableCommit(d2, root, "k", replace = true)
+      if (absolute) absolutize(root)
+      val drill = TableLog.open(root)
+      val v1Files = drill.snapshot(1L).map(_.path)
+      assert(graft.api.Graft.tableRestore(root, 0L).contains(2L))
+      // restoring to a version whose list the head already serves no-ops
+      assert(graft.api.Graft.tableRestore(root, 0L).isEmpty)
+      drill.vacuum(retain = 1)
+      // the mis-write's exclusive files are reclaimed...
+      assert(v1Files.forall(p => !java.nio.file.Files.exists(
+        java.nio.file.Paths.get(new java.net.URI(p).getPath))))
+      // ...and the restored head still serves the original rows
+      assert(drill.read(spark, d1.schema, 2L).count() == 100L)
+      // restoring PAST the vacuum horizon refuses instead of minting a
+      // head that references reclaimed bytes (Delta RESTORE's refusal):
+      // v1's exclusive files are gone, so restore-to-v1 must throw and
+      // leave the log untouched
+      val nvAfter = drill.versions.size
+      val ex = intercept[IllegalStateException] {
+        graft.api.Graft.tableRestore(root, 1L)
+      }
+      assert(ex.getMessage.contains("vacuum"))
+      assert(drill.versions.size == nvAfter,
+        "refused restore minted a version")
+      assert(drill.read(spark, d1.schema, 2L).count() == 100L)
     }
-    assert(ex.getMessage.contains("vacuum"))
-    assert(drill.versions.size == nvAfter,
-      "refused restore minted a version")
-    assert(drill.read(spark, d1.schema, 2L).count() == 100L)
   }
 
   test("RESTORE across an ALTER boundary re-declares the target " +
@@ -198,10 +205,10 @@ class TableLogSpec extends SparkSpec {
       preFiles.map(_.path).toSet)
     assert(log2.schemaAt(2L).contains(g2),
       "pre-declaration restore should keep the head's declaration")
-    graft.Staging.deleteTree(java.nio.file.Paths.get(root2))
+    graft.Fs.deleteTree(root2)
     // the private log references the SHARED staged data files by
     // path — delete only our log dir, never their bytes
-    graft.Staging.deleteTree(java.nio.file.Paths.get(root))
+    graft.Fs.deleteTree(root)
     ()
   }
 
@@ -277,7 +284,7 @@ class TableLogSpec extends SparkSpec {
       assert(m2.snapshot(m2.latestVersion.get).map(_.path).toSet
         == mFiles, "torn-side heal re-landed the replay files")
       assert(serve() == once)
-    } finally graft.Staging.deleteTree(java.nio.file.Paths.get(tmp))
+    } finally graft.Fs.deleteTree(tmp)
   }
 
   test("schema evolution rides the commit log: old snapshots serve " +
@@ -331,15 +338,15 @@ class TableLogSpec extends SparkSpec {
       f"v${1L}%012d.commit")
     java.nio.file.Files.write(junk,
       "tag:x\ngarbage line".getBytes("UTF-8"))
-    val before = graft.sources.Io.parquetFilesRec(root)
-      .map(_.toString).toSet
+    val before = graft.Fs.listRec(root, ".parquet")
+      .map(_.path).toSet
     intercept[RuntimeException] {
       graft.api.Graft.tableCommit(
         (1L to 10L).map(i => (i, "new")).toDF("k", "p"), root, "k",
         replace = true)
     }
-    val after = graft.sources.Io.parquetFilesRec(root)
-      .map(_.toString).toSet
+    val after = graft.Fs.listRec(root, ".parquet")
+      .map(_.path).toSet
     assert(after == before,
       s"aborted commit orphaned staged files: ${after -- before}")
   }
@@ -356,13 +363,13 @@ class TableLogSpec extends SparkSpec {
     assert(graft.api.Graft.tableCommit(
       Seq((1L, 5L), (2L, 7L)).toDF("k", "v"), root, "k") == 0L)
     // violating batch: rejected whole, no version minted, no files
-    val filesBefore = graft.sources.Io.parquetFilesRec(root).length
+    val filesBefore = graft.Fs.listRec(root, ".parquet").length
     intercept[IllegalArgumentException] {
       graft.api.Graft.tableCommit(
         Seq((3L, 9L), (4L, -1L)).toDF("k", "v"), root, "k")
     }
     assert(log.latestVersion.contains(0L))
-    assert(graft.sources.Io.parquetFilesRec(root).length == filesBefore,
+    assert(graft.Fs.listRec(root, ".parquet").length == filesBefore,
       "rejected commit landed files")
     // NULL constraint result is a violation (the strict form)
     intercept[IllegalArgumentException] {
@@ -433,6 +440,86 @@ class TableLogSpec extends SparkSpec {
       v, -5000L, -4000L).count() == 0L)
   }
 
+  /** Rewrite every commit of the log at `root` with absolute `file:`
+    * URIs in place of root-relative entries: the format logs had
+    * before entries were recorded relative.
+    */
+  private def absolutize(root: String): Unit = {
+    val logDir = java.nio.file.Paths.get(root, "_log")
+    val s = java.nio.file.Files.list(logDir)
+    val commits = try s.iterator().asScala.toList finally s.close()
+    for (f <- commits if f.getFileName.toString.endsWith(".commit")) {
+      val lines = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        .split("\n").map { l =>
+          l.split("\t") match {
+            case Array(a, p, rest @ _*) if (a == "add" || a == "remove") &&
+                !p.startsWith("/") =>
+              (Seq(a, java.nio.file.Paths.get(root, p).toUri.toString) ++ rest)
+                .mkString("\t")
+            case _ => l
+          }
+        }
+      assert(lines.exists(_.contains("\tfile:/")), s"$f has no entry to rewrite")
+      java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+    }
+  }
+
+  test("a copied table root reads, time-travels and vacuums its own " +
+      "files, and leaves the original's bytes untouched") {
+    val src = graft.Staging.scratch("tablelog_copy_src")
+    val d1 = spark.range(0, 100).select(col("id").as("k"), lit("a").as("s"))
+    val d2 = spark.range(0, 40).select(col("id").as("k"), lit("b").as("s"))
+    graft.api.Graft.tableCommit(d1, src, "k")
+    graft.api.Graft.tableCommit(d2, src, "k", replace = true)
+    def bytesUnder(root: String): Map[String, Seq[Byte]] =
+      graft.Fs.listRec(root).map(e => e.path.stripPrefix(root) ->
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(e.path)).toSeq)
+        .toMap
+    val before = bytesUnder(src)
+    val copy = s"${graft.Staging.scratch("tablelog_copy")}/table"
+    graft.Fs.copy(src, copy)
+    val log = TableLog.open(copy)
+    assert(log.versions == Seq(0L, 1L))
+    val entries = log.snapshot(0L) ++ log.snapshot(1L)
+    assert(entries.nonEmpty && entries.forall(_.path.startsWith(s"$copy/")),
+      s"the copy serves files outside itself: ${entries.map(_.path)}")
+    assert(log.read(spark, d1.schema, 0L).count() == 100L)
+    assert(log.read(spark, d1.schema, 1L).count() == 40L)
+    val gone = log.vacuum(retain = 1)
+    assert(gone.nonEmpty && gone.forall(_.startsWith(s"$copy/")))
+    assert(log.read(spark, d1.schema, 1L).count() == 40L)
+    assert(bytesUnder(src) == before,
+      "reading or vacuuming the copy changed the original's files")
+    assert(TableLog.open(src).read(spark, d1.schema, 0L).count() == 100L)
+  }
+
+  test("commitWithRetry under 8 racing writers: versions are gapless " +
+      "and every writer's commit lands exactly once per round") {
+    val root = graft.Staging.scratch("tablelog_race")
+    val (writers, rounds) = (8, 6)
+    val barrier = new java.util.concurrent.CyclicBarrier(writers)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until writers).map { w =>
+      new Thread(() =>
+        try (0 until rounds).foreach { r =>
+          barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          TableLog.open(root).commitWithRetry(s"w$w@$r", maxRetries = 100) { _ =>
+            Seq(TableLog.Add(TableLog.FileEntry(s"w$w-r$r", r, r, 1L)))
+          }
+        } catch { case e: Throwable => errors.add(e); () })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.mkString("\n"))
+    val log = TableLog.open(root)
+    val n = writers * rounds
+    assert(log.versions == (0L until n.toLong))
+    val tags = log.versions.map(log.tagOf)
+    for (w <- 0 until writers; r <- 0 until rounds)
+      assert(tags.count(_ == s"w$w@$r") == 1, s"w$w@$r in $tags")
+    assert(log.snapshot(n - 1L).length == n)
+  }
+
   test("torn commit drill: a crashed writer's tmp is invisible, the " +
       "next commit proceeds, and a claimed version cannot be overwritten") {
     import SparkSpec.spark.implicits._
@@ -465,7 +552,7 @@ class TableLogSpec extends SparkSpec {
     // The stale claim must FAIL, never overwrite history.
     java.nio.file.Files.write(logDir.resolve("v000000000002.commit"),
       "tag:rival".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    intercept[java.nio.file.FileAlreadyExistsException] {
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
       log.commit(Seq(TableLog.Remove("x")), tag = "loser",
         atVersion = Some(2L))
     }
@@ -506,7 +593,8 @@ class TableLogSpec extends SparkSpec {
     (8 until 12).foreach { i =>
       log.commit(Seq(TableLog.Add(f(i)), TableLog.Remove(s"f${i - 2}")))
     }
-    def live(v: Int) = Set(s"f${v - 1}", s"f$v")
+    // a relative entry is root-relative: snapshots serve it resolved
+    def live(v: Int) = Set(s"$root/f${v - 1}", s"$root/f$v")
     // above the checkpoint: base = ckpt(7) + replay of 8..11
     assert(TableLog.open(root).snapshot(11L).map(_.path).toSet == live(11))
     // at the checkpoint exactly
@@ -514,7 +602,7 @@ class TableLogSpec extends SparkSpec {
     // BELOW the checkpoint: time travel still replays from v0
     assert(TableLog.open(root).snapshot(5L).map(_.path).toSet == live(5))
     // stats survive the checkpoint round trip
-    val e = TableLog.open(root).snapshot(11L).find(_.path == "f11").get
+    val e = TableLog.open(root).snapshot(11L).find(_.path == s"$root/f11").get
     assert(e.minKey == 11L && e.maxKey == 11L && e.nRows == 1L)
   }
 
@@ -619,8 +707,9 @@ class TableLogSpec extends SparkSpec {
       Seq(TableLog.Add(fe("mine", 2L)))
     }
     assert(v == 2L && log.latestVersion.contains(2L))
+    // a relative entry is root-relative: snapshots serve it resolved
     assert(log.snapshot(2L).map(_.path).toSet ==
-      Set("f0", "intruder", "mine"))
+      Set("f0", "intruder", "mine").map(n => s"$root/$n"))
     // rewrite conflict: the intruder removes f0 first; blind retry
     // would double-apply the rewrite, so the loser must abort
     var first2 = true
@@ -634,7 +723,7 @@ class TableLogSpec extends SparkSpec {
     }
     // the winner's rewrite stands; the loser published nothing
     assert(log.snapshot(log.latestVersion.get).map(_.path).toSet ==
-      Set("intruder", "mine", "theirs"))
+      Set("intruder", "mine", "theirs").map(n => s"$root/$n"))
   }
 
   test("tagged commits are the streaming idempotence key: tagVersion " +
