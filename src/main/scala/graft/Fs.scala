@@ -83,6 +83,10 @@ object Fs {
     val tmp = stage(fs, p, body)
     fs match {
       case _: RawLocalFileSystem =>
+        // a target once written through the checksummed `file:`
+        // filesystem keeps its `.<name>.crc`, which would fail every
+        // checksummed read of the new bytes: drop it before they land
+        fs.delete(new Path(p.getParent, s".${p.getName}.crc"), false)
         if (!fs.rename(tmp, p)) {
           fs.delete(tmp, false)
           sys.error(s"writeAtomic: rename $tmp -> $p failed")

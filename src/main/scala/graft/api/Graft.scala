@@ -1210,9 +1210,14 @@ object Graft {
       *
       * The search RUNS when called: it serves from the index
       * generation's driver snapshot (codebook, idf, avgdl — loaded
-      * once per generation), collects both towers' candidates in one
-      * Spark action, fuses them on the driver, and returns the hits
-      * as a local frame, so collecting it runs no further job.
+      * once per generation). When the serving layouts fit the
+      * driver's budget, the snapshot also holds a copy of them
+      * (postings, IVF lists and the tiers' codes, each loaded on
+      * first use), and both towers rank on the driver with no Spark
+      * job; a larger index collects both towers' candidates in one
+      * Spark action. Either way the candidates fuse on the driver
+      * and the hits return as a local frame, so collecting it runs
+      * no further job.
       *
       * `tier` picks the dense tower's quantization: `int16` (the
       * stored codes, 2 B/dim), `sq8` (1 B/dim), `pq` (1 B/subspace),

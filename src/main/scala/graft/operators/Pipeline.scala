@@ -1659,18 +1659,8 @@ object Pipeline {
       k: Int, nProbe: Int,
       probeCids: Option[Seq[Int]] = None): DataFrame = {
     val tier = snap.pq
-    val sub = tier.sub
     val cids = probeCids.getOrElse(probeCidsOf(snap, qU16, nProbe))
-    val q = qU16.map(_.toDouble).toArray
-    // dt(mi)(j) = q_sv · codeword_j — ascending-index fold, the same
-    // sequential sum DuckDB's list_dot_product computes
-    val dt = Array.tabulate(pqM) { mi =>
-      val qsv = q.slice(mi * sub, mi * sub + sub)
-      tier.books(mi).map { cw =>
-        var s = 0.0; var i = 0
-        while (i < qsv.length) { s += qsv(i) * cw(i); i += 1 }; s
-      }
-    }
+    val dt = pqDotTables(tier, qU16)
     tier.frame
       .filter(col("cid").isin(cids.map(c => c: Any): _*))
       .select(col("vec_id").as("doc_id"),
@@ -1678,6 +1668,22 @@ object Pipeline {
             element_at(typedLit(dt(mi).toSeq), col(s"code$mi") + 1))
           .reduce(_ + _) * 10000 + 0.5) / 10000.0).as("ip_est"))
       .orderBy(col("ip_est").desc, col("doc_id")).limit(k)
+  }
+
+  /** The query's per-subspace dot tables under a PQ tier:
+    * dt(mi)(j) = q_sv · codeword_j, an ascending-index fold, the same
+    * sequential sum DuckDB's list_dot_product computes.
+    */
+  private[graft] def pqDotTables(tier: PqTier,
+      qU16: Seq[Long]): Array[Array[Double]] = {
+    val q = qU16.map(_.toDouble).toArray
+    Array.tabulate(pqM) { mi =>
+      val qsv = q.slice(mi * tier.sub, mi * tier.sub + tier.sub)
+      tier.books(mi).map { cw =>
+        var s = 0.0; var i = 0
+        while (i < qsv.length) { s += qsv(i) * cw(i); i += 1 }; s
+      }
+    }
   }
 
   /** s11's exact-refinement stage over the staged tiers: the SQ8
@@ -1856,8 +1862,9 @@ object Pipeline {
     * re-pay). Every mutation path bumps the stamp (see
     * [[bumpTowersGen]]), so a memoized FileIndex can never serve a
     * mutated root; a root with no stamp never memoizes. Bounded:
-    * wholesale eviction past 64 entries (scratch roots in specs would
-    * otherwise accumulate).
+    * minting a root's generation drops that root's other generations,
+    * and the map clears wholesale past 64 entries (scratch roots in
+    * specs would otherwise accumulate).
     */
   private val towerTables = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String, String), ServedTowers]()
@@ -1870,10 +1877,13 @@ object Pipeline {
     * weights are vocabulary-sized and load by two collects on first
     * use (lazily, so a caller that only reads tables never pays
     * them, and outside the memo's bin lock, because they run jobs).
+    *
+    * A memoized generation may also hold a [[ResidentTowers]] copy of
+    * its serving layouts, so a hybrid search runs no Spark job.
     */
   private[graft] final class ServedTowers(
       val spark: org.apache.spark.sql.SparkSession, val root: String,
-      val tables: Map[String, DataFrame]) {
+      val tables: Map[String, DataFrame], memoized: Boolean) {
     val nLex: Int = layoutOf(root)._2
     lazy val codebook: graft.expressions.PlaneMatrix =
       graft.streaming.Streams.loadCodebook(root).getOrElse(
@@ -1895,11 +1905,40 @@ object Pipeline {
     lazy val pq: PqTier = labeled(spark, "serve: load pq tier") {
       pqTierOf(spark, root)
     }
+    /** The driver copy of this generation's serving layouts, when the
+      * memo's copies leave room for it ([[ResidentTowers.fits]]); None
+      * serves through Spark. Decided once, on the generation's first
+      * hybrid search. An unmemoized snapshot lives for one call, so a
+      * copy would be loaded for one search: it never gets one.
+      */
+    lazy val resident: Option[ResidentTowers] =
+      if (memoized) admitResident(this) else None
+    // the heap bytes `resident` reserved, 0 without a copy
+    @volatile private[Pipeline] var residentBytes: Long = 0L
+  }
+
+  /** Decide [[ServedTowers.resident]] against the copies the memo
+    * already holds. The size is the serving layouts' parquet bytes as
+    * their resolved file indexes report them, so no listing runs.
+    */
+  private def admitResident(snap: ServedTowers): Option[ResidentTowers] = {
+    val bytes = inputBytesOf(snap.tables("tf_b")) +
+      inputBytesOf(snap.tables("enc_ivf"))
+    towerTables.synchronized {
+      var held = 0L
+      towerTables.values.forEach(s => held += s.residentBytes)
+      if (!ResidentTowers.fits(bytes, Runtime.getRuntime.maxMemory, held))
+        None
+      else {
+        snap.residentBytes = ResidentTowers.heapBytes(bytes)
+        Some(new ResidentTowers(snap))
+      }
+    }
   }
 
   private[graft] def servedAt(spark: org.apache.spark.sql.SparkSession,
       d: String): ServedTowers = {
-    def fresh(): ServedTowers = {
+    def fresh(memoized: Boolean): ServedTowers = {
       // resolve each table ONCE (parquet partition discovery is the
       // very cost this memo exists to bound — `dense` projects the
       // already-resolved enc_ivf instead of re-discovering the
@@ -1912,7 +1951,7 @@ object Pipeline {
         // readers (and the oracle/equality dumps) see the logical
         // schema on bucketed and legacy roots alike
         n -> (if (df.columns.contains("db")) df.drop("db") else df)
-      } + ("dense" -> raw("enc_ivf").select("vec_id", "cid")))
+      } + ("dense" -> raw("enc_ivf").select("vec_id", "cid")), memoized)
     }
     graft.Fs.read(s"$d/towers.gen").map(_.trim) match {
       case Some(gen) =>
@@ -1920,9 +1959,27 @@ object Pipeline {
         // keyed on the session OBJECT (reference equality) — an
         // identity hash can collide across sessions and would hand
         // one session's plan-bound DataFrames to another
-        towerTables.computeIfAbsent((spark, d, gen), _ => fresh())
-      case None => fresh()
+        var minted = false
+        val snap = towerTables.computeIfAbsent((spark, d, gen),
+          { _ => minted = true; fresh(memoized = true) })
+        // the stamp on disk names the root's current generation, so no
+        // later search asks for the others: drop them, with their
+        // driver copies
+        if (minted) towerTables.keySet.removeIf(k =>
+          (k._1 eq spark) && k._2 == d && k._3 != gen)
+        snap
+      case None => fresh(memoized = false)
     }
+  }
+
+  /** How many generations of `d` the memo holds for `spark` — spec
+    * access.
+    */
+  private[graft] def servedGenerations(
+      spark: org.apache.spark.sql.SparkSession, d: String): Int = {
+    var n = 0
+    towerTables.keySet.forEach(k => if ((k._1 eq spark) && k._2 == d) n += 1)
+    n
   }
 
   private[graft] def ragTablesAt(
@@ -2297,9 +2354,11 @@ object Pipeline {
 
   /** Hybrid serving over any built index root — p3's exact chain
     * (staged-BM25 tower + pruned quantized-dot tower, RRF-fused),
-    * shared by the gated p3 and the `Graft.ragIndex` facade. Both
-    * towers' top-`kList` come back in ONE action, tagged by tower,
-    * and [[rrfFuseRows]] fuses those ≤ 2·kList rows on the driver;
+    * shared by the gated p3 and the `Graft.ragIndex` facade. A
+    * generation with a driver copy ([[ServedTowers.resident]]) ranks
+    * both towers' top-`kList` on the driver and runs no Spark job;
+    * otherwise both lists come back in ONE action, tagged by tower.
+    * [[rrfFuseRows]] fuses those ≤ 2·kList rows on the driver, and
     * the hits return as a local frame (its collect runs no job).
     */
   private[graft] def serveHybrid(
@@ -2308,6 +2367,40 @@ object Pipeline {
       rrfK: Int, nProbe: Int, tier: String = "int16",
       overFetch: Int = 4): DataFrame = {
     val snap = servedAt(spark, d)
+    val lists = snap.resident.fold(sparkHybridLists(snap, terms, qU16,
+        kList, nProbe, tier, overFetch))(
+      _.hybridLists(terms, qU16, kList, nProbe, tier, overFetch))
+    localHits(spark, lists, kOut, rrfK)
+  }
+
+  /** [[serveHybrid]] through its Spark branch whatever the budget
+    * says: the path of an index too large for the driver, and the
+    * reference the driver copy is tested against.
+    */
+  private[graft] def serveHybridOnSpark(
+      spark: org.apache.spark.sql.SparkSession, d: String,
+      terms: Seq[String], qU16: Seq[Long], kList: Int, kOut: Int,
+      rrfK: Int, nProbe: Int, tier: String,
+      overFetch: Int): DataFrame =
+    localHits(spark, sparkHybridLists(servedAt(spark, d), terms, qU16,
+      kList, nProbe, tier, overFetch), kOut, rrfK)
+
+  private def localHits(spark: org.apache.spark.sql.SparkSession,
+      lists: Seq[Seq[(Long, Double)]], kOut: Int, rrfK: Int): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rrfFuseRows(lists, kOut, rrfK): _*),
+      searchSchema)
+
+  private[graft] def unknownTier(tier: String): Nothing =
+    sys.error(s"unknown dense tier '$tier' " +
+      "(int16 | sq8 | pq | sq8_rerank | pq_rerank)")
+
+  /** Both towers' ranked top-`kList`, (BM25, dense), from one Spark
+    * action.
+    */
+  private def sparkHybridLists(snap: ServedTowers, terms: Seq[String],
+      qU16: Seq[Long], kList: Int, nProbe: Int, tier: String,
+      overFetch: Int): Seq[Seq[(Long, Double)]] = {
     val lex = bm25Staged(snap, terms, kList)
     // the dense tower's quantization tier: every tier emits a
     // (doc_id, score)-ranked frame under the tower's inner-product
@@ -2322,17 +2415,29 @@ object Pipeline {
         denseTopRerank(snap, qU16, kList, nProbe, overFetch)
       case "pq_rerank" =>
         denseTopRerank(snap, qU16, kList, nProbe, overFetch, "pq")
-      case other => sys.error(s"unknown dense tier '$other' " +
-        "(int16 | sq8 | pq | sq8_rerank | pq_rerank)")
+      case other => unknownTier(other)
     }
     val rows = lex.select(lit(0).as("tower"), col("doc_id"), col("score"))
       .union(dense.select(lit(1).as("tower"), col("doc_id"), col("score")))
       .collect()
-    val lists = Seq(0, 1).map(t => rows.toSeq.filter(_.getInt(0) == t)
+    Seq(0, 1).map(t => rows.toSeq.filter(_.getInt(0) == t)
       .map(r => (r.getLong(1), r.getDouble(2))))
-    spark.createDataFrame(
-      java.util.Arrays.asList(rrfFuseRows(lists, kOut, rrfK): _*),
-      searchSchema)
+  }
+
+  /** Spark's descending double order (NaN first, -0.0 == 0.0), ids up:
+    * how every ranked list of the serve path orders (score, id).
+    */
+  private[graft] def rankedBefore(a: (Long, Double),
+      b: (Long, Double)): Boolean = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+      .compareDoubles(b._2, a._2)
+    c < 0 || (c == 0 && a._1 < b._1)
+  }
+
+  /** `x` rounded half-up to `scale` places by Spark's own `Round`. */
+  private[graft] def sparkRound(x: Double, scale: Int): Double = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    Round(Literal(x), Literal(scale)).eval().asInstanceOf[Double]
   }
 
   /** [[graft.api.Graft.rrfFuse]] over driver-side ranked lists of
@@ -2344,20 +2449,13 @@ object Pipeline {
     */
   private[graft] def rrfFuseRows(lists: Seq[Seq[(Long, Double)]], k: Int,
       rrfK: Int): Seq[Row] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
-    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    // Spark's descending double order (NaN first, -0.0 == 0.0), ids up
-    def before(a: (Long, Double), b: (Long, Double)): Boolean = {
-      val c = compareDoubles(b._2, a._2)
-      c < 0 || (c == 0 && a._1 < b._1)
-    }
-    val ranks = lists.map(_.sortWith(before).map(_._1).zipWithIndex
+    val ranks = lists.map(_.sortWith(rankedBefore).map(_._1).zipWithIndex
       .map { case (id, i) => id -> (i + 1) }.toMap)
     lists.flatMap(_.map(_._1)).distinct.map { id =>
       val rs = ranks.map(_.get(id))
       val raw = rs.map(_.fold(0.0)(r => 1.0 / (rrfK + r))).reduce(_ + _)
-      (id, Round(Literal(raw), Literal(6)).eval().asInstanceOf[Double], rs)
-    }.sortWith((a, b) => before((a._1, a._2), (b._1, b._2))).take(k)
+      (id, sparkRound(raw, 6), rs)
+    }.sortWith((a, b) => rankedBefore((a._1, a._2), (b._1, b._2))).take(k)
       .map { case (id, rrf, rs) =>
         Row.fromSeq(Seq[Any](id, rrf) ++ rs.map(_.map(Int.box).orNull))
       }

@@ -503,6 +503,9 @@ object Search {
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
 
+  private val bm25K1 = 1.2
+  private val bm25B = 0.75
+
   /** The ONE BM25 contribution tree (k1 = 1.2, b = 0.75) every
     * scorer shares — inline ([[bm25Scores]]), staged
     * ([[bm25ScoresStaged]]) and the eval harness (r19); expects
@@ -510,9 +513,18 @@ object Search {
     * and inline rankings cannot drift apart under a future tuning.
     */
   private[graft] def bm25ContribCol: org.apache.spark.sql.Column = {
-    val k1 = 1.2; val b = 0.75
+    val k1 = bm25K1; val b = bm25B
     col("idf_bm") * col("tf") * (k1 + 1) /
       (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl")))
+  }
+
+  /** [[bm25ContribCol]] on driver doubles, operation for operation in
+    * the same order, so a driver-side score is bit-equal to Spark's.
+    */
+  private[graft] def bm25Contrib(idf: Double, tf: Double, dl: Double,
+      avgdl: Double): Double = {
+    val k1 = bm25K1; val b = bm25B
+    idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) + b * dl / avgdl))
   }
 
   /** The UNLIMITED per-doc BM25 scores (rounded) — [[searchBm25From]]

@@ -72,7 +72,9 @@ object Streams {
     * table is a single read-only file. Stage: split at the median of
     * `splitCol` (event time for events, doc id for documents) into
     * two parquet files written in arrival order (file source picks
-    * them up oldest-modified first).
+    * them up oldest-modified first). The staged dir serves every later
+    * stream over the file, so it lives until `Staging`'s shutdown
+    * cleanup; each half's write dir goes once its file has landed.
     */
   private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stagedDir(t: Tables, file: String,
@@ -84,7 +86,7 @@ object Streams {
       graft.Registries.bump()
       val f = file
       val spark = t.spark
-      val dir = graft.Fs.tempDir("stream")
+      val dir = graft.Staging.scratch("stream")
       val all = spark.read.parquet(f)
       // approxQuantile only takes numeric columns; split timestamps
       // on their epoch-µs image (order-isomorphic, so the halves are
@@ -105,9 +107,11 @@ object Streams {
         // for partition columns), move the data file in, and pin
         // modification times so the source replays batch 0 first
         val out = graft.Fs.tempDir("stage_out")
-        keyed.filter(cond).drop("__graft_split").coalesce(1)
-          .write.mode("overwrite").parquet(out)
-        landPart(out, s"$dir/${i}_events.parquet", 2 - i)
+        try {
+          keyed.filter(cond).drop("__graft_split").coalesce(1)
+            .write.mode("overwrite").parquet(out)
+          landPart(out, s"$dir/${i}_events.parquet", 2 - i)
+        } finally { graft.Fs.deleteTree(out); () }
       }
       dir
     })
@@ -835,7 +839,8 @@ object Streams {
       .withColumn("tk", graft.functions.Text.tokenize(col("text")))
       .filter(size(col("tk")) > 0)
       .select("doc_id", "tk")
-    val outDir = graft.Fs.tempDir("st12_out")
+    // the returned frame reads it: it lives until the JVM exits
+    val outDir = graft.Staging.scratch("st12_out")
     val q = trainToks.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.operators.Dedup.scrubTokens(batch.toDF(), bench, k)

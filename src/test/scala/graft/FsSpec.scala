@@ -23,8 +23,10 @@ class GraftFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   * scheme: one winner per claimed path, an atomic replace that is never
   * absent or torn, and one cross-section of every durable root (a table
   * log, a state root, a RagIndex and their torn-write drills) that
-  * behaves on the other scheme as it does locally. Plus the guard that
-  * keeps every filesystem call behind `graft.Fs`.
+  * behaves on the other scheme as it does locally. Plus what must not
+  * be left behind (a stale `.crc` beside a replaced file, a stream
+  * query's temp dirs), and the guard that keeps every filesystem call
+  * behind `graft.Fs`.
   */
 class FsSpec extends SparkSpec {
   spark.sparkContext.hadoopConfiguration
@@ -172,6 +174,43 @@ class FsSpec extends SparkSpec {
     assert(!operators.Pipeline.tornMarked(root))
     assert(hitDocs() == after)
     assertNoStray()
+  }
+
+  test("writeAtomic drops a stale .crc, so a checksummed read of the " +
+      "replaced file sees its new bytes") {
+    val d = Staging.scratch("crc")
+    try {
+      val local = org.apache.hadoop.fs.FileSystem
+        .getLocal(spark.sparkContext.hadoopConfiguration)
+      val p = new org.apache.hadoop.fs.Path(s"$d/stamp")
+      val out = local.create(p, true)
+      try out.write("old\n".getBytes("UTF-8")) finally out.close()
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(d, ".stamp.crc")))
+      Fs.writeAtomic(s"$d/stamp", "a longer, newer body\n")
+      val in = local.open(p)
+      try assert(new String(in.readAllBytes(), "UTF-8") == "a longer, newer body\n")
+      finally in.close()
+    } finally Staging.release(d)
+  }
+
+  test("a stream query's write dirs go once their files land, and its " +
+      "staged and sink dirs are held for the exit cleanup") {
+    val d = Staging.scratch("docs_src")
+    def count(prefix: String): Int = {
+      val s = java.nio.file.Files.list(
+        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+      try s.filter(_.getFileName.toString.startsWith(prefix)).count().toInt
+      finally s.close()
+    }
+    val prefixes = Seq("graft_stage_out_", "graft_stream_", "graft_st12_out_")
+    try {
+      Fs.copy(s"$sf/documents.parquet", s"$d/documents.parquet")
+      val (before, keys0) = (prefixes.map(count), Staging.scratchKeys)
+      assert(Streams.st12StreamOverlapScrub(Tables(spark, d)).count() > 0L)
+      assert(prefixes.map(count).zip(before).map { case (a, b) => a - b } ==
+        Seq(0, 1, 1))
+      assert(Staging.scratchKeys - keys0 == 2)
+    } finally Staging.release(d)
   }
 
   test("java.nio.file and getFileSystem appear only behind graft.Fs") {

@@ -2,17 +2,20 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.api.Graft
-import graft.operators.{Embed, Pipeline, Search}
+import graft.operators.{Embed, Pipeline, ResidentTowers, Search}
 
 /** A hybrid search served from the generation's driver snapshot: it
   * answers exactly what the broadcast-idf chain with a list-choice
-  * job and Spark-side RRF answered, across add and remove waves, in
-  * at most two Spark jobs per int16 search.
+  * job and Spark-side RRF answered, across add and remove waves. With
+  * the driver copy of the serving layouts it runs no Spark job; the
+  * Spark branch, which serves indexes too large for the driver, runs
+  * at most two per int16 search and answers the same.
   */
 class ServeSnapshotSpec extends SparkSpec {
 
@@ -175,34 +178,95 @@ class ServeSnapshotSpec extends SparkSpec {
     } finally graft.Fs.deleteTree(root)
   }
 
-  test("an int16 search runs at most two Spark jobs, and collecting " +
-      "its hits runs none") {
-    val root = java.nio.file.Files.createTempDirectory("graft_snap_jobs_").toString
+  /** Spark jobs `f` starts, counted with the listener bus drained. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
     try {
-      val base = 1L to 40L
-      val idx = Graft.ragIndex(docs(base, 21L), "doc_id", "filepath", "lang",
-        "text", stateRoot = Some(root))
-      val qs = queries(8, 22L, base)
-      // the generation's first search loads its weights
-      idx.search(qs.head).collect()
-      val jobs = new AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try qs.foreach { q =>
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        jobs.set(0)
-        val hits = idx.search(q)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        val searchJobs = jobs.getAndSet(0)
-        hits.collect()
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        assert(searchJobs <= 2, s"'$q' ran $searchJobs jobs")
-        assert(jobs.get == 0, s"collecting '$q''s hits ran ${jobs.get} jobs")
-      } finally spark.sparkContext.removeSparkListener(listener)
-    } finally graft.Fs.deleteTree(root)
+      val out = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** An index over 40 docs that the next two tests share. */
+  private lazy val shared: (Graft.RagIndex, Seq[String]) = {
+    val root = Staging.scratch("snap_jobs")
+    val base = 1L to 40L
+    (Graft.ragIndex(docs(base, 21L), "doc_id", "filepath", "lang", "text",
+      stateRoot = Some(root)), queries(24, 22L, base).distinct)
+  }
+
+  private def onSpark(idx: Graft.RagIndex, q: String, tier: String) =
+    Pipeline.serveHybridOnSpark(spark, idx.root, Graft.tokenizeQuery(q),
+      Embed.u16Of(q, Embed.dim), kList, kOut, rrfK, nProbe, tier, overFetch)
+
+  test("with the driver copy loaded a search runs no Spark job and " +
+      "compiles no class on any tier; the Spark branch runs at most two " +
+      "jobs; collecting either's hits runs none") {
+    val (idx, qs) = shared
+    assert(qs.size >= 20)
+    // each tier's first search loads its layouts
+    tiers.foreach(tier => newSearch(idx, qs.head, tier).collect())
+    assert(Pipeline.servedAt(spark, idx.root).resident.isDefined)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (q <- qs; tier <- tiers) {
+      val (hits, searchJobs) = jobsOf(newSearch(idx, q, tier))
+      assert(searchJobs == 0, s"'$q' on $tier ran $searchJobs jobs")
+      assert(jobsOf(hits.collect())._2 == 0, s"collecting '$q' on $tier")
+    }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 == 0,
+      "driver-copy searches compiled codegen classes")
+    for (q <- qs.take(4)) {
+      val (hits, searchJobs) = jobsOf(onSpark(idx, q, "int16"))
+      assert(searchJobs <= 2, s"'$q' on Spark ran $searchJobs jobs")
+      assert(jobsOf(hits.collect())._2 == 0, s"collecting '$q' on Spark")
+    }
+  }
+
+  test("the driver copy answers what the Spark branch answers, on " +
+      "every tier") {
+    val (idx, qs) = shared
+    for (q <- qs.take(10); tier <- tiers)
+      assert(newSearch(idx, q, tier).collect().toSeq ==
+        onSpark(idx, q, tier).collect().toSeq, s"tier $tier, query '$q'")
+    intercept[RuntimeException](newSearch(idx, qs.head, "int8"))
+    intercept[RuntimeException](onSpark(idx, qs.head, "int8"))
+  }
+
+  test("the driver-copy budget admits a copy inside the heap share and " +
+      "refuses one past it, counting the copies already held") {
+    val heap = 1L << 30
+    val cap = (heap * ResidentTowers.heapShare).toLong
+    val most = (cap / ResidentTowers.heapPerParquetByte).toLong
+    assert(ResidentTowers.heapBytes(most) <= cap)
+    assert(ResidentTowers.fits(most, heap, 0L))
+    assert(!ResidentTowers.fits(most + 1000L, heap, 0L))
+    assert(ResidentTowers.fits(0L, heap, cap))
+    assert(!ResidentTowers.fits(most, heap, 1000L))
+    assert(ResidentTowers.fits(most / 2, heap,
+      ResidentTowers.heapBytes(most / 2)))
+    assert(!ResidentTowers.fits(1L, 0L, 0L))
+  }
+
+  test("after an add and a remove the memo holds one generation of " +
+      "the root") {
+    val root = Staging.scratch("snap_gens")
+    val idx = Graft.ragIndex(docs(1L to 12L, 41L), "doc_id", "filepath",
+      "lang", "text", stateRoot = Some(root))
+    idx.search("w1 w2").collect()
+    assert(idx.add(docs(13L to 14L, 42L), "doc_id", "filepath", "lang",
+      "text") == 2L)
+    idx.search("w1 w2").collect()
+    assert(idx.remove(Seq(3L)) == 1L)
+    idx.search("w1 w2").collect()
+    assert(Pipeline.servedGenerations(spark, root) == 1)
+    Staging.release(root)
   }
 
   test("the driver-side fuse equals Graft.rrfFuse: tied scores, ids " +
