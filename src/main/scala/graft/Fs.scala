@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext,
-  FileSystem, FileUtil, LocalFileSystem, Options, Path,
+  FileStatus, FileSystem, FileUtil, LocalFileSystem, Options, Path,
   RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
@@ -147,12 +147,42 @@ object Fs {
       else if (e.name.endsWith(suffix)) Seq(e)
       else Nil)
 
+  /** The status of every file under `dir`, at any depth; empty when
+    * `dir` does not exist.
+    */
+  def leafStatuses(dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = fsOf(p)
+    def walk(q: Path): Seq[FileStatus] =
+      try fs.listStatus(q).toSeq.flatMap(s =>
+        if (s.isDirectory) walk(s.getPath) else Seq(s))
+      catch { case _: FileNotFoundException => Nil }
+    walk(p)
+  }
+
   /** Rename `src` to `dst`, creating `dst`'s parent. */
   def move(src: String, dst: String): Unit = {
     val (s, d) = (new Path(src), new Path(dst))
     val fs = fsOf(s)
     fs.mkdirs(d.getParent)
     if (!fs.rename(s, d)) sys.error(s"move $s -> $d failed")
+  }
+
+  /** Move every file under the dir `src` to its relative path under
+    * `dst`, renaming a whole dir where `dst` has none yet: a file-by-file
+    * move creates each missing dir, and a created dir's permission is
+    * set by forking `chmod` where Hadoop has no native library (~6 ms a
+    * file into a fresh table, measured).
+    */
+  def mergeInto(src: String, dst: String): Unit = {
+    val fs = fsOf(new Path(src))
+    def go(a: FileStatus, b: Path): Unit =
+      if (!fs.exists(b)) {
+        if (!fs.rename(a.getPath, b)) sys.error(s"move ${a.getPath} -> $b failed")
+      } else if (a.isDirectory && fs.getFileStatus(b).isDirectory)
+        fs.listStatus(a.getPath).foreach(c => go(c, new Path(b, c.getPath.getName)))
+      else sys.error(s"mergeInto: $b exists")
+    go(fs.getFileStatus(new Path(src)), new Path(dst))
   }
 
   /** Copy the file or tree at `src` to `dst`. */

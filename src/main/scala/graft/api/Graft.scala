@@ -1245,10 +1245,11 @@ object Graft {
       * build's PINNED codebook — st15's contract), an exact-integer
       * stats rollup, and a vocab-sized idf merge, all bit-equal to a
       * full rebuild on the union corpus (spec-drilled). Chunking and
-      * encode reuse the persisted build knobs (towers.meta).
+      * encode reuse the build knobs the root's log commits.
       * Already-indexed doc ids are dropped (re-adding is a no-op).
-      * Single-writer; a torn add repairs via [[rebuild]]. Returns
-      * the number of NEW docs indexed.
+      * Single-writer; the wave lands in ONE log commit, so an add
+      * that fails leaves the index as it was and its retry adds the
+      * docs. Returns the number of NEW docs indexed.
       */
     def add(df: DataFrame, idCol: String, pathCol: String,
         langCol: String, textCol: String, batchSize: Int = 32): Long =
@@ -1263,8 +1264,10 @@ object Graft {
       * its exact integers and `idf` merges the victims' df down —
       * bit-equal to a pinned-codebook rebuild on the surviving corpus
       * (spec-drilled). Unknown ids are ignored; quantization-tier
-      * layouts invalidate (same as [[add]]). Single-writer; a torn
-      * remove repairs via [[rebuild]]. Returns the docs removed.
+      * layouts invalidate (same as [[add]]). Single-writer; the wave
+      * lands in ONE log commit, so a remove that fails leaves the
+      * index serving exactly what it served, and its retry removes
+      * the docs. Returns the docs removed.
       */
     def remove(ids: DataFrame): Long =
       graft.operators.Pipeline.removeFromTowers(spark, root, ids)
@@ -1273,18 +1276,17 @@ object Graft {
       import spark.implicits._
       remove(ids.toDF("doc_id"))
     }
-    /** Re-derive every tower from the landed `routed` table under
-      * the build's pinned codebook — the repair for a torn [[add]]
-      * (every tower is a deterministic function of routed + the
-      * codebook), and the compaction that folds accumulated append
-      * files back into one-file-per-partition layouts.
+    /** Re-derive every tower from the committed `routed` table under
+      * the build's pinned codebook (every tower is a deterministic
+      * function of routed + the codebook) — the compaction that folds
+      * accumulated append files back into one-file-per-partition
+      * layouts. One log commit, like every wave.
       */
     def rebuild(): Unit = {
-      val (size, step, d0) = graft.operators.Pipeline
-        .loadTowersMeta(root).getOrElse(sys.error(
-          s"no towers.meta at $root — not a built index root"))
-      graft.operators.Pipeline.buildTowers(spark, root, size, step,
-        d0, graft.streaming.Streams.loadCodebook(root))
+      val m = graft.operators.Pipeline.towersMetaOf(root).getOrElse(
+        sys.error(s"no towers layout at $root — not a built index root"))
+      graft.operators.Pipeline.buildTowers(spark, root, m.size, m.step,
+        m.dim, graft.streaming.Streams.loadCodebook(root))
     }
     /** Self-retrieval quality of THIS index (r19_staged's
       * measurement): each of the first `nQueries` docs' first chunk

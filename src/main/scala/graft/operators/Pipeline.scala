@@ -2,7 +2,11 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.Text
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -305,82 +309,89 @@ object Pipeline {
       math.max(0L, walk(df.queryExecution.analyzed))
     } catch { case scala.util.control.NonFatal(_) => 0L }
 
-  /** Land a routing pass's output as `$d/routed` and build every
-    * tower — ONE write of routed when the corpus is file-backed: nDb
-    * derives from the input's measured file bytes and routed lands
-    * db-partitioned directly, so [[buildTowers]] skips its re-stage
-    * (round 16 wrote the whole routed table twice per build — landed
-    * flat by the routing pass, then re-staged to attach db; at
-    * 100 TB that second write is a full-corpus pass). buildTowers
-    * still re-derives the target count from the LANDED bytes and
-    * re-stages if the input-bytes estimate drifted past 4× — the
-    * self-correcting fallback costs exactly what every build used to
-    * pay.
+  /** Land a routing pass's output as the root's `routed` and build
+    * every tower in the same wave — ONE write of routed when the corpus
+    * is file-backed: nDb derives from the input's measured file bytes
+    * and routed lands db-partitioned directly, so the build skips its
+    * re-stage (round 16 wrote the whole routed table twice per build —
+    * landed flat by the routing pass, then re-staged to attach db; at
+    * 100 TB that second write is a full-corpus pass). The build still
+    * re-derives the target count from the LANDED bytes and re-stages
+    * if the input-bytes estimate drifted past 4× — the self-correcting
+    * fallback costs exactly what every build used to pay.
     */
   private[graft] def landRoutedAndBuild(
       spark: org.apache.spark.sql.SparkSession, d: String,
       routedDf: DataFrame, size: Int, step: Int,
-      dim: Int = Embed.dim): Unit = {
-    val inBytes = inputBytesOf(routedDf)
-    if (inBytes > 0) {
-      val nDb = docBucketsFor(inBytes)
-      routedDf.withColumn("db", docBucket(col("doc_id"), nDb))
-        .repartition(col("db"))
-        .write.mode("overwrite").partitionBy("db").parquet(s"$d/routed")
-      buildTowers(spark, d, size, step, dim, nDbPre = Some(nDb))
-    } else {
-      routedDf.write.mode("overwrite").parquet(s"$d/routed")
-      buildTowers(spark, d, size, step, dim)
+      dim: Int = Embed.dim): Unit =
+    towersWave(d) { (snap, w) =>
+      val inBytes = inputBytesOf(routedDf)
+      val nDbPre =
+        if (inBytes > 0) {
+          val nDb = docBucketsFor(inBytes)
+          routedDf.withColumn("db", docBucket(col("doc_id"), nDb))
+            .repartition(col("db"))
+            .write.mode("overwrite").partitionBy("db").parquet(s"$w/landed")
+          Some(nDb)
+        } else {
+          routedDf.write.mode("overwrite").parquet(s"$w/landed")
+          None
+        }
+      buildWave(spark, snap, w, spark.read.parquet(s"$w/landed"), size, step,
+        dim, None, nDbPre)
     }
-  }
 
-  /** The WHOLE index build from a landed `$d/routed` (doc_id, body)
-    * table: chunks, the raw TF table, the staged BM25 serving towers
-    * (stats/idf/term-bucketed postings with dl denormalized), the
-    * encode, and the cid-partitioned dense serving layout + its
-    * persisted codebook. Shared verbatim by p2's gated build (over
-    * the synthesized routing) and the `Graft.ragIndex` facade (over
-    * real user content) — one build, two front doors. `dim` threads
-    * the encoder's output dimensionality end to end (the m6
+  /** The WHOLE index build from the root's committed `routed` (doc_id,
+    * body) table: chunks, the raw TF table, the staged BM25 serving
+    * towers (stats/idf/term-bucketed postings with dl denormalized),
+    * the encode, and the cid-partitioned dense serving layout + its
+    * coarse codebook. Shared verbatim by p2's gated build (over the
+    * synthesized routing) and the `Graft.ragIndex` facade (over real
+    * user content) — one build, two front doors. `dim` threads the
+    * encoder's output dimensionality end to end (the m6
     * facade-parameter pattern; the gated p2 pins [[Embed.dim]]).
+    * `pinned` rebuilds under an EXISTING model (st15's pinned-codebook
+    * contract — `RagIndex.rebuild` and the incremental-add equality
+    * drill need assignment to stay stable); the default trains fresh.
     */
   private[graft] def buildTowers(
       spark: org.apache.spark.sql.SparkSession, d: String,
       size: Int, step: Int, dim: Int = Embed.dim,
-      pinned: Option[graft.expressions.PlaneMatrix] = None,
-      nDbPre: Option[Int] = None): Unit = {
-      // heal any torn partition swap FIRST — this build may be the
-      // documented repair for a torn mutation, and re-deriving every
-      // tower from a routed missing a bucket of survivors (stranded
-      // in routed.prev by a crash mid-swap) would drop committed docs
-      healTowers(d)
-      // INTENT: a crash anywhere in the rebuild leaves half-derived
-      // towers next to a complete routed; the armed marker makes the
-      // next mutation entry re-run this rebuild (cleared at the end)
-      armTornMarker(d, "rebuild")
+      pinned: Option[graft.expressions.PlaneMatrix] = None): Unit =
+    towersWave(d) { (snap, w) =>
+      buildWave(spark, snap, w, snap.read(spark, "routed"), size, step, dim,
+        pinned, None)
+    }
+
+  /** One build wave over `routed0` — the committed routed table, or,
+    * with `nDbPre`, the routing pass's output landed db-bucketed in
+    * `$w/landed`. Every table lands in the wave dir, and the wave's
+    * ONE commit replaces the whole pre-wave snapshot (its codebook
+    * included) and carries the layout.
+    */
+  private def buildWave(spark: org.apache.spark.sql.SparkSession,
+      snap: TowersSnapshot, w: String, routed0: DataFrame, size: Int,
+      step: Int, dim: Int, pinned: Option[graft.expressions.PlaneMatrix],
+      nDbPre: Option[Int]): Unit = {
       // LAYOUT KNOBS from MEASURED bytes (the st13 stateBucketsFor
       // law, the round-15 verdict's ask): doc-hash buckets for the
       // flat artifacts so a delete wave rewrites victim buckets, not
       // the corpus; term buckets for the postings sized by the same
       // law (32 floor — at lake scale a query's bucket read stays
-      // ~targetBucketBytes instead of vocab/32). Both persist in
-      // towers.meta so every later mutation/serve derives the same
+      // ~targetBucketBytes instead of vocab/32). Both ride the wave's
+      // commit so every later mutation/serve derives the same
       // partitioning.
-      val routedBytes = tableBytes(d, "routed")
+      val routedBytes = inputBytesOf(routed0)
       val nDbTarget = docBucketsFor(routedBytes)
       val nLex = lexBucketsFor(routedBytes)
-      // a routing pass that LANDED routed already db-partitioned
-      // (ragRoot/ragIndex over a file-backed corpus — nDbPre carries
-      // the bucket count it used) skips the re-stage below: one write
-      // of routed per build, not two (at 100 TB the second write is a
-      // full-corpus pass). The pre-landed count came from the routing
-      // INPUT's measured file bytes, so accept it only within 4× of
-      // the target the landed bytes derive — outside that window the
-      // estimate was wrong enough to matter and the re-stage
-      // self-corrects it (same write a round-16 build always paid).
+      // a routing pass that LANDED routed already db-partitioned skips
+      // the re-stage below: one write of routed per build, not two. The
+      // pre-landed count came from the routing INPUT's measured file
+      // bytes, so accept it only within 4× of the target the landed
+      // bytes derive — outside that window the estimate was wrong
+      // enough to matter and the re-stage self-corrects it
       val preOk = nDbPre.exists(n => n >= math.max(16, nDbTarget / 4)
-        && n <= nDbTarget * 4
-        && spark.read.parquet(s"$d/routed").columns.contains("db"))
+        && n <= nDbTarget * 4)
       val nDb = if (preOk) nDbPre.get else nDbTarget
       // tf_b's INNER doc level from the same measured bytes: per-term-
       // bucket postings ≈ routedBytes/nLex; subdivide by doc hash only
@@ -392,32 +403,17 @@ object Pipeline {
         graft.streaming.Streams.stateBucketsFor(
           routedBytes / math.max(1, nLex),
           targetBucketBytes = 256L << 10, floor = 1))
-      // persisted build knobs: a grow/reopen on a durable root must
-      // chunk (`size`/`step`) and encode (`dim`) with the BUILD's
-      // parameters, never the caller's defaults
-      graft.Fs.writeAtomic(s"$d/towers.meta",
-        s"$size\n$step\n$dim\n$nDb\n$nLex\n$nTfbDb\n")
-      // derived tier layouts invalidate on ANY rebuild, not only on
-      // add/remove — rebuild() is the documented repair for a TORN
-      // mutation, and a torn remove's whole rewrite window precedes
-      // its own tier-delete step: without this, a repaired root would
-      // keep serving the forgotten doc from enc_ivf_sq8/enc_ivf_pq
-      dropTierLayouts(d)
       // routed re-stages doc-bucketed unless it already landed that
-      // way (build-once cost; a rebuild over an already-bucketed
-      // routed re-derives db after the drop — layout-count migration
-      // and append-file compaction in one — so the layout stays
-      // idempotent under rebuild())
-      if (!preOk) {
-        val routed0 = spark.read.parquet(s"$d/routed")
-        labeled(spark, "build: re-stage routed db-bucketed") {
-          replaceDir(d, "routed",
-            (if (routed0.columns.contains("db")) routed0.drop("db")
-             else routed0)
-              .withColumn("db", docBucket(col("doc_id"), nDb)), Seq("db"))
-        }
+      // way (a rebuild re-derives db after the drop — layout-count
+      // migration and append-file compaction in one — so the layout
+      // stays idempotent under rebuild())
+      if (preOk) graft.Fs.move(s"$w/landed", s"$w/routed")
+      else labeled(spark, "build: re-stage routed db-bucketed") {
+        routed0.drop("db").withColumn("db", docBucket(col("doc_id"), nDb))
+          .repartition(col("db"))
+          .write.mode("overwrite").partitionBy("db").parquet(s"$w/routed")
       }
-      val routed = spark.read.parquet(s"$d/routed").drop("db")
+      val routed = spark.read.parquet(s"$w/routed").drop("db")
       // each flat artifact pays ONE build-once exchange on db for a
       // file-per-bucket layout (delete waves and bucket-pruned reads
       // then touch whole small files, never row-slices of big ones)
@@ -427,17 +423,16 @@ object Pipeline {
           col("doc_id"), col("start"), col("chunk"))
         .withColumn("db", docBucket(col("doc_id"), nDb))
         .repartition(col("db"))
-        .write.mode("overwrite").partitionBy("db").parquet(s"$d/chunks")
+        .write.mode("overwrite").partitionBy("db").parquet(s"$w/chunks")
       }
-      val ch = spark.read.parquet(s"$d/chunks").drop("db")
+      val ch = spark.read.parquet(s"$w/chunks").drop("db")
       // the SPARSE chain (tf → stats/idf/tf_b) and the DENSE chain
       // (encode → codebook → enc_ivf) depend only on the landed
       // chunks from here on — they run as CONCURRENT job groups
       // (guide §2.6: submit independent jobs from separate threads so
       // one chain's stage tails back-fill the executors the other
       // frees; the encode+train chain is compute-bound while the tf
-      // chain is shuffle/write-bound, so they overlap well). A failure
-      // on either side leaves the torn marker armed.
+      // chain is shuffle/write-bound, so they overlap well).
       graft.Concurrent.settleAll[Unit](spark)(Seq(
       "build: dense chain" -> (() => {
         // the encoded frame feeds THREE consumers (the enc write, the
@@ -457,7 +452,7 @@ object Pipeline {
         enc
           .withColumn("db", docBucketOfChunk(col("vec_id"), nDb))
           .repartition(col("db"))
-          .write.mode("overwrite").partitionBy("db").parquet(s"$d/enc")
+          .write.mode("overwrite").partitionBy("db").parquet(s"$w/enc")
         }
         // The dense tower lives in the STORED-CODE space: IVF trains
         // and assigns on the exact u16 integer code vectors (cast to
@@ -468,10 +463,6 @@ object Pipeline {
         val vecs = enc
           .select(col("vec_id"),
             transform(col("u16"), x => x.cast("double")).as("v"))
-        // `pinned` rebuilds under an EXISTING model (st15's pinned-
-        // codebook contract — the incremental-add equality drill and
-        // torn-add repair both need assignment to stay stable); the
-        // default trains fresh on this corpus
         val cb = pinned.getOrElse {
           labeled(spark, "build: train coarse codebook") {
             val n = vecs.count()
@@ -479,7 +470,7 @@ object Pipeline {
               dim = dim)
           }
         }
-        graft.streaming.Streams.saveCodebook(d, cb)
+        graft.streaming.Streams.saveCodebook(s"$w/codebook", cb)
         // serving layout: every stored code filed under its coarse
         // list, PARTITIONED BY cid — p3's probe reads ~nProbe/nLists
         // of the index via partition pruning (at 100 TB: nProbe dirs
@@ -496,7 +487,7 @@ object Pipeline {
           .select("vec_id", "u16", "cid")
           .repartition(col("cid"))
           .write.mode("overwrite").partitionBy("cid")
-          .parquet(s"$d/enc_ivf")
+          .parquet(s"$w/enc_ivf")
         }
         } finally enc.unpersist(false)
       }),
@@ -526,7 +517,7 @@ object Pipeline {
       tfAgg
         .withColumn("db", docBucketOfChunk(col("chunk_id"), nDb))
         .repartition(col("db"))
-        .write.mode("overwrite").partitionBy("db").parquet(s"$d/tf")
+        .write.mode("overwrite").partitionBy("db").parquet(s"$w/tf")
       }
       // the postings rollups fork once more: stats→idf (idf reads the
       // landed stats) and the tf_b stage are independent given tf
@@ -535,13 +526,13 @@ object Pipeline {
         // tf_b is TWO-LEVEL partitioned (tb outer for the query-side
         // term-bucket pruning literal, db inner for the delete-side
         // victim-bucket pruning): a query reads its terms' tb dirs, a
-        // delete wave swaps only the (victim tb x victim db) cells
+        // delete wave rewrites only the (victim tb x victim db) cells
         tfD.join(dlD, "doc_id")
           .withColumn("tb", Search.termBucket(col("term"), nLex))
           .withColumn("db", docBucketOfChunk(col("doc_id"), nTfbDb))
           .repartition(col("tb"), col("db"))
           .write.mode("overwrite").partitionBy("tb", "db")
-          .parquet(s"$d/tf_b")),
+          .parquet(s"$w/tf_b")),
       "build: stats + idf rollups" -> (() => {
         // stats carry the EXACT integer (nd, len_sum) alongside the
         // derived avgdl, so an incremental add updates them with long
@@ -551,22 +542,19 @@ object Pipeline {
         dlD.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))
           .select((col("len_sum").cast("double") / col("nd"))
             .as("avgdl"), col("nd"), col("len_sum"))
-          .write.mode("overwrite").parquet(s"$d/stats")
+          .write.mode("overwrite").parquet(s"$w/stats")
         tfD.groupBy("term").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(spark.read.parquet(s"$d/stats")))
+          .crossJoin(broadcast(spark.read.parquet(s"$w/stats")))
           .withColumn("idf_bm",
             log(lit(1.0) +
               (col("nd") - col("df") + 0.5) / (col("df") + 0.5)))
           .select("term", "df", "idf_bm")
-          .write.mode("overwrite").parquet(s"$d/idf")
+          .write.mode("overwrite").parquet(s"$w/idf")
       })))
       } finally { tfAgg.unpersist(false); dlD.unpersist(false); () }
       })))
-      // a completed build IS the cross-table repair — every tower
-      // just re-derived from routed, so any healed-torn-mutation
-      // marker is discharged (cleared last: a crash anywhere above
-      // leaves the marker armed and the next entry rebuilds again)
-      clearTornMarker(d)
+      publish(snap, w, "build",
+        TowersMeta(size, step, dim, nDb, nLex, nTfbDb), snap.files)
   }
 
   /** Term-bucket FLOOR for the partitioned postings layout (and the
@@ -620,7 +608,7 @@ object Pipeline {
     * law those roots were WRITTEN under, kept so they keep reading
     * and deleting correctly. Current builds derive the level from
     * measured bytes instead (collapsing to 1 on toy roots — see
-    * [[buildTowers]]) and persist it as towers.meta line 6; this cap
+    * [[buildTowers]]) and commit it in the layout tag; this cap
     * (64) still bounds both laws so the postings table's cell count
     * (nLex × this) stays listable at every scale.
     */
@@ -636,30 +624,39 @@ object Pipeline {
       graft.streaming.Streams.stateBucketsFor(routedBytes,
         floor = lexBuckets))
 
-  /** Measured parquet bytes under a staged table dir — a driver-side
-    * file listing, never a data scan.
-    */
-  private def tableBytes(d: String, name: String): Long =
-    graft.streaming.Streams.stateDirBytes(s"$d/$name")
-
-  /** The full persisted build + layout record of a towers root — the
-    * ONE towers.meta parser (build knobs and layout knobs used to
-    * parse the same file twice; a truncated meta then read as a
-    * silently-legacy layout instead of failing loudly). `nDb == 0`
-    * means a legacy flat-artifact root (pre-bucketed-layout build):
-    * the mutation paths rebuild it once to mint the layout.
+  /** The build + layout record of a towers root. `nDb == 0` means a
+    * legacy flat-artifact root (pre-bucketed-layout build): the
+    * mutation paths rebuild it once to mint the layout.
     */
   private[graft] final case class TowersMeta(size: Int, step: Int,
       dim: Int, nDb: Int, nLex: Int, nTfbDb: Int)
 
-  /** Parse towers.meta exactly once per caller: 3 lines = legacy
-    * flat root, 5 = round-16 bucketed (tf_b's inner level derived as
-    * [[tfbDocBuckets]], the law those roots were written under), 6 =
-    * current (the inner level persisted explicitly). Anything else
-    * is a corrupt root and fails loudly — a hand-edited or truncated
-    * meta must never silently serve as a different layout.
+  /** The layout every wave's commit carries in its tag, the way a
+    * StateTable rewrite carries `nb=`.
+    */
+  private def tagOf(op: String, m: TowersMeta): String =
+    s"$op:size=${m.size},step=${m.step},dim=${m.dim},nDb=${m.nDb}," +
+      s"nLex=${m.nLex},nTfbDb=${m.nTfbDb}"
+
+  private def metaOfTag(tag: String): Option[TowersMeta] = {
+    val kv = "(\\w+)=(\\d+)".r.findAllMatchIn(tag)
+      .map(m => m.group(1) -> m.group(2).toInt).toMap
+    Option.when(kv.contains("nDb"))(TowersMeta(kv("size"), kv("step"),
+      kv("dim"), kv("nDb"), kv("nLex"), kv("nTfbDb")))
+  }
+
+  /** The layout of a root: its head commit's tag; a root with no log
+    * reads the `towers.meta` file builds wrote before the log existed
+    * — 3 lines = legacy flat root, 5 = round-16 bucketed (tf_b's inner
+    * level derived as [[tfbDocBuckets]], the law those roots were
+    * written under), 6 = the inner level persisted. Anything else is a
+    * corrupt root and fails loudly — a hand-edited or truncated meta
+    * must never silently serve as a different layout.
     */
   private[graft] def towersMetaOf(d: String): Option[TowersMeta] =
+    snapshotOf(d).meta
+
+  private def legacyMetaOf(d: String): Option[TowersMeta] =
     graft.Fs.read(s"$d/towers.meta").map { body =>
       val l = body.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
       l.length match {
@@ -675,65 +672,191 @@ object Pipeline {
       }
     }
 
-  /** The layout knobs (docBuckets, lexBuckets) of a built root; no
-    * meta reads as (0, [[lexBuckets]]) — flat artifacts, 32 term
-    * buckets (the serving default for pre-meta roots).
+  /** The tables a towers root commits through its log (`$d/_log`). */
+  private val towerTables =
+    Seq("routed", "chunks", "tf", "tf_b", "idf", "stats", "enc", "enc_ivf")
+
+  /** One committed state of a towers root: the head version (None for
+    * a root with no log, whose current files stand in for it), the
+    * files it holds (tables and codebook, spelled under the root) and
+    * the layout its commit carries.
     */
-  private[graft] def layoutOf(d: String): (Int, Int) =
-    towersMetaOf(d).map(m => (m.nDb, m.nLex)).getOrElse((0, lexBuckets))
+  private[graft] final case class TowersSnapshot(root: String,
+      version: Option[Long], files: Seq[String], meta: Option[TowersMeta]) {
+    private def relOf(f: String): String = f.stripPrefix(s"$root/")
 
-  private[graft] def loadTowersMeta(d: String): Option[(Int, Int, Int)] =
-    towersMetaOf(d).map(m => (m.size, m.step, m.dim))
+    def filesOf(t: String): Seq[String] =
+      files.filter(relOf(_).startsWith(s"$t/"))
 
-  /** Mutation-generation stamp of a built root (`towers.gen`): every
-    * path that changes the towers' FILE SET bumps it — the two swap
-    * primitives ([[replaceDir]], [[replacePartitions]] — build
-    * rollups, delete waves, compaction folds), both torn-marker
-    * writers (arm = a wave is about to mutate; markTorn = a heal just
-    * renamed), and the marker clear (= a build/add/remove wave
-    * settled, covering the append-mode writes those waves issue
-    * directly). [[ragTablesAt]] keys its FileIndex memo on the stamp,
-    * so a serve never pays parquet partition DISCOVERY for an
-    * unchanged root twice (the p3nprobe finding: ~0.9 s of driver
-    * listing per query at a 424-dir 10× root — per-QUERY cost on a
-    * lake-scale dir tree) while ANY mutation, including a mid-wave
-    * crash window, invalidates the memo. Over-bumping is a memo miss
-    * (correct, slightly slower); the stamp content is
-    * process-unique + monotonic so no two bumps ever collide. A root
-    * with no stamp (pre-stamp build, foreign root) never memoizes —
-    * exactly the old per-call behavior.
+    /** Table `t`'s files by partition dir (`db=3`, `tb=1/db=0`; "" for
+      * an unpartitioned table).
+      */
+    def partsOf(t: String): Map[String, Seq[String]] =
+      filesOf(t).groupBy(f => relOf(f).split('/').drop(1).dropRight(1)
+        .mkString("/"))
+
+    /** The committed codebook: a build's `codebook/` entry, or an
+      * adopted root's `codebook.meta`.
+      */
+    def codebookFile: Option[String] = files.find { f =>
+      val r = relOf(f); r == "codebook.meta" || r.startsWith("codebook/")
+    }
+
+    def codebook: graft.expressions.PlaneMatrix =
+      codebookFile.flatMap(graft.streaming.Streams.codebookAt)
+        .getOrElse(sys.error(s"no committed codebook at $root"))
+
+    /** Table `t` as this snapshot holds it (or the given subset of its
+      * files): a file index rooted at the table dir, so the layout's
+      * partition columns stay columns and partition filters prune, whose
+      * one listing keeps only the snapshot's files. Spark's own read of
+      * N file paths would stat each, in a listing job once N passes 32.
+      */
+    def read(spark: org.apache.spark.sql.SparkSession, t: String,
+        only: Seq[String] = Nil): DataFrame = {
+      def pathOf(f: String) = new Path(f).toUri.getPath
+      val keep = (if (only.isEmpty) filesOf(t) else only).map(pathOf).toSet
+      val leaves = graft.Fs.leafStatuses(s"$root/$t")
+        .filter(s => keep(pathOf(s.getPath.toString))).toArray
+      val listed = new FileStatusCache {
+        override def getLeafFiles(p: Path) = Some(leaves)
+        def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = ()
+        def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, Seq(new Path(s"$root/$t")),
+        Map.empty, None, listed)
+      val format = new ParquetFileFormat
+      spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, format.inferSchema(spark, Map.empty, leaves.toSeq)
+          .getOrElse(sys.error(s"no $t files at $root")),
+        None, format, Map.empty)(spark))
+    }
+  }
+
+  /** The head snapshot of `d`: the log's head commit, or, for a root
+    * with no log, its current table files, `codebook.meta` and
+    * `towers.meta` layout.
     */
-  private val genCounter = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] def snapshotOf(d0: String): TowersSnapshot = {
+    val d = d0.stripSuffix("/")
+    val log = graft.sources.TableLog.open(d)
+    log.latestVersion match {
+      case Some(v) => TowersSnapshot(d, Some(v), log.snapshot(v).map(_.path),
+        metaOfTag(log.tagOf(v)))
+      case None => TowersSnapshot(d, None,
+        towerTables.flatMap(t => graft.Fs.listRec(s"$d/$t", ".parquet"))
+          .map(_.path) ++ graft.Fs.stat(s"$d/codebook.meta").map(_.path),
+        legacyMetaOf(d))
+    }
+  }
 
-  private[graft] def bumpTowersGen(d: String): Unit =
-    // every bump lands whole (a dropped bump could strand a memo keyed
-    // on a sibling bump's gen while this bump's mutation is the one it
-    // misses): a wave's concurrent rewrites all bump at settle time
-    // (removeFromTowers' six parallel swaps), and each replace is one
-    // atomic write, so the stamp is never absent
-    graft.Fs.writeAtomic(s"$d/towers.gen",
-      s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}:" +
-        s"${System.nanoTime()}:${genCounter.incrementAndGet()}\n")
-
-  /** Swap a staged table for its recomputed next version: stage into
-    * `<name>.next`, then delete + rename through the session's
-    * Hadoop filesystem (works on any scheme the deployment serves
-    * the index from). The swap window is the single-writer facade's
-    * to own — concurrent adds are out of contract ([[addToTowers]]).
+  /** The codebook file a root commits, else `root/codebook.meta` (a
+    * root with no log, or a maintained-state root).
     */
-  private def replaceDir(d: String, name: String, next: DataFrame,
-      partCols: Seq[String] = Nil): Unit = {
-    val (tmp, dst) = (s"$d/$name.next", s"$d/$name")
-    graft.Fs.deleteTree(tmp)
-    if (partCols.isEmpty)
-      next.write.mode("overwrite").parquet(tmp)
-    else
-      next.repartition(partCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(partCols: _*)
-        .parquet(tmp)
-    graft.Fs.deleteTree(dst)
-    graft.Fs.move(tmp, dst)
-    bumpTowersGen(d)
+  private[graft] def codebookPath(d: String): String =
+    snapshotOf(d).codebookFile.getOrElse(s"$d/codebook.meta")
+
+  /** Run one towers wave at `d`. The mutation entry first: a crashed
+    * wave's dir goes; a root with no log is adopted by one commit of
+    * its current files; otherwise every file under the table dirs that
+    * the head snapshot does not hold (a crashed wave's moved files) is
+    * deleted. Then `body` runs over the head snapshot and the wave dir
+    * `$d/_wave`, which goes on every exit.
+    */
+  private def towersWave[T](d0: String)(
+      body: (TowersSnapshot, String) => T): T = {
+    val d = d0.stripSuffix("/")
+    val w = s"$d/_wave"
+    graft.Fs.deleteTree(w)
+    val head = snapshotOf(d)
+    val snap = head.version match {
+      case None if head.files.nonEmpty =>
+        val log = graft.sources.TableLog.open(d)
+        log.commit(head.files.map(entryOf), head.meta.fold("adopt")(
+          tagOf("adopt", _)), atVersion = Some(0L))
+        log.checkpoint()
+        head.copy(version = Some(0L))
+      case None => head
+      case Some(_) =>
+        val held = head.files.toSet
+        for (t <- towerTables; f <- graft.Fs.listRec(s"$d/$t", ".parquet")
+             if !held(f.path)) graft.Fs.deleteTree(f.path)
+        head
+    }
+    try body(snap, w) finally { graft.Fs.deleteTree(w); () }
+  }
+
+  /** Run `body` with `held`, which materializes a frame for the wave;
+    * every frame it held drops on every exit.
+    */
+  private def withCaches[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.Buffer[DataFrame]()
+    try body { df => val c = graft.Caches.materialized(df); held += c; c }
+    finally held.foreach(graft.Caches.drop)
+  }
+
+  private def entryOf(p: String): graft.sources.TableLog.Action =
+    graft.sources.TableLog.Add(graft.sources.TableLog.FileEntry(p, 0L, 0L, 0L))
+
+  /** Test-only fault seam: runs after each table's files moved into the
+    * live dirs and before the wave's commit.
+    */
+  @volatile private[graft] var publishFault: String => Unit = _ => ()
+
+  /** Publish a wave: evict the root's memoized snapshot, drop the
+    * derived quantization-tier layouts and models (corpus-statistics
+    * caches of `enc_ivf`, which would otherwise serve the pre-wave
+    * corpus), move every file the wave staged under `$w/<table>` (and
+    * `$w/codebook`) into the live dir under a wave-unique name (as
+    * `Streams.appendTagged` does), then ONE commit that removes `removed` and adds the moved files,
+    * its tag carrying the layout. The commit is the wave: until it
+    * lands, every reader resolves the pre-wave snapshot and never sees
+    * a moved file. Then checkpoint, so the next reader starts from one
+    * file list, and vacuum the replaced files.
+    */
+  private def publish(snap: TowersSnapshot, w: String, op: String,
+      meta: TowersMeta, removed: Seq[String]): Unit = {
+    val d = snap.root
+    val v = snap.version.fold(0L)(_ + 1L)
+    served.keySet.removeIf(_._2 == d)
+    for (n <- Seq("enc_ivf_sq8", "enc_ivf_pq", "sq.meta", "pq.meta"))
+      graft.Fs.deleteTree(s"$d/$n")
+    val added = (towerTables :+ "codebook").flatMap { t =>
+      // name each file for the wave in place (Spark's sidecars go), then
+      // merge the table into the live dir
+      val moved = graft.Fs.listRec(s"$w/$t").flatMap { f =>
+        val cut = f.path.lastIndexOf('/') + 1
+        if (f.name.endsWith(if (t == "codebook") ".meta" else ".parquet")) {
+          val named = s"${f.path.take(cut)}w$v-${f.name}"
+          graft.Fs.move(f.path, named)
+          Some(s"$d/${named.stripPrefix(s"$w/")}")
+        } else { graft.Fs.deleteTree(f.path); None }
+      }
+      if (moved.nonEmpty) graft.Fs.mergeInto(s"$w/$t", s"$d/$t")
+      publishFault(t)
+      moved
+    }
+    val log = graft.sources.TableLog.open(d)
+    log.commit(removed.map(graft.sources.TableLog.Remove) ++
+      added.map(entryOf), tagOf(op, meta), atVersion = Some(v))
+    log.checkpoint()
+    log.vacuum(retain = 1)
+    ()
+  }
+
+  /** A legacy flat root (no layout knobs) rebuilds ONCE under its own
+    * pinned codebook to mint the bucketed layout before a wave appends
+    * or deletes — the alternative kept flat append and corpus-sized
+    * delete arms alive forever, exercised only by roots no current
+    * build produces.
+    */
+  private def mintLayout(spark: org.apache.spark.sql.SparkSession,
+      d: String): Unit = {
+    val m = towersMetaOf(d).getOrElse(sys.error(
+      s"no towers layout at $d — not a buildTowers root (rebuild once " +
+        "with Graft.ragIndex to mint it)"))
+    if (m.nDb == 0) buildTowers(spark, d, m.size, m.step, m.dim,
+      graft.streaming.Streams.loadCodebook(d))
   }
 
   /** GROW a built index in place (the build → serve → GROW loop):
@@ -744,7 +867,7 @@ object Pipeline {
     * cid-partitioned append — a retrained model would re-list the
     * whole index, so growth serves under the build's codebook until
     * an explicit rebuild), while the two corpus-rollup tables
-    * recompute exactly: `stats` from the persisted exact-integer
+    * recompute exactly: `stats` from the committed exact-integer
     * (nd, len_sum) plus the arrivals' (one row), `idf` as a
     * VOCAB-sized merge of the stored df with the arrivals' df under
     * the new nd — bit-equal to a full rebuild on the union corpus
@@ -756,62 +879,31 @@ object Pipeline {
     * the bucket-pruned version of this guard lives in st14), so a
     * re-added batch is a no-op, not a duplicate.
     *
-    * CONTRACT: single-writer, not crash-atomic — `routed` lands
-    * FIRST, so a torn add (crash between appends) is repaired by
-    * [[buildTowers]] over the surviving `routed` with the pinned
-    * codebook (`RagIndex.rebuild`): every tower re-derives
-    * deterministically from `routed`. Continuous/exactly-once growth
-    * is the streaming maintainers' domain (st14/st15's tagged
-    * commits), not this facade's.
+    * CONTRACT: single-writer, and ONE commit per wave: the appends and
+    * the two rollups land in the wave dir and publish together, so a
+    * wave that dies anywhere before its commit leaves the root serving
+    * exactly the pre-wave index, and its retry adds the arrivals anew.
+    * A wave whose appends overgrow a partition dir is followed by a
+    * [[compactTowers]] wave (its own commit).
     *
     * Returns the number of NEW docs actually indexed.
     */
   private[graft] def addToTowers(
       spark: org.apache.spark.sql.SparkSession, d: String,
       routedNew: DataFrame): Long = {
-    val meta0 = towersMetaOf(d).getOrElse(sys.error(
-      s"no towers.meta at $d — not a buildTowers root (rebuild once " +
-        "with Graft.ragIndex to mint it)"))
-    // heal any torn swap before the registry anti-join reads routed
-    // (a routed missing a bucket would re-admit its docs as "new")
-    healTowers(d)
-    // a legacy flat root mints the bucketed layout once (the same
-    // one-time rebuild the delete path pays — a mixed-layout append
-    // would break partition discovery, and keeping a flat append arm
-    // alive kept the flat DELETE arm alive with it). A root carrying
-    // the torn-mutation marker (this entry's heal, or an earlier
-    // crashed-then-healed session) rebuilds through the SAME arm:
-    // per-table heal restored every partition, but the torn wave's
-    // OTHER tables may hold pre-mutation rows — re-deriving every
-    // tower from the healed routed is the mechanical repair, and
-    // appending on top of the inconsistency would bake it in.
-    val meta =
-      if (meta0.nDb > 0 && !tornMarked(d)) meta0
-      else {
-        buildTowers(spark, d, meta0.size, meta0.step, meta0.dim,
-          graft.streaming.Streams.loadCodebook(d))
-        towersMetaOf(d).get
-      }
-    val (size, step, dim) = (meta.size, meta.step, meta.dim)
-    val (nDb, nLex, nTfbDb) = (meta.nDb, meta.nLex, meta.nTfbDb)
-    // append `df` to a flat build artifact in the ROOT'S OWN layout
-    def appendFlat(name: String, df: DataFrame, docId: Column): Unit =
-      df.withColumn("db", docBucket(docId, nDb))
-        .write.mode("append").partitionBy("db").parquet(s"$d/$name")
-    def appendFlatChunkKeyed(name: String, df: DataFrame,
-        chunkId: Column): Unit =
-      df.withColumn("db", docBucketOfChunk(chunkId, nDb))
-        .write.mode("append").partitionBy("db").parquet(s"$d/$name")
-    val cb = graft.streaming.Streams.loadCodebook(d).getOrElse(
-      sys.error(s"no codebook.meta at $d"))
     graft.Caches.fresh()
-    // the admitted arrivals DECOUPLE through scratch parquet before
-    // the routed append: a cached anti-join against $d/routed would
-    // be invalidated BY that append (CacheManager recache-by-path)
-    // and re-evaluate empty against its own output
-    val scratch = graft.Staging.scratch("rag_add")
-    try {
-      routedNew
+    mintLayout(spark, d)
+    val nNew = towersWave(d) { (snap, w) =>
+      val meta = snap.meta.get
+      val (size, step, dim) = (meta.size, meta.step, meta.dim)
+      val (nDb, nLex, nTfbDb) = (meta.nDb, meta.nLex, meta.nTfbDb)
+      val cb = snap.codebook
+      // the wave's tables in the ROOT'S OWN layout
+      def land(name: String, df: DataFrame, db: Column): Unit =
+        df.withColumn("db", db)
+          .write.mode("overwrite").partitionBy("db").parquet(s"$w/$name")
+      withCaches { held =>
+      val arr = held(routedNew
         .select(col("doc_id").cast("long").as("doc_id"), col("body"))
         // in-batch duplicates dedup too (deterministic min-body pick):
         // the registry anti-join only guards against ALREADY-indexed
@@ -819,172 +911,102 @@ object Pipeline {
         // tower — doubled tf, duplicate vec_ids, drifted nd/len_sum —
         // with rebuild() reproducing the corruption from routed
         .groupBy("doc_id").agg(min(col("body")).as("body"))
-        .join(spark.read.parquet(s"$d/routed").select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$scratch/arr")
-      val arr = spark.read.parquet(s"$scratch/arr")
+        .join(snap.read(spark, "routed").select("doc_id"),
+          Seq("doc_id"), "left_anti"))
       val nNew = arr.count()
-      if (nNew == 0L) return 0L
-      // INTENT: a crash between any two appends below leaves routed
-      // holding docs the derived towers never indexed (a silently
-      // incomplete index — the redelivered add no-ops on the registry
-      // anti-join); the armed marker makes the next entry rebuild
-      armTornMarker(d, "add")
-      appendFlat("routed", arr, col("doc_id"))
-      val chNew = graft.Caches.materialized(
+      if (nNew > 0L) {
+      land("routed", arr, docBucket(col("doc_id"), nDb))
+      val chNew = held(
         graft.api.Graft.chunk(arr, "doc_id", "body", size, step)
           .select(mintChunkId(col("doc_id"), col("start")).as("chunk_id"),
             col("doc_id"), col("start"), col("chunk")))
-      appendFlat("chunks", chNew, col("doc_id"))
-      val tfNew = graft.Caches.materialized(chNew
+      land("chunks", chNew, docBucket(col("doc_id"), nDb))
+      val tfNew = held(chNew
         .select(col("chunk_id"),
           explode(Text.tokenize(col("chunk"))).as("term"))
         .groupBy("chunk_id", "term").agg(count(lit(1)).as("tf")))
-      appendFlatChunkKeyed("tf", tfNew, col("chunk_id"))
+      land("tf", tfNew, docBucketOfChunk(col("chunk_id"), nDb))
       val tfD = tfNew.withColumnRenamed("chunk_id", "doc_id")
-      val dlNew = graft.Caches.materialized(
-        tfD.groupBy("doc_id").agg(sum("tf").as("dl")))
+      val dlNew = held(tfD.groupBy("doc_id").agg(sum("tf").as("dl")))
       tfD.join(dlNew, "doc_id")
         .withColumn("tb", Search.termBucket(col("term"), nLex))
         .withColumn("db", docBucketOfChunk(col("doc_id"), nTfbDb))
         .repartition(col("tb"), col("db"))
-        .write.mode("append").partitionBy("tb", "db")
-        .parquet(s"$d/tf_b")
+        .write.mode("overwrite").partitionBy("tb", "db")
+        .parquet(s"$w/tf_b")
       // stats: exact-integer rollup — one stored row + one arrival row
-      val old = spark.read.parquet(s"$d/stats")
+      val old = snap.read(spark, "stats")
         .select("nd", "len_sum").collect()(0)
       val inc = dlNew.agg(count(lit(1)).as("nd"), sum("dl").as("len_sum"))
         .collect()(0)
       val nd2 = old.getLong(0) + inc.getLong(0)
       val ls2 = old.getLong(1) + inc.getLong(1)
       import spark.implicits._
-      replaceDir(d, "stats",
-        Seq((ls2.toDouble / nd2, nd2, ls2))
-          .toDF("avgdl", "nd", "len_sum").coalesce(1))
+      Seq((ls2.toDouble / nd2, nd2, ls2)).toDF("avgdl", "nd", "len_sum")
+        .coalesce(1).write.mode("overwrite").parquet(s"$w/stats")
       // idf: vocab-sized df merge, idf_bm re-derived under the new nd
       // with the build's own expression
       val dfNew = tfD.groupBy("term").agg(count(lit(1)).as("df_new"))
-      replaceDir(d, "idf",
-        spark.read.parquet(s"$d/idf").select("term", "df")
-          .join(dfNew, Seq("term"), "full")
-          .select(col("term"),
-            (coalesce(col("df"), lit(0L)) +
-              coalesce(col("df_new"), lit(0L))).as("df"))
-          .withColumn("idf_bm",
-            log(lit(1.0) + (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
-          .select("term", "df", "idf_bm"))
+      snap.read(spark, "idf").select("term", "df")
+        .join(dfNew, Seq("term"), "full")
+        .select(col("term"),
+          (coalesce(col("df"), lit(0L)) +
+            coalesce(col("df_new"), lit(0L))).as("df"))
+        .withColumn("idf_bm",
+          log(lit(1.0) + (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
+        .select("term", "df", "idf_bm")
+        .write.mode("overwrite").parquet(s"$w/idf")
       // dense tower: encode arrivals, assign under the PINNED codebook,
       // append cid-partitioned (st15MaintainStep's shape)
-      val encNew = graft.Caches.materialized(
-        Embed.encodeFrame(chNew, "chunk_id", "chunk", d = dim))
-      appendFlatChunkKeyed("enc", encNew, col("vec_id"))
+      val encNew = held(Embed.encodeFrame(chNew, "chunk_id", "chunk", d = dim))
+      land("enc", encNew, docBucketOfChunk(col("vec_id"), nDb))
       encNew
         .withColumn("cid",
           graft.functions.Vectors.centroidTop1(
             transform(col("u16"), x => x.cast("double")), cb))
         .select("vec_id", "u16", "cid")
         .repartition(col("cid"))
-        .write.mode("append").partitionBy("cid").parquet(s"$d/enc_ivf")
-      // the partitions THIS wave appended to — arrivals-sized distinct
-      // collects over the still-cached arrival frames, handed to the
-      // compaction pass so its fragmentation check stats only these
-      // dirs (an unscoped pass would list every partition dir of six
-      // tables per wave — corpus-dir-coupled at lake scale)
-      val dbsNew: Seq[Any] = arr
-        .select(docBucket(col("doc_id"), nDb).as("db"))
-        .distinct().collect().map(_.getLong(0): Any).toSeq
-      val cellsNew: Seq[Seq[Any]] = tfD.select(
-          Search.termBucket(col("term"), nLex).as("tb"),
-          docBucketOfChunk(col("doc_id"), nTfbDb).as("db"))
-        .distinct().collect()
-        .map(r => Seq(r.getLong(0): Any, r.getLong(1): Any)).toSeq
-      val cidsNew: Seq[Any] = encNew
-        .select(graft.functions.Vectors.centroidTop1(
-          transform(col("u16"), x => x.cast("double")), cb).as("cid"))
-        .distinct().collect().map(_.getInt(0): Any).toSeq
-      Seq(chNew, tfNew, dlNew, encNew).foreach(graft.Caches.drop)
-      // quantization-tier layouts are DERIVED caches of enc_ivf — a
-      // grown index invalidates them (next tier serve re-mints from
-      // the current corpus; their models are corpus statistics)
-      dropTierLayouts(d)
-      // a long add cadence fragments every touched partition dir (one
-      // appended file per dir per wave): Probe addwave measured 20
-      // waves growing a 10× root to ~18k files with the serve wall
-      // +70% — fold back only the dirs the cadence overgrew
-      compactTowers(spark, d, scope = Some(Map(
-        "routed" -> dbsNew.map(Seq(_)),
-        "chunks" -> dbsNew.map(Seq(_)),
-        "tf" -> dbsNew.map(Seq(_)),
-        "enc" -> dbsNew.map(Seq(_)),
-        "tf_b" -> cellsNew,
-        "enc_ivf" -> cidsNew.map(Seq(_)))))
-      // every append, rollup swap, tier invalidation, and compaction
-      // fold landed — the add wave's intent is discharged
-      clearTornMarker(d)
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$w/enc_ivf")
+      publish(snap, w, "add", meta, snap.filesOf("stats") ++ snap.filesOf("idf"))
+      }
       nNew
-    } finally graft.Staging.release(scratch)
+      }
+    }
+    // a long add cadence fragments every touched partition dir (one
+    // appended file per dir per wave): Probe addwave measured 20 waves
+    // growing a 10× root to ~18k files with the serve wall +70% — fold
+    // back the dirs the cadence overgrew
+    if (nNew > 0L) compactTowers(spark, d)
+    nNew
   }
 
-  /** Fold multi-file partition dirs of the staged towers back to
-    * one file each — the io5/io12 compaction discipline applied to
-    * the index's own layout. Only dirs holding more than
-    * `maxFilesPerDir` parquet files rewrite (a driver-side listing
-    * finds them; [[replacePartitions]] swaps them one-file-per-dir),
-    * so a compaction pass costs fragmented-buckets only: at a steady
-    * add cadence each bucket folds once per ~maxFilesPerDir waves —
-    * amortized bucketBytes/maxFilesPerDir per wave, never the
-    * corpus. `scope` bounds the LISTING the same way: when given
-    * (per table, the partition-value tuples this wave appended to —
-    * [[addToTowers]] knows them exactly), only those dirs are even
-    * stat'ed, so the check is arrivals-coupled; an unscoped call
-    * (the manual full pass) walks every partition dir once. The
-    * full fold remains rebuild().
+  /** Fold multi-file partition dirs of the staged towers back to one
+    * file each — the io5/io12 compaction discipline applied to the
+    * index's own layout. Only dirs holding more than `maxFilesPerDir`
+    * committed files rewrite, counted from the head snapshot (metadata
+    * only: no listing, no job), so a pass costs fragmented buckets
+    * only: at a steady add cadence each bucket folds once per
+    * ~maxFilesPerDir waves — amortized bucketBytes/maxFilesPerDir per
+    * wave, never the corpus. One commit; no-op without an overgrown
+    * dir. The full fold remains rebuild().
     */
   private[graft] def compactTowers(
       spark: org.apache.spark.sql.SparkSession, d: String,
-      maxFilesPerDir: Int = 8,
-      scope: Option[Map[String, Seq[Seq[Any]]]] = None): Unit = {
-    val tables = Seq(
-      "routed" -> Seq("db"), "chunks" -> Seq("db"),
-      "tf" -> Seq("db"), "enc" -> Seq("db"),
-      "tf_b" -> Seq("tb", "db"), "enc_ivf" -> Seq("cid"))
-    for ((name, cols) <- tables) {
-      val root = s"$d/$name"
-      if (graft.Fs.stat(root).isDefined) {
-        // candidate dirs: the scoped tuples, else a walk of the
-        // partition levels carrying each dir's value (the k=v name
-        // IS the value — no path re-parsing; non-partition residue
-        // like _temporary is skipped)
-        def walk(p: String, depth: Int, vals: Seq[Any]): Seq[(String, Seq[Any])] =
-          if (depth == 0) Seq((p, vals))
-          else graft.Fs.list(p)
-            .filter(e => e.isDir && e.name.contains("="))
-            .flatMap(e => walk(e.path, depth - 1,
-              vals :+ (e.name.split("=", 2)(1): Any)))
-        val cand: Seq[(String, Seq[Any])] =
-          scope match {
-            case Some(m) => m.getOrElse(name, Nil).map { vs =>
-              val rel = cols.zip(vs)
-                .map { case (c, v) => s"$c=$v" }.mkString("/")
-              (s"$root/$rel", vs)
-            }.filter { case (p, _) => graft.Fs.stat(p).isDefined }
-            case None => walk(root, cols.size, Nil)
-          }
-        val over = cand.filter { case (p, _) =>
-          graft.Fs.list(p).count(_.name.endsWith(".parquet")) >
-            maxFilesPerDir
-        }
-        if (over.nonEmpty) {
-          val parts: Seq[Seq[Any]] = over.map(_._2)
-          val keys = parts.map(_.mkString("/")).toSet
-          replacePartitions(spark, d, name, cols, parts,
-            spark.read.parquet(s"$d/$name")
-              .filter(concat_ws("/", cols.map(col): _*)
-                .isin(keys.toSeq: _*)))
-        }
+      maxFilesPerDir: Int = 8): Unit =
+    towersWave(d) { (snap, w) =>
+      val over = towerTables.map(t => t -> snap.partsOf(t).filter {
+        case (part, fs) => part.nonEmpty && fs.size > maxFilesPerDir
+      }).filter(_._2.nonEmpty)
+      for ((t, parts) <- over) {
+        val cols = parts.keys.head.split('/').map(_.takeWhile(_ != '=')).toSeq
+        snap.read(spark, t, parts.values.flatten.toSeq)
+          .repartition(cols.map(col): _*)
+          .write.mode("overwrite").partitionBy(cols: _*).parquet(s"$w/$t")
       }
+      if (over.nonEmpty)
+        publish(snap, w, "compact", snap.meta.get,
+          over.flatMap(_._2.values.flatten))
     }
-  }
 
   /** DELETE docs from a built index in place (the right-to-be-
     * forgotten path — build → serve → grow → REMOVE): drop every
@@ -1009,7 +1031,7 @@ object Pipeline {
     * the layout, then deletes like any other root.
     *
     * The corpus rollups recompute EXACTLY: `stats` decrements the
-    * persisted integer (nd, len_sum) by the victims' (one 1-row
+    * committed integer (nd, len_sum) by the victims' (one 1-row
     * aggregate over the victim postings), `idf` merges the victims'
     * per-term df DOWN (terms whose df reaches 0 leave the vocab) and
     * re-derives idf_bm under the new nd — bit-equal to a pinned-
@@ -1018,53 +1040,27 @@ object Pipeline {
     * contract — retraining would re-list the whole index); the
     * quantization-tier layouts are derived caches and invalidate.
     *
-    * CONTRACT: single-writer, not crash-atomic — `routed` shrinks
-    * FIRST, so a torn remove is repaired by [[buildTowers]] over the
-    * surviving `routed` with the pinned codebook (`RagIndex.rebuild`),
-    * same as a torn add. Unknown doc_ids are ignored (removing an
-    * absent doc is a no-op). Returns the number of docs removed.
+    * CONTRACT: single-writer, and ONE commit per wave: every rewrite
+    * lands in the wave dir and publishes together, so a wave that
+    * dies anywhere before its commit leaves the root serving exactly
+    * the pre-wave index, victims included, and its retry removes
+    * them. Unknown doc_ids are ignored (removing an absent doc is a
+    * no-op). Returns the number of docs removed.
     */
   private[graft] def removeFromTowers(
       spark: org.apache.spark.sql.SparkSession, d: String,
       idsDf: DataFrame): Long = {
     graft.Caches.fresh()
-    // a LEGACY flat root (pre-bucketed-layout build) rebuilds ONCE
-    // under its own pinned codebook to mint the layout, then deletes
-    // victims-coupled like every other root — the alternative kept a
-    // corpus-sized anti-join rewrite path alive forever, exercised
-    // only by roots no current build produces (and with no
-    // delete-everything guard). One corpus pass here buys every
-    // later wave out of corpus-coupling.
-    val meta0 = towersMetaOf(d).getOrElse(sys.error(
-      s"no towers.meta at $d — not a buildTowers root (rebuild once " +
-        "with Graft.ragIndex to mint it)"))
-    // heal any torn swap before deriving victims from the tables
-    healTowers(d)
-    // legacy layout mint AND the torn-mutation repair share the one
-    // rebuild arm (see addToTowers): a healed root's OTHER tables
-    // may hold rows a torn wave already removed from routed — a
-    // forget wave deriving victims from them (or no-opping on
-    // routed's shrunk membership while chunks still serve the doc)
-    // is exactly the right-to-be-forgotten hole the marker closes.
-    val meta =
-      if (meta0.nDb > 0 && !tornMarked(d)) meta0
-      else {
-        buildTowers(spark, d, meta0.size, meta0.step, meta0.dim,
-          graft.streaming.Streams.loadCodebook(d))
-        towersMetaOf(d).get
-      }
-    val (nDb, nLex, nTfbDb) = (meta.nDb, meta.nLex, meta.nTfbDb)
-    // victims DECOUPLE through scratch parquet before any rewrite
-    // (the addToTowers lineage lesson: a frame derived from a dir we
-    // are about to replace would re-evaluate against its own output).
-    // It holds the requested ids — erasure-request data on the forget
-    // stream — so every exit, a failed wave's too, releases it
-    val scratch = graft.Staging.scratch("rag_remove")
-    try {
-      idsDf.select(col(idsDf.columns.head).cast("long").as("doc_id"))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$scratch/ids")
-      val ids = spark.read.parquet(s"$scratch/ids")
+    mintLayout(spark, d)
+    towersWave(d) { (snap, w) =>
+      val meta = snap.meta.get
+      val (nDb, nLex, nTfbDb) = (meta.nDb, meta.nLex, meta.nTfbDb)
+      def tbl(t: String): DataFrame = snap.read(spark, t)
+      // the requested ids are erasure-request data on the forget
+      // stream: every exit, a failed wave's too, drops their caches
+      withCaches { held =>
+      val ids = held(idsDf
+        .select(col(idsDf.columns.head).cast("long").as("doc_id")).distinct())
       // doc buckets derive by PURE HASH from the ids (docBucket), no
       // table read — so even the membership check (is each id actually
       // indexed?) reads only the requested ids' routed buckets, and
@@ -1078,13 +1074,11 @@ object Pipeline {
       val rawDbs: Seq[Any] = ids
         .select(docBucket(col("doc_id"), nDb).as("db"))
         .distinct().collect().map(_.getLong(0): Any).toSeq
-      ids.join(spark.read.parquet(s"$d/routed")
+      val victims = held(ids.join(tbl("routed")
           .filter(col("db").isin(rawDbs: _*)).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$scratch/victims")
-      val victims = spark.read.parquet(s"$scratch/victims")
+        Seq("doc_id"), "left_semi"))
       val nVict = victims.count()
-      if (nVict == 0L) return 0L
+      if (nVict > 0L) {
       // re-derived from the CONFIRMED victims (⊆ rawDbs — unknown ids'
       // buckets drop out, tightening every downstream prune)
       val vDbs: Seq[Any] = victims
@@ -1095,28 +1089,23 @@ object Pipeline {
       // (chunk_id mod 10⁶), exact long math — the [[docBucketOfChunk]]
       // identity), so the victim-CHUNK set never materializes: every
       // chunk-keyed table (tf, enc, tf_b, enc_ivf) semi/anti-joins the
-      // victims frame directly on the derived key. That removes one
-      // scratch write + read (the old vchunks pass over the chunks
-      // table) per wave AND shrinks each join's broadcast side from
-      // victim-chunks to victims (guide §2.3: shuffle/broadcast keys,
-      // not payloads; §1.2: fewer passes).
+      // victims frame directly on the derived key (guide §2.3:
+      // shuffle/broadcast keys, not payloads; §1.2: fewer passes).
       val vKey = victims.select((col("doc_id") * 1000000L).as("__vdk"))
       def docKeyOf(c: Column): Column = {
         val l = c.cast("long"); l - pmod(l, lit(1000000L))
       }
-      // tf's victim slice lands in scratch ONCE (db-pruned — tf is
+      // tf's victim slice materializes ONCE (db-pruned — tf is
       // bucketed by the chunk's doc hash, the same modulus); the
       // per-term df decrement, the (nd, len_sum) decrement, and the
       // affected-cell set all derive from it without re-scanning tf
-      labeled(spark, "remove: stage victim postings (vtf)") {
-        spark.read.parquet(s"$d/tf")
+      val vtf = labeled(spark, "remove: stage victim postings (vtf)") {
+        held(tbl("tf")
           .filter(col("db").isin(vDbs: _*))
           .join(vKey, docKeyOf(col("chunk_id")) === col("__vdk"),
             "left_semi")
-          .drop("db")
-          .write.mode("overwrite").parquet(s"$scratch/vtf")
+          .drop("db"))
       }
-      val vtf = spark.read.parquet(s"$scratch/vtf")
       val vdf = vtf.groupBy("term").agg(count(lit(1)).as("df_dec"))
       // the victims' coarse lists re-derive from the db-PRUNED enc and
       // the pinned codebook — the st15 assignment contract: enc_ivf's
@@ -1124,8 +1113,7 @@ object Pipeline {
       // build/add time, so the projection over the victim codes IS the
       // victim list set, and the corpus-wide enc_ivf semi-join (a full
       // scan of every list per wave) never runs
-      val cb = graft.streaming.Streams.loadCodebook(d).getOrElse(
-        sys.error(s"no codebook.meta at $d — not a built index root"))
+      val cb = snap.codebook
       // The four pre-rewrite derivations are INDEPENDENT given the
       // staged vtf: the merged stats decrement, the victim coarse-list
       // collect, the victim (tb, db) cell collect, and the old-stats
@@ -1133,17 +1121,16 @@ object Pipeline {
       // jobs (guide §2.6, the buildTowers overlap applied to the wave's
       // serial driver actions) instead of four sequential ones.
       val Seq(decA, vCidsA, vCellsA, oldA) = graft.Concurrent.settleAll[Any](spark)(Seq(
-        // ONE aggregate job carries both exact decrements (the old
-        // shape paid a separate job each for len_dec and nd_dec):
-        // len_sum drops by the victims' Σtf; nd counts chunks WITH
-        // postings (dl derives from tf — a token-less chunk never
-        // entered stats), so the decrement counts the victim chunks
-        // that appear in tf, not every victim chunk
+        // ONE aggregate job carries both exact decrements: len_sum
+        // drops by the victims' Σtf; nd counts chunks WITH postings
+        // (dl derives from tf — a token-less chunk never entered
+        // stats), so the decrement counts the victim chunks that
+        // appear in tf, not every victim chunk
         "remove: stats decrement aggregate" -> (() =>
           vtf.agg(sum("tf").as("len_dec"),
             countDistinct("chunk_id").as("nd_dec")).collect()(0)),
         "remove: victim coarse lists (vCids)" -> (() =>
-          spark.read.parquet(s"$d/enc")
+          tbl("enc")
             .filter(col("db").isin(vDbs: _*))
             .join(vKey, docKeyOf(col("vec_id")) === col("__vdk"),
               "left_semi")
@@ -1152,11 +1139,10 @@ object Pipeline {
               .as("cid"))
             .distinct().collect().map(_.getInt(0)).toSeq),
         // the EXACT victim (tb, db) cells of the postings layout,
-        // derived from the pre-staged victim postings (never a
-        // term-bucket x doc-bucket cross product — a wave whose terms
-        // span 20 buckets and docs span 10 would otherwise rewrite 200
-        // cells where ~30 hold victims, each a staged file + delete +
-        // rename of itself)
+        // derived from the victim postings (never a term-bucket x
+        // doc-bucket cross product — a wave whose terms span 20
+        // buckets and docs span 10 would otherwise rewrite 200 cells
+        // where ~30 hold victims)
         "remove: victim postings cells (vCells)" -> (() =>
           vtf.select(
               Search.termBucket(col("term"), nLex).as("tb"),
@@ -1164,12 +1150,11 @@ object Pipeline {
             .distinct().collect()
             .map(r => Seq(r.getLong(0).toInt: Any, r.getLong(1): Any))
             .toSeq),
-        // stats decrement inputs read BEFORE any rewrite (exact-
-        // integer: len_sum/nd stays bit-equal to a rebuild's avg(dl) —
-        // integer-valued doubles below 2^53)
+        // stats decrement inputs (exact-integer: len_sum/nd stays
+        // bit-equal to a rebuild's avg(dl) — integer-valued doubles
+        // below 2^53)
         "remove: read pre-wave stats" -> (() =>
-          spark.read.parquet(s"$d/stats")
-            .select("nd", "len_sum").collect()(0))))
+          tbl("stats").select("nd", "len_sum").collect()(0))))
       val dec = decA.asInstanceOf[Row]
       val lenDec = if (dec.isNullAt(0)) 0L else dec.getLong(0)
       val ndDec = dec.getLong(1)
@@ -1179,29 +1164,31 @@ object Pipeline {
       // partitioned table can't even be read back, and "forget the
       // whole corpus" is an explicit teardown, not an erasure wave.
       // The survivor check arms when the victims' buckets cover every
-      // OCCUPIED db dir of routed (a driver-side listing — comparing
-      // against nDb would let a small corpus occupying fewer than nDb
-      // buckets be fully erased without ever covering all of them),
-      // and counts only rows the wave is about to rewrite anyway.
-      val occupied = graft.Fs.list(s"$d/routed")
-        .map(_.name).filter(_.startsWith("db="))
-        .map(_.stripPrefix("db=").toLong).toSet
+      // OCCUPIED db bucket of routed — read from the snapshot, since
+      // vacuum leaves emptied dirs behind (comparing against nDb would
+      // let a small corpus occupying fewer than nDb buckets be fully
+      // erased without ever covering all of them) — and counts only
+      // rows the wave is about to rewrite anyway.
+      val occupied = snap.partsOf("routed").keySet
+        .map(_.stripPrefix("db=").toLong)
       if (occupied.subsetOf(vDbs.map(_.asInstanceOf[Long]).toSet))
-        require(nVict < spark.read.parquet(s"$d/routed")
+        require(nVict < tbl("routed")
             .filter(col("db").isin(vDbs: _*)).count(),
           "removeFromTowers would delete every routed doc — tear the " +
             "root down (or rebuild empty) instead of erasing in place")
+      // survivors of the affected partitions, one file per partition:
+      // a fully-emptied partition stages no file, and its old files
+      // leave the snapshot with the commit
+      def stage(name: String, cols: Seq[String], survivors: DataFrame): Unit =
+        survivors.repartition(cols.map(col): _*)
+          .write.mode("overwrite").partitionBy(cols: _*).parquet(s"$w/$name")
       // a left_anti join hoists its key to the front — re-select the
       // source's own column order so the rewritten table is bit-equal
       // to a rebuild's, schema included
-      def antiInOrder(src: DataFrame, key: String,
-          victimsOf: DataFrame): DataFrame =
-        src.join(victimsOf, Seq(key), "left_anti")
+      def antiInOrder(src: DataFrame, key: String): DataFrame =
+        src.join(victims, Seq(key), "left_anti")
           .select(src.columns.map(col).toSeq: _*)
       // chunk-keyed survivors: anti-join on the ARITHMETIC doc key
-      // (same rows as the old victim-chunk anti-join — tf/enc/tf_b/
-      // enc_ivf rows all derive from chunks — with the victims frame,
-      // not the larger chunk set, as the broadcast side)
       def antiDocInOrder(src: DataFrame, chunkKey: String): DataFrame =
         src.join(vKey, docKeyOf(col(chunkKey)) === col("__vdk"),
             "left_anti")
@@ -1210,116 +1197,66 @@ object Pipeline {
       val nd2 = old.getLong(0) - ndDec
       val ls2 = old.getLong(1) - lenDec
       import spark.implicits._
-      // INTENT: the wave is about to mutate its first table — from
-      // here to the clear below, a crash at ANY point (not just the
-      // millisecond rename windows .prev evidence covers) leaves the
-      // marker armed and the next mutation entry rebuilds from routed
-      armTornMarker(d, "remove")
-      // routed shrinks FIRST and ALONE (the torn-remove repair anchor:
-      // if anything after this dies, rebuild() re-derives every tower
-      // from the already-shrunk routed). Only the victim doc buckets
-      // swap; untouched buckets keep their files.
-      replacePartitions(spark, d, "routed", Seq("db"),
-        vDbs.map(Seq(_)),
-        antiInOrder(spark.read.parquet(s"$d/routed")
-          .filter(col("db").isin(vDbs: _*)), "doc_id", victims))
-      // the remaining six rewrites touch DISJOINT tables whose inputs
-      // are all pre-staged (scratch victims/vtf + their own dirs), so
-      // they submit as CONCURRENT Spark jobs — a delete wave's latency
-      // is the longest single rewrite, not their sum (Spark job
-      // submission is thread-safe; each job's stages share the same
-      // executor pool). Every flat rewrite is VICTIMS-SIZED.
-      val rewrites: Seq[(String, () => Unit)] = Seq(
-        "remove: rewrite chunks" -> (() =>
-          replacePartitions(spark, d, "chunks", Seq("db"),
-            vDbs.map(Seq(_)),
-            antiInOrder(spark.read.parquet(s"$d/chunks")
-              .filter(col("db").isin(vDbs: _*)), "doc_id", victims))),
-        "remove: rewrite tf" -> (() =>
-          replacePartitions(spark, d, "tf", Seq("db"),
-            vDbs.map(Seq(_)),
-            antiDocInOrder(spark.read.parquet(s"$d/tf")
-              .filter(col("db").isin(vDbs: _*)), "chunk_id"))),
-        "remove: rewrite enc" -> (() =>
-          replacePartitions(spark, d, "enc", Seq("db"),
-            vDbs.map(Seq(_)),
-            antiDocInOrder(spark.read.parquet(s"$d/enc")
-              .filter(col("db").isin(vDbs: _*)), "vec_id"))),
-        // the postings swap EXACTLY the victim (tb, db) cells; the
+      // the seven rewrites touch DISJOINT tables whose inputs are all
+      // cached or committed, so they submit as CONCURRENT Spark jobs —
+      // a delete wave's latency is the longest single rewrite, not
+      // their sum. Every flat rewrite is VICTIMS-SIZED.
+      graft.Concurrent.settleAll(spark)(Seq("routed", "chunks", "tf", "enc")
+        .map { t =>
+          s"remove: rewrite $t" -> (() => {
+            val src = tbl(t).filter(col("db").isin(vDbs: _*))
+            stage(t, Seq("db"),
+              if (t == "routed" || t == "chunks") antiInOrder(src, "doc_id")
+              else antiDocInOrder(src, if (t == "tf") "chunk_id" else "vec_id"))
+          })
+        } ++ Seq(
+        // the postings rewrite EXACTLY the victim (tb, db) cells; the
         // cell-key filter references only partition columns, so the
         // survivor scan partition-prunes to those dirs
         "remove: rewrite tf_b" -> (() =>
-          replacePartitions(spark, d, "tf_b", Seq("tb", "db"),
-            vCells,
-            antiDocInOrder(spark.read.parquet(s"$d/tf_b")
-              .filter(concat_ws("/", col("tb"), col("db")).isin(
-                vCells.map(c => s"${c(0)}/${c(1)}"): _*)),
-              "doc_id"))),
+          stage("tf_b", Seq("tb", "db"), antiDocInOrder(tbl("tf_b")
+            .filter(concat_ws("/", col("tb"), col("db")).isin(
+              vCells.map(c => s"${c(0)}/${c(1)}"): _*)), "doc_id"))),
         "remove: rewrite enc_ivf" -> (() =>
-          replacePartitions(spark, d, "enc_ivf", Seq("cid"),
-            vCids.map(Seq(_)),
-            antiDocInOrder(spark.read.parquet(s"$d/enc_ivf")
-              .filter(col("cid").isin(vCids.map(c => c: Any): _*)),
-              "vec_id"))),
+          stage("enc_ivf", Seq("cid"), antiDocInOrder(tbl("enc_ivf")
+            .filter(col("cid").isin(vCids.map(c => c: Any): _*)), "vec_id"))),
         "remove: rewrite stats + idf" -> (() => {
-          replaceDir(d, "stats",
-            Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
-              .toDF("avgdl", "nd", "len_sum").coalesce(1))
+          Seq((if (nd2 == 0L) 0.0 else ls2.toDouble / nd2, nd2, ls2))
+            .toDF("avgdl", "nd", "len_sum").coalesce(1)
+            .write.mode("overwrite").parquet(s"$w/stats")
           // idf: vocab-sized df merge-down under the new nd; a term
           // whose last posting left leaves the vocabulary
-          replaceDir(d, "idf",
-            spark.read.parquet(s"$d/idf").select("term", "df")
-              .join(vdf.select("term", "df_dec"), Seq("term"), "left")
-              .select(col("term"),
-                (col("df") - coalesce(col("df_dec"), lit(0L))).as("df"))
-              .filter(col("df") > 0L)
-              .withColumn("idf_bm",
-                log(lit(1.0) +
-                  (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
-              .select("term", "df", "idf_bm"))
-        }))
-      // the tier-layout invalidation runs on BOTH paths — a torn
-      // remove must not leave enc_ivf_sq8/enc_ivf_pq serving the
-      // forgotten doc
-      try graft.Concurrent.settleAll(spark)(rewrites)
-      finally dropTierLayouts(d)
-      // every rewrite settled cleanly AND the tier caches dropped —
-      // only now is the wave's intent discharged (a throw above leaves
-      // the marker armed for the next entry's rebuild)
-      clearTornMarker(d)
+          tbl("idf").select("term", "df")
+            .join(vdf.select("term", "df_dec"), Seq("term"), "left")
+            .select(col("term"),
+              (col("df") - coalesce(col("df_dec"), lit(0L))).as("df"))
+            .filter(col("df") > 0L)
+            .withColumn("idf_bm",
+              log(lit(1.0) +
+                (lit(nd2) - col("df") + 0.5) / (col("df") + 0.5)))
+            .select("term", "df", "idf_bm")
+            .write.mode("overwrite").parquet(s"$w/idf")
+        })))
+      def in(t: String, keys: Set[String]): Seq[String] =
+        snap.partsOf(t).collect { case (p, fs) if keys(p) => fs }.flatten.toSeq
+      val dbKeys = vDbs.map(v => s"db=$v").toSet
+      publish(snap, w, "remove", meta,
+        Seq("routed", "chunks", "tf", "enc").flatMap(in(_, dbKeys)) ++
+          in("tf_b", vCells.map(c => s"tb=${c(0)}/db=${c(1)}").toSet) ++
+          in("enc_ivf", vCids.map(c => s"cid=$c").toSet) ++
+          snap.filesOf("stats") ++ snap.filesOf("idf"))
+      }
       nVict
-    } finally graft.Staging.release(scratch)
-  }
-
-  /** The encode width of a built root: towers.meta when present,
-    * else the persisted codebook's own dim (always present on a
-    * built root — pre-towers.meta roots exist). NEVER the session
-    * default: a trusted wrong width silently mis-serves (the
-    * ragIndexOpen lesson applied to the tier minting path — a
-    * dim-16 root reopened through a 64-wide SQ fit would null every
-    * ip_est).
-    */
-  private[graft] def towersDim(d: String): Int =
-    loadTowersMeta(d).map(_._3).getOrElse(
-      graft.streaming.Streams.loadCodebook(d).map(_.dim).getOrElse(
-        sys.error(s"no towers.meta or codebook.meta at $d — not a " +
-          "built index root")))
-
-  /** Delete the derived quantization-tier layouts + models of a root
-    * — every mutation of the towers (build/rebuild/add/remove) must
-    * call this, because the tiers are corpus-statistics caches of
-    * `enc_ivf` and would otherwise serve the pre-mutation corpus.
-    */
-  private[graft] def dropTierLayouts(d: String): Unit = {
-    for (n <- Seq("enc_ivf_sq8", "enc_ivf_pq", "sq.meta", "pq.meta"))
-      graft.Fs.deleteTree(s"$d/$n")
+      }
+    }
   }
 
   /** Physical copy of a built index root into `dd` (gate plumbing
     * for the mutation gates — p5's batch delete and st25's forget
     * stream each work on their OWN clone so the shared memoized
     * fixture is never mutated). Copies through the session's Hadoop
-    * filesystem, so any scheme the root lives on works.
+    * filesystem, so any scheme the root lives on works; the log's
+    * entries are root-relative, so the clone serves its own files.
     */
   private[graft] def cloneRoot(
       spark: org.apache.spark.sql.SparkSession, d0: String,
@@ -1332,178 +1269,6 @@ object Pipeline {
       s"clone: copy ${e.name}" -> (() => graft.Fs.copy(e.path, s"$dd/${e.name}"))
     })
     ()
-  }
-
-  /** Partition-pruned rewrite of a partitioned staged table: stage
-    * `survivors` (the affected partitions' rows minus the victims)
-    * one-file-per-partition into `<name>.next`, then SWAP each
-    * affected partition dir — rename-aside + rename-in, never an
-    * append job — so untouched partitions keep their files
-    * byte-for-byte and a fully-emptied partition's dir stays gone
-    * (its cell stages no files; dynamic partition overwrite would
-    * silently leave it). The old dir renames ASIDE into
-    * `<name>.prev` before its replacement renames in, so a crash
-    * mid-swap never strands a partition invisibly: the torn
-    * partition's old content sits in `<name>.prev/<part>` and its
-    * complete replacement in `<name>.next/<part>` — a repair can
-    * restore either, and a rebuild() over routed is only safe AFTER
-    * restoring one of them (a routed missing a bucket of SURVIVORS
-    * would re-derive every tower without them). Both side dirs
-    * delete only after every swap landed. `parts` are the affected
-    * partition-value tuples, one per `partCols` level.
-    */
-  private def replacePartitions(
-      spark: org.apache.spark.sql.SparkSession, d: String,
-      name: String, partCols: Seq[String], parts: Seq[Seq[Any]],
-      survivors: DataFrame): Unit = {
-    val (stage, aside) = (s"$d/$name.next", s"$d/$name.prev")
-    // a leftover .prev is torn-swap evidence — HEAL before touching
-    // anything (deleting it here would destroy the only copy of a
-    // partition the crash removed from the live table)
-    healTornSwap(d, name)
-    graft.Fs.deleteTree(stage)
-    graft.Fs.deleteTree(aside)
-    survivors.repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(stage)
-    parts.foreach { vs =>
-      val rel = partCols.zip(vs).map { case (c, v) => s"$c=$v" }
-        .mkString("/")
-      val dst = s"$d/$name/$rel"
-      if (graft.Fs.stat(dst).isDefined) graft.Fs.move(dst, s"$aside/$rel")
-      val src = s"$stage/$rel"
-      if (graft.Fs.stat(src).isDefined) graft.Fs.move(src, dst)
-    }
-    graft.Fs.deleteTree(stage)
-    graft.Fs.deleteTree(aside)
-    bumpTowersGen(d)
-  }
-
-  /** MECHANICAL repair of a torn [[replacePartitions]] swap: for
-    * every partition dir stranded in `<name>.prev`, if the live
-    * table is missing it, rename the staged replacement in when
-    * `<name>.next` still holds one (the swap completes) or the old
-    * dir back otherwise (the swap rolls back) — either way the live
-    * table has NO missing partitions afterwards, which is the
-    * property everything downstream leans on (rebuild() re-derives
-    * every tower from routed; a routed missing a bucket of SURVIVORS
-    * would silently drop committed docs). Runs at every mutation
-    * entry ([[healTowers]]) and before each new swap; a no-op
-    * (one exists-check) when the previous swap finished.
-    */
-  private def healTornSwap(d: String, name: String): Unit = {
-    val aside = s"$d/$name.prev"
-    if (graft.Fs.stat(aside).isEmpty) return
-    // a leftover .prev means the WAVE that staged it died before its
-    // deletes — even when every partition of THIS table landed, the
-    // wave's other tables may hold the pre-mutation rows (a torn
-    // remove that already shrunk routed leaves victims servable in
-    // chunks/tf/tf_b/enc/enc_ivf, and a redelivered forget wave
-    // no-ops because membership checks against routed). Mark the
-    // root loudly BEFORE healing: per-table heal restores "no
-    // missing partitions", but only a rebuild from routed restores
-    // CROSS-TABLE consistency — the next mutation entry performs it
-    // automatically ([[addToTowers]]/[[removeFromTowers]]), and
-    // [[buildTowers]] clears the marker when it completes.
-    markTorn(d, name)
-    val stage = s"$d/$name.next"
-    // leaf partition dirs under .prev (a dir with no k=v child dirs)
-    def leafRels(p: String, rel: String): Seq[String] = {
-      val kids = graft.Fs.list(p).filter(e => e.isDir && e.name.contains("="))
-      if (kids.isEmpty) Seq(rel)
-      else kids.flatMap(e =>
-        leafRels(e.path, if (rel.isEmpty) e.name else s"$rel/${e.name}"))
-    }
-    for (rel <- leafRels(aside, "")) {
-      val dst = s"$d/$name/$rel"
-      if (graft.Fs.stat(dst).isEmpty) {
-        val src = s"$stage/$rel"
-        graft.Fs.move(
-          if (graft.Fs.stat(src).isDefined) src else s"$aside/$rel", dst)
-      }
-    }
-    graft.Fs.deleteTree(aside)
-    graft.Fs.deleteTree(stage)
-    ()
-  }
-
-  /** [[healTornSwap]] over every staged tower — runs at each
-    * mutation entry (add/remove/rebuild) so a crash inside any
-    * partition swap (a delete wave, a compaction fold) is repaired
-    * before the next operation reads or rewrites the tables. Six
-    * exists-checks when the root is clean.
-    */
-  private[graft] def healTowers(d: String): Unit = {
-    for (n <- Seq("routed", "chunks", "tf", "enc", "tf_b", "enc_ivf"))
-      healTornSwap(d, n)
-  }
-
-  /** The torn-mutation marker — ONE file, two writers:
-    *
-    *  - **Intent** ([[armTornMarker]]): every mutation wave
-    *    (add / remove / rebuild) arms it BEFORE its first write and
-    *    clears it only when the whole wave settled. A crash anywhere
-    *    in the wave — staging survivors, between table swaps, after
-    *    the rewrites but before the tier invalidation — leaves the
-    *    marker armed even though no `.prev` evidence exists (the
-    *    rename-aside window is milliseconds of a wave that runs
-    *    seconds; evidence-only detection would miss most of the
-    *    wall-clock and leave a forgotten doc servable from the
-    *    tables the wave never reached).
-    *  - **Evidence** ([[healTornSwap]] via markTorn): a stranded
-    *    `.prev` found at heal time — covers roots torn under code
-    *    that predates the intent write, and the manual compaction
-    *    path. Content-identical compaction tears arm it too
-    *    (rebuild cost for nothing), accepted: rare, cost-only,
-    *    and conservative in the right direction.
-    *
-    * Consumed by the mutation entries — which rebuild the towers
-    * from the healed `routed` before proceeding — and cleared when a
-    * [[buildTowers]] completes (the rebuild IS the cross-table
-    * repair) or a wave settles cleanly. Between a crash and the next
-    * mutation the root SERVES (possibly pre-mutation rows in tables
-    * the wave never reached) but refuses to mutate on top of the
-    * inconsistency.
-    */
-  private[graft] val tornMarkerName = "_torn_mutation"
-
-  private def writeTornMarker(d: String, note: String): Unit = {
-    graft.Fs.writeAtomic(s"$d/$tornMarkerName", note + "\n")
-    bumpTowersGen(d)
-  }
-
-  /** Arm the marker as WAVE INTENT — call before a mutation wave's
-    * first write; [[clearTornMarker]] only after its last.
-    */
-  private def armTornMarker(d: String, wave: String): Unit = {
-    writeTornMarker(d,
-      s"$wave wave in flight — if this file survives the process, " +
-        "the wave died mid-mutation and cross-table consistency " +
-        "requires a rebuild from routed (the next add/remove/rebuild " +
-        "performs it automatically)")
-  }
-
-  private def markTorn(d: String, name: String): Unit = {
-    writeTornMarker(d,
-      s"torn partition swap healed on '$name' — the mutation wave " +
-        "that staged it died before completing, so OTHER tables may " +
-        "hold pre-mutation rows; cross-table consistency requires a " +
-        "rebuild from routed (the next add/remove/rebuild performs " +
-        "it automatically)")
-    System.err.println(s"[graft] TORN MUTATION healed at $d " +
-      s"(table '$name') — towers will rebuild from routed at the " +
-      "next mutation entry to restore cross-table consistency")
-  }
-
-  private[graft] def tornMarked(d: String): Boolean =
-    graft.Fs.stat(s"$d/$tornMarkerName").isDefined
-
-  private def clearTornMarker(d: String): Unit = {
-    graft.Fs.deleteTree(s"$d/$tornMarkerName")
-    // the wave that just settled may have APPENDED files the swap
-    // primitives never saw (addToTowers' append-mode writes) — the
-    // settle itself is a file-set change
-    bumpTowersGen(d)
   }
 
   // ------------------------------------------------------------------
@@ -1535,7 +1300,7 @@ object Pipeline {
   private[graft] val pqK = 4
   private[graft] val pqIters = 2
 
-  /** A quantization tier as one towers generation serves it: the
+  /** A quantization tier as one towers snapshot serves it: the
     * model and the staged code layout's frame ([[ServedTowers.sq8]],
     * [[ServedTowers.pq]]).
     */
@@ -1550,17 +1315,17 @@ object Pipeline {
     * tower's bytes). Reads the persisted model when a mint already
     * landed.
     */
-  private def sq8TierOf(spark: org.apache.spark.sql.SparkSession,
-      d: String): Sq8Tier = {
+  private def sq8TierOf(snap: ServedTowers): Sq8Tier = {
+    val (spark, d) = (snap.spark, snap.root)
     val (mins, scales) = graft.streaming.Streams.loadModel(s"$d/sq.meta") match {
       case Some((Seq(dim), v)) => (v.take(dim), v.drop(dim))
       case _ =>
         graft.Registries.bump() // mint-once tier work (bench-visible)
-        val dim = towersDim(d)
+        val dim = snap.dim
         // two sequential actions read this frame (the min/max model
         // aggregate, then the coded write) — materialize it once for
         // the mint instead of re-scanning + re-transforming enc_ivf
-        val vecs = spark.read.parquet(s"$d/enc_ivf")
+        val vecs = snap.tables("enc_ivf")
           .select(col("vec_id"), col("cid"),
             transform(col("u16"), x => x.cast("double")).as("v"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1586,9 +1351,8 @@ object Pipeline {
     * (1 B/subspace — 16× under the int16 tower at dim 64/m 4).
     * Reads the persisted model when a mint already landed.
     */
-  private def pqTierOf(spark: org.apache.spark.sql.SparkSession,
-      d: String): PqTier = {
-    val dim = towersDim(d)
+  private def pqTierOf(snap: ServedTowers): PqTier = {
+    val (spark, d, dim) = (snap.spark, snap.root, snap.dim)
     val sub = dim / pqM
     val books = graft.streaming.Streams.loadModel(s"$d/pq.meta") match {
       case Some((Seq(m, k, s), v)) =>
@@ -1601,7 +1365,7 @@ object Pipeline {
         // was a fresh enc_ivf scan + u16→double transform. Materialize
         // it ONCE for the mint (trainPqBooks trains the pqM
         // sub-codebooks concurrently).
-        val vecs = spark.read.parquet(s"$d/enc_ivf")
+        val vecs = snap.tables("enc_ivf")
           .select(col("vec_id"), col("cid"),
             transform(col("u16"), x => x.cast("double")).as("v"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1801,7 +1565,7 @@ object Pipeline {
       "rag_removed") { dd =>
       cloneRoot(spark, d0, dd)
       val nRemoved = removeFromTowers(spark, dd,
-        spark.read.parquet(s"$dd/routed")
+        snapshotOf(dd).read(spark, "routed")
           .filter(col("doc_id") % mod === res).select("doc_id"))
       require(nRemoved > 0L,
         s"p5 gate expects victims at $mod/$res — got none")
@@ -1852,42 +1616,57 @@ object Pipeline {
     * layout) — p2's gated fixture and the facade's user-built
     * indexes read through the same map.
     *
-    * MEMOIZED per (session, root, `towers.gen` mutation stamp):
-    * a fresh `spark.read.parquet` per table per call pays parquet
-    * partition discovery (a driver-side dir walk + footer read) for
-    * all 9 tables on EVERY serve — the p3nprobe measurement put that
-    * walk at ~0.9 s/query on a 424-dir 10× root, and it grows with
-    * dir count, i.e. with the corpus (guide §6: file listing is the
-    * per-query scan-independent cost a lake-scale layout must not
-    * re-pay). Every mutation path bumps the stamp (see
-    * [[bumpTowersGen]]), so a memoized FileIndex can never serve a
-    * mutated root; a root with no stamp never memoizes. Bounded:
-    * minting a root's generation drops that root's other generations,
-    * and the map clears wholesale past 64 entries (scratch roots in
-    * specs would otherwise accumulate).
+    * MEMOIZED per (session, root) at the root's head commit: resolving
+    * the tables per call pays a file-index build and footer read for
+    * all 9 tables on EVERY serve — the p3nprobe measurement put the
+    * old per-call partition discovery at ~0.9 s/query on a 424-dir
+    * 10× root (guide §6: file listing is the per-query
+    * scan-independent cost a lake-scale layout must not re-pay). A hit
+    * costs two stats ([[graft.sources.TableLog.isHead]]), however many
+    * commits the root holds; every wave's commit moves the head, so a
+    * memoized snapshot never serves a mutated root, and a wave evicts
+    * the root's entry before it drops the tier layouts. A root with no
+    * log never memoizes. Bounded: one entry per (session, root), and
+    * the map clears wholesale past 64 entries (scratch roots in specs
+    * would otherwise accumulate).
     */
-  private val towerTables = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), ServedTowers]()
+  private val served = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.SparkSession, String), ServedTowers]()
 
-  /** One towers generation as the driver serves it: the resolved
-    * tables, the pinned coarse codebook, the postings' term-bucket
-    * count, and the BM25 corpus weights (`avgdl` and every term's
-    * `idf_bm`). Query-side list choice and BM25 weights become plan
-    * LITERALS from here, so a search plans no job for them. The
+  /** One committed towers snapshot as the driver serves it: the
+    * resolved tables, the pinned coarse codebook, the postings'
+    * term-bucket count, and the BM25 corpus weights (`avgdl` and every
+    * term's `idf_bm`). Query-side list choice and BM25 weights become
+    * plan LITERALS from here, so a search plans no job for them. The
     * weights are vocabulary-sized and load by two collects on first
     * use (lazily, so a caller that only reads tables never pays
     * them, and outside the memo's bin lock, because they run jobs).
     *
-    * A memoized generation may also hold a [[ResidentTowers]] copy of
+    * A memoized snapshot may also hold a [[ResidentTowers]] copy of
     * its serving layouts, so a hybrid search runs no Spark job.
     */
   private[graft] final class ServedTowers(
-      val spark: org.apache.spark.sql.SparkSession, val root: String,
-      val tables: Map[String, DataFrame], memoized: Boolean) {
-    val nLex: Int = layoutOf(root)._2
-    lazy val codebook: graft.expressions.PlaneMatrix =
-      graft.streaming.Streams.loadCodebook(root).getOrElse(
-        sys.error(s"staged RAG index at $root has no codebook.meta"))
+      val spark: org.apache.spark.sql.SparkSession,
+      snapshot: TowersSnapshot, memoized: Boolean) {
+    val root: String = snapshot.root
+    val version: Option[Long] = snapshot.version
+    // each table resolves ONCE from the snapshot's file list (`dense`
+    // projects the already-resolved enc_ivf); the doc-bucket layout
+    // column is partitioning, not data — readers (and the
+    // oracle/equality dumps) see the logical schema on bucketed and
+    // legacy roots alike
+    val tables: Map[String, DataFrame] = {
+      val raw = towerTables.map(n => n -> snapshot.read(spark, n)).toMap
+      raw.map { case (n, df) => n -> df.drop("db") } +
+        ("dense" -> raw("enc_ivf").select("vec_id", "cid"))
+    }
+    val nLex: Int = snapshot.meta.fold(lexBuckets)(_.nLex)
+    lazy val codebook: graft.expressions.PlaneMatrix = snapshot.codebook
+    // the encode width: the layout's, else the codebook's own (roots
+    // built before the layout was recorded). NEVER the session
+    // default: a dim-16 root minted through a 64-wide SQ fit would
+    // null every ip_est
+    lazy val dim: Int = snapshot.meta.fold(codebook.dim)(_.dim)
     lazy val avgdl: Double = labeled(spark, "serve: load avgdl") {
       tables("stats").select("avgdl").collect()(0).getDouble(0)
     }
@@ -1896,18 +1675,18 @@ object Pipeline {
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
     }
     // The quantization tiers, read or minted on first use like the
-    // weights. Every mutation drops the tier layouts and bumps the
-    // generation, so a snapshot's tier is never stale; a lazy val
+    // weights. Every wave drops the tier layouts before its commit
+    // moves the head, so a snapshot's tier is never stale; a lazy val
     // initializes once, so concurrent first searches mint once.
     lazy val sq8: Sq8Tier = labeled(spark, "serve: load sq8 tier") {
-      sq8TierOf(spark, root)
+      sq8TierOf(this)
     }
     lazy val pq: PqTier = labeled(spark, "serve: load pq tier") {
-      pqTierOf(spark, root)
+      pqTierOf(this)
     }
-    /** The driver copy of this generation's serving layouts, when the
+    /** The driver copy of this snapshot's serving layouts, when the
       * memo's copies leave room for it ([[ResidentTowers.fits]]); None
-      * serves through Spark. Decided once, on the generation's first
+      * serves through Spark. Decided once, on the snapshot's first
       * hybrid search. An unmemoized snapshot lives for one call, so a
       * copy would be loaded for one search: it never gets one.
       */
@@ -1924,9 +1703,9 @@ object Pipeline {
   private def admitResident(snap: ServedTowers): Option[ResidentTowers] = {
     val bytes = inputBytesOf(snap.tables("tf_b")) +
       inputBytesOf(snap.tables("enc_ivf"))
-    towerTables.synchronized {
+    served.synchronized {
       var held = 0L
-      towerTables.values.forEach(s => held += s.residentBytes)
+      served.values.forEach(s => held += s.residentBytes)
       if (!ResidentTowers.fits(bytes, Runtime.getRuntime.maxMemory, held))
         None
       else {
@@ -1937,48 +1716,34 @@ object Pipeline {
   }
 
   private[graft] def servedAt(spark: org.apache.spark.sql.SparkSession,
-      d: String): ServedTowers = {
-    def fresh(memoized: Boolean): ServedTowers = {
-      // resolve each table ONCE (parquet partition discovery is the
-      // very cost this memo exists to bound — `dense` projects the
-      // already-resolved enc_ivf instead of re-discovering the
-      // largest-dir-count table a second time per miss)
-      val raw = Seq("routed", "chunks", "tf", "tf_b", "idf", "stats",
-          "enc", "enc_ivf")
-        .map(n => n -> spark.read.parquet(s"$d/$n")).toMap
-      new ServedTowers(spark, d, raw.map { case (n, df) =>
-        // the doc-bucket layout column is partitioning, not data —
-        // readers (and the oracle/equality dumps) see the logical
-        // schema on bucketed and legacy roots alike
-        n -> (if (df.columns.contains("db")) df.drop("db") else df)
-      } + ("dense" -> raw("enc_ivf").select("vec_id", "cid")), memoized)
-    }
-    graft.Fs.read(s"$d/towers.gen").map(_.trim) match {
-      case Some(gen) =>
-        if (towerTables.size > 64) towerTables.clear()
-        // keyed on the session OBJECT (reference equality) — an
-        // identity hash can collide across sessions and would hand
-        // one session's plan-bound DataFrames to another
-        var minted = false
-        val snap = towerTables.computeIfAbsent((spark, d, gen),
-          { _ => minted = true; fresh(memoized = true) })
-        // the stamp on disk names the root's current generation, so no
-        // later search asks for the others: drop them, with their
-        // driver copies
-        if (minted) towerTables.keySet.removeIf(k =>
-          (k._1 eq spark) && k._2 == d && k._3 != gen)
-        snap
-      case None => fresh(memoized = false)
+      d0: String): ServedTowers = {
+    val d = d0.stripSuffix("/")
+    // keyed on the session OBJECT (reference equality) — an identity
+    // hash can collide across sessions and would hand one session's
+    // plan-bound DataFrames to another
+    val key = (spark, d)
+    val held = served.get(key)
+    if (held != null &&
+        graft.sources.TableLog.open(d).isHead(held.version.get)) held
+    else {
+      val snap = snapshotOf(d)
+      if (snap.version.isEmpty) new ServedTowers(spark, snap, memoized = false)
+      else {
+        if (served.size > 64) served.clear()
+        served.compute(key, (_, old) =>
+          if (old != null && old.version == snap.version) old
+          else new ServedTowers(spark, snap, memoized = true))
+      }
     }
   }
 
-  /** How many generations of `d` the memo holds for `spark` — spec
+  /** How many snapshots of `d` the memo holds for `spark` — spec
     * access.
     */
   private[graft] def servedGenerations(
       spark: org.apache.spark.sql.SparkSession, d: String): Int = {
     var n = 0
-    towerTables.keySet.forEach(k => if ((k._1 eq spark) && k._2 == d) n += 1)
+    served.keySet.forEach(k => if ((k._1 eq spark) && k._2 == d) n += 1)
     n
   }
 

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Pipeline.{ServedTowers, labeled, rankedBefore}
 
-/** One towers generation's serving layouts held on the driver in
-  * primitive arrays, so a hybrid search answers with no Spark job:
+/** One committed towers snapshot's serving layouts held on the driver
+  * in primitive arrays, so a hybrid search answers with no Spark job:
   * the BM25 postings by term, the IVF lists by `cid`, and, on a
   * tier's first use, its sq8 codes or pq code tuples. Each layout
-  * loads by one labelled collect on first use; the generation stamp
-  * that keys [[Pipeline.servedAt]]'s memo is also this copy's
-  * invalidation, since every mutation mints a new snapshot.
+  * loads by one labelled collect on first use; the head commit that
+  * keys [[Pipeline.servedAt]]'s memo is also this copy's
+  * invalidation, since every wave's commit mints a new snapshot.
   *
   * Every score is the Spark chain's own arithmetic in its own order:
   * BM25 sums [[Search.bm25Contrib]] per doc and rounds by Spark's

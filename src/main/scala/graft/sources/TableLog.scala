@@ -157,6 +157,14 @@ final class TableLog(val root: String) {
 
   def latestVersion: Option[Long] = versions.lastOption
 
+  /** Whether `v` is still the latest version: two stats, however many
+    * commits the log holds (every writer claims latest + 1, so the
+    * versions are contiguous).
+    */
+  def isHead(v: Long): Boolean =
+    graft.Fs.stat(commitPath(v)).isDefined &&
+      graft.Fs.stat(commitPath(v + 1L)).isEmpty
+
   /** Append one commit (the next version, or `atVersion` when the
     * writer computed its target up front — the optimistic-concurrency
     * shape: read latest, prepare, claim; a LOSING claim throws

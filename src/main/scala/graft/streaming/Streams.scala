@@ -2342,8 +2342,8 @@ object Streams {
       .parquet(stagedDir(t, path, "vec_id"))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = vecs.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        st15MaintainStep(state, cb, batch.toDF())
+      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
+        st15MaintainStep(state, cb, batch.toDF(), bid)
       }
       .start()
     q.processAllAvailable(); q.stop()
@@ -2389,7 +2389,12 @@ object Streams {
 
   private[graft] def loadCodebook(
       root: String): Option[graft.expressions.PlaneMatrix] =
-    loadModel(s"$root/codebook.meta").map { case (h, v) =>
+    codebookAt(graft.operators.Pipeline.codebookPath(root))
+
+  /** The codebook in the model file at `path`, if it exists. */
+  private[graft] def codebookAt(
+      path: String): Option[graft.expressions.PlaneMatrix] =
+    loadModel(path).map { case (h, v) =>
       new graft.expressions.PlaneMatrix(v, h.head)
     }
 
@@ -2417,30 +2422,30 @@ object Streams {
   /** ONE maintenance step: assign the ARRIVING (vec_id, v) rows to
     * their nearest coarse list — a compiled projection against the
     * pinned codebook, batch `assignedVecs`'s expression verbatim —
-    * and append list-partitioned. All work is arrivals-sized.
+    * and append list-partitioned through the one tagged batch append
+    * ([[StateTable.appendBatch]]: a committed `bid` is a no-op, a
+    * retried one wipes its remnants first). All work is arrivals-sized.
     *
     * AT-LEAST-ONCE REDELIVERY GUARD (st14's contract): a redelivered
     * vector lands in the SAME list (the pinned codebook makes
     * assignment deterministic), so an anti-join against the state
     * pruned to the batch's assigned lists — arrivals-sized, ≤ nLists
-    * partitions read — drops duplicates a retry would append.
+    * partitions read — drops duplicates a fresh-id retry would append.
     */
   private[graft] def st15MaintainStep(st: StateTable,
-      cb: graft.expressions.PlaneMatrix, batch: DataFrame): Unit = {
-    val assigned = graft.Caches.materialized(batch
-      .select(col("vec_id"), col("v"),
-        graft.functions.Vectors.centroidTop1(col("v"), cb)
-          .as("cid")))
-    val arrCids = assigned.select("cid").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val seen = st15ListProbe(st, arrCids).select("vec_id")
-    assigned
-      .join(seen, Seq("vec_id"), "left_anti")
-      .repartition(col("cid"))
-      .write.mode("append").partitionBy("cid").parquet(st.dir("vectors"))
-    graft.Caches.drop(assigned)
-    st.maybeCompact()
-  }
+      cb: graft.expressions.PlaneMatrix, batch: DataFrame,
+      bid: Long = -1L): Unit =
+    st.appendBatch(bid) {
+      val assigned = graft.Caches.materialized(batch
+        .select(col("vec_id"), col("v"),
+          graft.functions.Vectors.centroidTop1(col("v"), cb)
+            .as("cid")))
+      val arrCids = assigned.select("cid").distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      val seen = st15ListProbe(st, arrCids).select("vec_id")
+      (Seq("vectors" -> assigned.join(seen, Seq("vec_id"), "left_anti")),
+        Seq(assigned))
+    }
 
   /** The pruned list scan a query reads — factored out for the
     * plan-lock spec (PartitionFilters on cid).
@@ -2813,7 +2818,8 @@ object Streams {
       val idx = s"$d/index"
       graft.operators.Pipeline.cloneRoot(spark,
         graft.operators.Pipeline.ragRoot(t), idx)
-      val victims = spark.read.parquet(s"$idx/routed")
+      val victims = graft.operators.Pipeline.snapshotOf(idx)
+        .read(spark, "routed")
         .filter(col("doc_id") % 5 === 1).select("doc_id")
       val mm = victims.agg(min("doc_id"), max("doc_id")).collect()(0)
       // explicit gate precondition (p5's require, not an opaque NPE

@@ -1719,6 +1719,43 @@ class AnnStreamSpec extends SparkSpec {
     assert(spark.read.parquet(reopened.dir("postings")).count() == before)
   }
 
+  test("batch atomicity for st15: a committed bid delivered again does " +
+      "nothing, and a bid with an attempt marker wipes its gb<bid>- " +
+      "leftovers before landing again") {
+    val spark = SparkSpec.spark
+    val t = Tables(spark, sf)
+    val cb = graft.operators.Ann.assignedVecs(t, 16)._2
+    val vecs = t.embeddings.limit(40)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val clean = StateTable.open(spark, st15Family)
+    val crashed = StateTable.open(spark, st15Family)
+    graft.streaming.Streams.st15MaintainStep(clean, cb, vecs, bid = 0L)
+    // a crashed attempt of bid 0: its marker and half its rows landed
+    graft.streaming.Streams.markAttempt(crashed.root, 0L)
+    graft.streaming.Streams.appendTagged(
+      vecs.filter(col("vec_id") % 2 === 0)
+        .withColumn("cid", graft.functions.Vectors.centroidTop1(col("v"), cb))
+        .repartition(col("cid")),
+      crashed.dir("vectors"), 0L, Some("cid"))
+    def files(st: StateTable): Seq[String] =
+      graft.Fs.listRec(st.dir("vectors"), ".parquet").map(_.path)
+    val leftovers = files(crashed)
+    assert(leftovers.nonEmpty && leftovers.forall(_.contains("/gb0-")))
+    // the retry under the same bid wipes them, then lands the batch whole
+    graft.streaming.Streams.st15MaintainStep(crashed, cb, vecs, bid = 0L)
+    assert(!files(crashed).exists(leftovers.contains),
+      "the retry kept the crashed attempt's files")
+    def rows(st: StateTable) = spark.read.parquet(st.dir("vectors"))
+      .select("vec_id", "cid").orderBy("vec_id").collect().toSeq
+    assert(rows(crashed) == rows(clean))
+    // the committed bid delivered again, with MORE rows, lands nothing
+    val before = files(crashed)
+    graft.streaming.Streams.st15MaintainStep(crashed, cb,
+      t.embeddings.limit(60).select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v")), bid = 0L)
+    assert(files(crashed) == before)
+  }
+
   test("batch append: every table append settles before a failure " +
       "rethrows; a same-bid retry commits exactly one copy") {
     import SparkSpec.spark.implicits._

@@ -140,7 +140,8 @@ class FsSpec extends SparkSpec {
   }
 
   test("RagIndex build, add, remove and search on graftfs://: no removed " +
-      "id comes back, and a stranded towers .prev heals and arms the rebuild") {
+      "id comes back, each wave is one log version, and a stray file in a " +
+      "partition dir is never served and is gone after the next wave") {
     import SparkSpec.spark.implicits._
     val root = onGraftFs("fs_rag")
     def docs(ids: Seq[Long]) = ids.map(i => (i, s"repo/docs/d$i.md", "en",
@@ -148,30 +149,37 @@ class FsSpec extends SparkSpec {
       .toDF("doc_id", "filepath", "lang", "text")
     val idx = Graft.ragIndex(docs(1L to 6L), "doc_id", "filepath", "lang",
       "text", stateRoot = Some(root))
+    val log = TableLog.open(root)
     def hitDocs(): Set[Long] = idx.search("spark windows zanzibar", k = 20)
       .collect().map(_.getAs[Long]("chunk_id") / 1000000L).toSet
     assert(hitDocs().nonEmpty)
+    assert(log.versions == Seq(0L))
     assert(idx.add(docs(7L to 8L), "doc_id", "filepath", "lang", "text") == 2L)
+    assert(log.versions == Seq(0L, 1L), "the add is not one log version")
     assert(hitDocs().contains(7L))
     assert(idx.remove(Seq(2L, 7L)) == 2L)
+    assert(log.versions == Seq(0L, 1L, 2L), "the remove is not one log version")
     val after = hitDocs()
     assert(after.nonEmpty && !after.contains(2L) && !after.contains(7L),
       s"removed ids served: $after")
-    // TORN SWAP: a crash between replacePartitions' rename-aside and its
-    // swap-in strands a routed partition in routed.prev
-    val routed = localOf(s"$root/routed")
-    val part = java.nio.file.Files.list(routed).iterator().asScala
-      .find(_.getFileName.toString.startsWith("db=")).get
-    val prev = localOf(s"$root/routed.prev").resolve(part.getFileName)
-    java.nio.file.Files.createDirectories(prev.getParent)
-    java.nio.file.Files.move(part, prev)
-    operators.Pipeline.healTowers(root)
-    assert(java.nio.file.Files.isDirectory(part) &&
-      !java.nio.file.Files.exists(prev.getParent), "heal left the partition stranded")
-    assert(operators.Pipeline.tornMarked(root))
-    // the next mutation entry rebuilds from routed and clears the marker
+    // what a crashed wave leaves: a parquet file, here holding a removed
+    // doc, moved into a live partition dir but never committed
+    val part = operators.Pipeline.snapshotOf(root).partsOf("routed").keys.head
+    val staged = Staging.scratch("fs_rag_stray")
+    Seq((2L, "spark windows zanzibar stray")).toDF("doc_id", "body")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val stray = localOf(s"$root/routed/$part/stray.parquet")
+    java.nio.file.Files.move(java.nio.file.Files.list(
+        java.nio.file.Paths.get(staged)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get, stray)
+    Staging.release(staged)
+    // a reader resolving the root afresh (another session's) never sees it
+    val fresh = operators.Pipeline.servedAt(spark.newSession(), root)
+    assert(fresh.tables("routed").filter($"doc_id" === 2L).count() == 0L)
+    assert(hitDocs() == after)
+    // the next wave's entry deletes it
     assert(idx.remove(Seq(999L)) == 0L)
-    assert(!operators.Pipeline.tornMarked(root))
+    assert(!java.nio.file.Files.exists(stray), "the stray file survived a wave")
     assert(hitDocs() == after)
     assertNoStray()
   }
@@ -239,5 +247,29 @@ class FsSpec extends SparkSpec {
       finally walk.close()
     assert(hits.isEmpty,
       "go through graft.Fs for durable paths:\n" + hits.mkString("\n"))
+  }
+
+  test("committed towers tables are read from the head snapshot, never " +
+      "by directory") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
+    // `spark.read.parquet(s"$d/tf")` and the like; `$w` is a wave's own
+    // staging dir, which the wave reads before it publishes
+    val byDir = ("""\.parquet\(s"\$\{?(\w+)\}?/""" +
+      """(routed|chunks|tf|tf_b|idf|stats|enc|enc_ivf)"\)""").r
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.flatMap {
+            case (line, i) => byDir.findAllMatchIn(line)
+              .filter(_.group(1) != "w").map(_ => s"$f:${i + 1}: ${line.trim}")
+          }
+        }.toList
+      finally walk.close()
+    assert(hits.isEmpty,
+      "read committed towers tables through Pipeline.snapshotOf:\n" +
+        hits.mkString("\n"))
   }
 }

@@ -1240,7 +1240,8 @@ class GraftApiSpec extends SparkSpec {
       val snapIvf = fileSnap("enc_ivf")
       val flatTables = Seq("routed", "chunks", "tf", "enc")
       val snapFlat = flatTables.map(n => n -> fileSnap(n)).toMap
-      val (nDb, nLex) = graft.operators.Pipeline.layoutOf(tmp)
+      val graft.operators.Pipeline.TowersMeta(_, _, _, nDb, nLex, _) =
+        graft.operators.Pipeline.towersMetaOf(tmp).get
       assert(nDb > 0, "fresh build must mint the bucketed layout")
       val vTerms = spark.read.parquet(s"$tmp/tf")
         .filter(col("chunk_id") / 1000000L === 3L)
@@ -1427,10 +1428,10 @@ class GraftApiSpec extends SparkSpec {
     graft.Fs.deleteTree(tmp0)
   }
 
-  test("ragTablesAt memoizes per mutation generation: an unchanged " +
-      "root reuses the resolved tables (no re-discovery), every " +
-      "mutation bumps towers.gen and re-resolves — a memoized " +
-      "FileIndex can never serve a mutated root") {
+  test("ragTablesAt memoizes per head commit: an unchanged root reuses " +
+      "the resolved tables (no re-discovery), every wave's commit moves " +
+      "the head and re-resolves — a memoized FileIndex can never serve " +
+      "a mutated root") {
     import graft.operators.Pipeline
     val spark = this.spark
     import spark.implicits._
@@ -1440,30 +1441,29 @@ class GraftApiSpec extends SparkSpec {
     try {
       Graft.ragIndex(docs, "doc_id", "filepath", "lang", "text",
         stateRoot = Some(tmp))
-      // a completed build minted the stamp
-      assert(graft.Fs.read(s"$tmp/towers.gen").isDefined)
-      val g0 = graft.Fs.read(s"$tmp/towers.gen").get
+      // a completed build is the root's one commit
+      val log = graft.sources.TableLog.open(tmp)
+      assert(log.versions == Seq(0L))
       val t1 = Pipeline.ragTablesAt(spark, tmp)
       val t2 = Pipeline.ragTablesAt(spark, tmp)
-      // same generation -> the SAME resolved map (reference equality:
-      // partition discovery ran once, not per serve)
+      // same head -> the SAME resolved map (reference equality: the
+      // tables resolved once, not per serve)
       assert(t1 eq t2)
       val before = t1("routed").count()
       assert(Pipeline.removeFromTowers(spark, tmp,
         Seq(1L).toDF("doc_id")) == 1L)
-      // the wave bumped the stamp, so the memo re-resolves and the
-      // fresh tables see the shrunk corpus
-      assert(graft.Fs.read(s"$tmp/towers.gen").get != g0)
+      // the wave's one commit moved the head, so the memo re-resolves
+      // and the fresh tables see the shrunk corpus
+      assert(log.versions == Seq(0L, 1L))
       val t3 = Pipeline.ragTablesAt(spark, tmp)
       assert(!(t3 eq t1))
       assert(t3("routed").count() == before - 1)
-      // a stamp-less root (foreign/legacy) never memoizes
+      // a root with no log (foreign/legacy) never memoizes
       val flat = java.nio.file.Files
         .createTempDirectory("graft_gen_flat_").toString
       try {
         Pipeline.cloneRoot(spark, tmp, flat)
-        java.nio.file.Files.delete(
-          java.nio.file.Paths.get(flat, "towers.gen"))
+        graft.Fs.deleteTree(s"$flat/_log")
         val f1 = Pipeline.ragTablesAt(spark, flat)
         val f2 = Pipeline.ragTablesAt(spark, flat)
         assert(!(f1 eq f2))
@@ -1472,41 +1472,56 @@ class GraftApiSpec extends SparkSpec {
     } finally graft.Fs.deleteTree(tmp)
   }
 
-  test("add/remove release their scratch dir and its Staging key on " +
-      "every exit: success, no-op, and a remove that fails") {
-    val spark = this.spark
-    import spark.implicits._
-    val tmpDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def scratchDirs(): Int = {
-      val s = java.nio.file.Files.list(tmpDir)
-      try s.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("graft_rag_add_") || n.startsWith("graft_rag_remove_")
-      }.count().toInt finally s.close()
-    }
+  /** Every parquet file under the root's table dirs, and whether a
+    * wave dir is left.
+    */
+  private def onDisk(root: String): (Seq[String], Boolean) =
+    (Seq("routed", "chunks", "tf", "tf_b", "idf", "stats", "enc", "enc_ivf")
+      .flatMap(t => graft.Fs.listRec(s"$root/$t", ".parquet")).map(_.path),
+      graft.Fs.stat(s"$root/_wave").isDefined)
+
+  test("no wave dir and no file outside the snapshot survives a success, " +
+      "a no-op or a failed wave") {
+    import graft.operators.Pipeline
     val root = java.nio.file.Files
-      .createTempDirectory("graft_scratch_rel_").toString
+      .createTempDirectory("graft_wave_clean_").toString
+    def assertClean(what: String): Unit = {
+      val (files, waveLeft) = onDisk(root)
+      val held = Pipeline.snapshotOf(root).files.toSet
+      assert(!waveLeft, s"$what left its wave dir")
+      assert(files.forall(held), s"$what left ${files.filterNot(held)}")
+    }
     try {
       val idx = Graft.ragIndex(ragDrillDocs(1L to 4L), "doc_id", "filepath",
         "lang", "text", stateRoot = Some(root))
-      val (keys0, dirs0) = (Staging.scratchKeys, scratchDirs())
+      val keys0 = Staging.scratchKeys
       def add(ids: Seq[Long]): Long = idx.add(ragDrillDocs(ids), "doc_id",
         "filepath", "lang", "text")
+      assertClean("the build")
       for (round <- 0 until 2) {
         val lo = 10L + 10 * round
         assert(add(lo to lo + 2) == 3L)
+        assertClean(s"round $round: an add")
         assert(add(lo to lo + 2) == 0L) // already indexed: the no-op exit
+        assertClean(s"round $round: a no-op add")
         assert(idx.remove(Seq(lo)) == 1L)
+        assertClean(s"round $round: a remove")
         assert(idx.remove(Seq(999L)) == 0L) // unknown id: the no-op exit
-        assert(Staging.scratchKeys == keys0 && scratchDirs() == dirs0,
-          s"round $round: ${Staging.scratchKeys - keys0} keys and " +
-            s"${scratchDirs() - dirs0} dirs outlived their call")
+        assertClean(s"round $round: a no-op remove")
       }
-      // removing every doc fails after its scratch is staged
+      // removing every doc fails after its victims resolved
       val all = idx.tables("routed").select("doc_id").as[Long].collect().toSeq
       intercept[IllegalArgumentException](idx.remove(all))
-      assert(Staging.scratchKeys == keys0 && scratchDirs() == dirs0,
-        "a failed remove kept its scratch")
+      assertClean("a failed remove")
+      // a wave that fails after moving files in, before its commit: its
+      // dir goes at once, its moved files at the next mutation entry
+      Pipeline.publishFault = t => if (t == "tf") sys.error("drill")
+      try intercept[RuntimeException](add(50L to 51L))
+      finally Pipeline.publishFault = _ => ()
+      assert(!onDisk(root)._2, "a failed wave left its wave dir")
+      assert(idx.remove(Seq(999L)) == 0L)
+      assertClean("the entry after a failed wave")
+      assert(Staging.scratchKeys == keys0, "a wave kept a scratch dir")
     } finally graft.Fs.deleteTree(root)
   }
 
@@ -1640,9 +1655,9 @@ class GraftApiSpec extends SparkSpec {
         stateRoot = Some(tmp))
       val cb = graft.streaming.Streams.loadCodebook(tmp).get
       // DOWNGRADE the root to the pre-round-16 legacy layout: flat
-      // (un-bucketed) artifacts, tb-only postings, 3-line meta — the
-      // shape a durable root built before the layout knobs existed
-      // still has on disk
+      // (un-bucketed) artifacts, tb-only postings, 3-line meta, a
+      // root-level codebook.meta and no log — the shape a durable root
+      // built before the layout knobs existed still has on disk
       def rewriteFlat(n: String, partCols: Seq[String]): Unit = {
         val df = spark.read.parquet(s"$tmp/$n").drop("db")
         val t = s"$tmp/${n}__legacy"
@@ -1655,10 +1670,11 @@ class GraftApiSpec extends SparkSpec {
       }
       for (n <- Seq("routed", "chunks", "tf", "enc")) rewriteFlat(n, Nil)
       rewriteFlat("tf_b", Seq("tb"))
+      graft.Fs.deleteTree(s"$tmp/_log")
+      graft.Fs.deleteTree(s"$tmp/codebook")
+      graft.streaming.Streams.saveCodebook(tmp, cb)
       val metaP = java.nio.file.Paths.get(tmp, "towers.meta")
-      val lines = new String(java.nio.file.Files.readAllBytes(metaP),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+      val lines = Seq("200", "100", graft.operators.Embed.dim.toString, "16")
       java.nio.file.Files.write(metaP,
         (lines.take(3).mkString("\n") + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1704,112 +1720,6 @@ class GraftApiSpec extends SparkSpec {
     } finally {
       graft.Fs.deleteTree(tmp)
       graft.Fs.deleteTree(tmp2)
-    }
-  }
-
-  test("healTornSwap: a crash mid-swap heals forward from .next, a " +
-      "swap with no staged replacement rolls back from .prev, and " +
-      "the add-path compaction bounds per-dir file counts without " +
-      "changing content") {
-    import graft.operators.Pipeline
-    val spark = this.spark
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "repo/docs/a.md", "en",
-        "spark joins and windows explained with zanzibar examples"),
-      (2L, "repo/src/a.py", "python", "def run(): spark filter job"),
-      (3L, "repo/docs/b.md", "en",
-        "quokka quokka aggregation guide for spark windows"))
-      .toDF("doc_id", "filepath", "lang", "text")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_heal_").toString
-    try {
-      val idx = Graft.ragIndex(docs, "doc_id", "filepath", "lang",
-        "text", stateRoot = Some(tmp))
-      val before = idx.search("spark windows", k = 5).collect()
-        .map(_.toSeq).toSeq
-      def listFiles(p: java.nio.file.Path): Set[String] = {
-        val st = java.nio.file.Files.list(p)
-        try st.toArray.map(_.asInstanceOf[java.nio.file.Path]
-          .getFileName.toString).toSet
-        finally st.close()
-      }
-      val routedDir = java.nio.file.Paths.get(tmp, "routed")
-      val dbDir = {
-        val st = java.nio.file.Files.list(routedDir)
-        try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.startsWith("db="))
-          .maxBy(p => listFiles(p).size)
-        finally st.close()
-      }
-      val rel = dbDir.getFileName.toString
-      val origFiles = listFiles(dbDir)
-      def copyTree(a: java.nio.file.Path, b: java.nio.file.Path): Unit = {
-        java.nio.file.Files.createDirectories(b)
-        val st = java.nio.file.Files.list(a)
-        try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .foreach(f => java.nio.file.Files.copy(f, b.resolve(
-            f.getFileName.toString)))
-        finally st.close()
-      }
-      // FORWARD: the replacement survives in .next, the old dir sits
-      // in .prev MISSING one file (so taking the wrong side is
-      // detectable), the live dir is gone — the exact crash window
-      // between replacePartitions' aside-rename and its swap-in
-      val nextRel = java.nio.file.Paths.get(tmp, "routed.next", rel)
-      val prevRel = java.nio.file.Paths.get(tmp, "routed.prev", rel)
-      copyTree(dbDir, nextRel)
-      java.nio.file.Files.createDirectories(prevRel.getParent)
-      java.nio.file.Files.move(dbDir, prevRel)
-      val dropped = listFiles(prevRel)
-        .find(_.endsWith(".parquet")).get
-      java.nio.file.Files.delete(prevRel.resolve(dropped))
-      Pipeline.healTowers(tmp)
-      assert(listFiles(dbDir) == origFiles,
-        "heal must complete the swap from .next (full file set)")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(tmp, "routed.prev")) &&
-        !java.nio.file.Files.exists(
-          java.nio.file.Paths.get(tmp, "routed.next")),
-        "heal must clean both side dirs")
-      // ROLLBACK: no staged replacement — the old dir must come back
-      java.nio.file.Files.createDirectories(prevRel.getParent)
-      java.nio.file.Files.move(dbDir, prevRel)
-      Pipeline.healTowers(tmp)
-      assert(listFiles(dbDir) == origFiles,
-        "heal must roll the old dir back when no replacement exists")
-      // content unharmed end to end — and a mutation entry heals too
-      // (removeFromTowers ran healTowers before reading; a no-op
-      // remove exercises that path). The manual heals above armed
-      // the torn-mutation marker, so this entry ALSO pays the
-      // automatic consistency rebuild and must clear the marker.
-      assert(graft.operators.Pipeline.tornMarked(tmp),
-        "heal must arm the torn-mutation marker")
-      assert(idx.remove(Seq(999L)) == 0L)
-      assert(!graft.operators.Pipeline.tornMarked(tmp),
-        "the mutation entry's rebuild must discharge the marker")
-      assert(idx.search("spark windows", k = 5).collect()
-        .map(_.toSeq).toSeq == before, "serving drifted after heals")
-      // COMPACTION BOUND: 12 single-doc add waves all hash into few
-      // buckets; the threshold fold keeps every routed db dir at
-      // most 8+1 files while the registry count tracks every add
-      for (i <- 10L to 21L)
-        assert(idx.add(
-          Seq((i, s"repo/docs/n$i.md", "en",
-            s"meadow harbor lantern note $i"))
-            .toDF("doc_id", "filepath", "lang", "text"),
-          "doc_id", "filepath", "lang", "text") == 1L)
-      val st2 = java.nio.file.Files.list(routedDir)
-      val maxFiles =
-        try st2.toArray.map(_.asInstanceOf[java.nio.file.Path])
-          .filter(_.getFileName.toString.startsWith("db="))
-          .map(p => listFiles(p).count(_.endsWith(".parquet"))).max
-        finally st2.close()
-      assert(maxFiles <= 9,
-        s"add-cadence fragmentation unbounded: $maxFiles files in a dir")
-      assert(spark.read.parquet(s"$tmp/routed").count() == 15L)
-    } finally {
-      graft.Fs.deleteTree(tmp)
     }
   }
 
@@ -1927,7 +1837,7 @@ class GraftApiSpec extends SparkSpec {
     assert(out(3L) == "# en\nthe quick brown fox jumps\n(rewritten)")
   }
 
-  // shared by the two torn-remove drills below
+  // shared by the wave drills below
   private def ragDrillDocs(ids: Seq[Long]) = {
     val s = spark
     import s.implicits._
@@ -1953,178 +1863,157 @@ class GraftApiSpec extends SparkSpec {
         .orderBy(keys.map(col): _*).collect().map(_.toSeq).toSeq).toMap
   }
 
-  test("crashed remove on a fully-emptied victim bucket: heal rolls " +
-      "back (victims resurrect), the RETRY rebuilds for consistency " +
-      "and lands all eight tables bit-equal to the pinned survivors " +
-      "rebuild") {
+  /** The reads a failed wave must leave as they were: every table,
+    * hits on the int16 and sq8 tiers, the layout and the codebook.
+    */
+  private def reads(root: String): Seq[Any] = {
     import graft.operators.Pipeline
-    val docs = ragDrillDocs(1L to 10L)
+    val idx = Graft.ragIndexOpen(spark, root)
+    Seq(dumpTables(root), Pipeline.towersMetaOf(root),
+      graft.streaming.Streams.loadCodebook(root).get.values.toSeq) ++
+      Seq("int16", "sq8").map(t => idx.search("spark windows zanzibar",
+        k = 8, tier = t).collect().map(_.toSeq).toSeq)
+  }
+
+  /** Run `wave` with the fault seam failing it after `routed`, `chunks`
+    * and `tf` moved in, then check what the drills share: every read is
+    * the pre-wave root's, the moved files are on disk but outside the
+    * snapshot, and the failure made no commit.
+    */
+  private def failAfterLanding(root: String)(wave: => Any): Unit = {
+    import graft.operators.Pipeline
+    val log = graft.sources.TableLog.open(root)
+    val (v0, before) = (log.latestVersion, reads(root))
+    Pipeline.publishFault = t => if (t == "tf") sys.error("drill: crash")
+    try assert(intercept[RuntimeException](wave).getMessage.contains("drill"))
+    finally Pipeline.publishFault = _ => ()
+    assert(log.latestVersion == v0, "a failed wave committed")
+    val held = Pipeline.snapshotOf(root).files.toSet
+    assert(onDisk(root)._1.exists(f => !held(f)),
+      "the drill failed before any file landed")
+    assert(reads(root) == before, "a failed wave changed a read")
+  }
+
+  /** After the retry: no file outside the snapshot, and the root equals
+    * `ref` table for table and hit for hit.
+    */
+  private def assertRetried(root: String, ref: String): Unit = {
+    val (files, waveLeft) = onDisk(root)
+    val held = graft.operators.Pipeline.snapshotOf(root).files.toSet
+    assert(!waveLeft && files.forall(held),
+      s"the retry left ${files.filterNot(held)}")
+    val (got, want) = (dumpTables(root), dumpTables(ref))
+    for (tbl <- got.keys)
+      assert(got(tbl) == want(tbl), s"$tbl drifted from the reference rebuild")
+    val q = "spark windows zanzibar"
+    assert(Graft.ragIndexOpen(spark, root).search(q, k = 8).collect().toSeq ==
+      Graft.ragIndexOpen(spark, ref).search(q, k = 8).collect().toSeq)
+  }
+
+  /** The reference: `docs` through the build under `root`'s pinned
+    * codebook, at a fresh root.
+    */
+  private def pinnedRebuild(root: String, docs: org.apache.spark.sql.DataFrame,
+      ref: String): Unit = {
+    val cb = graft.streaming.Streams.loadCodebook(root).get
+    Graft.ragNormalize(docs, "doc_id", "filepath", "lang", "text")
+      .select(col("doc_id").cast("long").as("doc_id"), col("body"))
+      .write.mode("overwrite").parquet(s"$ref/routed")
+    graft.operators.Pipeline.buildTowers(spark, ref, 200, 100,
+      graft.operators.Embed.dim, Some(cb))
+  }
+
+  test("an add or a rebuild that fails after landing some tables, " +
+      "before its commit, serves the pre-wave root; the next entry " +
+      "sweeps its files; the retry equals the pinned rebuild; each " +
+      "wave is one commit and the add cadence's compaction bounds " +
+      "per-dir file counts") {
+    import graft.operators.Pipeline
+    val docs = ragDrillDocs(1L to 6L)
+    val grown = ragDrillDocs(Seq(7L, 8L))
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_tornrm_").toString
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft_tornrm_ref_").toString
+      .createTempDirectory("graft_crash_add_").toString
+    val ref = java.nio.file.Files
+      .createTempDirectory("graft_crash_add_ref_").toString
     try {
-      val idx = Graft.ragIndex(docs, "doc_id", "filepath", "lang",
-        "text", stateRoot = Some(tmp))
-      // victim = a doc ALONE in its routed bucket, so the delete wave
-      // fully empties the partition and stages NO replacement — the
-      // exact crash window the round-17 verdict flagged as drilled
-      // only piecewise
-      val byDb = spark.read.parquet(s"$tmp/routed")
-        .select("doc_id", "db").collect()
-        .groupBy(_.getAs[Number]("db").longValue)
-        .view.mapValues(_.map(_.getLong(0)))
-      val (vDb, vIds) = byDb.find(_._2.length == 1).getOrElse(
-        fail("no singleton bucket among 10 docs — widen the id range"))
-      val victim = vIds.head
-      // the reference: survivors through the same build under the
-      // root's PINNED codebook
-      val cb = graft.streaming.Streams.loadCodebook(tmp).get
-      Graft.ragNormalize(
-          docs.filter(col("doc_id") =!= victim),
-          "doc_id", "filepath", "lang", "text")
-        .select(col("doc_id").cast("long").as("doc_id"), col("body"))
-        .write.mode("overwrite").parquet(s"$tmp2/routed")
-      Pipeline.buildTowers(spark, tmp2, 200, 100,
-        graft.operators.Embed.dim, Some(cb))
-      val nBefore = spark.read.parquet(s"$tmp/routed").count()
-      // TEAR: the wave renamed the victim bucket aside and died
-      // before anything else — .next exists (the wave staged its
-      // EMPTY survivor set: no dir for the emptied partition), the
-      // live dir is gone, every other table untouched
-      val liveDir = java.nio.file.Paths.get(tmp, "routed", s"db=$vDb")
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tmp, "routed.next"))
-      val prevRel =
-        java.nio.file.Paths.get(tmp, "routed.prev", s"db=$vDb")
-      java.nio.file.Files.createDirectories(prevRel.getParent)
-      java.nio.file.Files.move(liveDir, prevRel)
-      // HEAL: no staged replacement ⇒ rollback — the victims
-      // RESURRECT (correct: the wave never completed and remove()
-      // threw), and the marker arms
-      Pipeline.healTowers(tmp)
-      assert(spark.read.parquet(s"$tmp/routed").count() == nBefore,
-        "rollback must resurrect the victim bucket")
-      assert(Pipeline.tornMarked(tmp), "heal must arm the marker")
-      // RETRY: the entry sees the marker, rebuilds from the healed
-      // routed (cross-table consistency), then the wave removes the
-      // victims for real
-      assert(idx.remove(Seq(victim)) == 1L)
-      assert(!Pipeline.tornMarked(tmp), "marker must discharge")
-      assert(!java.nio.file.Files.exists(liveDir),
-        "a fully-emptied victim bucket's dir must stay gone")
-      val got = dumpTables(tmp)
-      val ref = dumpTables(tmp2)
-      for (tbl <- got.keys)
-        assert(got(tbl) == ref(tbl),
-          s"$tbl drifted from the pinned survivors rebuild after " +
-            "the heal-retry chain")
+      val idx = Graft.ragIndex(docs, "doc_id", "filepath", "lang", "text",
+        stateRoot = Some(tmp))
+      val log = graft.sources.TableLog.open(tmp)
+      def add(d: org.apache.spark.sql.DataFrame): Long =
+        idx.add(d, "doc_id", "filepath", "lang", "text")
+      failAfterLanding(tmp)(add(grown))
+      assert(add(grown) == 2L)
+      assert(log.versions == Seq(0L, 1L), "the add is not one commit")
+      pinnedRebuild(tmp, docs.unionByName(grown), ref)
+      assertRetried(tmp, ref)
+      // rebuild: same corpus, same pinned codebook, same answers
+      failAfterLanding(tmp)(idx.rebuild())
+      idx.rebuild()
+      assert(log.versions == Seq(0L, 1L, 2L), "the rebuild is not one commit")
+      assertRetried(tmp, ref)
+      // COMPACTION BOUND: 12 single-doc add waves all hash into few
+      // buckets; the threshold fold keeps every committed routed dir at
+      // most 8 files while the registry count tracks every add, and a
+      // fold is one commit of its own
+      for (i <- 10L to 21L)
+        assert(add(ragDrillDocs(Seq(i))) == 1L)
+      val parts = Pipeline.snapshotOf(tmp).partsOf("routed")
+      assert(parts.values.map(_.size).max <= 8,
+        s"add-cadence fragmentation unbounded: ${parts.values.map(_.size).max}")
+      assert(log.versions.size > 3 + 12, "no compaction commit ran")
+      assert(spark.read.parquet(s"$tmp/routed").count() == 20L)
+      val v = log.latestVersion
+      Pipeline.compactTowers(spark, tmp, maxFilesPerDir = 1)
+      assert(log.latestVersion == v.map(_ + 1L),
+        "a compaction is not one commit")
+      assert(Pipeline.snapshotOf(tmp).partsOf("routed").values
+        .forall(_.size == 1))
     } finally {
       graft.Fs.deleteTree(tmp)
-      graft.Fs.deleteTree(tmp2)
+      graft.Fs.deleteTree(ref)
     }
   }
 
-  test("torn remove that already shrunk routed with NO rename " +
-      "evidence (crash between table swaps): the armed intent marker " +
-      "alone makes the next mutation rebuild, scrubbing " +
-      "still-servable victims even though the wave itself no-ops") {
+  test("a remove that fails after landing some tables, before its " +
+      "commit, serves the pre-wave root with its victims; the retry " +
+      "removes them, a fully-emptied bucket leaves the snapshot, and " +
+      "all eight tables equal the pinned survivors rebuild") {
     import graft.operators.Pipeline
-    // pick ids so TWO docs share a routed bucket (nDb = 16 on a toy
-    // root): the victim's bucket survives the wave non-empty, so the
-    // torn state is "routed shrunk + .prev left + five towers stale"
-    // — the ADVICE hole where a redelivered forget wave no-ops on
-    // routed membership while chunks/tf_b/enc_ivf keep serving the
-    // forgotten doc
-    val probe = spark.range(1L, 300L)
-      .select(col("id"),
-        Pipeline.docBucket(col("id"), 16).as("db"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    // the colliding pair with the LARGEST max id, so the global max
-    // (= ragDrillDocs' zanzibar victim) is guaranteed a bucket-mate
-    val pairIds = probe.groupBy(_._2).values
-      .filter(_.length >= 2)
-      .maxBy(_.map(_._1).max)
-      .map(_._1).sorted.takeRight(2)
-    val others = probe.map(_._1)
-      .filterNot(pairIds.contains).filter(_ < pairIds.max).take(6)
-    val docs = ragDrillDocs((pairIds ++ others).sorted)
-    val vic = pairIds.max
+    val docs = ragDrillDocs(1L to 10L)
     val tmp = java.nio.file.Files
-      .createTempDirectory("graft_tornshrunk_").toString
-    val tmp2 = java.nio.file.Files
-      .createTempDirectory("graft_tornshrunk_ref_").toString
+      .createTempDirectory("graft_crash_rm_").toString
+    val ref = java.nio.file.Files
+      .createTempDirectory("graft_crash_rm_ref_").toString
     try {
       val idx = Graft.ragIndex(docs, "doc_id", "filepath", "lang",
         "text", stateRoot = Some(tmp))
-      val vDbRow = spark.read.parquet(s"$tmp/routed")
-        .filter(col("doc_id") === vic).select("db").collect()
-      val vDb = vDbRow.head.getAs[Number]("db").longValue
-      val bucketN = spark.read.parquet(s"$tmp/routed")
-        .filter(col("db") === vDb).count()
-      assert(bucketN >= 2L,
-        "drill setup: the victim must share its bucket")
-      // the reference: survivors under the pinned codebook
-      val cb = graft.streaming.Streams.loadCodebook(tmp).get
-      Graft.ragNormalize(docs.filter(col("doc_id") =!= vic),
-          "doc_id", "filepath", "lang", "text")
-        .select(col("doc_id").cast("long").as("doc_id"), col("body"))
-        .write.mode("overwrite").parquet(s"$tmp2/routed")
-      Pipeline.buildTowers(spark, tmp2, 200, 100,
-        graft.operators.Embed.dim, Some(cb))
-      // the victim IS servable before the tear
-      assert(idx.search("zanzibar", k = 3).collect()
-        .exists(_.getAs[Long]("chunk_id") / 1000000L == vic))
-      // TEAR: routed's swap COMPLETED (live dir already holds the
-      // shrunk survivor set, its .prev/.next fully cleaned) and the
-      // wave died BETWEEN table swaps — the window where no rename
-      // evidence exists anywhere and only the wave's armed INTENT
-      // marker records that the five derived towers still hold the
-      // victim (the review finding: .prev exists for milliseconds of
-      // a wave that runs seconds)
-      val liveDir = java.nio.file.Paths.get(tmp, "routed", s"db=$vDb")
-      val scratch = java.nio.file.Files
-        .createTempDirectory("graft_shrunk_stage_")
-      spark.read.parquet(s"$tmp/routed")
-        .filter(col("db") === vDb && col("doc_id") =!= vic)
-        .drop("db").coalesce(1)
-        .write.mode("overwrite").parquet(scratch.toString)
-      val st = java.nio.file.Files.list(liveDir)
-      try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .foreach(java.nio.file.Files.delete)
-      finally st.close()
-      val st2 = java.nio.file.Files.list(scratch)
-      try st2.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach(f => java.nio.file.Files.move(f,
-          liveDir.resolve(f.getFileName.toString)))
-      finally st2.close()
-      // the intent the crashed wave armed before its first write
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, Pipeline.tornMarkerName),
-        "remove wave in flight (drill)\n".getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      assert(Pipeline.tornMarked(tmp))
-      // the REDELIVERED wave: membership (routed) says the victim is
-      // gone, so the wave itself returns 0 — but the entry saw the
-      // armed intent and the automatic rebuild scrubbed the victim
-      // from every tower first
-      assert(idx.remove(Seq(vic)) == 0L)
-      assert(!Pipeline.tornMarked(tmp), "marker must discharge")
-      assert(!idx.search("zanzibar", k = 3).collect()
-        .exists(_.getAs[Long]("chunk_id") / 1000000L == vic),
-        "the forgotten doc stayed servable after the healed no-op " +
-          "wave — the ADVICE right-to-be-forgotten hole")
-      val got = dumpTables(tmp)
-      val ref = dumpTables(tmp2)
-      for (tbl <- got.keys)
-        assert(got(tbl) == ref(tbl),
-          s"$tbl drifted from the pinned survivors rebuild after " +
-            "the torn-shrunk heal")
-      graft.Fs.deleteTree(scratch.toString)
+      // victims: the zanzibar doc (10, served by the drill's query) and
+      // a doc ALONE in its routed bucket, so the wave fully empties a
+      // partition
+      val byDb = idx.tables("routed").select("doc_id")
+        .withColumn("db", Pipeline.docBucket(col("doc_id"),
+          Pipeline.towersMetaOf(tmp).get.nDb))
+        .collect().groupBy(_.getLong(1)).view.mapValues(_.map(_.getLong(0)))
+      val (vDb, alone) = byDb.find { case (_, ids) =>
+        ids.length == 1 && ids.head != 10L }.getOrElse(
+        fail("no singleton bucket among 10 docs — widen the id range"))
+      val victims = Seq(alone.head, 10L)
+      def served(): Set[Long] = idx.search("spark windows zanzibar", k = 20)
+        .collect().map(_.getAs[Long]("chunk_id") / 1000000L).toSet
+      assert(served().contains(10L))
+      failAfterLanding(tmp)(idx.remove(victims))
+      assert(served().contains(10L), "a failed remove already forgot")
+      assert(idx.remove(victims) == 2L)
+      assert(graft.sources.TableLog.open(tmp).versions == Seq(0L, 1L),
+        "the remove is not one commit")
+      assert(!served().exists(victims.contains))
+      assert(!Pipeline.snapshotOf(tmp).partsOf("routed").contains(s"db=$vDb"),
+        "the emptied bucket still holds committed files")
+      pinnedRebuild(tmp, docs.filter(!col("doc_id").isin(victims: _*)), ref)
+      assertRetried(tmp, ref)
     } finally {
       graft.Fs.deleteTree(tmp)
-      graft.Fs.deleteTree(tmp2)
+      graft.Fs.deleteTree(ref)
     }
   }
 

@@ -72,7 +72,7 @@ class ServeSnapshotSpec extends SparkSpec {
       .select(slice(functions.Vectors.centroidRanks(
         typedlit(qU16.map(_.toDouble)), cb), 1, nProbe).as("pls"))
       .collect()(0).getSeq[Int](0)
-    val buckets = terms.map(Search.termBucketOf(_, Pipeline.layoutOf(root)._2))
+    val buckets = terms.map(Search.termBucketOf(_, Pipeline.towersMetaOf(root).get.nLex))
       .distinct
     val lexPlan = tbl("tf_b")
       .filter(col("tb").isin(buckets.map(b => b: Any): _*))
@@ -150,13 +150,13 @@ class ServeSnapshotSpec extends SparkSpec {
       val hits0 = assertServesAsOld(idx, qs, "built")
       assert(hits0.nonEmpty)
 
-      val gen0 = Fs.read(s"$root/towers.gen")
+      val head0 = sources.TableLog.open(root).latestVersion
       val snap0 = Pipeline.servedAt(spark, root)
       val (avgdl0, idf0) = (snap0.avgdl, snap0.idf)
       val added = 61L to 75L
       assert(idx.add(docs(added, 8L), "doc_id", "filepath", "lang",
         "text") == added.size)
-      assert(Fs.read(s"$root/towers.gen") != gen0)
+      assert(sources.TableLog.open(root).latestVersion != head0)
       val snap1 = Pipeline.servedAt(spark, root)
       assert(!(snap1 eq snap0))
       assert(snap1.idf.contains("uniq61") && !idf0.contains("uniq61"))
