@@ -185,6 +185,26 @@ object Fs {
     go(fs.getFileStatus(new Path(src)), new Path(dst))
   }
 
+  /** Land the tree a Spark write left at `src` in the dir `dst`: name
+    * each file ending in `ext` in place with `prefix`, delete every
+    * other file (Spark's `_SUCCESS` and `.crc` sidecars), then
+    * [[mergeInto]] `dst` when anything is left. Returns the landed
+    * files' paths under `dst`.
+    */
+  def land(src: String, dst: String, prefix: String,
+      ext: String): Seq[String] = {
+    val landed = listRec(src).flatMap { f =>
+      if (f.name.endsWith(ext)) {
+        val cut = f.path.lastIndexOf('/') + 1
+        val named = s"${f.path.take(cut)}$prefix${f.name}"
+        move(f.path, named)
+        Some(s"$dst/${named.stripPrefix(s"$src/")}")
+      } else { deleteTree(f.path); None }
+    }
+    if (landed.nonEmpty) mergeInto(src, dst)
+    landed
+  }
+
   /** Copy the file or tree at `src` to `dst`. */
   def copy(src: String, dst: String): Unit = {
     val (s, d) = (new Path(src), new Path(dst))

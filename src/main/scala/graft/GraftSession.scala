@@ -44,7 +44,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.GraftSession")
 
-  private val cacheCapKey = "spark.sql.codegen.cache.maxEntries"
+  private[graft] val cacheCapKey = "spark.sql.codegen.cache.maxEntries"
 
   /** Codegen settings every graft session runs with (see above). */
   val codegenConf: Map[String, String] = Map(

@@ -1292,8 +1292,10 @@ object Graft {
       * measurement): each of the first `nQueries` docs' first chunk
       * asks its own top-`topT` terms against the STAGED serving
       * tower; reports the source chunk's rank / reciprocal rank /
-      * hit@`k` per query. The scoring scan is pruned to the union of
-      * the eval set's term buckets — one plan over the query set.
+      * hit@`k` per query. Served from the index's driver copy when
+      * admitted (no Spark job), else one plan over the query set whose
+      * scoring scan is pruned to the union of the eval set's term
+      * buckets.
       */
     def evalSelfRetrieval(nQueries: Int = 16, topT: Int = 3,
         k: Int = 5): DataFrame =
@@ -1302,7 +1304,8 @@ object Graft {
     /** TOKEN-BUDGET CONTEXT ASSEMBLY (the prompt-building step): the
       * self-derived query set's top-`kCand` staged-BM25 chunks, at
       * most `maxPerDoc` per source doc, greedily packed in score
-      * order while the running dl total fits `budget`. One
+      * order while the running dl total fits `budget`. Served from
+      * the index's driver copy when admitted (no Spark job), else one
       * bucket-pruned scoring plan for the whole set; token costs are
       * the index's own dl integers (no re-tokenize).
       */
@@ -1312,9 +1315,9 @@ object Graft {
       graft.operators.Pipeline.contextPack(spark, root, nQueries,
         topT, kCand, maxPerDoc, budget)
     /** [[packContext]] for YOUR queries (qid = position in
-      * `queries`, tokenized by the engine's own rule): one
-      * bucket-pruned scoring plan for the whole list, then the same
-      * per-query pack discipline.
+      * `queries`, tokenized by the engine's own rule): the driver
+      * copy when admitted, else one bucket-pruned scoring plan for the
+      * whole list, then the same per-query pack discipline.
       */
     def packContextFor(queries: Seq[String], kCand: Int = 8,
         maxPerDoc: Int = 2, budget: Int = 120): DataFrame =

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.datasources.{FileStatusCache,
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 /** p1: THE CURATION PIPELINE — the engine's operators composed into
   * the standard training-data funnel (the FineWeb/CCNet/Dolma shape):
@@ -806,9 +808,10 @@ object Pipeline {
   /** Publish a wave: evict the root's memoized snapshot, drop the
     * derived quantization-tier layouts and models (corpus-statistics
     * caches of `enc_ivf`, which would otherwise serve the pre-wave
-    * corpus), move every file the wave staged under `$w/<table>` (and
-    * `$w/codebook`) into the live dir under a wave-unique name (as
-    * `Streams.appendTagged` does), then ONE commit that removes `removed` and adds the moved files,
+    * corpus), land every file the wave staged under `$w/<table>` (and
+    * `$w/codebook`) in the live dir under a wave-unique name
+    * ([[graft.Fs.land]], as `Streams.appendTagged` lands a batch), then
+    * ONE commit that removes `removed` and adds the landed files,
     * its tag carrying the layout. The commit is the wave: until it
     * lands, every reader resolves the pre-wave snapshot and never sees
     * a moved file. Then checkpoint, so the next reader starts from one
@@ -822,19 +825,10 @@ object Pipeline {
     for (n <- Seq("enc_ivf_sq8", "enc_ivf_pq", "sq.meta", "pq.meta"))
       graft.Fs.deleteTree(s"$d/$n")
     val added = (towerTables :+ "codebook").flatMap { t =>
-      // name each file for the wave in place (Spark's sidecars go), then
-      // merge the table into the live dir
-      val moved = graft.Fs.listRec(s"$w/$t").flatMap { f =>
-        val cut = f.path.lastIndexOf('/') + 1
-        if (f.name.endsWith(if (t == "codebook") ".meta" else ".parquet")) {
-          val named = s"${f.path.take(cut)}w$v-${f.name}"
-          graft.Fs.move(f.path, named)
-          Some(s"$d/${named.stripPrefix(s"$w/")}")
-        } else { graft.Fs.deleteTree(f.path); None }
-      }
-      if (moved.nonEmpty) graft.Fs.mergeInto(s"$w/$t", s"$d/$t")
+      val landed = graft.Fs.land(s"$w/$t", s"$d/$t", s"w$v-",
+        if (t == "codebook") ".meta" else ".parquet")
       publishFault(t)
-      moved
+      landed
     }
     val log = graft.sources.TableLog.open(d)
     log.commit(removed.map(graft.sources.TableLog.Remove) ++
@@ -1906,26 +1900,29 @@ object Pipeline {
     * PipelineSpec drill pins staged ranks ≡ the inline r19 chain
     * over the same chunk corpus.
     *
-    * Scale: the eval-set derivation is ONE offline job over the raw
-    * tf table (collected as nQueries·topT strings — the r20
-    * bounded-model-collect contract); serving reads |union term
-    * buckets|/32 of the postings, the per-query rank windows are
-    * qid-partitioned, and nothing corpus-wide recomputes per query.
+    * Scale: a generation with a driver copy ([[ResidentTowers]])
+    * derives the eval set and scores every query from the copy's
+    * postings and runs no Spark job. Otherwise the eval-set
+    * derivation is ONE offline job over the raw tf table (collected
+    * as nQueries·topT strings — the r20 bounded-model-collect
+    * contract); serving reads |union term buckets|/32 of the
+    * postings, the per-query rank windows are qid-partitioned, and
+    * nothing corpus-wide recomputes per query.
     */
   def r19StagedEval(t: Tables, nQueries: Int = 16, topT: Int = 3,
       k: Int = 5): DataFrame =
     stagedSelfEval(t.spark, ragRoot(t), nQueries, topT, k)
 
-  /** The staged self-retrieval eval of ANY built index root — shared
-    * by the gated r19_staged and the `Graft.RagIndex.evalSelfRetrieval`
-    * facade (a user evaluates the index they built).
-    */
   /** The deterministic self-derived query set of a built root
     * (generate_questions.py's role): each of the first `nQueries`
     * docs' FIRST chunk asks its own top-`topT` terms, tie-broken
     * (tf desc, term) — a bounded nQueries·topT collect (the r20
     * model-collect contract). Shared by the staged self-eval and the
     * context-pack gate.
+    *
+    * Scale: one job over the raw tf table; a generation with a driver
+    * copy derives the same rows from the copy's postings instead
+    * ([[ResidentTowers.selfQuerySet]]), with no job.
     */
   private[graft] def selfQuerySet(tbl: Map[String, DataFrame],
       nQueries: Int, topT: Int): Seq[(Long, String)] = {
@@ -1964,11 +1961,34 @@ object Pipeline {
       .groupBy("qid", "doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
+  /** The staged self-retrieval eval of ANY built index root — shared
+    * by the gated r19_staged and the `Graft.RagIndex.evalSelfRetrieval`
+    * facade (a user evaluates the index they built). A generation with
+    * a driver copy answers from it as a local frame with no Spark job;
+    * otherwise [[stagedSelfEvalOnSpark]]'s plan serves.
+    */
   private[graft] def stagedSelfEval(
       spark: org.apache.spark.sql.SparkSession, d: String,
       nQueries: Int, topT: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val snap = servedAt(spark, d)
+    snap.resident.fold(selfEvalOnSpark(snap, nQueries, topT, k)) { r =>
+      localFrame(spark, r.selfEval(r.selfQuerySet(nQueries, topT), k),
+        evalSchema(k))
+    }
+  }
+
+  /** [[stagedSelfEval]] through its Spark plan whatever the budget
+    * says: the path of an index too large for the driver, and the
+    * reference the driver copy is tested against.
+    */
+  private[graft] def stagedSelfEvalOnSpark(
+      spark: org.apache.spark.sql.SparkSession, d: String,
+      nQueries: Int, topT: Int, k: Int): DataFrame =
+    selfEvalOnSpark(servedAt(spark, d), nQueries, topT, k)
+
+  private def selfEvalOnSpark(snap: ServedTowers, nQueries: Int,
+      topT: Int, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val scores = selfQueryScores(snap,
       selfQuerySet(snap.tables, nQueries, topT), withDl = false)
     val wr = Window.partitionBy("qid")
@@ -1983,6 +2003,14 @@ object Pipeline {
         (col("rank") <= k).cast("int").as(s"hit$k"))
       .orderBy("query_chunk")
   }
+
+  /** The schema of a self-retrieval eval at cut `k`. */
+  private[graft] def evalSchema(k: Int): StructType =
+    StructType(Seq(StructField("query_chunk", LongType, nullable = false),
+      StructField("n_cand", LongType, nullable = false),
+      StructField("rank", LongType, nullable = false),
+      StructField("rr", DoubleType),
+      StructField(s"hit$k", IntegerType, nullable = false)))
 
   /** p4: TOKEN-BUDGET CONTEXT ASSEMBLY from the staged towers (the
     * reference agent's prompt-building step — search hits become the
@@ -2001,13 +2029,15 @@ object Pipeline {
     * every posting), so the budget math replays in SQL without
     * re-tokenizing.
     *
-    * Scale: scoring is the staged one-plan pass ([[selfQueryScores]]
-    * — postings scan pruned to the union of the query set's term
-    * buckets); every window after it is qid-partitioned over ≤kCand
-    * rows per query (bounded — never a corpus-wide window). The
-    * greedy prefix rule (stop at the first overflow) is the
-    * SQL-replayable packing discipline; skip-and-continue packing is
-    * a driver-side loop over k rows if a deployment wants it.
+    * Scale: a generation with a driver copy ([[ResidentTowers]])
+    * scores each query from the copy's postings and packs its
+    * ≤ kCand rows in a driver loop, with no Spark job. Otherwise
+    * scoring is the staged one-plan pass ([[selfQueryScores]] —
+    * postings scan pruned to the union of the query set's term
+    * buckets), and every window after it is qid-partitioned over
+    * ≤kCand rows per query (bounded — never a corpus-wide window).
+    * The greedy prefix rule (stop at the first overflow) is the
+    * SQL-replayable packing discipline.
     */
   def p4ContextPack(t: Tables, nQueries: Int = 16, topT: Int = 3,
       kCand: Int = 8, maxPerDoc: Int = 2, budget: Int = 120): DataFrame =
@@ -2022,33 +2052,68 @@ object Pipeline {
       nQueries: Int, topT: Int, kCand: Int, maxPerDoc: Int,
       budget: Int): DataFrame = {
     val snap = servedAt(spark, d)
-    packFromScores(
-      selfQueryScores(snap, selfQuerySet(snap.tables, nQueries, topT),
-        withDl = true),
-      kCand, maxPerDoc, budget)
+    val qrows = snap.resident.fold(selfQuerySet(snap.tables, nQueries,
+      topT))(_.selfQuerySet(nQueries, topT))
+    packQueries(snap, qrows, kCand, maxPerDoc, budget)
   }
 
   /** Context packing for CALLER-supplied raw queries (qid = the
-    * query's position in `queries`): the same one-plan bucket-pruned
-    * scoring pass and the same pack discipline as the gated p4, the
-    * engine's own tokenizer rule on each query string.
+    * query's position in `queries`): the same scoring and the same
+    * pack discipline as the gated p4, the engine's own tokenizer rule
+    * on each query string.
     */
   private[graft] def contextPackFor(
       spark: org.apache.spark.sql.SparkSession, d: String,
       queries: Seq[String], kCand: Int, maxPerDoc: Int,
-      budget: Int): DataFrame = {
+      budget: Int): DataFrame =
+    packQueries(servedAt(spark, d), queryRows(queries), kCand, maxPerDoc,
+      budget)
+
+  /** (qid, term) rows of raw queries, qid = the query's position. */
+  private[graft] def queryRows(queries: Seq[String]): Seq[(Long, String)] =
     // ONE query-tokenization rule engine-wide (Graft.tokenizeQuery,
     // Locale.ROOT): a default-locale toLowerCase would tokenize 'I'
     // differently on a tr-locale JVM and silently miss the postings
     // the engine's Spark-side lower() indexed
-    val qrows = queries.zipWithIndex.flatMap { case (q, i) =>
+    queries.zipWithIndex.flatMap { case (q, i) =>
       graft.api.Graft.tokenizeQuery(q).distinct
         .map(term => (i.toLong, term))
     }
-    packFromScores(
-      selfQueryScores(servedAt(spark, d), qrows, withDl = true),
-      kCand, maxPerDoc, budget)
-  }
+
+  /** The packs of `qrows`: from the generation's driver copy as a local
+    * frame with no Spark job when it has one, else by
+    * [[contextPackOnSpark]]'s plan.
+    */
+  private def packQueries(snap: ServedTowers, qrows: Seq[(Long, String)],
+      kCand: Int, maxPerDoc: Int, budget: Int): DataFrame =
+    snap.resident.fold(packOnSpark(snap, qrows, kCand, maxPerDoc,
+        budget)) { r =>
+      localFrame(snap.spark, r.pack(qrows, kCand, maxPerDoc, budget),
+        packSchema)
+    }
+
+  /** The packs of `qrows` through the Spark plan whatever the budget
+    * says: the path of an index too large for the driver, and the
+    * reference the driver copy is tested against.
+    */
+  private[graft] def contextPackOnSpark(
+      spark: org.apache.spark.sql.SparkSession, d: String,
+      qrows: Seq[(Long, String)], kCand: Int, maxPerDoc: Int,
+      budget: Int): DataFrame =
+    packOnSpark(servedAt(spark, d), qrows, kCand, maxPerDoc, budget)
+
+  private def packOnSpark(snap: ServedTowers, qrows: Seq[(Long, String)],
+      kCand: Int, maxPerDoc: Int, budget: Int): DataFrame =
+    packFromScores(selfQueryScores(snap, qrows, withDl = true), kCand,
+      maxPerDoc, budget)
+
+  /** The schema of a context pack's rows. */
+  private[graft] val packSchema: StructType =
+    StructType(Seq(StructField("qid", LongType, nullable = false),
+      StructField("rank", LongType, nullable = false),
+      StructField("chunk_id", LongType), StructField("src_doc", LongType),
+      StructField("n_tokens", LongType), StructField("cum_tokens", LongType),
+      StructField("score", DoubleType)))
 
   /** The pack discipline over a per-(qid, chunk) scores frame:
     * top-kCand cut, ≤maxPerDoc per source doc, greedy budget prefix
@@ -2110,12 +2175,10 @@ object Pipeline {
   }
 
   /** The schema of a hybrid search's hits. */
-  private[graft] val searchSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
+  private[graft] val searchSchema: StructType =
     StructType(Seq(StructField("chunk_id", LongType),
       StructField("rrf", DoubleType), StructField("r_lex", IntegerType),
       StructField("r_vec", IntegerType)))
-  }
 
   /** Hybrid serving over any built index root — p3's exact chain
     * (staged-BM25 tower + pruned quantized-dot tower, RRF-fused),
@@ -2152,9 +2215,14 @@ object Pipeline {
 
   private def localHits(spark: org.apache.spark.sql.SparkSession,
       lists: Seq[Seq[(Long, Double)]], kOut: Int, rrfK: Int): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(rrfFuseRows(lists, kOut, rrfK): _*),
-      searchSchema)
+    localFrame(spark, rrfFuseRows(lists, kOut, rrfK), searchSchema)
+
+  /** `rows` as a local frame: no operator on top, so its collect runs
+    * no job.
+    */
+  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private[graft] def unknownTier(tier: String): Nothing =
     sys.error(s"unknown dense tier '$tier' " +

@@ -1,25 +1,28 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Pipeline.{ServedTowers, labeled, rankedBefore}
 
 /** One committed towers snapshot's serving layouts held on the driver
-  * in primitive arrays, so a hybrid search answers with no Spark job:
-  * the BM25 postings by term, the IVF lists by `cid`, and, on a
-  * tier's first use, its sq8 codes or pq code tuples. Each layout
-  * loads by one labelled collect on first use; the head commit that
-  * keys [[Pipeline.servedAt]]'s memo is also this copy's
-  * invalidation, since every wave's commit mints a new snapshot.
+  * in primitive arrays, so a hybrid search, a context pack and a
+  * self-retrieval eval answer with no Spark job: the BM25 postings by
+  * term, the IVF lists by `cid`, and, on a tier's first use, its sq8
+  * codes or pq code tuples. Each layout loads by one labelled collect
+  * on first use; the head commit that keys [[Pipeline.servedAt]]'s
+  * memo is also this copy's invalidation, since every wave's commit
+  * mints a new snapshot.
   *
   * Every score is the Spark chain's own arithmetic in its own order:
   * BM25 sums [[Search.bm25Contrib]] per doc and rounds by Spark's
-  * `Round`; the int16 tower is the exact long dot; the sq8 and pq
-  * estimates fold left to right and round by floor(x·1e4 + 0.5)/1e4;
-  * a rerank tier shortlists and then takes the exact dot. Each list
-  * ranks by (score desc, id) as the chain's orderBy does, so
-  * [[Pipeline.serveHybrid]] answers the same hits on either path.
+  * `Round` (one scorer serves search, pack and eval); the int16 tower
+  * is the exact long dot; the sq8 and pq estimates fold left to right
+  * and round by floor(x·1e4 + 0.5)/1e4; a rerank tier shortlists and
+  * then takes the exact dot. Each list ranks by (score desc, id) as
+  * the chain's orderBy and row_number windows do, so
+  * [[Pipeline.serveHybrid]], [[Pipeline.contextPack]] and
+  * [[Pipeline.stagedSelfEval]] answer the same rows on either path.
   */
 private[graft] final class ResidentTowers(snap: ServedTowers) {
   import ResidentTowers._
@@ -82,25 +85,86 @@ private[graft] final class ResidentTowers(snap: ServedTowers) {
     Seq(bm25Top(terms, kList), dense)
   }
 
-  /** [[Pipeline.bm25Staged]]: the query's known terms' postings, each
-    * doc's contributions summed and rounded to 4 places.
+  /** [[Pipeline.bm25Staged]]'s top `k`. */
+  private def bm25Top(terms: Seq[String], k: Int): Seq[(Long, Double)] =
+    top(bm25Scores(terms).iterator.map(s => (s.id, s.score)), k)
+
+  /** One query's BM25 score of every doc that holds a known term, as
+    * [[Pipeline.bm25Staged]] and [[Pipeline.selfQueryScores]] compute
+    * it: each doc's contributions summed and rounded to 4 places, with
+    * the doc's length from its postings.
     */
-  private def bm25Top(terms: Seq[String], k: Int): Seq[(Long, Double)] = {
+  private def bm25Scores(terms: Seq[String]): Array[Scored] = {
     val (idf, avgdl) = (snap.idf, snap.avgdl)
     val sums = scala.collection.mutable.LongMap.empty[Double]
+    val dls = scala.collection.mutable.LongMap.empty[Int]
     for (t <- terms.distinct if idf.contains(t); p <- postings.get(t)) {
       val w = idf(t)
       var i = 0
       while (i < p.ids.length) {
         val c = Search.bm25Contrib(w, p.tf(i), p.dl(i), avgdl)
         sums(p.ids(i)) = sums.getOrElse(p.ids(i), 0.0) + c
+        dls(p.ids(i)) = math.max(dls.getOrElse(p.ids(i), 0), p.dl(i))
         i += 1
       }
     }
-    top(sums.iterator.map { case (id, s) =>
-      (id, Pipeline.sparkRound(s, 4))
-    }, k)
+    sums.iterator.map { case (id, s) =>
+      Scored(id, Pipeline.sparkRound(s, 4), dls(id))
+    }.toArray
   }
+
+  /** [[Pipeline.selfQuerySet]] from the postings: each first chunk
+    * (id a multiple of 1e6) below `nQueries`·1e6 asks its top `topT`
+    * terms by (tf desc, term), in qid order.
+    */
+  def selfQuerySet(nQueries: Int, topT: Int): Seq[(Long, String)] = {
+    val lim = nQueries.toLong * 1000000L
+    val byQ = scala.collection.mutable.LongMap
+      .empty[List[(String, Int)]]
+    for ((t, p) <- postings; i <- p.ids.indices) {
+      val id = p.ids(i)
+      if (id % 1000000L == 0 && id < lim)
+        byQ(id) = (t, p.tf(i)) :: byQ.getOrElse(id, Nil)
+    }
+    byQ.toSeq.sortBy(_._1).flatMap { case (qid, ts) =>
+      ts.sortWith { case ((ta, fa), (tb, fb)) =>
+        fa > fb || (fa == fb && utf8(ta).compareTo(utf8(tb)) < 0)
+      }.take(topT).map(t => (qid, t._1))
+    }
+  }
+
+  /** [[Pipeline.packFromScores]] over each query's [[bm25Scores]], in
+    * (qid, rank) order: the top `kCand` by (score desc, id), at most
+    * `maxPerDoc` per source doc, ranked, and the prefix whose running
+    * token sum fits `budget`. Rows are [[Pipeline.packSchema]]'s.
+    */
+  def pack(qrows: Seq[(Long, String)], kCand: Int, maxPerDoc: Int,
+      budget: Int): Seq[Row] =
+    byQid(qrows).flatMap { case (qid, terms) =>
+      val perDoc = scala.collection.mutable.LongMap.empty[Int]
+      var cum = 0L
+      bm25Scores(terms).sortWith(before).take(kCand).filter { s =>
+        val n = perDoc.getOrElse(srcDoc(s.id), 0) + 1
+        perDoc(srcDoc(s.id)) = n
+        n <= maxPerDoc
+      }.zipWithIndex.map { case (s, i) =>
+        cum += s.dl
+        Row(qid, i + 1L, s.id, srcDoc(s.id), s.dl.toLong, cum, s.score)
+      }.takeWhile(_.getLong(5) <= budget)
+    }
+
+  /** [[Pipeline.stagedSelfEval]] per query whose own chunk scores, in
+    * qid order: (query_chunk, n_cand, rank, rr, hit@`k`).
+    */
+  def selfEval(qrows: Seq[(Long, String)], k: Int): Seq[Row] =
+    byQid(qrows).flatMap { case (qid, terms) =>
+      val scores = bm25Scores(terms)
+      scores.find(_.id == qid).map { own =>
+        val rank = 1L + scores.count(before(_, own))
+        Row(qid, scores.length.toLong, rank, roundEst(1.0 / rank),
+          if (rank <= k) 1 else 0)
+      }
+    }
 
   /** [[Pipeline.denseTop]]'s exact long dot over the probed lists'
     * vectors that `keep` admits (all of them, or a rerank shortlist).
@@ -224,6 +288,25 @@ private[graft] object ResidentTowers {
     */
   private def roundEst(x: Double): Double =
     math.floor(x * 10000 + 0.5).toLong / 10000.0
+
+  /** A doc's BM25 score and its length in tokens. */
+  private final case class Scored(id: Long, score: Double, dl: Int)
+
+  private def before(a: Scored, b: Scored): Boolean =
+    rankedBefore((a.id, a.score), (b.id, b.score))
+
+  /** A chunk's source doc, as Spark's floor(id / 1e6) computes it. */
+  private def srcDoc(id: Long): Long = math.floor(id / 1000000.0).toLong
+
+  /** Spark's string order: unsigned UTF-8 bytes. */
+  private def utf8(s: String) =
+    org.apache.spark.unsafe.types.UTF8String.fromString(s)
+
+  /** Query rows grouped by qid, in qid order. */
+  private def byQid(
+      qrows: Seq[(Long, String)]): Seq[(Long, Seq[String])] =
+    qrows.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (q, rs) => q -> rs.map(_._2) }
 
   /** The `k` best by (score desc, id), the chain's orderBy + limit. */
   private def top(cands: Iterator[(Long, Double)],

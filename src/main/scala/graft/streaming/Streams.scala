@@ -1299,21 +1299,18 @@ object Streams {
   }
 
   /** Append `df` into the live `pb`-partitioned table under
-    * batch-tagged file names: write to scratch first, then move each
-    * data file to `dir/pb=X/gb<bid>-<name>` — the layout readers
-    * prune on is unchanged, but the batch's files are identifiable
-    * (and so wipe-able) afterwards.
+    * batch-tagged file names: write to scratch first, then land it
+    * ([[graft.Fs.land]]) so each data file becomes
+    * `dir/pb=X/gb<bid>-<name>` — the layout readers prune on is
+    * unchanged, but the batch's files are identifiable (and so
+    * wipe-able) afterwards.
     */
   private[graft] def appendTagged(df: DataFrame, dir: String,
       bid: Long, partCol: Option[String]): Unit = {
     val tmp = s"$dir.append-b$bid"
     val w = df.write.mode("overwrite")
     partCol.fold(w)(c => w.partitionBy(c)).parquet(tmp)
-    graft.Fs.listRec(tmp, ".parquet").foreach { f =>
-      val rel = f.path.stripPrefix(s"$tmp/")
-      val cut = rel.lastIndexOf('/') + 1
-      graft.Fs.move(f.path, s"$dir/${rel.take(cut)}gb$bid-${rel.drop(cut)}")
-    }
+    graft.Fs.land(tmp, dir, s"gb$bid-", ".parquet")
     graft.Fs.deleteTree(tmp)
     ()
   }

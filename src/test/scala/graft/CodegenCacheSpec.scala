@@ -34,8 +34,14 @@ class CodegenCacheSpec extends SparkSpec {
     for ((name, call) <- calls) {
       val first = compiles(call())
       val repeat = compiles(call())
+      // the JVM's cumulative compile count and the live cache cap, so
+      // an order-dependent failure shows how full the cache could be
       assert(repeat == 0,
-        s"$name: repeat call compiled $repeat classes (first call $first)")
+        s"$name: repeat call compiled $repeat classes (first call $first); " +
+          "JVM compiles so far " +
+          s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}, " +
+          s"${GraftSession.cacheCapKey}=" +
+          spark.conf.get(GraftSession.cacheCapKey))
     }
   }
 }

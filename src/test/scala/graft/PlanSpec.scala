@@ -444,7 +444,9 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val df = run("r19_staged_eval")
+    // the Spark plan, which serves a generation without a driver copy
+    val df = graft.operators.Pipeline.stagedSelfEvalOnSpark(spark,
+      graft.operators.Pipeline.ragRoot(Tables(spark, sf)), 16, 3, 5)
     df.collect()
     val all = flatten(df.queryExecution.executedPlan)
     // the postings (tf_b) read: exactly ONE scan carrying a tb
@@ -471,7 +473,13 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
-    val df = run("p4_context_pack")
+    import graft.operators.Pipeline
+    // the Spark plan, which serves a generation without a driver copy,
+    // over the gate's root and self-derived query set
+    val d = Pipeline.ragRoot(Tables(spark, sf))
+    val df = Pipeline.contextPackOnSpark(spark, d,
+      Pipeline.selfQuerySet(Pipeline.servedAt(spark, d).tables, 16, 3),
+      8, 2, 120)
     df.collect()
     val all = flatten(df.queryExecution.executedPlan)
     val pruned = all.collect {
@@ -493,6 +501,22 @@ class PlanSpec extends SparkSpec {
       assert(w.partitionSpec.nonEmpty &&
         w.partitionSpec.exists(_.references.exists(_.name == "qid")),
         s"unpartitioned/non-qid window in p4 plan: $w")
+    }
+  }
+
+  test("p4_context_pack and r19_staged_eval: with the driver copy " +
+      "loaded the gate runs no Spark job and is a LocalTableScan") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    run("p4_context_pack").collect() // loads the copy's postings
+    assert(graft.operators.Pipeline.servedAt(spark,
+      graft.operators.Pipeline.ragRoot(Tables(spark, sf))).resident.isDefined)
+    for (name <- Seq("p4_context_pack", "r19_staged_eval")) {
+      val (df, jobs) = jobsOf(run(name))
+      assert(jobs == 0, s"$name ran $jobs jobs")
+      val (rows, collectJobs) = jobsOf(df.collect())
+      assert(collectJobs == 0 && rows.nonEmpty, s"collecting $name")
+      assert(df.queryExecution.executedPlan
+        .isInstanceOf[LocalTableScanExec], df.queryExecution.executedPlan)
     }
   }
 

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -178,22 +175,6 @@ class ServeSnapshotSpec extends SparkSpec {
     } finally graft.Fs.deleteTree(root)
   }
 
-  /** Spark jobs `f` starts, counted with the listener bus drained. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** An index over 40 docs that the next two tests share. */
   private lazy val shared: (Graft.RagIndex, Seq[String]) = {
     val root = Staging.scratch("snap_jobs")
@@ -299,5 +280,101 @@ class ServeSnapshotSpec extends SparkSpec {
         assert(newSearch(idx, q, "int16").schema ==
           oldSearches(root, q, Seq("int16"))("int16").schema)
     } finally graft.Fs.deleteTree(root)
+  }
+
+  /** Every pack and eval the driver copy serves equals the Spark plan's
+    * rows and schema. The cases: the seeded queries; a query with no
+    * known term; a repeated term; a term two queries share; no query
+    * at all; ties (two docs of one text); a budget below every
+    * chunk; a binding `maxPerDoc`.
+    */
+  private def assertPacksAsSpark(idx: Graft.RagIndex, qs: Seq[String],
+      phase: String): Unit = {
+    val root = idx.root
+    assert(Pipeline.servedAt(spark, root).resident.isDefined, phase)
+    def same(got: DataFrame, want: DataFrame, what: String): Seq[Row] = {
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(got.schema == want.schema, s"$phase, $what: schema")
+      assert(g.map(_.toString) == w.map(_.toString), s"$phase, $what")
+      w
+    }
+    val edge = Seq("absentword", "w1 w1 w3 w1", "w2 w5", "w5 w9 tie",
+      "tie", "uniq7 w0")
+    val lists = Seq(qs.take(8), qs.slice(8, 16), edge, Nil)
+    val results = for (ql <- lists; (kCand, maxPerDoc, budget) <-
+        Seq((8, 2, 120), (12, 1, 400), (12, 12, 400), (5, 2, 1))) yield
+      same(idx.packContextFor(ql, kCand, maxPerDoc, budget),
+        Pipeline.contextPackOnSpark(spark, root, Pipeline.queryRows(ql),
+          kCand, maxPerDoc, budget),
+        s"packContextFor($ql, $kCand, $maxPerDoc, $budget)") ->
+        (maxPerDoc, budget)
+    // the edge cases are exercised, not only listed
+    val rows = results.flatMap(_._1)
+    assert(results.filter(_._2._2 == 1).forall(_._1.isEmpty),
+      s"$phase: a budget of 1 packed a chunk")
+    val full = results.filter(_._2 == ((12, 400))).flatMap(_._1)
+    assert(full.groupBy(r => (r.getLong(0), r.getLong(3)))
+      .exists(_._2.size > 1), s"$phase: maxPerDoc = 1 never binds")
+    assert(rows.groupBy(r => (r.getLong(0), r.getDouble(6)))
+      .exists(_._2.size > 1), s"$phase: no tied scores")
+    val snap = Pipeline.servedAt(spark, root)
+    for ((nQueries, topT) <- Seq((16, 3), (40, 2), (0, 3), (6, 1))) {
+      assert(snap.resident.get.selfQuerySet(nQueries, topT).sorted ==
+        Pipeline.selfQuerySet(snap.tables, nQueries, topT).sorted,
+        s"$phase: self query set ($nQueries, $topT)")
+      same(idx.packContext(nQueries, topT, 8, 2, 120),
+        Pipeline.contextPackOnSpark(spark, root,
+          Pipeline.selfQuerySet(snap.tables, nQueries, topT), 8, 2, 120),
+        s"packContext($nQueries, $topT)")
+      for (k <- Seq(1, 5))
+        same(idx.evalSelfRetrieval(nQueries, topT, k),
+          Pipeline.stagedSelfEvalOnSpark(spark, root, nQueries, topT, k),
+          s"evalSelfRetrieval($nQueries, $topT, $k)")
+    }
+  }
+
+  test("a context pack and a self-retrieval eval from the driver copy " +
+      "equal the Spark plans' rows and schema, across an add wave and " +
+      "a remove wave") {
+    val s = spark
+    import s.implicits._
+    val root = Staging.scratch("snap_packs")
+    try {
+      // docs of one text tie every score they share
+      val ties = Seq(50L, 51L, 52L).map(i => (i, s"repo/docs/t$i.md", "en",
+        "tie w2 w5 w9 tie w1")).toDF("doc_id", "filepath", "lang", "text")
+      val base = 1L to 40L
+      val idx = Graft.ragIndex(docs(base, 51L).union(ties), "doc_id",
+        "filepath", "lang", "text", stateRoot = Some(root))
+      val qs = queries(16, 52L, base)
+      assertPacksAsSpark(idx, qs, "built")
+      assert(idx.add(docs(61L to 70L, 53L), "doc_id", "filepath", "lang",
+        "text") == 10L)
+      assertPacksAsSpark(idx, qs, "after add")
+      assert(idx.remove(Seq(2L, 7L, 51L, 64L)) == 4L)
+      assertPacksAsSpark(idx, qs, "after remove")
+    } finally Staging.release(root)
+  }
+
+  test("with the driver copy loaded, 20 distinct packs and evals run no " +
+      "Spark job and compile no class; collecting them runs none") {
+    val (idx, qs) = shared
+    idx.packContextFor(qs.take(3)).collect() // loads the postings
+    assert(Pipeline.servedAt(spark, idx.root).resident.isDefined)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val calls = (0 until 20).map(i => s"packContextFor #$i" -> (() =>
+        idx.packContextFor(qs.slice(i, i + 3), 6 + i % 4, 1 + i % 3,
+          60 + 10 * i))) ++
+      Seq(4, 9, 16).map(n => s"packContext($n)" -> (() =>
+        idx.packContext(nQueries = n))) ++
+      Seq(3, 8).map(n => s"evalSelfRetrieval($n)" -> (() =>
+        idx.evalSelfRetrieval(nQueries = n)))
+    for ((what, call) <- calls) {
+      val (df, jobs) = jobsOf(call())
+      assert(jobs == 0, s"$what ran $jobs jobs")
+      assert(jobsOf(df.collect())._2 == 0, s"collecting $what")
+    }
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0 == 0,
+      "driver-copy packs compiled codegen classes")
   }
 }

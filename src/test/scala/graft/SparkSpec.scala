@@ -26,4 +26,21 @@ trait SparkSpec extends AnyFunSuite {
   def sf: String = SparkSpec.sf
   def run(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)
+
+  /** Spark jobs `f` starts, counted with the listener bus drained. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
