@@ -168,11 +168,19 @@ object Pipeline {
     val bench = graft.Caches.materialized(
       shf.filter(col("doc_id") % benchMod === 0)
         .select("s5").distinct())
-    val contaminated = shf.filter(col("doc_id") % benchMod =!= 0)
-      .join(graft.Guards.sizedBroadcast(bench), "s5")
-      .select("doc_id").distinct()
+    // The contaminated ids earn their broadcast by a count too, so the
+    // anti join's strategy is fixed when the plan is made. Left to AQE,
+    // the runtime broadcast conversion depends on which stage finishes
+    // first: when the train side's shuffle already ran it reads it
+    // locally, a second plan whose 4 codegen classes a repeat call
+    // compiled afresh (CodegenCacheSpec's intermittent failure).
+    val contaminated = graft.Caches.cached(
+      shf.filter(col("doc_id") % benchMod =!= 0)
+        .join(graft.Guards.sizedBroadcast(bench), "s5")
+        .select("doc_id").distinct())
     val st5 = st4.filter(col("doc_id") % benchMod =!= 0)
-      .join(contaminated, Seq("doc_id"), "left_anti")
+      .join(graft.Guards.sizedBroadcast(contaminated), Seq("doc_id"),
+        "left_anti")
 
     Seq("input" -> scored, "quality" -> st1, "language" -> st2,
       "exact_dedup" -> st3, "near_dedup" -> st4,

@@ -44,4 +44,20 @@ class CodegenCacheSpec extends SparkSpec {
           spark.conf.get(GraftSession.cacheCapKey))
     }
   }
+
+  test("the curation funnel's decontamination anti join is a broadcast " +
+      "when planned, not a runtime choice that depends on stage order") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    val docs = Tables(spark, sf).documents.select("doc_id", "text")
+    val planned = Graft.curationFunnel(docs, "doc_id", "text")
+      .queryExecution.sparkPlan
+    val anti = planned.collect {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      case j: SortMergeJoinExec if j.joinType == LeftAnti => j
+    }
+    assert(anti.nonEmpty && anti.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      anti.map(_.nodeName))
+  }
 }
