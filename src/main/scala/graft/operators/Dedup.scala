@@ -385,13 +385,16 @@ object Dedup {
 
   /** d6: near-dup GROUPS and the keep/drop list — the step an actual
     * dedup pipeline ends with. Connected components over d3's
-    * verified pair evidence via iterative min-label propagation
-    * (every node takes the min label among itself and its neighbors;
-    * repeat to fixpoint — O(component diameter) iterations, each one
-    * shuffle-bounded join, the standard big-graph CC shape; the
-    * per-iteration convergence count is a scalar driver check like
-    * k-means'). Output: one row per doc in a dup group, its
-    * component-min keep_doc and the group size.
+    * verified pair evidence ([[ccGroups]]): the pairs are cached and
+    * counted once, and when [[graft.Guards.fitsBudget]] admits the
+    * count they are collected and union-found on the driver, with no
+    * further job. Past the budget, iterative min-label propagation
+    * runs on Spark (every node takes the min label among itself and
+    * its neighbors, plus a pointer-jump link, repeated to fixpoint —
+    * O(log diameter) rounds, each one shuffle-bounded join and a
+    * scalar convergence check on the driver, like k-means').
+    * Output: one row per doc in a dup group, its component-min
+    * keep_doc and the group size.
     */
   def d6DedupGroups(t: Tables, threshold: Double = 0.5): DataFrame =
     ccLabelsStaged(t, threshold)
@@ -403,14 +406,13 @@ object Dedup {
       .select("doc_a", "doc_b"), sorted)
 
   /** Corpus-keyed CC-label registry: the dedup pipeline's most
-    * expensive artifact (minhash → bands → verify → iterative CC, a
-    * driver-synced job per iteration) is computed ONCE per (corpus,
-    * threshold) and landed as parquet, like s3/s5's trained models
-    * (Ann.codebooks) — every consumer (d6's groups query, d10's
-    * leakage-safe split) then reads a component-sized scan instead of
-    * re-running the pipeline. Same lake-snapshot contract as every
-    * staged cache: the corpus under `t.dir` is immutable for the
-    * JVM's lifetime.
+    * expensive artifact (minhash → bands → verify → CC) is computed
+    * ONCE per (corpus, threshold) and landed as parquet, like s3/s5's
+    * trained models (Ann.codebooks) — every consumer (d6's groups
+    * query, d10's leakage-safe split) then reads a component-sized
+    * scan instead of re-running the pipeline. Same lake-snapshot
+    * contract as every staged cache: the corpus under `t.dir` is
+    * immutable for the JVM's lifetime.
     */
   private[graft] def ccLabelsStaged(t: Tables,
       threshold: Double): DataFrame = {
@@ -435,7 +437,10 @@ object Dedup {
     *
     * Scale: the CC labels come from the corpus-keyed registry
     * ([[ccLabelsStaged]]) so repeated splits/queries share ONE CC
-    * run; the back-join onto the corpus carries NO forced hint —
+    * run. That run is a driver union-find after one collect when the
+    * verified pair count fits [[graft.Guards.fitsBudget]], and the
+    * pointer-jump loop on Spark, one job per round, past it. The
+    * back-join onto the corpus carries NO forced hint —
     * dup-group membership is 30-50% of docs on web corpora
     * (corpus-scale, not component-scale), so AQE broadcasts it only
     * when it actually fits and sort-merge-joins otherwise. The split
@@ -522,15 +527,10 @@ object Dedup {
     if (sorted) out.orderBy("doc_id") else out
   }
 
-  /** Connected components over an undirected pair frame (doc_a,
-    * doc_b) — the CC engine behind d6, exposed at the pairs level so
-    * any near-dup family's evidence (d2/d3/d4/d5) can be grouped and
-    * so the iteration logic is testable on adversarial graph shapes
-    * (long chains) without going through minhash.
-    */
   /** Shuffle-round count of the LAST [[ccGroups]] run — probe/spec
     * instrumentation for the O(log diameter) convergence claim (the
-    * deep-chain measurement SURVEY §5 records).
+    * deep-chain measurement SURVEY §5 records). A run on the driver
+    * has no rounds and leaves it at 0.
     */
   private[graft] val lastCcRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
@@ -550,7 +550,102 @@ object Dedup {
       case _ => ()
     }
 
+  /** Connected components over an undirected pair frame (doc_a,
+    * doc_b) — the CC engine behind d6, exposed at the pairs level so
+    * any near-dup family's evidence (d2/d3/d4/d5) can be grouped and
+    * so the iteration logic is testable on adversarial graph shapes
+    * (long chains) without going through minhash. Output: one row
+    * per doc that has a pair, with its component-min keep_doc and
+    * the component's size.
+    *
+    * The pair plan runs ONCE, into a cache whose count picks the
+    * branch. When [[graft.Guards.fitsBudget]] admits that count (and
+    * the ids are longs), one collect feeds a union-find on the driver
+    * ([[ccOnDriver]]): no per-round job, no checkpoint, no scratch
+    * dir, and a local frame back. Otherwise [[ccGroupsOnSpark]]'s
+    * pointer-jump loop runs over the cached pairs.
+    */
   private[graft] def ccGroups(pairs: DataFrame,
+      sorted: Boolean = true): DataFrame = {
+    lastCcRounds.set(0)
+    val spark = pairs.sparkSession
+    val cached = graft.Caches.cached(pairs)
+    val n = Pipeline.labeled(spark, "cc: edges")(cached.count())
+    val longIds = cached.schema.fields
+      .forall(_.dataType == org.apache.spark.sql.types.LongType)
+    // either branch's result is decoupled from the pair cache (a local
+    // frame, or labels re-read from scratch parquet), so it drops now
+    try {
+      if (longIds && graft.Guards.fitsBudget(n))
+        ccOnDriver(spark, Pipeline.labeled(spark, "cc: edges")(cached.collect()))
+      else ccGroupsOnSpark(cached, sorted)
+    } finally graft.Caches.drop(cached)
+  }
+
+  /** The schema both [[ccGroups]] branches return. */
+  private val ccSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType, nullable = true),
+      StructField("keep_doc", LongType, nullable = true),
+      StructField("group_size", LongType, nullable = false)))
+  }
+
+  /** Union-find over collected pairs. Ids map to dense ints by binary
+    * search over their sorted distinct values; a union points the
+    * larger root at the smaller, so a parent's index never exceeds
+    * its child's and every root is its component's min id, and finds
+    * halve their paths. Rows come out in doc_id order, so the frame
+    * is sorted whether or not the caller asked.
+    */
+  private def ccOnDriver(spark: org.apache.spark.sql.SparkSession,
+      pairs: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val ends = new Array[Long](2 * pairs.length)
+    var i = 0
+    while (i < pairs.length) {
+      ends(2 * i) = pairs(i).getLong(0)
+      ends(2 * i + 1) = pairs(i).getLong(1)
+      i += 1
+    }
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var m = 0
+    i = 0
+    while (i < ids.length) {
+      if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, m)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def dense(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, m, id)
+    i = 0
+    while (i < ends.length) {
+      val (ra, rb) = (find(dense(ends(i))), find(dense(ends(i + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 2
+    }
+    // parent(x) < x for every non-root, so one ascending pass points
+    // each node straight at its root
+    val size = new Array[Long](m)
+    i = 0
+    while (i < m) { parent(i) = parent(parent(i)); size(parent(i)) += 1; i += 1 }
+    Pipeline.localFrame(spark, (0 until m).map(x =>
+      org.apache.spark.sql.Row(ids(x), ids(parent(x)), size(parent(x)))),
+      ccSchema)
+  }
+
+  /** [[ccGroups]] through its Spark branch whatever the budget says:
+    * the path of a pair set too large for the driver, and the
+    * reference the driver branch is tested against. Every node takes
+    * the min label among itself and its neighbours, then chases one
+    * pointer-jump link, round by round to the fixpoint; the converged
+    * labels land in a `Staging.scratch("cc_labels")` dir that lives
+    * until the JVM exits.
+    */
+  private[graft] def ccGroupsOnSpark(pairs: DataFrame,
       sorted: Boolean = true): DataFrame = {
     lastCcRounds.set(0)
     val spark = pairs.sparkSession

@@ -2228,7 +2228,7 @@ object Pipeline {
   /** `rows` as a local frame: no operator on top, so its collect runs
     * no job.
     */
-  private def localFrame(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def localFrame(spark: org.apache.spark.sql.SparkSession,
       rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 

@@ -131,6 +131,67 @@ class DedupTextSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("cc: the driver union-find equals the Spark pointer-jump loop, rows " +
+      "and schema, on adversarial graphs") {
+    import SparkSpec.spark.implicits._
+    import graft.operators.Dedup
+    def star(hub: Long, leaves: Seq[Long]) = leaves.map(l => (hub, l))
+    val graphs = Seq(
+      "12-chain + pair" -> ((1L to 11L).map(i => (i, i + 1)) :+ (20L, 21L)),
+      "300-chain, shuffled" -> new scala.util.Random(7)
+        .shuffle((1L to 299L).map(i => (i, i + 1))),
+      "500-leaf star, hub max id" -> star(1000L, 1L to 500L),
+      "two stars joined leaf to leaf" ->
+        (star(100L, 1L to 20L) ++ star(200L, 101L to 120L) :+ (20L, 101L)),
+      "duplicate and reversed pairs" ->
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (5L, 6L), (6L, 5L)),
+      "self-loop" -> Seq((7L, 7L), (8L, 9L), (9L, 9L)),
+      "no edges" -> Seq.empty[(Long, Long)])
+    for ((name, edges) <- graphs) {
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val onDriver = Dedup.ccGroups(pairs)
+      assert(Dedup.lastCcRounds.get == 0, s"$name: driver branch ran rounds")
+      val onSpark = Dedup.ccGroupsOnSpark(pairs)
+      assert(Dedup.lastCcRounds.get >= 1, s"$name: Spark branch ran no round")
+      assert(onDriver.schema == onSpark.schema, name)
+      // both come back in doc_id order
+      val (d, s) = (onDriver.collect().toSeq, onSpark.collect().toSeq)
+      assert(d == s, name)
+      assert(d.isEmpty == edges.isEmpty, name)
+    }
+  }
+
+  test("in-budget cc: repeat groupSplit and dedupGroups calls land no " +
+      "scratch dir and run no cc round job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.api.Graft
+    import graft.operators.Dedup
+    val docs = Tables(spark, sf).documents.select("doc_id", "text")
+    val labels = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(labels.add)
+    }
+    val keys0 = Staging.scratchKeys
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for (_ <- 1 to 5) {
+        Graft.groupSplit(docs, "doc_id", "text").collect()
+        assert(Dedup.lastCcRounds.get == 0)
+        assert(Graft.dedupGroups(docs, "doc_id", "text").collect().nonEmpty)
+        assert(Dedup.lastCcRounds.get == 0)
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(Staging.scratchKeys == keys0)
+    assert(labels.contains("cc: edges"), labels)
+    assert(!labels.contains("cc: round") && !labels.contains("cc: label sum"),
+      labels)
+  }
+
   test("d2 blind-doc diagnostic: boilerplate-only docs are reported, distinct docs are not") {
     import SparkSpec.spark.implicits._
     // 30 docs of identical boilerplate (every shingle df=30 > maxDf=8)
